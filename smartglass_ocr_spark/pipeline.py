@@ -33,6 +33,9 @@ from pyspark.sql.types import (
 from smartglass_ocr_spark.corpus import SPAN_STRUCT
 
 SEGMENT_SPANS = 65536  # two-phase reassembly segment width (offsets)
+# largest mega-doc id set the skew router broadcasts; above it the
+# routing join shuffles instead of collecting the ids on the driver
+MEGA_BROADCAST_MAX_IDS = 1_000_000
 
 _CLASSIFY_SCHEMA = StructType(
     [
@@ -371,7 +374,13 @@ def fused_doc_stage(assembled: DataFrame,
     length) which :func:`~smartglass_ocr_spark.checkpoint.
     run_extraction_job` rolls into the per-partition metrics table, so
     a 100-TB run can audit what the clamp cost. Capless runs keep the
-    byte-identical uncapped schema."""
+    byte-identical uncapped schema.
+
+    One Python task runs per partition of ``assembled``, and each pays
+    a fixed worker set-up (BASELINE.md §per-task set-up); the caller
+    picks the count — :func:`run_pipeline_fused` trims small shuffles
+    to one task per core, :func:`~smartglass_ocr_spark.checkpoint.
+    run_extraction_job` keeps its scan's splits."""
     capped = max_doc_spans is not None or max_doc_bytes is not None
 
     def run(batches):
@@ -401,6 +410,16 @@ def fused_doc_stage(assembled: DataFrame,
     return assembled.mapInPandas(run, schema)
 
 
+def _planned_partitions(df: DataFrame) -> int:
+    """Partition count of ``df``'s physical plan, from planning alone
+    (nothing runs). Under AQE it is the initial plan's count, before
+    any runtime coalescing; 0 when the plan does not know it."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    return plan.outputPartitioning().numPartitions()
+
+
 def run_pipeline_fused(span_rows: DataFrame,
                        partitions: int | None = None,
                        two_phase: bool = False,
@@ -413,11 +432,35 @@ def run_pipeline_fused(span_rows: DataFrame,
     span rows are needed relationally; use this for throughput.
     ``two_phase`` enables the mega-doc segment pre-assembly;
     ``max_doc_spans``/``max_doc_bytes`` cap per-doc work (see
-    :func:`fused_doc_stage`)."""
+    :func:`fused_doc_stage`).
+
+    Few short tasks per core: when the reassembly shuffle plans more
+    than ``defaultParallelism`` but at most twice as many partitions,
+    the doc stage is coalesced to ``defaultParallelism`` — one Python
+    task per core — since each Python task pays a fixed worker set-up
+    (≈0.1–0.24 s on a 4-vCPU host: on CPython 3.11
+    ``pyspark.worker_util.setup_spark_files`` calls
+    ``importlib.invalidate_caches()``, and every cached ``zipimporter``
+    re-reads its archive; BASELINE.md §per-task set-up), and 2×cores
+    partitions paid two waves of it per pass. ``coalesce`` is narrow:
+    the plan keeps its single hash exchange, the final aggregate still
+    runs once per shuffle partition inside the merged task, and
+    ``mapInPandas`` still streams bounded Arrow batches. The gain was
+    measured only on ``local[4]`` with 8 partitions and passes of a
+    few seconds (both gated benchmark workloads have that shape). Larger
+    shuffles keep every partition as its own task, so retries,
+    speculation and dynamic allocation keep their granularity. The
+    cost side: a partition holding a mega doc shares its task with a
+    neighbour; route skewed input through
+    :func:`run_pipeline_skew_routed`."""
     if partitions:
         span_rows = span_rows.repartition(partitions, "doc_id")
+    assembled = reassemble_raw(span_rows, two_phase=two_phase)
+    cores = assembled.sparkSession.sparkContext.defaultParallelism
+    if cores < _planned_partitions(assembled) <= 2 * cores:
+        assembled = assembled.coalesce(cores)
     return fused_doc_stage(
-        reassemble_raw(span_rows, two_phase=two_phase),
+        assembled,
         max_doc_spans=max_doc_spans,
         max_doc_bytes=max_doc_bytes,
     )
@@ -486,12 +529,16 @@ def run_pipeline_skew_routed(span_rows: DataFrame,
     # to the small branch, where the fused groupBy keeps such rows as
     # one group exactly like an unrouted run would (r3 ADVICE).
     # The broadcast hint is gated on the measured id count: a mis-set
-    # threshold that catches tens of millions of "megas" must degrade
-    # to a shuffle join, not force an unbounded driver collect (the
-    # old ceiling's failure mode without its hard error).
+    # threshold that catches millions of "megas" must degrade to a
+    # shuffle join, not force an unbounded driver collect (the old
+    # ceiling's failure mode without its hard error). Above the gate
+    # the shuffle-hash hint also keeps the planner from broadcasting
+    # the ids on its own size estimate.
     flag = mega_ids.withColumn("_mega", F.lit(True))
-    if n_mega <= 10_000_000:
+    if n_mega <= MEGA_BROADCAST_MAX_IDS:
         flag = F.broadcast(flag)
+    else:
+        flag = flag.hint("shuffle_hash")
     routed = span_rows.join(flag, "doc_id", "left")
     is_mega = F.coalesce(F.col("_mega"), F.lit(False))
     small_out = run_pipeline_fused(

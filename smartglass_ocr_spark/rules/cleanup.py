@@ -358,18 +358,26 @@ _CHECKED_BOX_RX = re.compile(r"\[\s*[xX✓✔]\s*\]")
 _EMPTY_BOX_RX = re.compile(r"\[\s*\]")
 
 
+# label: value colon insertion, then newline after each field
+# (ref :443-458) — one pattern per canonical label string, in order.
+_FORM_CANON = dict.fromkeys(rep for _, rep in _FORM_LABELS)
+_FORM_COLON_RXS = [
+    re.compile(f"({re.escape(label)})\\s+([^:\\n]+)") for label in _FORM_CANON
+]
+_FORM_BREAK_RXS = [
+    re.compile(f"({re.escape(label)}:\\s+[^\\n]+)([^\\n])") for label in _FORM_CANON
+]
+
+
 def fix_form(text: str) -> str:
     for rx, rep in _FORM_LABELS:
         text = rx.sub(rep, text)
-    # label: value colon insertion, then newline after each field
-    # (ref :443-458) — iterate over canonical label strings.
-    canon = dict.fromkeys(rep for _, rep in _FORM_LABELS)
-    for label in canon:
-        text = re.sub(f"({re.escape(label)})\\s+([^:\\n]+)", r"\1: \2", text)
+    for rx in _FORM_COLON_RXS:
+        text = rx.sub(r"\1: \2", text)
     text = _CHECKED_BOX_RX.sub("☑", text)
     text = _EMPTY_BOX_RX.sub("☐", text)
-    for label in canon:
-        text = re.sub(f"({re.escape(label)}:\\s+[^\\n]+)([^\\n])", r"\1\n\2", text)
+    for rx in _FORM_BREAK_RXS:
+        text = rx.sub(r"\1\n\2", text)
     return text
 
 

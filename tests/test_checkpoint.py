@@ -46,6 +46,37 @@ def test_full_run_then_rerun_is_noop(spark, paths):
     assert _collect_output(spark, paths["out"]) == out1
 
 
+def test_fused_job_keeps_scan_task_count(spark, paths, tmp_path):
+    """The fused job has no shuffle before its doc stage, so that stage
+    runs one task per scan split: a many-file input keeps its task
+    count instead of being merged into one task per core."""
+    sc = spark.sparkContext
+    n_files = 3 * sc.defaultParallelism
+    src = str(tmp_path / "docs")
+    docs_to_df(spark, generate_docs(n_docs=60, seed=5)).repartition(n_files).write.parquet(src)
+    # an open cost far above the files' size gives each file its own split
+    spark.conf.set("spark.sql.files.openCostInBytes", str(1 << 30))
+    try:
+        docs = spark.read.parquet(src)
+        assert docs.rdd.getNumPartitions() == n_files
+        sc.setJobGroup("fused-job-tasks", "doc stage task count")
+        run_extraction_job(
+            spark, docs, paths["out"], paths["ckpt"], paths["metrics"], "run-1", n_partitions=8
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        spark.conf.unset("spark.sql.files.openCostInBytes")
+    tracker = sc.statusTracker()
+    tasks = [
+        tracker.getStageInfo(stage).numTasks
+        for job in tracker.getJobIdsForGroup("fused-job-tasks")
+        for stage in tracker.getJobInfo(job).stageIds
+    ]
+    assert n_files in tasks, tasks
+    assert len(_collect_output(spark, paths["out"])) == 60
+
+
 def test_resume_processes_only_incomplete(spark, paths):
     docs_all = generate_docs(n_docs=40, seed=1)
     df_all = docs_to_df(spark, docs_all)

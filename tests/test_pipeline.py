@@ -167,6 +167,26 @@ def test_fused_pipeline_matches_golden(spark):
         assert got[g["doc_id"]]["status"] == g["status"]
 
 
+def test_fused_stage_runs_one_task_per_core(spark):
+    """A reassembly shuffle of more than cores but at most 2×cores
+    partitions runs the doc stage as one Python task per core (each
+    Python task pays a fixed worker set-up); smaller and larger counts
+    keep their tasks; the output still equals the golden spec's rows."""
+    from smartglass_ocr_spark.pipeline import explode_spans, run_pipeline_fused
+
+    dp = spark.sparkContext.defaultParallelism
+    docs = generate_docs(n_docs=40, seed=37, scramble=True)
+    rows = explode_spans(docs_to_df(spark, docs))
+    out = run_pipeline_fused(rows, partitions=2 * dp)
+    assert out.rdd.getNumPartitions() == dp
+    assert run_pipeline_fused(rows, partitions=2).rdd.getNumPartitions() == 2
+    wide = run_pipeline_fused(rows, partitions=2 * dp + 1)
+    assert wide.rdd.getNumPartitions() == 2 * dp + 1
+    want = {g["doc_id"]: g for g in golden_outputs(docs)}
+    for df in (out, wide):
+        assert {r["doc_id"]: r.asDict(recursive=True) for r in df.collect()} == want
+
+
 def test_markdown_rendering(spark):
     from smartglass_ocr_spark.pipeline import explode_spans, run_pipeline_fused, with_markdown
 
@@ -241,6 +261,31 @@ def test_skew_routed_bit_identical(spark):
         for r in run_pipeline_skew_routed(rows, mega_doc_spans=2000).collect()
     }
     assert fused == routed
+
+
+def test_skew_routed_shuffle_join_above_broadcast_gate(spark, monkeypatch):
+    """Above MEGA_BROADCAST_MAX_IDS the routing join must not broadcast
+    the mega ids (neither by hint nor by the planner's own size
+    estimate), and the output must still equal the fused path."""
+    from smartglass_ocr_spark import pipeline
+    from smartglass_ocr_spark.pipeline import (
+        explode_spans, run_pipeline_fused, run_pipeline_skew_routed,
+    )
+
+    monkeypatch.setattr(pipeline, "MEGA_BROADCAST_MAX_IDS", 0)
+    df = docs_to_df(
+        spark, generate_docs(n_docs=10, seed=13, scramble=True, mega_doc_spans=3000)
+    )
+    rows = explode_spans(df)
+    routed = run_pipeline_skew_routed(rows, mega_doc_spans=1000)
+    got = {r["doc_id"]: r.asDict(recursive=True) for r in routed.collect()}
+    plan = routed._jdf.queryExecution().executedPlan().toString()
+    assert "Join" in plan and "BroadcastHashJoin" not in plan, plan
+    fused = {
+        r["doc_id"]: r.asDict(recursive=True)
+        for r in run_pipeline_fused(rows).collect()
+    }
+    assert got == fused
 
 
 def _short_span_mega_corpus(n_small: int, mega_spans: int) -> list[dict]:

@@ -112,6 +112,11 @@ def main() -> None:
         for name, fn in qs.items():
             if wanted and name not in wanted:
                 continue
+            # same hygiene bench.py applies between entries: operators
+            # with caller-owned persists otherwise accumulate cached
+            # blocks across the sweep. At the top of the iteration so
+            # every branch below, `continue`s included, starts clean.
+            spark.catalog.clearCache()
             try:
                 if name not in oracles:
                     # rows-only check, mirroring the driver's weaker
@@ -144,7 +149,6 @@ def main() -> None:
                     "oracle_rows": None,
                     "err": msg[:500],
                 }
-                spark.catalog.clearCache()
                 continue
             scols, srows = frame_rows(sdf)
             dcols, drows = frame_rows(ddf)
@@ -174,10 +178,6 @@ def main() -> None:
                 "oracle_rows": len(drows),
                 "err": None,
             }
-            # same hygiene bench.py applies between entries: operators
-            # with caller-owned persists otherwise accumulate cached
-            # blocks across the 72-entry sweep
-            spark.catalog.clearCache()
     finally:
         spark.stop()
     if json_path:
