@@ -707,15 +707,18 @@ def _curation_oracle() -> str:
     # elsewhere — if a future edit changes the FROM spelling or adds a
     # CTE name this rename loop doesn't know, fail HERE at import time
     # with a clear message, not downstream with a wrong composed query
-    assert "FROM documents" not in quality and "FROM documents" not in mh, (
-        "curation oracle: a shared CTE body gained an un-re-sourced "
-        "'FROM documents' — update _curation_oracle's replaces"
-    )
+    # (raised, not asserted: ``python -O`` strips asserts)
+    if "FROM documents" in quality or "FROM documents" in mh:
+        raise ValueError(
+            "curation oracle: a shared CTE body gained an un-re-sourced "
+            "'FROM documents' — update _curation_oracle's replaces"
+        )
     declared = set(_re.findall(r"(\w+) AS \(", mh))
-    assert declared == {"mh_toks", "mh_sh", "mh_sigs", "mh_bwidth", "mh_mh_pairs"}, (
-        f"curation oracle: _MINHASH_PAIRS_CTE declares unexpected CTEs "
-        f"{declared} — update the rename list"
-    )
+    if declared != {"mh_toks", "mh_sh", "mh_sigs", "mh_bwidth", "mh_mh_pairs"}:
+        raise ValueError(
+            f"curation oracle: _MINHASH_PAIRS_CTE declares unexpected CTEs "
+            f"{declared} — update the rename list"
+        )
     return rf"""
         WITH RECURSIVE corpus0 AS (
             SELECT * FROM documents WHERE source NOT IN ('src18', 'src19')

@@ -27,10 +27,23 @@ tier as the streaming state machines.
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import ArrayType, StringType
+
+
+# Java's ASCII \s, which the JVM-side word split and alphabet use:
+# str.split() would also split on Unicode whitespace (U+00A0, U+0085,
+# ...) that the alphabet keeps as symbols
+_WORD_SEP_RX = re.compile(r"[ \t\n\x0b\f\r]+")
+
+
+def _words(text: str) -> list[str]:
+    """``text``'s words as the JVM side splits them, empties dropped."""
+    return [w for w in _WORD_SEP_RX.split(text) if w]
 
 
 def _merge_word(syms: list[str], a: str, b: str) -> list[str]:
@@ -272,7 +285,7 @@ def bpe_encode(
             return got
 
         return texts.map(
-            lambda t: [i for w in t.split() for i in seg(w)] if t else []
+            lambda t: [i for w in _words(t) for i in seg(w)] if t else []
         )
 
     return docs.select(
@@ -314,7 +327,7 @@ def bpe_token_counts(
             return got
 
         return texts.map(
-            lambda t: sum(count_word(w) for w in t.split()) if t else 0
+            lambda t: sum(count_word(w) for w in _words(t)) if t else 0
         )
 
     toks = F.split(F.trim(F.col(text_col)), r"\s+")

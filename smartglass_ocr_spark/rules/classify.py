@@ -42,6 +42,9 @@ _ANCHOR_RX = re.compile(r"<a\b[^>]*>(.*?)</a>", re.IGNORECASE | re.DOTALL)
 _SCRIPT_STYLE_RX = re.compile(
     r"<(script|style)\b[^>]*>.*?</\1>", re.IGNORECASE | re.DOTALL
 )
+_BLOCK_END_RX = re.compile(r"<\s*(?:br|/p|/div|/h[1-6]|/li|/tr)\s*/?>", re.IGNORECASE)
+_HSPACE_RUN_RX = re.compile(r"[ \t]+")
+_NEWLINE_PAD_RX = re.compile(r" ?\n ?")
 
 # boilerplate thresholds — readability/boilerpipe-style heuristics
 # (public-domain technique; values chosen for our corpus and pinned by
@@ -76,7 +79,7 @@ def strip_html(markup: str) -> str:
     if not markup:
         return ""
     text = _SCRIPT_STYLE_RX.sub(" ", markup)
-    text = re.sub(r"<\s*(?:br|/p|/div|/h[1-6]|/li|/tr)\s*/?>", "\n", text, flags=re.IGNORECASE)
+    text = _BLOCK_END_RX.sub("\n", text)
     text = _TAG_RX.sub(" ", text)
     text = (
         text.replace("&amp;", "&")
@@ -86,8 +89,8 @@ def strip_html(markup: str) -> str:
         .replace("&#39;", "'")
         .replace("&nbsp;", " ")
     )
-    text = re.sub(r"[ \t]+", " ", text)
-    text = re.sub(r" ?\n ?", "\n", text)
+    text = _HSPACE_RUN_RX.sub(" ", text)
+    text = _NEWLINE_PAD_RX.sub("\n", text)
     return text.strip()
 
 

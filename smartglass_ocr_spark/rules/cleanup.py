@@ -60,10 +60,11 @@ _NON_BMP = re.compile(r"[\U00010000-\U0010FFFF]")
 
 def strip_non_bmp(text: str) -> str:
     """Drop astral-plane chars (ref lib/text_processing.py:92).
-    max() is a single C-speed scan; astral chars compare above every
-    BMP char, so pure-BMP text (the overwhelming case) returns
-    untouched without the per-char Python loop this used to be."""
-    if not text or max(text) < "\U00010000":
+    ``isascii()`` reads a flag the string already carries, and max()
+    is a single C-speed scan; astral chars compare above every BMP
+    char, so pure-BMP text (the overwhelming case) returns untouched
+    without the per-char Python loop this used to be."""
+    if not text or text.isascii() or max(text) < "\U00010000":
         return text
     return _NON_BMP.sub("", text)
 
@@ -93,7 +94,9 @@ def general_cleanup(text: str) -> str:
     text = _PUNCT_SPACING.sub(r"\1 \2", text)
     text = _CAMEL_SPLIT.sub(r"\1 \2", text)
     text = _MULTI_NEWLINE.sub("\n\n", text)
-    if "-" in text:
+    # the rejoin needs a literal "-\n" (which the bullet normalization
+    # above already rewrites); without one, skip its backtracking scan
+    if "-\n" in text:
         text = _HYPHEN_BREAK.sub(r"\1\2", text)
     return text
 
@@ -152,7 +155,11 @@ def apply_word_corrections(text: str) -> str:
     if not text:
         return ""
     text = _WORD_FIX_RX.sub(lambda m: _WORD_FIXES[m.group(1)], text)
-    for rx in (_EMAIL_RX, _URL_RX):
+    # neither pattern can match without one of its literals: skip the
+    # scan when the text has none
+    for rx, literals in ((_EMAIL_RX, ("@",)), (_URL_RX, ("http", "www."))):
+        if not any(lit in text for lit in literals):
+            continue
         for tok in rx.findall(text):
             fixed = tok.replace(" ", "").replace(",", ".").replace(";", ".")
             if fixed != tok:
@@ -254,8 +261,10 @@ _ID_FIELDS = [
     "STATUS PERKAWINAN", "PEKERJAAN", "KEWARGANEGARAAN", "BERLAKU HINGGA",
     "DESA/KELURAHAN", "KECAMATAN", "KABUPATEN", "PROVINSI",
 ]
+# (label, pattern): the patterns are case-sensitive, so one cannot
+# match unless its label is a substring of the text
 _ID_COLON_RXS = [
-    (re.compile(f"({re.escape(f)})\\s+([^:\\n]+)")) for f in _ID_FIELDS
+    (f, re.compile(f"({re.escape(f)})\\s+([^:\\n]+)")) for f in _ID_FIELDS
 ]
 _NIK_RX = re.compile(r"NIK\s*:?\s*([0-9\s]+)", re.IGNORECASE)
 _DATE_RX = re.compile(r"(\d{1,2})[/\-\.\\](\d{1,2})[/\-\.\\](\d{2,4})")
@@ -264,8 +273,9 @@ _DATE_RX = re.compile(r"(\d{1,2})[/\-\.\\](\d{1,2})[/\-\.\\](\d{2,4})")
 def fix_id_card(text: str) -> str:
     for rx, rep in _ID_LABEL_FIXES:
         text = rx.sub(rep, text)
-    for rx in _ID_COLON_RXS:
-        text = rx.sub(r"\1: \2", text)
+    for label, rx in _ID_COLON_RXS:
+        if label in text:
+            text = rx.sub(r"\1: \2", text)
     # NIK 16-digit regroup in blocks of 4 (ref :302-312)
     m = _NIK_RX.search(text)
     if m:
@@ -359,25 +369,30 @@ _EMPTY_BOX_RX = re.compile(r"\[\s*\]")
 
 
 # label: value colon insertion, then newline after each field
-# (ref :443-458) — one pattern per canonical label string, in order.
+# (ref :443-458) — one pattern per canonical label string, in order,
+# each paired with the literal it cannot match without (the patterns
+# are case-sensitive).
 _FORM_CANON = dict.fromkeys(rep for _, rep in _FORM_LABELS)
 _FORM_COLON_RXS = [
-    re.compile(f"({re.escape(label)})\\s+([^:\\n]+)") for label in _FORM_CANON
+    (label, re.compile(f"({re.escape(label)})\\s+([^:\\n]+)")) for label in _FORM_CANON
 ]
 _FORM_BREAK_RXS = [
-    re.compile(f"({re.escape(label)}:\\s+[^\\n]+)([^\\n])") for label in _FORM_CANON
+    (label + ":", re.compile(f"({re.escape(label)}:\\s+[^\\n]+)([^\\n])"))
+    for label in _FORM_CANON
 ]
 
 
 def fix_form(text: str) -> str:
     for rx, rep in _FORM_LABELS:
         text = rx.sub(rep, text)
-    for rx in _FORM_COLON_RXS:
-        text = rx.sub(r"\1: \2", text)
+    for label, rx in _FORM_COLON_RXS:
+        if label in text:
+            text = rx.sub(r"\1: \2", text)
     text = _CHECKED_BOX_RX.sub("☑", text)
     text = _EMPTY_BOX_RX.sub("☐", text)
-    for rx in _FORM_BREAK_RXS:
-        text = rx.sub(r"\1\n\2", text)
+    for literal, rx in _FORM_BREAK_RXS:
+        if literal in text:
+            text = rx.sub(r"\1\n\2", text)
     return text
 
 
@@ -540,6 +555,7 @@ _INDO_ADDRESS_RX = re.compile(
     r"(?=\n\s*(?:RT/RW|PROVINSI|KABUPATEN|KECAMATAN|KELURAHAN|NIK|AGAMA|\s*$))",
     re.IGNORECASE | re.DOTALL,
 )
+_WS_RUN_RX = re.compile(r"\s+")
 # ref :768-778: field names are NOT regex-escaped — '.' in 'GOL. DARAH'
 # matches any char and '/' is literal; kept verbatim
 _INDO_ID_FIELDS = (
@@ -585,7 +601,7 @@ def fix_indonesian_text(text: str) -> str:
 
     m = _INDO_ADDRESS_RX.search(text)
     if m:
-        address = re.sub(r"\s+", " ", m.group(1).strip())
+        address = _WS_RUN_RX.sub(" ", m.group(1).strip())
         # callable replacement: the reference interpolates the OCR'd
         # address into the replacement STRING (ref :729), which raises
         # re.error on a backslash in the address and expands literal

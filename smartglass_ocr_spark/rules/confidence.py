@@ -16,6 +16,8 @@ Status thresholds: ref lib/smartglass_ocr.py:620-625.
 
 from __future__ import annotations
 
+from collections import Counter
+
 RAW_BASE_CONFIDENCE = 85.0  # deterministic-parser base (no engine race)
 
 
@@ -34,19 +36,18 @@ def weighted_confidence(text: str, raw_confidence: float = RAW_BASE_CONFIDENCE) 
         length_factor = 1.0
     else:
         length_factor = 1.1
-    words = len(text.split())
+    parts = text.split()
+    words = len(parts)
     if words < 3:
         word_factor = 0.8
     elif words < 10:
         word_factor = 0.9
     else:
         word_factor = 1.0
-    compact = "".join(text.split())
+    compact = "".join(parts)
     if compact:
         # distinct-char fold (Counter runs in C): exact equivalent of
         # the per-char genexpr, ~10x faster on multi-MB docs
-        from collections import Counter
-
         counts = Counter(compact)
         non_alnum = sum(v for c, v in counts.items() if not c.isalnum()) / len(compact)
         if non_alnum > 0.4:

@@ -123,6 +123,17 @@ _RECEIPT_ITEM_END_RX = re.compile(r"^(?:subtotal|total|tax|amount)", re.IGNORECA
 _ITEM_P1 = re.compile(r"(.+?)\s+(\d+)\s+\$?([0-9\.,]+)")
 _ITEM_P2 = re.compile(r"(.+?)\s+\$?([0-9\.,]+)")
 _ITEM_P3 = re.compile(r"(\d+)(?:\s*[xX]\s*)(.+?)\s+\$?([0-9\.,]+)")
+# labelled fields search the lowercased text; the bare date/time
+# fallbacks search the original
+_RECEIPT_DATE_RX = re.compile(r"(?:date|tanggal)[\s:]+([0-9/\-\.]+)")
+_RECEIPT_BARE_DATE_RX = re.compile(r"\b(\d{1,2}[/\-\.]\d{1,2}[/\-\.]\d{2,4})\b")
+_RECEIPT_TIME_RX = re.compile(r"(?:time|waktu)[\s:]+(\d{1,2}:\d{2}(?::\d{2})?(?:\s*[AP]M)?)")
+_RECEIPT_BARE_TIME_RX = re.compile(r"\b(\d{1,2}:\d{2}(?::\d{2})?(?:\s*[AP]M)?)\b")
+_RECEIPT_AMOUNT_RXS = (
+    ("subtotal", re.compile(r"(?:subtotal|sub[\s-]?total)[\s:]+\$?([0-9\.,]+)")),
+    ("tax", re.compile(r"(?:tax|vat|pajak)[\s:]+\$?([0-9\.,]+)")),
+    ("total", re.compile(r"(?:total|amount|jumlah)[\s:]+\$?([0-9\.,]+)")),
+)
 
 
 def extract_receipt_typed(text: str) -> dict:
@@ -136,26 +147,22 @@ def extract_receipt_typed(text: str) -> dict:
         out["merchant"] = lines[0].strip()
 
     lowered = text.lower()
-    m = re.search(r"(?:date|tanggal)[\s:]+([0-9/\-\.]+)", lowered)
+    m = _RECEIPT_DATE_RX.search(lowered)
     if m:
         out["date"] = m.group(1).strip()
     else:
-        m = re.search(r"\b(\d{1,2}[/\-\.]\d{1,2}[/\-\.]\d{2,4})\b", text)
+        m = _RECEIPT_BARE_DATE_RX.search(text)
         if m:
             out["date"] = m.group(1)
-    m = re.search(r"(?:time|waktu)[\s:]+(\d{1,2}:\d{2}(?::\d{2})?(?:\s*[AP]M)?)", lowered)
+    m = _RECEIPT_TIME_RX.search(lowered)
     if m:
         out["time"] = m.group(1).strip()
     else:
-        m = re.search(r"\b(\d{1,2}:\d{2}(?::\d{2})?(?:\s*[AP]M)?)\b", text)
+        m = _RECEIPT_BARE_TIME_RX.search(text)
         if m:
             out["time"] = m.group(1)
-    for key, pat in (
-        ("subtotal", r"(?:subtotal|sub[\s-]?total)[\s:]+\$?([0-9\.,]+)"),
-        ("tax", r"(?:tax|vat|pajak)[\s:]+\$?([0-9\.,]+)"),
-        ("total", r"(?:total|amount|jumlah)[\s:]+\$?([0-9\.,]+)"),
-    ):
-        m = re.search(pat, lowered)
+    for key, rx in _RECEIPT_AMOUNT_RXS:
+        m = rx.search(lowered)
         if m:
             out[key] = m.group(1).strip()
     for method in _PAYMENT_METHODS:
@@ -213,13 +220,16 @@ def extract_receipt(text: str) -> dict[str, str]:
 _FORM_LINE_RX = re.compile(r"([A-Za-z\s]+[A-Za-z])[\s:]+(.+)")
 _PUNCT_ONLY_RX = re.compile(r"^[:\-,.;]*$")  # intent-fixed, see module docstring
 _FORM_SPECIAL_PATTERNS = {
-    "name": r"(?:name|nama)[\s:]+([^\n]+)",
-    "email": r"(?:email|e-mail)[\s:]+([^\n]+)",
-    "phone": r"(?:phone|telephone|tel|hp|handphone)[\s:]+([^\n]+)",
-    "address": r"(?:address|alamat)[\s:]+([^\n]+)",
-    "date": r"(?:date|tanggal)[\s:]+([^\n]+)",
-    "company": r"(?:company|perusahaan)[\s:]+([^\n]+)",
-    "department": r"(?:department|departemen)[\s:]+([^\n]+)",
+    field: re.compile(pat, re.IGNORECASE)
+    for field, pat in (
+        ("name", r"(?:name|nama)[\s:]+([^\n]+)"),
+        ("email", r"(?:email|e-mail)[\s:]+([^\n]+)"),
+        ("phone", r"(?:phone|telephone|tel|hp|handphone)[\s:]+([^\n]+)"),
+        ("address", r"(?:address|alamat)[\s:]+([^\n]+)"),
+        ("date", r"(?:date|tanggal)[\s:]+([^\n]+)"),
+        ("company", r"(?:company|perusahaan)[\s:]+([^\n]+)"),
+        ("department", r"(?:department|departemen)[\s:]+([^\n]+)"),
+    )
 }
 
 
@@ -235,9 +245,9 @@ def extract_form(text: str) -> dict[str, str]:
             value = m.group(2).strip()
             if value and not _PUNCT_ONLY_RX.match(value):
                 out[field] = value
-    for field, pat in _FORM_SPECIAL_PATTERNS.items():
+    for field, rx in _FORM_SPECIAL_PATTERNS.items():
         if field not in out:
-            m = re.search(pat, text, re.IGNORECASE)
+            m = rx.search(text)
             if m and m.group(1).strip():
                 out[field] = m.group(1).strip()
     return out
@@ -264,6 +274,9 @@ def _parse_delimited(lines: list[str], delimiter: str) -> tuple[list[str], list[
     return headers, rows
 
 
+_NON_SPACE_RUN_RX = re.compile(r"\S+")
+
+
 def _parse_space_aligned(lines: list[str]) -> tuple[list[str], list[list[str]]]:
     """Column starts inferred from word positions of the first <=5 rows
     (ref :440-469: merge within 5 chars by midpoint, else new column)."""
@@ -272,7 +285,7 @@ def _parse_space_aligned(lines: list[str]) -> tuple[list[str], list[list[str]]]:
         return [], []
     col_starts: list[int] = []
     for i in range(min(5, len(non_empty))):
-        positions = [m.start() for m in re.finditer(r"\S+", non_empty[i])]
+        positions = [m.start() for m in _NON_SPACE_RUN_RX.finditer(non_empty[i])]
         if i == 0:
             col_starts = positions
             continue

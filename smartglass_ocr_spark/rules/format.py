@@ -522,6 +522,17 @@ _ID_FIELD_ORDER = (
 )  # ref :996-1001
 
 
+# per field: the anchored "FIELD: value" line and the bare field name
+_ID_FIELD_RXS = tuple(
+    (
+        field,
+        re.compile(f"^{re.escape(field)}\\s*:?\\s*(.+)", re.IGNORECASE),
+        re.compile(re.escape(field), re.IGNORECASE),
+    )
+    for field in _ID_FIELDS
+)
+
+
 def organize_id_card_text(text: str) -> str:
     """ref :932-1012 — harvest known ID fields into a dict (first the
     anchored ``FIELD: value`` match, else a split on the field name
@@ -533,19 +544,17 @@ def organize_id_card_text(text: str) -> str:
         if not line:
             continue
         matched = None
-        for field in _ID_FIELDS:
-            m = re.match(
-                f"^{re.escape(field)}\\s*:?\\s*(.+)", line, re.IGNORECASE
-            )
+        for field, rx_line, _ in _ID_FIELD_RXS:
+            m = rx_line.match(line)
             if m:
                 matched = (field, m.group(1).strip())
                 break
         if matched:
             field_values[matched[0].upper()] = matched[1]
         else:
-            for field in _ID_FIELDS:
+            for field, _, rx_name in _ID_FIELD_RXS:
                 if field.upper() in line.upper():
-                    parts = re.split(re.escape(field), line, flags=re.IGNORECASE)
+                    parts = rx_name.split(line)
                     if len(parts) > 1 and parts[1].strip():
                         field_values[field.upper()] = parts[1].strip()
                         break
@@ -567,6 +576,9 @@ def organize_id_card_text(text: str) -> str:
     return "\n".join(out)
 
 
+_PIPE_PAD_RX = re.compile(r"\s*\|\s*")
+
+
 def organize_table_text(text: str) -> str:
     """W8 twin — ref :1014-1119. Pipe rows get normalized delimiters +
     a ``---`` separator after the header; otherwise whitespace-column
@@ -580,7 +592,7 @@ def organize_table_text(text: str) -> str:
             if not raw.strip():
                 out.append("")
                 continue
-            line = re.sub(r"\s*\|\s*", " | ", raw.strip())
+            line = _PIPE_PAD_RX.sub(" | ", raw.strip())
             if not line.startswith("|"):
                 line = "| " + line
             if not line.endswith("|"):

@@ -32,15 +32,16 @@ _KEY_TERMS = (
     "summary", "conclusion", "result", "important", "significant",
     "key", "main", "primary", "critical", "essential", "crucial",
 )
-_INSIGHT_PATTERNS = tuple(
-    re.compile(p, re.IGNORECASE)
-    for p in (
-        r"(?:key|main|important|significant|critical).{0,20}(?:point|fact|finding|conclusion)",
-        r"(?:in\s+summary|to\s+summarize|in\s+conclusion|concluding|therefore)",
-        r"(?:must|should|need to|have to)",
-        r"increase|decrease|improve|reduce|enhance|cause",
-    )
+# ref :2316-2347 searches each sentence with these four patterns in
+# turn and keeps it if any matches; one search of their alternation
+# gives the same answer in one scan
+_INSIGHT_PATTERNS = (
+    r"(?:key|main|important|significant|critical).{0,20}(?:point|fact|finding|conclusion)",
+    r"(?:in\s+summary|to\s+summarize|in\s+conclusion|concluding|therefore)",
+    r"(?:must|should|need to|have to)",
+    r"increase|decrease|improve|reduce|enhance|cause",
 )
+_INSIGHT_RX = re.compile("|".join(f"(?:{p})" for p in _INSIGHT_PATTERNS), re.IGNORECASE)
 
 
 def split_sentences(text: str) -> list[str]:
@@ -54,10 +55,13 @@ def generate_summary(text: str, max_length: int = 200, style: str = "concise") -
         return text[:max_length]
 
     sentences = split_sentences(text)
+    # each sentence lowercased and tokenized once, for both passes
+    lowered = [s.lower() for s in sentences]
+    tokens = [_WORD_RX.findall(lower) for lower in lowered]
 
     word_counts: dict[str, int] = {}
-    for sentence in sentences:
-        for w in _WORD_RX.findall(sentence.lower()):
+    for words in tokens:
+        for w in words:
             if w not in SIMPLE_STOPWORDS:
                 word_counts[w] = word_counts.get(w, 0) + 1
 
@@ -72,13 +76,13 @@ def generate_summary(text: str, max_length: int = 200, style: str = "concise") -
             score += 3
         elif i < len(sentences) * 0.1:
             score += 2
-        words = _WORD_RX.findall(sentence.lower())
+        words = tokens[i]
         if words:
             score += (
                 sum(word_counts.get(w, 0) for w in words if w not in SIMPLE_STOPWORDS)
                 / len(words)
             )
-        lower = sentence.lower()
+        lower = lowered[i]
         if any(term in lower for term in _KEY_TERMS):
             score += 3
         scores[i] = score
@@ -179,7 +183,7 @@ def extract_key_insights(text: str) -> list[str]:
     insights: list[str] = []
     sentences = split_sentences(text)
     for sentence in sentences:
-        if any(rx.search(sentence) for rx in _INSIGHT_PATTERNS):
+        if _INSIGHT_RX.search(sentence):
             insights.append(sentence)
         if len(insights) >= 5:
             break

@@ -1439,3 +1439,19 @@ def test_bpe_encode_length_agrees_with_token_counts(spark):
         for r in bpe_token_counts(real, merges).collect()
     }
     assert n_enc == n_cnt
+
+
+def test_bpe_encode_splits_words_on_java_whitespace_only(spark):
+    """The encoder splits words on the same ASCII whitespace as the
+    JVM-side alphabet (Java's ``\\s``): U+00A0 is a symbol there, so
+    it must encode as its alphabet id, not vanish as a separator."""
+    from smartglass_ocr_spark.ops.bpe import bpe_encode, bpe_token_counts
+
+    docs = spark.createDataFrame(
+        [(1, "ab\u00a0cd"), (2, "a\u0085b \tc")], "doc_id long, text string"
+    )
+    out = {r["doc_id"]: list(r["ids"]) for r in bpe_encode(docs, []).collect()}
+    # alphabet in code-point order: a b c d U+0085 U+00A0
+    assert out == {1: [0, 1, 5, 2, 3], 2: [0, 4, 1, 2]}
+    counts = {r["doc_id"]: r["n_subwords"] for r in bpe_token_counts(docs, []).collect()}
+    assert counts == {1: 5, 2: 4}

@@ -240,6 +240,20 @@ def test_curation_end_to_end_plan_budget(spark, queries):
     assert len(re.findall(r"Exchange hashpartitioning", plan)) <= 68
 
 
+def test_curation_oracle_rejects_drifted_cte_body(monkeypatch):
+    """The curation oracle's string-surgery guards raise (not assert,
+    which ``python -O`` strips) when a shared CTE body declares a CTE
+    the rename list does not know."""
+    import __spark_entry__ as e
+
+    e._curation_oracle()  # the shipped bodies compose
+    monkeypatch.setattr(
+        e, "_MINHASH_PAIRS_CTE", e._MINHASH_PAIRS_CTE + ", extra AS (SELECT 1)"
+    )
+    with pytest.raises(ValueError, match="unexpected CTEs"):
+        e._curation_oracle()
+
+
 def test_rag_end_to_end_plan_topk_not_global_sort(spark, queries):
     """The RAG retrieval composition's global top-k must execute as
     TakeOrderedAndProject (per-partition partial top-k, k rows to the
