@@ -27,13 +27,13 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: derive the interleaved spans corpus from the flat
     sf0.001 documents table (one narrow stage), run the extraction
-    pipeline (classify -> clean -> reassemble -> metadata), and return
-    per-doc results with flattened span stats."""
+    pipeline (reassemble -> classify/clean + metadata in one Arrow
+    crossing), and return per-doc results with flattened span stats."""
     from smartglass_ocr_spark.corpus import span_rows_from_flat
-    from smartglass_ocr_spark.pipeline import run_pipeline_rows
+    from smartglass_ocr_spark.pipeline import run_pipeline_fused
 
     docs = _t(spark, "/root/testdata/sf0.001", "documents")
-    out = run_pipeline_rows(span_rows_from_flat(docs), with_metadata=True)
+    out = run_pipeline_fused(span_rows_from_flat(docs))
     return out.select(
         "doc_id",
         F.size("spans").alias("n_spans"),
@@ -1053,10 +1053,10 @@ def _q_pipeline_extract(spark, sf_dir):
 
 def _q_pipeline_doc_meta(spark, sf_dir):
     from smartglass_ocr_spark.corpus import span_rows_from_flat
-    from smartglass_ocr_spark.pipeline import run_pipeline_rows
+    from smartglass_ocr_spark.pipeline import run_pipeline_fused
 
     docs = _t(spark, sf_dir, "documents")
-    out = run_pipeline_rows(span_rows_from_flat(docs), with_metadata=True)
+    out = run_pipeline_fused(span_rows_from_flat(docs))
     return out.select(
         "doc_id", F.size("spans").alias("n_spans"), "lang", "structure",
         F.round("confidence", 4).alias("confidence"), "status",

@@ -87,15 +87,13 @@ def _noop(df) -> None:
 
 def flagship(spark, sf_dir: str, factor: int = REPLICATE):
     from smartglass_ocr_spark.corpus import span_rows_from_flat
-    from smartglass_ocr_spark.pipeline import run_pipeline_rows
+    from smartglass_ocr_spark.pipeline import run_pipeline_fused
 
     # ONE exchange total: hash-repartition the compact flat rows by
     # doc_id (inside span_rows_from_flat, before the explode) — the
     # reassembly groupBy reuses that partitioning, and the fused doc
     # stage runs every Python rule after the shuffle in a single
     # Arrow crossing
-    from smartglass_ocr_spark.pipeline import run_pipeline_fused
-
     n_parts = spark.sparkContext.defaultParallelism * 2
     docs = _replicated_docs(spark, sf_dir, factor)
     return run_pipeline_fused(
@@ -140,28 +138,6 @@ def run_suite(spark, sf_dir: str) -> dict[str, float]:
 
 
 SCALING_FACTOR = int(os.environ.get("SPARK_GRAFT_SCALING_FACTOR", "150"))
-
-
-def _flagship_throughput(sf_dir: str, cpus: int, factor: int) -> tuple[float, float]:
-    """(docs/sec, wall sec) for the flagship job at a parallelism
-    level, in a fresh Spark context: one warm-up (JVM/codegen/python
-    workers), then best-of-3 timed runs (local-mode wall clock is
-    noisy; the best run reflects the plan, not the noise)."""
-    from smartglass_ocr_spark.session import get_spark
-
-    spark = get_spark(f"bench-{cpus}", cpus=cpus, shuffle_partitions=max(2 * cpus, 16))
-    try:
-        _noop(flagship(spark, sf_dir, factor=1))  # warm-up
-        n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count() * factor
-        job = flagship(spark, sf_dir, factor=factor)
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            _noop(job)
-            best = min(best, time.perf_counter() - t0)
-        return n_docs / best, best
-    finally:
-        spark.stop()
 
 
 def _cluster_throughput(
@@ -237,45 +213,17 @@ def _cluster_level(
     return payload["docs_per_sec"], payload["wall"]
 
 
-def _pinned_throughput(sf_dir: str, cpus: int, factor: int) -> tuple[float, float]:
-    """Single-JVM variant pinned with taskset (kept for comparison;
-    see _cluster_throughput for why local-cluster is the primary
-    scaling evidence). Unpinned local[N] is NOT an N-core cluster —
-    JVM task threads and Python UDF sidecars spill onto every core —
-    so this pins the whole process tree. Falls back to unpinned
-    in-process if taskset is missing."""
-    import shutil
-    import subprocess
-
-    if shutil.which("taskset") is None:
-        return _flagship_throughput(sf_dir, cpus, factor)
-    cmd = [
-        "taskset", "-c", f"0-{cpus - 1}", sys.executable, os.path.abspath(__file__),
-        "--flagship-once", "--cpus", str(cpus), "--factor", str(factor),
-        "--sf-dir", sf_dir,
-    ]
-    out = subprocess.run(cmd, capture_output=True, text=True, check=True)
-    payload = json.loads(out.stdout.strip().splitlines()[-1])
-    return payload["docs_per_sec"], payload["wall"]
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--scaling", action="store_true")
     ap.add_argument("--cluster-once", type=str, default=None,
                     help="internal: 'NxC' local-cluster measurement")
-    ap.add_argument("--flagship-once", action="store_true")
     ap.add_argument("--factor", type=int, default=SCALING_FACTOR)
     ap.add_argument("--sf-dir", default=SF_DIR)
     ap.add_argument("--cpus", type=int, default=CPUS)
     args = ap.parse_args()
 
     result: dict = {"sf": args.sf_dir, "unit": "sec"}
-
-    if args.flagship_once:
-        tput, wall = _flagship_throughput(args.sf_dir, args.cpus, args.factor)
-        print(json.dumps({"docs_per_sec": round(tput, 1), "wall": round(wall, 3)}))
-        return
 
     if args.cluster_once:
         n_workers, cores = (int(x) for x in args.cluster_once.split("x"))

@@ -10,16 +10,17 @@ Iceberg/parquet table of interleaved text+media documents::
     documents(doc_id string,
               spans array<struct<kind,text,media_ref,offset>>)
 
-as DataFrame stages: explode spans -> classify (vectorized pandas UDF)
--> clean (vectorized pandas UDF, per-block-class regex pipelines) ->
-window-reassemble per (doc_id, offset) guaranteeing span-sequence
-equality (kind, text, media_ref, order) against golden outputs.
+as one doc path: explode spans -> reassemble per doc_id (the one
+shuffle) -> classify, clean (per-block-class regex pipelines), offset
+order and per-doc metadata in one Arrow crossing running the golden
+spec, guaranteeing span-sequence equality (kind, text, media_ref,
+order) against golden outputs.
 
 Layout:
 - ``rules/``    pure-Python rule modules — the executable spec shared
                 by the golden generator and the pandas UDFs.
-- ``pipeline``  the Spark pipeline stages (explode/classify/clean/
-                reassemble + per-doc metadata).
+- ``pipeline``  the Spark doc path (reassemble raw spans, then the
+                fused golden doc stage; skew routing for mega docs).
 - ``corpus``    deterministic synthetic spans-corpus generators.
 - ``golden``    pure-Python golden generator (reference semantics).
 - ``ops/``      training-data-scale operators: dedup (exact/minhash/

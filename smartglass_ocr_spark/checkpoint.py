@@ -128,8 +128,6 @@ def run_extraction_job(
     run_id: str,
     n_partitions: int = 64,
     input_snapshot: str = "parquet",
-    two_phase: bool = False,
-    use_fused: bool = True,
     max_doc_spans: int | None = None,
     max_doc_bytes: int | None = None,
 ) -> dict:
@@ -140,25 +138,23 @@ def run_extraction_job(
     failure processes only the incomplete partitions and overwrites
     only their own output files.
 
-    ``use_fused``: the input here is already doc-shaped (one row =
-    one whole spans array), so the fused doc stage runs with ZERO
-    reassembly shuffle — the only exchange left is the output
-    clustering by partition_id. Set False (optionally with
-    ``two_phase``) to route through the staged explode/reassemble
-    pipeline, e.g. when mega-docs need segment-level pre-assembly.
+    The input is already doc-shaped (one row = one whole spans array),
+    so the job runs ``pipeline.fused_doc_stage`` on it directly with
+    ZERO reassembly shuffle — the only exchange is the output
+    clustering by partition_id. Row-shaped sources go through
+    ``pipeline.reassemble_raw`` first (its ``two_phase`` form for
+    mega-docs).
 
-    ``max_doc_spans``/``max_doc_bytes`` (fused path only): the mega-doc
-    clamp levers. When set, each output row carries
-    ``n_truncated_spans`` and the metrics log's ``n_truncated`` column
-    records per partition how many spans the clamp dropped (r3 VERDICT
-    #6 — at 100 TB the clamp's cost must be auditable, not silent).
+    ``max_doc_spans``/``max_doc_bytes``: the mega-doc clamp levers.
+    When set, each output row carries ``n_truncated_spans`` and the
+    metrics log's ``n_truncated`` column records per partition how
+    many spans the clamp dropped (r3 VERDICT #6 — at 100 TB the
+    clamp's cost must be auditable, not silent).
     Keep cap settings consistent per output path: the truncation
     column exists only in capped runs' files.
     """
-    from smartglass_ocr_spark.pipeline import fused_doc_stage, run_pipeline
+    from smartglass_ocr_spark.pipeline import fused_doc_stage
 
-    if (max_doc_spans is not None or max_doc_bytes is not None) and not use_fused:
-        raise ValueError("max_doc_* caps require use_fused=True")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     bucketed = with_partition_id(documents, n_partitions)
@@ -188,14 +184,10 @@ def run_extraction_job(
     t0 = time.perf_counter()
     # partition_id is a pure function of doc_id — recompute instead of
     # joining back (saves a shuffle)
-    cleaned = (
-        fused_doc_stage(
-            todo.drop("partition_id"),
-            max_doc_spans=max_doc_spans,
-            max_doc_bytes=max_doc_bytes,
-        )
-        if use_fused
-        else run_pipeline(todo.drop("partition_id"), two_phase=two_phase)
+    cleaned = fused_doc_stage(
+        todo.drop("partition_id"),
+        max_doc_spans=max_doc_spans,
+        max_doc_bytes=max_doc_bytes,
     )
     # n_spans materialized as a plain int column so the post-write
     # lineage pass prunes to (partition_id, n_spans) — it never re-reads

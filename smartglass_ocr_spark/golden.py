@@ -101,6 +101,19 @@ def process_document(
     return document_metadata(doc["doc_id"], out_spans, class_hist)
 
 
+def dominant_class(class_hist: dict[str, int]) -> str:
+    """The class that drives a doc's structured extraction: the most
+    frequent special block class, ties broken by the fixed order
+    id_card > receipt > form > table; "content" when the doc has none
+    (our doc analogue of the reference dispatcher keyed by ImageType,
+    lib/information_extraction.py:28-53)."""
+    dominant = max(
+        _SPECIAL_CLASSES,
+        key=lambda c: (class_hist.get(c, 0), -_SPECIAL_CLASSES.index(c)),
+    )
+    return dominant if class_hist.get(dominant, 0) > 0 else "content"
+
+
 def document_metadata(
     doc_id: str, out_spans: list[dict], class_hist: dict[str, int]
 ) -> dict:
@@ -132,15 +145,7 @@ def document_metadata(
     # (:1212-1228) — consumes the FORMATTED text.
     formatted_text = format_text(doc_text)
 
-    # dominant special class drives extraction (ref dispatcher
-    # lib/information_extraction.py:28-53 keyed by ImageType; our doc
-    # analogue: the most frequent special block class, ties broken by
-    # the fixed order id_card > receipt > form > table)
-    dominant = max(
-        _SPECIAL_CLASSES,
-        key=lambda c: (class_hist.get(c, 0), -_SPECIAL_CLASSES.index(c)),
-    )
-    extract_class = dominant if class_hist.get(dominant, 0) > 0 else "content"
+    extract_class = dominant_class(class_hist)
 
     # confidence is the extraction-time score (the reference's is
     # engine-derived, computed before formatting) — fed the pre-format

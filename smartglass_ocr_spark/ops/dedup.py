@@ -103,13 +103,6 @@ def _shingle_rows_raw(docs: DataFrame, n: int, text_col: str | F.Column) -> Data
     )
 
 
-def shingle_rows(docs: DataFrame, n: int = 5, text_col: str = "text") -> DataFrame:
-    """Distinct (doc_id, shingle) rows of word n-grams — the common
-    front half of Jaccard and MinHash. Narrow (explode) stage; the
-    later distinct is fused with downstream aggregation."""
-    return _shingle_rows_raw(docs, n, text_col).distinct()
-
-
 def jaccard_pairs(
     docs: DataFrame,
     n: int = 5,

@@ -104,13 +104,6 @@ def plane_matrix(bits: int, dim: int) -> np.ndarray:
     )
 
 
-def lsh_bucket_py(vec: list[float], bits: int) -> int:
-    """Driver-side bucket of one vector (query-side of a probe) —
-    defined as the first probe bucket so the sign convention has a
-    single source of truth with :func:`probe_buckets`."""
-    return probe_buckets(vec, bits, 1)[0]
-
-
 def _bucket_udf(bits: int):
     """pandas UDF: LSH bucket per row. The plane matrix is built once
     per (bits, dim) inside the worker and cached across batches."""

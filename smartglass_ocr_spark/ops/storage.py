@@ -31,6 +31,8 @@ by design.
 from __future__ import annotations
 
 import math
+import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -171,7 +173,22 @@ def write_bucketed_table(
     why this lives behind an operator instead of a call-site
     convention). Pair with ``session.py``'s warehouse dir; the bucket
     count should divide evenly into the cluster's parallelism at the
-    target scale."""
+    target scale.
+
+    ``mode="overwrite"`` replaces the table outright: a session-scoped
+    in-memory catalog cannot see tables written by earlier sessions,
+    but their managed location under a local warehouse survives and
+    blocks ``saveAsTable``, so it is cleared first (an HMS/Iceberg
+    catalog tracks this itself)."""
+    if mode == "overwrite":
+        spark = df.sparkSession
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+        warehouse = spark.conf.get("spark.sql.warehouse.dir", "")
+        if warehouse.startswith("file:"):
+            warehouse = warehouse[len("file:"):]
+        loc = os.path.join(warehouse, table.split(".")[-1].lower())
+        if warehouse and os.path.isdir(loc):
+            shutil.rmtree(loc)
     (
         df.write.bucketBy(buckets, key)
         .sortBy(key)

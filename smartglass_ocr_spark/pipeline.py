@@ -1,22 +1,24 @@
 """The Spark extraction pipeline (SURVEY.md §7.1 slice, widened).
 
-Stages over ``documents(doc_id, spans array<struct<kind,text,
-media_ref,offset>>)``:
+One doc path over span rows ``(doc_id, kind, text, media_ref,
+offset)`` — from :func:`explode_spans` over ``documents(doc_id, spans
+array<struct<kind,text,media_ref,offset>>)`` or straight from
+:func:`~smartglass_ocr_spark.corpus.span_rows_from_flat`:
 
-1. ``explode_spans``     — ``inline(spans)``: one narrow stage.
-2. ``classify_and_clean``— ONE Arrow-batched pandas UDF computing
-   (block_class, clean_text); media rows pass through inside the
-   batch (single scan — no filter/union double-read of the source).
-3. ``reassemble``        — groupBy(doc_id) +
-   ``array_sort(collect_list(struct(offset, ...)))``: the W1
-   window-reassembly shuffle. ``two_phase=True`` adds a segment-level
-   pre-assembly keyed by ``offset // segment`` so a mega-document's
-   spans are combined in bounded chunks before the final per-doc merge
+1. ``reassemble_raw``  — groupBy(doc_id) + ``collect_list`` of the raw
+   spans: the W1 reassembly shuffle, the path's only exchange.
+   ``two_phase=True`` pre-collects per ``(doc_id, offset // segment)``
+   so no shuffle task buffers a mega-document's whole span list
    (SURVEY.md §4 skew plan).
-4. ``with_doc_metadata`` — per-doc derived columns (lang, structure,
-   summary, insights, confidence, status, structured_info) via a
-   second pandas UDF over the assembled doc text.
+2. ``fused_doc_stage`` — ONE ``mapInPandas`` crossing running the
+   golden spec (``golden.process_document``) per doc: offset sort,
+   per-span classify/clean, and every per-doc column (lang,
+   structure, summary, insights, confidence, status,
+   structured_info).
 
+:func:`run_pipeline_fused` chains the two; :func:`run_pipeline_skew_routed`
+sends heavy-tail mega docs through a distributed per-span
+``classify_and_clean`` branch and the golden per-doc tail instead.
 Per-span semantics = ``smartglass_ocr_spark.golden`` (the executable
 spec); reference citations live in the rules modules.
 """
@@ -24,13 +26,11 @@ spec); reference citations live in the rules modules.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     ArrayType, DoubleType, IntegerType, MapType, StringType, StructField,
     StructType,
 )
-
-from smartglass_ocr_spark.corpus import SPAN_STRUCT
 
 SEGMENT_SPANS = 65536  # two-phase reassembly segment width (offsets)
 # largest mega-doc id set the skew router broadcasts; above it the
@@ -105,68 +105,6 @@ _TYPED_INFO_TYPE = StructType(
     ]
 )
 
-_META_SCHEMA = StructType(
-    [
-        StructField("formatted_text", StringType()),
-        StructField("lang", StringType()),
-        StructField("structure", StringType()),
-        StructField("structured_info", MapType(StringType(), StringType())),
-        StructField("structured_typed", _TYPED_INFO_TYPE),
-        StructField("summary", StringType()),
-        StructField("key_insights", ArrayType(StringType())),
-        StructField("confidence", DoubleType()),
-        StructField("confidence_level", StringType()),
-        StructField("status", StringType()),
-    ]
-)
-
-
-@F.pandas_udf(_META_SCHEMA)
-def _doc_meta_udf(doc_text: pd.Series, class_hist: pd.Series) -> pd.DataFrame:
-    # mirrors golden.process_document's doc-metadata block exactly
-    # (the fused pipeline runs the golden spec itself; this staged twin
-    # must stay in lockstep — tests assert bit-equality of the two)
-    from smartglass_ocr_spark.rules.confidence import status_for, weighted_confidence
-    from smartglass_ocr_spark.rules.extract import (
-        confidence_level, extract_structured, extract_structured_typed,
-    )
-    from smartglass_ocr_spark.rules.format import format_text
-    from smartglass_ocr_spark.rules.langdetect import detect_language
-    from smartglass_ocr_spark.rules.structure import detect_structure
-    from smartglass_ocr_spark.rules.summarize import extract_key_insights, generate_summary
-
-    special = ("id_card", "receipt", "form", "table")
-    rows = []
-    for text, hist in zip(doc_text, class_hist):
-        text = text or ""
-        hist = hist or {}
-        formatted = format_text(text)
-        dominant = max(special, key=lambda c: (hist.get(c, 0), -special.index(c)))
-        extract_class = dominant if hist.get(dominant, 0) else "content"
-        confidence = weighted_confidence(text)
-        status = status_for(confidence, formatted)
-        summary = ""
-        insights: list[str] = []
-        if status in ("success", "partial_success") and formatted:
-            summary = generate_summary(formatted)
-            if len(formatted) > 200:
-                insights = extract_key_insights(formatted)
-        rows.append(
-            {
-                "formatted_text": formatted,
-                "lang": detect_language(formatted),
-                "structure": detect_structure(formatted),
-                "structured_info": extract_structured(extract_class, formatted),
-                "structured_typed": extract_structured_typed(extract_class, formatted),
-                "summary": summary,
-                "key_insights": insights,
-                "confidence": confidence,
-                "confidence_level": confidence_level(confidence),
-                "status": status,
-            }
-        )
-    return pd.DataFrame(rows)
-
 
 def explode_spans(documents: DataFrame) -> DataFrame:
     """spans array -> one row per span (narrow; generator exec)."""
@@ -183,106 +121,6 @@ def classify_and_clean(span_rows: DataFrame) -> DataFrame:
         "offset",
         F.col("_cc.block_class").alias("block_class"),
         F.col("_cc.clean_text").alias("text"),
-    )
-
-
-def _ordered_span_struct() -> Column:
-    # offset leads so the binary struct comparison of array_sort is
-    # exactly "order by offset" (offsets are unique within a doc)
-    return F.struct("offset", "kind", "text", "media_ref")
-
-
-def _restore_field_order(sorted_col: Column) -> Column:
-    return F.transform(
-        sorted_col,
-        lambda s: F.struct(
-            s["kind"].alias("kind"),
-            s["text"].alias("text"),
-            s["media_ref"].alias("media_ref"),
-            s["offset"].alias("offset"),
-        ),
-    )
-
-
-def reassemble(span_rows: DataFrame, two_phase: bool = False,
-               segment_spans: int = SEGMENT_SPANS) -> DataFrame:
-    """W1 ordered reassembly: doc_id -> spans sorted by offset, plus
-    block_class_hist (the per-doc class histogram used downstream).
-
-    Single-phase: one hash-partial collect_list shuffle on doc_id.
-    Two-phase: pre-assemble per (doc_id, offset // segment_spans) so no
-    single task materializes a mega-doc's full span list during the
-    shuffle sort; the second, far smaller shuffle merges ~n/segment
-    pre-sorted chunks per doc.
-    """
-    def hist_of(classes: Column) -> Column:
-        # fold the class list into a count map, JVM-side
-        return F.aggregate(
-            classes,
-            F.create_map().cast("map<string,int>"),
-            lambda acc, c: F.map_zip_with(
-                acc,
-                F.create_map(c, F.lit(1)),
-                lambda _, a, b: F.coalesce(a, F.lit(0)) + F.coalesce(b, F.lit(0)),
-            ),
-        )
-
-    if not two_phase:
-        grouped = span_rows.groupBy("doc_id").agg(
-            F.array_sort(F.collect_list(_ordered_span_struct())).alias("_sorted"),
-            hist_of(F.collect_list("block_class")).alias("block_class_hist"),
-        )
-        return grouped.select(
-            "doc_id",
-            _restore_field_order(F.col("_sorted")).alias("spans"),
-            "block_class_hist",
-        )
-
-    seg = span_rows.withColumn(
-        "_seg", F.floor(F.col("offset") / F.lit(segment_spans)).cast("int")
-    )
-    stage1 = seg.groupBy("doc_id", "_seg").agg(
-        F.array_sort(F.collect_list(_ordered_span_struct())).alias("_seg_spans"),
-        F.count(F.lit(1)).alias("_n"),
-        F.collect_list("block_class").alias("_classes"),
-    )
-    stage2 = stage1.groupBy("doc_id").agg(
-        F.flatten(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("_seg", "_seg_spans"))),
-                lambda x: x["_seg_spans"],
-            )
-        ).alias("_sorted"),
-        hist_of(F.flatten(F.collect_list("_classes"))).alias("block_class_hist"),
-    )
-    return stage2.select(
-        "doc_id",
-        _restore_field_order(F.col("_sorted")).alias("spans"),
-        "block_class_hist",
-    )
-
-
-def with_doc_metadata(reassembled: DataFrame) -> DataFrame:
-    """Adds the per-doc derived columns (FIXTURES.md §3)."""
-    texts = F.transform("spans", lambda s: s["text"])
-    doc_text = F.array_join(
-        F.filter(texts, lambda t: t.isNotNull() & (t != F.lit(""))), "\n\n"
-    )
-    meta = _doc_meta_udf(doc_text, F.col("block_class_hist"))
-    return reassembled.withColumn("_m", meta).select(
-        "doc_id",
-        "spans",
-        "block_class_hist",
-        F.col("_m.formatted_text").alias("formatted_text"),
-        F.col("_m.lang").alias("lang"),
-        F.col("_m.structure").alias("structure"),
-        F.col("_m.structured_info").alias("structured_info"),
-        F.col("_m.structured_typed").alias("structured_typed"),
-        F.col("_m.summary").alias("summary"),
-        F.col("_m.key_insights").alias("key_insights"),
-        F.col("_m.confidence").alias("confidence"),
-        F.col("_m.confidence_level").alias("confidence_level"),
-        F.col("_m.status").alias("status"),
     )
 
 
@@ -328,7 +166,7 @@ def reassemble_raw(span_rows: DataFrame, two_phase: bool = False,
     buffers a mega-doc's full span list; the second agg merges a few
     hundred segment arrays per doc. (The final per-doc row is still
     whole — a doc must fit an executor either way; two-phase bounds
-    the *shuffle* memory, same as the staged pipeline's plan.)"""
+    only the *shuffle* memory.)"""
     span_struct = F.struct("kind", "text", "media_ref", "offset")
     if not two_phase:
         return span_rows.groupBy("doc_id").agg(
@@ -351,7 +189,7 @@ def fused_doc_stage(assembled: DataFrame,
     """classify + clean + reassembly-order + all doc metadata in ONE
     Arrow round trip per batch of whole documents, by running the
     golden executable spec (`golden.process_document`) directly —
-    output equality with the staged pipeline is by construction.
+    output equality with the spec is by construction.
 
     Why fused: ArrowEvalPython does not propagate outputPartitioning,
     so any pandas-UDF stage *before* the reassembly groupBy forces a
@@ -425,14 +263,13 @@ def run_pipeline_fused(span_rows: DataFrame,
                        two_phase: bool = False,
                        max_doc_spans: int | None = None,
                        max_doc_bytes: int | None = None) -> DataFrame:
-    """Optimized end-to-end pipeline: ONE shuffle (raw-span
+    """The end-to-end doc pipeline: ONE shuffle (raw-span
     reassembly), ONE Arrow crossing (fused classify/clean/meta).
-    Bit-identical output to ``run_pipeline_rows(with_metadata=True)``
-    (asserted in tests). Use the staged pipeline when intermediate
-    span rows are needed relationally; use this for throughput.
-    ``two_phase`` enables the mega-doc segment pre-assembly;
-    ``max_doc_spans``/``max_doc_bytes`` cap per-doc work (see
-    :func:`fused_doc_stage`).
+    Output rows equal ``golden.golden_outputs`` field for field
+    (asserted in tests). For per-span rows without the doc metadata
+    use :func:`extracted_span_rows`. ``two_phase`` enables the
+    mega-doc segment pre-assembly; ``max_doc_spans``/``max_doc_bytes``
+    cap per-doc work (see :func:`fused_doc_stage`).
 
     Few short tasks per core: when the reassembly shuffle plans more
     than ``defaultParallelism`` but at most twice as many partitions,
@@ -471,14 +308,14 @@ def run_pipeline_skew_routed(span_rows: DataFrame,
                              partitions: int | None = None) -> DataFrame:
     """Mega-doc straggler mitigation, LOSSLESS (r2 VERDICT #3): docs
     at or under ``mega_doc_spans`` spans take the fused one-exchange
-    path; heavier docs are routed through the STAGED path, where the
-    dominant per-doc cost — per-span classify/clean, ~0.7 ms/span, so
-    a 200k-span doc is ~2 min of Python in ONE fused task — runs
-    distributed across the cluster (a round-robin repartition spreads
-    the mega spans; the two-phase re-assembly shuffle touches only
-    the mega subset). Output is bit-identical to the fused path
-    (asserted in tests): per-span classification is context-free and
-    the staged metadata stage is in lockstep with the golden spec.
+    path; heavier docs take a mega branch where the dominant per-doc
+    cost — per-span classify/clean, ~0.7 ms/span, so a 200k-span doc
+    is ~2 min of Python in ONE fused task — runs distributed across
+    the cluster (a round-robin repartition spreads the mega spans;
+    the per-doc regrouping shuffle touches only the mega subset).
+    Output is bit-identical to the fused path (asserted in tests):
+    per-span classification is context-free and the per-doc tail is
+    the golden spec's own ``golden.document_metadata``.
 
     Routing: one cheap partial-combining count agg finds the mega
     doc_ids (compact (doc_id, n) rows); the — by definition of a
@@ -497,12 +334,12 @@ def run_pipeline_skew_routed(span_rows: DataFrame,
     in tests). The mega branch is: round-robin spread
     -> Arrow classify/clean -> ``applyInPandas`` per doc running only
     the per-doc metadata tail (``golden.document_metadata``) —
-    deliberately NOT the staged ``reassemble``/``with_doc_metadata``
-    pair (interpreted HOF hist-fold + field-reorder lambdas cost more
-    per mega span than the classification they save), and not a JVM
-    ``collect_list`` either (flat columnar Arrow transfer into the
-    grouped pandas stage benched ~15% faster than building the span
-    structs JVM-side and converting the nested array).
+    deliberately not a JVM ``array_sort``/``collect_list`` (an
+    interpreted HOF hist-fold + field-reorder lambdas cost more per
+    mega span than the classification they save, and flat columnar
+    Arrow transfer into the grouped pandas stage benched ~15% faster
+    than building the span structs JVM-side and converting the nested
+    array).
 
     The residual serial floor per mega-doc is the per-doc metadata
     pass (format/structure/summary — linear passes over the joined
@@ -588,17 +425,13 @@ def with_organized_text(pipeline_out: DataFrame) -> DataFrame:
     path (same pattern as :func:`with_markdown`)."""
 
     def run(batches):
+        from smartglass_ocr_spark.golden import dominant_class
         from smartglass_ocr_spark.rules.format import organize_text
 
-        special = ("id_card", "receipt", "form", "table")
         for pdf in batches:
             organized = []
             for row in pdf.to_dict("records"):
-                hist = row.get("block_class_hist") or {}
-                dominant = max(
-                    special, key=lambda c: (hist.get(c, 0), -special.index(c))
-                )
-                cls = dominant if hist.get(dominant, 0) else "content"
+                cls = dominant_class(row.get("block_class_hist") or {})
                 organized.append(organize_text(row.get("formatted_text") or "", cls))
             pdf = pdf.copy()
             pdf["organized_text"] = organized
@@ -631,49 +464,12 @@ def with_markdown(pipeline_out: DataFrame) -> DataFrame:
     return pipeline_out.mapInPandas(run, schema)
 
 
-def run_pipeline_rows(span_rows: DataFrame, two_phase: bool = False,
-                      with_metadata: bool = True,
-                      partitions: int | None = None) -> DataFrame:
-    """Pipeline from already-exploded span rows (doc_id, kind, text,
-    media_ref, offset) -> cleaned + reassembled (+ metadata) output.
-    Start here when the source is row-shaped (e.g.
-    :func:`~smartglass_ocr_spark.corpus.span_rows_from_flat`) — it
-    skips the array build + explode round trip.
-
-    ``partitions``: hash-repartition by doc_id up front. Set this when
-    the source arrives in too few splits (small files, a crossJoin-
-    replicated input, a single kafka partition): the pandas-UDF stages
-    then run at full parallelism AND the reassembly groupBy reuses the
-    hash partitioning, so the repartition replaces — not adds to — the
-    aggregation shuffle. Leave None when the scan already yields
-    enough splits (the 100 TB case: parquet row-group splits)."""
-    if partitions:
-        span_rows = span_rows.repartition(partitions, "doc_id")
-    cleaned = classify_and_clean(span_rows)
-    out = reassemble(cleaned, two_phase=two_phase)
-    if with_metadata:
-        out = with_doc_metadata(out)
-    return out
-
-
-def run_pipeline(documents: DataFrame, two_phase: bool = False,
-                 with_metadata: bool = True) -> DataFrame:
-    """documents(doc_id, spans array) -> cleaned + reassembled
-    (+ metadata) output."""
-    return run_pipeline_rows(
-        explode_spans(documents), two_phase=two_phase, with_metadata=with_metadata
-    )
-
-
-def extracted_span_rows(documents: DataFrame | None = None,
-                        span_rows: DataFrame | None = None) -> DataFrame:
+def extracted_span_rows(span_rows: DataFrame) -> DataFrame:
     """Flat per-span output (doc_id, order, kind, text, media_ref,
     block_class) — the exploded view of the pipeline for relational
     consumers; order = rank of offset within doc (dense 0..n-1)."""
     from pyspark.sql.window import Window
 
-    if span_rows is None:
-        span_rows = explode_spans(documents)
     cleaned = classify_and_clean(span_rows)
     w = Window.partitionBy("doc_id").orderBy("offset")
     return cleaned.withColumn("order", F.row_number().over(w) - 1).select(

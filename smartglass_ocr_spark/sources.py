@@ -4,18 +4,11 @@ The canonical storage is parquet/Iceberg, but a 100 TB ingest edge
 sees more shapes: JSONL crawl dumps, CSV flat exports. Readers here
 pin the schema explicitly — streaming and 10^12-row batch scans must
 never pay (or trust) schema inference — and writers round-trip
-losslessly (verified in tests).
-
-Bucketing: :func:`write_bucketed` persists a table bucketed by a join
-key so later equi-joins/groupBys on that key need NO exchange — the
-scan itself is the shuffle (SURVEY.md §4: co-located joins). The
-plan-shape test pins the no-Exchange property.
+losslessly (verified in tests). Bucketed managed tables are written
+by ``ops.storage.write_bucketed_table``.
 """
 
 from __future__ import annotations
-
-import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -81,28 +74,3 @@ def write_flat_documents(df: DataFrame, path: str, fmt: str = "parquet",
         )
     else:
         raise ValueError(f"unsupported flat format: {fmt}")
-
-
-def write_bucketed(df: DataFrame, table: str, key: str, buckets: int = 16,
-                   sort: bool = True) -> None:
-    """Persist as a bucketed (+sorted) managed table. Joins and
-    groupBys on ``key`` between tables bucketed the same way read
-    co-located buckets and skip the exchange entirely — at 100 TB
-    this turns the nightly fact-to-fact join from a full shuffle
-    into a scan."""
-    spark = df.sparkSession
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    # with a session-scoped in-memory catalog the DROP above cannot
-    # see tables written by earlier sessions, but their managed
-    # location under the warehouse survives and blocks saveAsTable —
-    # clear it (an HMS/Iceberg catalog tracks this itself)
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "")
-    if warehouse.startswith("file:"):
-        warehouse = warehouse[len("file:"):]
-    loc = os.path.join(warehouse, table.split(".")[-1].lower())
-    if warehouse and os.path.isdir(loc):
-        shutil.rmtree(loc)
-    w = df.write.mode("overwrite").bucketBy(buckets, key)
-    if sort:
-        w = w.sortBy(key)
-    w.saveAsTable(table)

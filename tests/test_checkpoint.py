@@ -222,10 +222,3 @@ def test_truncation_counts_in_metrics(spark, paths):
     assert "n_truncated_spans" not in spark.read.parquet(out2).columns
     m2 = spark.read.parquet(met2)
     assert m2.agg(F.sum("n_truncated")).collect()[0][0] == 0
-
-    # staged path refuses the cap levers (fused-only)
-    with pytest.raises(ValueError, match="use_fused"):
-        run_extraction_job(
-            spark, docs, out2, ckpt2, met2, "run-x", n_partitions=8,
-            use_fused=False, max_doc_spans=cap,
-        )

@@ -1,6 +1,6 @@
 """Semantics tests for the training-data operators against small
 hand-checkable inputs + pure-Python oracles (the DuckDB oracle parity
-is covered separately by tools/check_contract.py / the driver gate).
+is covered separately by tools/check_oracles.py).
 """
 
 from __future__ import annotations

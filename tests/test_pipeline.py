@@ -14,7 +14,7 @@ import pytest
 
 from smartglass_ocr_spark.corpus import docs_to_df, generate_docs
 from smartglass_ocr_spark.golden import golden_outputs
-from smartglass_ocr_spark.pipeline import run_pipeline
+from smartglass_ocr_spark.pipeline import explode_spans, run_pipeline_fused
 
 
 @pytest.fixture(scope="module")
@@ -29,7 +29,7 @@ def golden(docs):
 
 @pytest.fixture(scope="module")
 def spark_result(spark, docs):
-    rows = run_pipeline(docs_to_df(spark, docs), with_metadata=True).collect()
+    rows = run_pipeline_fused(explode_spans(docs_to_df(spark, docs))).collect()
     return {r["doc_id"]: r for r in rows}
 
 
@@ -98,33 +98,24 @@ def test_permutation_invariance(spark, docs, spark_result):
         spans = list(d["spans"])
         rng.shuffle(spans)
         shuffled.append({"doc_id": d["doc_id"], "spans": spans})
-    rows = run_pipeline(docs_to_df(spark, shuffled), with_metadata=False).collect()
+    rows = run_pipeline_fused(explode_spans(docs_to_df(spark, shuffled))).collect()
     for r in rows:
         assert _span_seq(r["spans"]) == _span_seq(spark_result[r["doc_id"]]["spans"])
 
 
-def test_two_phase_reassembly_equivalence(spark, docs, golden):
-    """Salted/segmented skew path produces byte-identical output,
-    including for a pinned mega-doc (segment width forced tiny so the
-    test corpus actually crosses segment boundaries)."""
-    mega = generate_docs(n_docs=10, seed=99, scramble=True, mega_doc_spans=500)
-    df = docs_to_df(spark, mega)
-    single = {
-        r["doc_id"]: r
-        for r in run_pipeline(df, two_phase=False, with_metadata=False).collect()
-    }
-    from smartglass_ocr_spark.pipeline import classify_and_clean, explode_spans, reassemble
+def test_two_phase_reassembly_equivalence(spark):
+    """The segmented skew path produces the golden rows, including for
+    pinned mega-docs (segment width forced tiny so their spans cross
+    several segment boundaries)."""
+    from smartglass_ocr_spark.pipeline import fused_doc_stage, reassemble_raw
 
-    two = {
-        r["doc_id"]: r
-        for r in reassemble(
-            classify_and_clean(explode_spans(df)), two_phase=True, segment_spans=64
-        ).collect()
-    }
-    assert set(single) == set(two)
-    for doc_id in single:
-        assert _span_seq(single[doc_id]["spans"]) == _span_seq(two[doc_id]["spans"])
-        assert dict(single[doc_id]["block_class_hist"]) == dict(two[doc_id]["block_class_hist"])
+    mega = generate_docs(n_docs=10, seed=99, scramble=True, mega_doc_spans=500)
+    assembled = reassemble_raw(
+        explode_spans(docs_to_df(spark, mega)), two_phase=True, segment_spans=64
+    )
+    got = {r["doc_id"]: r.asDict(recursive=True) for r in fused_doc_stage(assembled).collect()}
+    assert got == {g["doc_id"]: g for g in golden_outputs(mega)}
+    assert max(len(d["spans"]) for d in mega) > 64
 
 
 def test_empty_and_single_span_docs(spark):
@@ -132,31 +123,16 @@ def test_empty_and_single_span_docs(spark):
         {"doc_id": "d-single", "spans": [{"kind": "para", "text": "ofthe thing works.", "media_ref": None, "offset": 0}]},
         {"doc_id": "d-media-only", "spans": [{"kind": "image", "text": None, "media_ref": "m-abc", "offset": 3}]},
     ]
-    got = {r["doc_id"]: r for r in run_pipeline(docs_to_df(spark, docs)).collect()}
+    got = {
+        r["doc_id"]: r
+        for r in run_pipeline_fused(explode_spans(docs_to_df(spark, docs))).collect()
+    }
     g = {x["doc_id"]: x for x in golden_outputs(docs)}
     for doc_id in g:
         assert _span_seq(got[doc_id]["spans"]) == _span_seq(g[doc_id]["spans"])
 
 
-def test_fused_pipeline_equals_staged(spark):
-    """run_pipeline_fused (one shuffle, one Arrow crossing) must be
-    bit-identical to the staged explode->classify->reassemble->meta
-    pipeline across every output column, including nested spans,
-    hist maps and metadata."""
-    from smartglass_ocr_spark.pipeline import explode_spans, run_pipeline_fused
-
-    df = docs_to_df(spark, generate_docs(n_docs=60, seed=23, scramble=True))
-    staged = run_pipeline(df, with_metadata=True)
-    fused = run_pipeline_fused(explode_spans(df))
-    assert staged.columns == fused.columns
-    a = {r["doc_id"]: r.asDict(recursive=True) for r in staged.collect()}
-    b = {r["doc_id"]: r.asDict(recursive=True) for r in fused.collect()}
-    assert a == b
-
-
 def test_fused_pipeline_matches_golden(spark):
-    from smartglass_ocr_spark.pipeline import explode_spans, run_pipeline_fused
-
     docs = generate_docs(n_docs=40, seed=31, scramble=True)
     got = {
         r["doc_id"]: r for r in run_pipeline_fused(explode_spans(docs_to_df(spark, docs))).collect()

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from smartglass_ocr_spark import sources
 from smartglass_ocr_spark.corpus import docs_to_df, generate_docs
+from smartglass_ocr_spark.ops.storage import write_bucketed_table
 
 
 def _span_sets(df):
@@ -43,9 +44,9 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
     orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-    sources.write_bucketed(li, "li_b", "l_orderkey", buckets=8)
-    sources.write_bucketed(
-        orders.withColumnRenamed("o_orderkey", "l_orderkey"), "ord_b", "l_orderkey", buckets=8
+    write_bucketed_table(li, "li_b", buckets=8, key="l_orderkey")
+    write_bucketed_table(
+        orders.withColumnRenamed("o_orderkey", "l_orderkey"), "ord_b", buckets=8, key="l_orderkey"
     )
     joined = spark.table("li_b").join(spark.table("ord_b"), "l_orderkey")
     plan = joined._jdf.queryExecution().executedPlan().toString()
