@@ -3,7 +3,7 @@
 
 Default: run the headline suite once at ``$SPARK_GRAFT_SF_DIR``
 (default /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]``
-(default 32) and print ONE JSON line::
+(default: the host's core count) and print ONE JSON line::
 
     {"metric": "...", "value": <total sec>, "unit": "sec",
      "queries": {name: sec, ...}, "sf": ..., "docs_per_sec": ...}
@@ -29,7 +29,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1))
 REPLICATE = int(os.environ.get("SPARK_GRAFT_BENCH_REPLICATE", "10"))
 
 # r3 VERDICT #8: the bench covers EVERY contract query (the full
@@ -154,6 +154,8 @@ def _cluster_throughput(
     cluster runs separate executor JVMs exactly like local-cluster."""
     from pyspark.sql import SparkSession
 
+    from smartglass_ocr_spark.session import DAEMON_CONF
+
     total_cores = n_workers * cores_per_worker
     spark = (
         SparkSession.builder
@@ -167,6 +169,8 @@ def _cluster_throughput(
         .config("spark.driver.memory", "8g")
         .config("spark.executor.extraJavaOptions", "-XX:+UseParallelGC")
         .config("spark.executorEnv.PYTHONPATH", os.path.dirname(os.path.abspath(__file__)))
+        # the executors' PYTHONPATH above makes the daemon importable
+        .config(*DAEMON_CONF)
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()

@@ -274,15 +274,18 @@ def run_pipeline_fused(span_rows: DataFrame,
     Few short tasks per core: when the reassembly shuffle plans more
     than ``defaultParallelism`` but at most twice as many partitions,
     the doc stage is coalesced to ``defaultParallelism`` — one Python
-    task per core — since each Python task pays a fixed worker set-up
-    (≈0.1–0.24 s on a 4-vCPU host: on CPython 3.11
-    ``pyspark.worker_util.setup_spark_files`` calls
-    ``importlib.invalidate_caches()``, and every cached ``zipimporter``
-    re-reads its archive; BASELINE.md §per-task set-up), and 2×cores
-    partitions paid two waves of it per pass. ``coalesce`` is narrow:
-    the plan keeps its single hash exchange, the final aggregate still
-    runs once per shuffle partition inside the merged task, and
-    ``mapInPandas`` still streams bounded Arrow batches. The gain was
+    task per core — since each wave of Python tasks pays a fixed worker
+    set-up, and 2×cores partitions paid two waves per pass. On a
+    4-vCPU host a trivial ``mapInPandas`` pass costs 0.20 s with 4
+    tasks and 0.25 s with 8 under :mod:`smartglass_ocr_spark.daemon`,
+    against 0.44 s and 0.63 s under the stock daemon, whose workers
+    re-read pyspark.zip and the spark-core jar on every task
+    (BASELINE.md §Per-task set-up); with the zip-free daemon the
+    coalesce still won 3/3 corpus_unique benchmark pairs. ``coalesce``
+    is narrow: the plan keeps its single hash exchange, the final
+    aggregate still runs once per shuffle partition inside the merged
+    task, and ``mapInPandas`` still streams bounded Arrow batches. The
+    gain was
     measured only on ``local[4]`` with 8 partitions and passes of a
     few seconds (both gated benchmark workloads have that shape). Larger
     shuffles keep every partition as its own task, so retries,

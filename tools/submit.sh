@@ -13,7 +13,7 @@ cd "$(dirname "$0")/.."
 INPUT=${1:?input path}; OUTPUT=${2:?output path}
 CKPT=${3:?checkpoint path}; METRICS=${4:?metrics path}
 RUN_ID=${5:-run-$(date +%s)}
-CPUS=${SPARK_GRAFT_CPUS:-32}
+CPUS=${SPARK_GRAFT_CPUS:-$(nproc)}
 FLAT_FLAG=$([ "${FLAT:-1}" = "0" ] && echo "" || echo "--flat")
 
 ZIP=$(mktemp -d)/smartglass_ocr_spark.zip
