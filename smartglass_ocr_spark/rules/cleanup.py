@@ -31,6 +31,8 @@ from __future__ import annotations
 
 import re
 
+from smartglass_ocr_spark.rules.casefold import gated_subs
+
 # --------------------------------------------------------------------
 # F1 general cleanup (ref lib/text_processing.py:88-128)
 # --------------------------------------------------------------------
@@ -187,9 +189,13 @@ _RECEIPT_WORD_FIXES = [
 _ITEM_HEADER_RX = re.compile(r"^(ITEM|DESCRIPTION|PRODUCT|GOODS)S?", re.IGNORECASE)
 _ITEM_END_RX = re.compile(r"^(SUBTOTAL|TOTAL|TAX|DISCOUNT)", re.IGNORECASE)
 _ITEM_LINE_RX = re.compile(r"^(.+?)(?:\s+(\d+))?(?:\s+(?:x|@)\s+)?([0-9.,]+)")
-_SUBTOTAL_RX = re.compile(r"(?i)subtotal\s*[:,]?\s*[$]?([0-9.,]+)")
-_TAX_RX = re.compile(r"(?i)tax\s*[:,]?\s*[$]?([0-9.,]+)")
-_TOTAL_RX = re.compile(r"(?i)total\s*[:,]?\s*[$]?([0-9.,]+)")
+# (literal, pattern, replacement): each case-insensitive pattern runs
+# only when its literal is in the folded text (casefold.gated_subs)
+_AMOUNT_FIXES = [
+    ("subtotal", re.compile(r"(?i)subtotal\s*[:,]?\s*[$]?([0-9.,]+)"), r"SUBTOTAL: $\1"),
+    ("tax", re.compile(r"(?i)tax\s*[:,]?\s*[$]?([0-9.,]+)"), r"TAX: $\1"),
+    ("total", re.compile(r"(?i)total\s*[:,]?\s*[$]?([0-9.,]+)"), r"TOTAL: $\1"),
+]
 
 
 def fix_receipt(text: str) -> str:
@@ -223,12 +229,7 @@ def fix_receipt(text: str) -> str:
                 out.append(line)
         else:
             out.append(line)
-    text = "\n".join(out)
-
-    text = _SUBTOTAL_RX.sub(r"SUBTOTAL: $\1", text)
-    text = _TAX_RX.sub(r"TAX: $\1", text)
-    text = _TOTAL_RX.sub(r"TOTAL: $\1", text)
-    return text
+    return gated_subs(_AMOUNT_FIXES, "\n".join(out))
 
 
 # --------------------------------------------------------------------
@@ -236,25 +237,30 @@ def fix_receipt(text: str) -> str:
 # --------------------------------------------------------------------
 
 # label canonicalization (case-insensitive); identity mappings in the
-# reference matter because they *re-case* the label to upper.
+# reference matter because they *re-case* the label to upper. Each
+# (literal, pattern, replacement) runs only when its literal is in the
+# folded text (casefold.gated_subs).
 _ID_LABEL_FIXES = [
-    (re.compile(r"\bNAME\b", re.IGNORECASE), "NAMA"),
-    (re.compile(r"\bNAMA\b", re.IGNORECASE), "NAMA"),
-    (re.compile(r"\bADDRESS\b", re.IGNORECASE), "ALAMAT"),
-    (re.compile(r"\bALAMAT\b", re.IGNORECASE), "ALAMAT"),
-    (re.compile(r"\bTEMPAT/TGL LAHIR\b", re.IGNORECASE), "TEMPAT/TGL LAHIR"),
-    (re.compile(r"\bTEMPAT TGL LAHIR\b", re.IGNORECASE), "TEMPAT/TGL LAHIR"),
-    (re.compile(r"\bJENIS KELAMIN\b", re.IGNORECASE), "JENIS KELAMIN"),
-    (re.compile(r"\bAGAMA\b", re.IGNORECASE), "AGAMA"),
-    (re.compile(r"\bSTATUS PERKAWINAN\b", re.IGNORECASE), "STATUS PERKAWINAN"),
-    (re.compile(r"\bPEKERJAAN\b", re.IGNORECASE), "PEKERJAAN"),
-    (re.compile(r"\bKEWARGANEGARARAN\b", re.IGNORECASE), "KEWARGANEGARAAN"),
-    (re.compile(r"\bBERLAKU HINGGA\b", re.IGNORECASE), "BERLAKU HINGGA"),
-    (re.compile(r"\bNIK\b", re.IGNORECASE), "NIK"),
-    (re.compile(r"\bDESA/KELURAHAN\b", re.IGNORECASE), "DESA/KELURAHAN"),
-    (re.compile(r"\bKECAMATAN\b", re.IGNORECASE), "KECAMATAN"),
-    (re.compile(r"\bKABUPATEN\b", re.IGNORECASE), "KABUPATEN"),
-    (re.compile(r"\bPROVINSI\b", re.IGNORECASE), "PROVINSI"),
+    (label.lower(), re.compile(rf"\b{re.escape(label)}\b", re.IGNORECASE), rep)
+    for label, rep in (
+        ("NAME", "NAMA"),
+        ("NAMA", "NAMA"),
+        ("ADDRESS", "ALAMAT"),
+        ("ALAMAT", "ALAMAT"),
+        ("TEMPAT/TGL LAHIR", "TEMPAT/TGL LAHIR"),
+        ("TEMPAT TGL LAHIR", "TEMPAT/TGL LAHIR"),
+        ("JENIS KELAMIN", "JENIS KELAMIN"),
+        ("AGAMA", "AGAMA"),
+        ("STATUS PERKAWINAN", "STATUS PERKAWINAN"),
+        ("PEKERJAAN", "PEKERJAAN"),
+        ("KEWARGANEGARARAN", "KEWARGANEGARAAN"),
+        ("BERLAKU HINGGA", "BERLAKU HINGGA"),
+        ("NIK", "NIK"),
+        ("DESA/KELURAHAN", "DESA/KELURAHAN"),
+        ("KECAMATAN", "KECAMATAN"),
+        ("KABUPATEN", "KABUPATEN"),
+        ("PROVINSI", "PROVINSI"),
+    )
 ]
 _ID_FIELDS = [
     "NAMA", "ALAMAT", "TEMPAT/TGL LAHIR", "JENIS KELAMIN", "AGAMA",
@@ -271,8 +277,7 @@ _DATE_RX = re.compile(r"(\d{1,2})[/\-\.\\](\d{1,2})[/\-\.\\](\d{2,4})")
 
 
 def fix_id_card(text: str) -> str:
-    for rx, rep in _ID_LABEL_FIXES:
-        text = rx.sub(rep, text)
+    text = gated_subs(_ID_LABEL_FIXES, text)
     for label, rx in _ID_COLON_RXS:
         if label in text:
             text = rx.sub(r"\1: \2", text)
@@ -342,27 +347,29 @@ def fix_scientific(text: str) -> str:
 # F6 form fixes (ref lib/text_processing.py:406-460)
 # --------------------------------------------------------------------
 
+# (literal, pattern, replacement): each case-sensitive pattern runs
+# only when the literal it cannot match without is in the text
 _FORM_LABELS = [
-    (re.compile(r"\b(?:F|f)irst\s*(?:N|n)ame\b"), "First Name"),
-    (re.compile(r"\b(?:L|l)ast\s*(?:N|n)ame\b"), "Last Name"),
-    (re.compile(r"\b(?:M|m)iddle\s*(?:N|n)ame\b"), "Middle Name"),
-    (re.compile(r"\b(?:F|f)ull\s*(?:N|n)ame\b"), "Full Name"),
-    (re.compile(r"\b(?:A|a)ddress\b"), "Address"),
-    (re.compile(r"\b(?:C|c)ity\b"), "City"),
-    (re.compile(r"\b(?:S|s)tate\b"), "State"),
-    (re.compile(r"\b(?:Z|z)ip\s*(?:C|c)ode\b"), "Zip Code"),
-    (re.compile(r"\b(?:P|p)ostal\s*(?:C|c)ode\b"), "Postal Code"),
-    (re.compile(r"\b(?:C|c)ountry\b"), "Country"),
-    (re.compile(r"\b(?:E|e)mail\b"), "Email"),
-    (re.compile(r"\b(?:P|p)hone\b"), "Phone"),
-    (re.compile(r"\b(?:M|m)obile\b"), "Mobile"),
-    (re.compile(r"\b(?:D|d)ate\s*(?:O|o)f\s*(?:B|b)irth\b"), "Date of Birth"),
-    (re.compile(r"\b(?:G|g)ender\b"), "Gender"),
-    (re.compile(r"\b(?:O|o)ccupation\b"), "Occupation"),
-    (re.compile(r"\b(?:C|c)ompany\b"), "Company"),
-    (re.compile(r"\b(?:D|d)epartment\b"), "Department"),
-    (re.compile(r"\b(?:S|s)ignature\b"), "Signature"),
-    (re.compile(r"\b(?:D|d)ate\b"), "Date"),
+    ("irst", re.compile(r"\b(?:F|f)irst\s*(?:N|n)ame\b"), "First Name"),
+    ("ast", re.compile(r"\b(?:L|l)ast\s*(?:N|n)ame\b"), "Last Name"),
+    ("iddle", re.compile(r"\b(?:M|m)iddle\s*(?:N|n)ame\b"), "Middle Name"),
+    ("ull", re.compile(r"\b(?:F|f)ull\s*(?:N|n)ame\b"), "Full Name"),
+    ("ddress", re.compile(r"\b(?:A|a)ddress\b"), "Address"),
+    ("ity", re.compile(r"\b(?:C|c)ity\b"), "City"),
+    ("tate", re.compile(r"\b(?:S|s)tate\b"), "State"),
+    ("ode", re.compile(r"\b(?:Z|z)ip\s*(?:C|c)ode\b"), "Zip Code"),
+    ("ostal", re.compile(r"\b(?:P|p)ostal\s*(?:C|c)ode\b"), "Postal Code"),
+    ("ountry", re.compile(r"\b(?:C|c)ountry\b"), "Country"),
+    ("mail", re.compile(r"\b(?:E|e)mail\b"), "Email"),
+    ("hone", re.compile(r"\b(?:P|p)hone\b"), "Phone"),
+    ("obile", re.compile(r"\b(?:M|m)obile\b"), "Mobile"),
+    ("irth", re.compile(r"\b(?:D|d)ate\s*(?:O|o)f\s*(?:B|b)irth\b"), "Date of Birth"),
+    ("ender", re.compile(r"\b(?:G|g)ender\b"), "Gender"),
+    ("ccupation", re.compile(r"\b(?:O|o)ccupation\b"), "Occupation"),
+    ("ompany", re.compile(r"\b(?:C|c)ompany\b"), "Company"),
+    ("epartment", re.compile(r"\b(?:D|d)epartment\b"), "Department"),
+    ("ignature", re.compile(r"\b(?:S|s)ignature\b"), "Signature"),
+    ("ate", re.compile(r"\b(?:D|d)ate\b"), "Date"),
 ]
 _CHECKED_BOX_RX = re.compile(r"\[\s*[xX✓✔]\s*\]")
 _EMPTY_BOX_RX = re.compile(r"\[\s*\]")
@@ -372,7 +379,7 @@ _EMPTY_BOX_RX = re.compile(r"\[\s*\]")
 # (ref :443-458) — one pattern per canonical label string, in order,
 # each paired with the literal it cannot match without (the patterns
 # are case-sensitive).
-_FORM_CANON = dict.fromkeys(rep for _, rep in _FORM_LABELS)
+_FORM_CANON = dict.fromkeys(rep for _, _, rep in _FORM_LABELS)
 _FORM_COLON_RXS = [
     (label, re.compile(f"({re.escape(label)})\\s+([^:\\n]+)")) for label in _FORM_CANON
 ]
@@ -383,8 +390,9 @@ _FORM_BREAK_RXS = [
 
 
 def fix_form(text: str) -> str:
-    for rx, rep in _FORM_LABELS:
-        text = rx.sub(rep, text)
+    for literal, rx, rep in _FORM_LABELS:
+        if literal in text:
+            text = rx.sub(rep, text)
     for label, rx in _FORM_COLON_RXS:
         if label in text:
             text = rx.sub(r"\1: \2", text)

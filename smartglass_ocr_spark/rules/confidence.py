@@ -16,9 +16,11 @@ Status thresholds: ref lib/smartglass_ocr.py:620-625.
 
 from __future__ import annotations
 
-from collections import Counter
+import re
 
 RAW_BASE_CONFIDENCE = 85.0  # deterministic-parser base (no engine race)
+# [^\W_] is exactly str.isalnum: \w is isalnum() plus "_"
+_ALNUM_RUN_RX = re.compile(r"[^\W_]+")
 
 
 def weighted_confidence(text: str, raw_confidence: float = RAW_BASE_CONFIDENCE) -> float:
@@ -46,10 +48,10 @@ def weighted_confidence(text: str, raw_confidence: float = RAW_BASE_CONFIDENCE) 
         word_factor = 1.0
     compact = "".join(parts)
     if compact:
-        # distinct-char fold (Counter runs in C): exact equivalent of
-        # the per-char genexpr, ~10x faster on multi-MB docs
-        counts = Counter(compact)
-        non_alnum = sum(v for c, v in counts.items() if not c.isalnum()) / len(compact)
+        # the non-alnum chars are what is left once the alnum runs are
+        # cut out: one C-side scan, exact equivalent of the per-char
+        # isalnum() count
+        non_alnum = len(_ALNUM_RUN_RX.sub("", compact)) / len(compact)
         if non_alnum > 0.4:
             quality_factor = 0.7
         elif non_alnum > 0.3:

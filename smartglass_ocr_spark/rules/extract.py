@@ -33,6 +33,9 @@ by anchoring the pattern with ``$``.
 from __future__ import annotations
 
 import re
+from bisect import bisect_left
+
+from smartglass_ocr_spark.rules.casefold import fold, twin
 
 # ---------------------------------------------------------------- E2
 _ID_FIELD_PATTERNS = {
@@ -50,11 +53,13 @@ _ID_FIELD_PATTERNS = {
     "occupation": r"(?:occupation|job|pekerjaan)[\s:]+([^\n]+)",
     "religion": r"(?:religion|agama)[\s:]+([^\n]+)",
 }
-_ID_FIELD_RXS = {f: re.compile(p, re.IGNORECASE) for f, p in _ID_FIELD_PATTERNS.items()}
+# the patterns are case-insensitive: each runs as its lowercase twin on
+# the folded haystack (rules/casefold.py)
+_ID_FIELD_RXS = {f: twin(p) for f, p in _ID_FIELD_PATTERNS.items()}
 # fallback label patterns, precompiled once (the rf-string rebuild per
 # call cost ~30% of extract_id_card in the flagship profile); the
 # label literal itself gates each search C-side — both patterns
-# require it verbatim in the lowered haystack, so a failed `in` skips
+# require it verbatim in the folded haystack, so a failed `in` skips
 # the regex scan exactly
 _ID_FIELD_LABELS = {
     "name": ["name", "nama"],
@@ -75,8 +80,8 @@ _ID_LABEL_RXS = {
     field: [
         (
             label,
-            re.compile(rf"\b{re.escape(label)}\s*:\s*([^\n]+)", re.IGNORECASE),
-            re.compile(rf"^\s*{re.escape(label)}\s+([^\n]+)", re.IGNORECASE | re.MULTILINE),
+            twin(rf"\b{re.escape(label)}\s*:\s*([^\n]+)"),
+            twin(rf"^\s*{re.escape(label)}\s+([^\n]+)", re.MULTILINE),
         )
         for label in labels
     ]
@@ -84,31 +89,36 @@ _ID_LABEL_RXS = {
 }
 
 
+def _group1(m: re.Match | None, source: str) -> str:
+    """Group 1 of a twin's match on a folded copy, sliced by span from
+    ``source`` (the text the copy was folded from) and stripped; ""
+    without a match."""
+    return source[m.start(1):m.end(1)].strip() if m else ""
+
+
 def extract_id_card(text: str) -> dict[str, str]:
     """ID-card fields; note the reference lowercases the haystack
     before matching (``:84``), so extracted values come out lowercase
-    — reproduced."""
+    — reproduced. The twins search the folded copy of the lowered
+    text, and values are sliced from the lowered text."""
     out: dict[str, str] = {}
     lowered = text.lower()
+    folded = fold(lowered)
     for field, rx in _ID_FIELD_RXS.items():
-        m = rx.search(lowered)
-        if m:
-            value = m.group(1).strip()
-            if value:
-                out[field] = value
+        value = _group1(rx.search(folded), lowered)
+        if value:
+            out[field] = value
     for field, labels in _ID_LABEL_RXS.items():
         if field in out:
             continue
         for label, rx_colon, rx_line in labels:
-            if label not in lowered:
+            if label not in folded:
                 continue
-            m = rx_colon.search(lowered)
-            if m and m.group(1).strip():
-                out[field] = m.group(1).strip()
-                break
-            m = rx_line.search(lowered)
-            if m and m.group(1).strip():
-                out[field] = m.group(1).strip()
+            value = _group1(rx_colon.search(folded), lowered) or _group1(
+                rx_line.search(folded), lowered
+            )
+            if value:
+                out[field] = value
                 break
     return out
 
@@ -219,18 +229,18 @@ def extract_receipt(text: str) -> dict[str, str]:
 # ---------------------------------------------------------------- E4
 _FORM_LINE_RX = re.compile(r"([A-Za-z\s]+[A-Za-z])[\s:]+(.+)")
 _PUNCT_ONLY_RX = re.compile(r"^[:\-,.;]*$")  # intent-fixed, see module docstring
+# case-insensitive in the reference: run as lowercase twins on the
+# folded text, groups sliced from the text itself
 _FORM_SPECIAL_PATTERNS = {
-    field: re.compile(pat, re.IGNORECASE)
-    for field, pat in (
-        ("name", r"(?:name|nama)[\s:]+([^\n]+)"),
-        ("email", r"(?:email|e-mail)[\s:]+([^\n]+)"),
-        ("phone", r"(?:phone|telephone|tel|hp|handphone)[\s:]+([^\n]+)"),
-        ("address", r"(?:address|alamat)[\s:]+([^\n]+)"),
-        ("date", r"(?:date|tanggal)[\s:]+([^\n]+)"),
-        ("company", r"(?:company|perusahaan)[\s:]+([^\n]+)"),
-        ("department", r"(?:department|departemen)[\s:]+([^\n]+)"),
-    )
+    "name": r"(?:name|nama)[\s:]+([^\n]+)",
+    "email": r"(?:email|e-mail)[\s:]+([^\n]+)",
+    "phone": r"(?:phone|telephone|tel|hp|handphone)[\s:]+([^\n]+)",
+    "address": r"(?:address|alamat)[\s:]+([^\n]+)",
+    "date": r"(?:date|tanggal)[\s:]+([^\n]+)",
+    "company": r"(?:company|perusahaan)[\s:]+([^\n]+)",
+    "department": r"(?:department|departemen)[\s:]+([^\n]+)",
 }
+_FORM_SPECIAL_RXS = {f: twin(p) for f, p in _FORM_SPECIAL_PATTERNS.items()}
 
 
 def extract_form(text: str) -> dict[str, str]:
@@ -245,11 +255,12 @@ def extract_form(text: str) -> dict[str, str]:
             value = m.group(2).strip()
             if value and not _PUNCT_ONLY_RX.match(value):
                 out[field] = value
-    for field, rx in _FORM_SPECIAL_PATTERNS.items():
+    folded = fold(text)
+    for field, rx in _FORM_SPECIAL_RXS.items():
         if field not in out:
-            m = rx.search(text)
-            if m and m.group(1).strip():
-                out[field] = m.group(1).strip()
+            value = _group1(rx.search(folded), text)
+            if value:
+                out[field] = value
     return out
 
 
@@ -277,27 +288,38 @@ def _parse_delimited(lines: list[str], delimiter: str) -> tuple[list[str], list[
 _NON_SPACE_RUN_RX = re.compile(r"\S+")
 
 
-def _parse_space_aligned(lines: list[str]) -> tuple[list[str], list[list[str]]]:
+def _column_starts(rows: list[str]) -> list[int]:
     """Column starts inferred from word positions of the first <=5 rows
     (ref :440-469: merge within 5 chars by midpoint, else new column)."""
-    non_empty = [ln for ln in lines if ln.strip()]
-    if not non_empty:
-        return [], []
     col_starts: list[int] = []
-    for i in range(min(5, len(non_empty))):
-        positions = [m.start() for m in _NON_SPACE_RUN_RX.finditer(non_empty[i])]
+    for i, row in enumerate(rows[:5]):
+        positions = [m.start() for m in _NON_SPACE_RUN_RX.finditer(row)]
         if i == 0:
             col_starts = positions
             continue
         new_positions = []
         for pos in positions:
-            closest = min(col_starts, key=lambda x: abs(x - pos))
+            # nearest start, the lower of two equidistant ones (a min()
+            # scan's first): the starts stay strictly increasing, since
+            # a merge moves one only within the gap to ``pos``
+            j = bisect_left(col_starts, pos)
+            if j == len(col_starts) or (j and pos - col_starts[j - 1] <= col_starts[j] - pos):
+                j -= 1
+            closest = col_starts[j]
             if abs(closest - pos) < 5:
-                col_starts[col_starts.index(closest)] = (closest + pos) // 2
+                col_starts[j] = (closest + pos) // 2
             else:
                 new_positions.append(pos)
         col_starts.extend(new_positions)
         col_starts.sort()
+    return col_starts
+
+
+def _parse_space_aligned(lines: list[str]) -> tuple[list[str], list[list[str]]]:
+    non_empty = [ln for ln in lines if ln.strip()]
+    if not non_empty:
+        return [], []
+    col_starts = _column_starts(non_empty)
     if not col_starts:
         return [], []
 

@@ -15,6 +15,8 @@ from __future__ import annotations
 
 import re
 
+from smartglass_ocr_spark.rules.casefold import fold, twin
+
 _SENT_SPLIT_RX = re.compile(r"(?<=[.!?])\s+")
 _WORD_RX = re.compile(r"\b[a-zA-Z]+\b")
 
@@ -34,14 +36,16 @@ _KEY_TERMS = (
 )
 # ref :2316-2347 searches each sentence with these four patterns in
 # turn and keeps it if any matches; one search of their alternation
-# gives the same answer in one scan
+# gives the same answer in one scan. The patterns are case-insensitive:
+# the alternation runs as its lowercase twin on each folded sentence
+# (rules/casefold.py)
 _INSIGHT_PATTERNS = (
     r"(?:key|main|important|significant|critical).{0,20}(?:point|fact|finding|conclusion)",
     r"(?:in\s+summary|to\s+summarize|in\s+conclusion|concluding|therefore)",
     r"(?:must|should|need to|have to)",
     r"increase|decrease|improve|reduce|enhance|cause",
 )
-_INSIGHT_RX = re.compile("|".join(f"(?:{p})" for p in _INSIGHT_PATTERNS), re.IGNORECASE)
+_INSIGHT_RX = twin("|".join(f"(?:{p})" for p in _INSIGHT_PATTERNS))
 
 
 def split_sentences(text: str) -> list[str]:
@@ -183,7 +187,7 @@ def extract_key_insights(text: str) -> list[str]:
     insights: list[str] = []
     sentences = split_sentences(text)
     for sentence in sentences:
-        if _INSIGHT_RX.search(sentence):
+        if _INSIGHT_RX.search(fold(sentence)):
             insights.append(sentence)
         if len(insights) >= 5:
             break

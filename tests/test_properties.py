@@ -8,11 +8,19 @@ exception in a pandas UDF fails the task, retries, then the job).
 
 from __future__ import annotations
 
+import re
+import sys
+from string import ascii_lowercase
+from unittest import mock
+
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from smartglass_ocr_spark.golden import process_document, process_span
+from smartglass_ocr_spark.rules import casefold as _casefold
 from smartglass_ocr_spark.rules import cleanup as _cleanup
+from smartglass_ocr_spark.rules import confidence as _confidence
+from smartglass_ocr_spark.rules import extract as _extract
 from smartglass_ocr_spark.rules import structure as _structure
 from smartglass_ocr_spark.rules import summarize as _summarize
 from smartglass_ocr_spark.rules.classify import classify_block
@@ -20,6 +28,7 @@ from smartglass_ocr_spark.rules.confidence import status_for, weighted_confidenc
 from smartglass_ocr_spark.rules.extract import extract_structured
 from smartglass_ocr_spark.rules.langdetect import detect_language
 from smartglass_ocr_spark.rules.markdown import render_markdown
+from smartglass_ocr_spark.rules.casefold import fold
 from smartglass_ocr_spark.rules.structure import detect_structure
 from smartglass_ocr_spark.rules.summarize import extract_key_insights, generate_summary
 
@@ -202,7 +211,7 @@ _EQ_PIECES = st.one_of(
             "  ", "   ", "\n\n", "\n\n\n", "\n\n\n\n", "-\n", "1l2", "3O4",
             "5S6", "٣B٣", "http", "https://", "www.", ".com", ".org", "x@y.io",
             "www.ab.co,de", "http://x.io;y", "www.q.org;z", "a-\nb-\nc", "x-\nyz-\nw", "-\n-\n",
-            "ſ", "K", "İ", "\u00a0", "\U0001f600", "key point", "In summary",
+            "ſ", "\u212a", "İ", "\u00a0", "\U0001f600", "key point", "In summary",
             "MUST", "increase", "therefore", "sqrt", "1.", "2)", "A | B |",
             "TITLE\n", "First Name", "first name", "Last Name", "Date of Birth",
             "Email", "Phone", "Date", "State", "Signature", "nama",
@@ -318,6 +327,200 @@ def test_detect_structure_at_ladder_thresholds(text):
     assert _structure.detect_structure(text) == _detect_structure_eager(text)
 
 
+# ---- case-insensitive patterns as lowercase twins on folded text ----
+#
+# Text built from the literals of every case-insensitive pattern, each
+# letter drawn from what IGNORECASE lets it match: its two cases, and
+# U+0130/U+0131 for "i", U+017F for "s" and U+212A for "k"
+# (rules/casefold.py).
+
+_FOLD_SWAPS = {"i": "iI\u0130\u0131", "s": "sS\u017f", "k": "kK\u212a"}
+_FOLD_WORDS = sorted(
+    {label for labels in _extract._ID_FIELD_LABELS.values() for label in labels}
+    | {lit for lit, _, _ in _cleanup._ID_LABEL_FIXES + _cleanup._AMOUNT_FIXES}
+    | {
+        "key", "main", "important", "significant", "critical", "point", "fact",
+        "finding", "conclusion", "in summary", "to summarize", "in conclusion",
+        "concluding", "therefore", "must", "should", "need to", "have to",
+        "increase", "decrease", "improve", "reduce", "enhance", "cause",
+        "email", "e-mail", "phone", "telephone", "tel", "hp", "handphone",
+        "date", "tanggal", "company", "perusahaan", "department", "departemen",
+    }
+)
+
+
+def _cased(word: str):
+    return st.tuples(*(st.sampled_from(_FOLD_SWAPS.get(c, c + c.upper())) for c in word)).map("".join)
+
+
+_FOLD_TEXT = st.lists(
+    st.one_of(
+        st.sampled_from(_FOLD_WORDS).flatmap(_cased),
+        st.sampled_from([" ", "  ", ":", ": ", " :\t", "\n", "\n ", "-", "?", ". ", "! ", "$3.50", "12"]),
+        st.text(alphabet="AZaz09 \n:\u0130\u0131\u017f\u212aΣ•", min_size=1, max_size=3),
+    ),
+    max_size=30,
+).map("".join)
+
+
+def test_fold_set_is_sre_case_table():
+    """The four code points fold() maps are exactly those, outside
+    ASCII, that IGNORECASE matches to an ASCII letter, plus the only
+    one whose lower() changes length; each matches only the letter
+    fold() gives it. A CPython whose case tables differ fails here."""
+    every = "".join(map(chr, range(0x80, sys.maxunicode + 1)))
+    to_letter = {every[m.start()] for m in re.finditer("[a-z]", every, re.IGNORECASE)}
+    grows = {c for c in every if len(c.lower()) != 1}
+    assert to_letter == set(map(chr, _casefold._FOLD_MAP)) == {"\u0130", "\u0131", "\u017f", "\u212a"}
+    assert grows <= to_letter
+    for c in to_letter:
+        assert [x for x in ascii_lowercase if re.match(x, c, re.IGNORECASE)] == [fold(c)]
+    # equal length, and \w and \s at the same offsets, over all of them
+    folded = fold(every)
+    assert len(folded) == len(every)
+    for cls in (r"\w", r"\s", r"[^\W_]"):
+        assert [m.span() for m in re.finditer(cls, folded)] == [
+            m.span() for m in re.finditer(cls, every)
+        ]
+
+
+def _spans(m):
+    return m and m.regs
+
+
+def _extract_id_card_reference(text: str) -> dict[str, str]:
+    """The IGNORECASE originals on the lowered text, primary then
+    fallback, every label tried (no literal gate)."""
+    out: dict[str, str] = {}
+    lowered = text.lower()
+    for field, pat in _extract._ID_FIELD_PATTERNS.items():
+        m = re.search(pat, lowered, re.IGNORECASE)
+        if m and m.group(1).strip():
+            out[field] = m.group(1).strip()
+    for field, labels in _extract._ID_FIELD_LABELS.items():
+        if field in out:
+            continue
+        for label in labels:
+            lab = re.escape(label)
+            m = re.search(rf"\b{lab}\s*:\s*([^\n]+)", lowered, re.IGNORECASE)
+            if m and m.group(1).strip():
+                out[field] = m.group(1).strip()
+                break
+            m = re.search(rf"^\s*{lab}\s+([^\n]+)", lowered, re.IGNORECASE | re.MULTILINE)
+            if m and m.group(1).strip():
+                out[field] = m.group(1).strip()
+                break
+    return out
+
+
+@given(text=_FOLD_TEXT)
+@example("ıd:  ?")
+@example("ſex: m\nnamA: x")
+@settings(max_examples=300, deadline=None)
+def test_id_card_twins_equal_ignorecase(text):
+    lowered = text.lower()
+    folded = fold(lowered)
+    for field, pat in _extract._ID_FIELD_PATTERNS.items():
+        assert _spans(_extract._ID_FIELD_RXS[field].search(folded)) == _spans(
+            re.search(pat, lowered, re.IGNORECASE)
+        )
+    assert _extract.extract_id_card(text) == _extract_id_card_reference(text)
+
+
+def _extract_form_reference(text: str) -> dict[str, str]:
+    """extract_form with the IGNORECASE special patterns on the text."""
+    out: dict[str, str] = {}
+    for raw in text.split("\n"):
+        m = _extract._FORM_LINE_RX.match(raw.strip())
+        if m:
+            value = m.group(2).strip()
+            if value and not _extract._PUNCT_ONLY_RX.match(value):
+                out[m.group(1).strip().lower().replace(" ", "_")] = value
+    for field, pat in _extract._FORM_SPECIAL_PATTERNS.items():
+        if field not in out:
+            m = re.search(pat, text, re.IGNORECASE)
+            if m and m.group(1).strip():
+                out[field] = m.group(1).strip()
+    return out
+
+
+@given(text=_FOLD_TEXT)
+@example("Emaıl: a@b.co")
+@settings(max_examples=300, deadline=None)
+def test_form_special_twins_equal_ignorecase(text):
+    folded = fold(text)
+    for field, pat in _extract._FORM_SPECIAL_PATTERNS.items():
+        assert _spans(_extract._FORM_SPECIAL_RXS[field].search(folded)) == _spans(
+            re.search(pat, text, re.IGNORECASE)
+        )
+    assert _extract.extract_form(text) == _extract_form_reference(text)
+
+
+def _column_starts_min_scan(rows: list[str]) -> list[int]:
+    """The reference's nearest-column scan: ``min`` over every start,
+    the first of two equidistant ones."""
+    col_starts: list[int] = []
+    for i in range(min(5, len(rows))):
+        positions = [m.start() for m in re.finditer(r"\S+", rows[i])]
+        if i == 0:
+            col_starts = positions
+            continue
+        new_positions = []
+        for pos in positions:
+            closest = min(col_starts, key=lambda x: abs(x - pos))
+            if abs(closest - pos) < 5:
+                col_starts[col_starts.index(closest)] = (closest + pos) // 2
+            else:
+                new_positions.append(pos)
+        col_starts.extend(new_positions)
+        col_starts.sort()
+    return col_starts
+
+
+_ALIGNED_ROW = st.lists(
+    st.tuples(st.integers(0, 7), st.integers(1, 4)), min_size=1, max_size=8
+).map(lambda cells: "".join(" " * gap + "x" * width for gap, width in cells))
+
+
+@given(rows=st.lists(_ALIGNED_ROW, min_size=1, max_size=7))
+@example(["a   b", "  c"])
+@settings(max_examples=500, deadline=None)
+def test_column_starts_bisect_equals_min_scan(rows):
+    assert _extract._column_starts(list(rows)) == _column_starts_min_scan(list(rows))
+
+
+def _weighted_confidence_counter(text: str) -> float:
+    """weighted_confidence counting non-alnum chars with a Counter."""
+    from collections import Counter
+
+    stripped = text.strip()
+    if not stripped:
+        return 0.0
+    n = len(stripped)
+    length_factor = 0.8 if n < 20 else 0.9 if n < 50 else 1.0 if n < 100 else 1.1
+    parts = text.split()
+    word_factor = 0.8 if len(parts) < 3 else 0.9 if len(parts) < 10 else 1.0
+    compact = "".join(parts)
+    if not compact:
+        return min(100.0, 85.0 * length_factor * word_factor * 0.5)
+    counts = Counter(compact)
+    share = sum(v for c, v in counts.items() if not c.isalnum()) / len(compact)
+    quality = 0.7 if share > 0.4 else 0.8 if share > 0.3 else 0.9 if share > 0.2 else 1.0
+    return min(100.0, 85.0 * length_factor * word_factor * quality)
+
+
+@given(text=st.text(max_size=200))
+@example("a_b٣²é!! ?")
+@settings(max_examples=300, deadline=None)
+def test_non_alnum_count_equals_counter_fold(text):
+    assert weighted_confidence(text) == _weighted_confidence_counter(text)
+
+
+def test_alnum_class_is_isalnum():
+    every = "".join(map(chr, range(sys.maxunicode + 1)))
+    assert _confidence._ALNUM_RUN_RX.sub("", every) == "".join(c for c in every if not c.isalnum())
+
+
 # the reference's four insight patterns, searched one after another
 _INSIGHT_PATTERNS_REFERENCE = (
     r"(?:key|main|important|significant|critical).{0,20}(?:point|fact|finding|conclusion)",
@@ -327,14 +530,34 @@ _INSIGHT_PATTERNS_REFERENCE = (
 )
 
 
-@given(text=_EQ_TEXT)
+def _key_insights_reference(text: str) -> list[str]:
+    """extract_key_insights with the four IGNORECASE originals searched
+    on each sentence as is."""
+    insights: list[str] = []
+    sentences = _summarize.split_sentences(text)
+    for sentence in sentences:
+        if any(re.search(p, sentence, re.IGNORECASE) for p in _INSIGHT_PATTERNS_REFERENCE):
+            insights.append(sentence)
+        if len(insights) >= 5:
+            break
+    if len(insights) < 2 and len(sentences) > 2:
+        if sentences[0] not in insights:
+            insights.append(sentences[0])
+        if sentences[-1] not in insights and sentences[-1] != sentences[0]:
+            insights.append(sentences[-1])
+    return insights[:5]
+
+
+@given(text=st.one_of(_EQ_TEXT, _FOLD_TEXT))
+@example("ſhould")
 @settings(max_examples=300, deadline=None)
 def test_insight_alternation_equals_separate_searches(text):
-    import re
-
+    """The lowercase twin of the alternation, on the folded sentence,
+    answers as the four IGNORECASE patterns do on the sentence."""
     for sentence in _summarize.split_sentences(text) + [text]:
         want = any(re.search(p, sentence, re.IGNORECASE) for p in _INSIGHT_PATTERNS_REFERENCE)
-        assert bool(_summarize._INSIGHT_RX.search(sentence)) == want
+        assert bool(_summarize._INSIGHT_RX.search(fold(sentence))) == want
+    assert extract_key_insights(text) == _key_insights_reference(text)
 
 
 @pytest.mark.parametrize(
@@ -342,14 +565,12 @@ def test_insight_alternation_equals_separate_searches(text):
     ["the key fact", "In  Summary", "we MUST", "costs Increase", "ſhould", "İncrease", "nothing here"],
 )
 def test_insight_alternation_on_each_pattern(sentence):
-    import re
-
     want = any(re.search(p, sentence, re.IGNORECASE) for p in _INSIGHT_PATTERNS_REFERENCE)
-    assert bool(_summarize._INSIGHT_RX.search(sentence)) == want
+    assert bool(_summarize._INSIGHT_RX.search(fold(sentence))) == want
 
 
 def _fix_form_unfiltered(text: str) -> str:
-    for rx, rep in _cleanup._FORM_LABELS:
+    for _, rx, rep in _cleanup._FORM_LABELS:
         text = rx.sub(rep, text)
     for _, rx in _cleanup._FORM_COLON_RXS:
         text = rx.sub(r"\1: \2", text)
@@ -360,11 +581,25 @@ def _fix_form_unfiltered(text: str) -> str:
     return text
 
 
+def _ungated_subs(subs, text: str) -> str:
+    for _, rx, rep in subs:
+        text = rx.sub(rep, text)
+    return text
+
+
+def test_gated_subs_refolds_after_a_replacement():
+    # the second literal exists only once the first sub has run
+    subs = [
+        ("ab", re.compile("ab", re.IGNORECASE), "CD"),
+        ("cd", re.compile("cd", re.IGNORECASE), "x"),
+    ]
+    assert _casefold.gated_subs(subs, "\u017fAB") == _ungated_subs(subs, "\u017fAB") == "\u017fx"
+
+
 def _fix_id_card_unfiltered(text: str) -> str:
     import re
 
-    for rx, rep in _cleanup._ID_LABEL_FIXES:
-        text = rx.sub(rep, text)
+    text = _ungated_subs(_cleanup._ID_LABEL_FIXES, text)
     for _, rx in _cleanup._ID_COLON_RXS:
         text = rx.sub(r"\1: \2", text)
     m = _cleanup._NIK_RX.search(text)
@@ -389,13 +624,19 @@ def _email_url_unfiltered(text: str) -> str:
     return text
 
 
-@given(text=_EQ_TEXT)
+@given(text=st.one_of(_EQ_TEXT, _FOLD_TEXT))
+@example("ſubtotal 3.50 NıK 12 nAMA x")
 @settings(max_examples=500, deadline=None)
 def test_literal_prefilters_equal_unfiltered_loops(text):
-    """Skipping a case-sensitive pattern whose literal is absent never
-    changes the output: form colon/break, ID colon and email/URL."""
+    """Skipping a pattern whose literal is absent never changes the
+    output: form labels, colon and break, ID labels (a case-insensitive
+    literal looked up in the folded text) and colon, the receipt
+    amounts (folded too) and email/URL."""
     assert _cleanup.fix_form(text) == _fix_form_unfiltered(text)
     assert _cleanup.fix_id_card(text) == _fix_id_card_unfiltered(text)
+    with mock.patch.object(_cleanup, "gated_subs", _ungated_subs):
+        want_receipt = _cleanup.fix_receipt(text)
+    assert _cleanup.fix_receipt(text) == want_receipt
     # apply_word_corrections = the word dictionary, then the email/URL loop
     fixed = _cleanup._WORD_FIX_RX.sub(lambda m: _cleanup._WORD_FIXES[m.group(1)], text)
     assert _cleanup.apply_word_corrections(text) == _email_url_unfiltered(fixed)

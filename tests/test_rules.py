@@ -19,6 +19,7 @@ from smartglass_ocr_spark.rules.cleanup import (
 from smartglass_ocr_spark.rules.confidence import status_for, weighted_confidence
 from smartglass_ocr_spark.rules.extract import (
     extract_form,
+    extract_id_card,
     extract_generic,
     extract_receipt,
     extract_table,
@@ -275,6 +276,12 @@ def test_extract_receipt_fields_and_items():
     assert out["item_0_name"] == "coffee" and out["item_0_quantity"] == "2"
     assert out["item_1_name"] == "bread" and out["item_1_quantity"] == "1"
     assert out["items_count"] == "2"
+
+
+def test_id_card_label_gate_sees_folded_label():
+    # "ıd" (dotless i) is "id" to the IGNORECASE label patterns, so the
+    # fallback's literal gate must look in the folded text
+    assert extract_id_card("ıd:  ?") == {"id_number": "?"}
 
 
 def test_extract_form_special_patterns():
