@@ -155,8 +155,6 @@ def run_extraction_job(
     """
     from smartglass_ocr_spark.pipeline import fused_doc_stage
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
     bucketed = with_partition_id(documents, n_partitions)
     done = completed_partitions(spark, checkpoint_path)
     todo = bucketed.filter(~F.col("partition_id").isin(list(done))) if done else bucketed
@@ -196,8 +194,10 @@ def run_extraction_job(
     result = with_partition_id(cleaned, n_partitions).withColumn(
         "n_spans", F.size("spans")
     )
-    # one pass: write output partitioned by the stable bucket id;
-    # an Observation rides the write for exactly-once global totals
+    # one pass: write output partitioned by the stable bucket id,
+    # replacing only the partitions this run writes (a per-write
+    # option, so the session's overwrite mode stays as it was); an
+    # Observation rides the write for exactly-once global totals
     # (returned in the result dict — no extra job)
     from pyspark.sql import Observation
 
@@ -210,6 +210,7 @@ def run_extraction_job(
     (
         observed.repartition("partition_id")
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("partition_id")
         .parquet(output_path)
     )

@@ -257,32 +257,30 @@ _FLAT_KINDS = [
 ]
 
 
-def _kind_expr(doc_id: Column, idx: Column) -> Column:
-    """Deterministic kind for span *idx* of *doc_id* via xxhash64 —
-    computed JVM-side, no Python."""
-    bucket = F.pmod(F.xxhash64(doc_id, idx), F.lit(len(_FLAT_KINDS)))
-    expr = F.lit(_FLAT_KINDS[0])
-    for i in range(1, len(_FLAT_KINDS)):
-        expr = F.when(bucket == i, F.lit(_FLAT_KINDS[i])).otherwise(expr)
-    return expr
+def _kind_of(h: Column) -> Column:
+    """Deterministic kind from the span hash *h*: an array-literal
+    lookup, ``element_at(kinds, pmod(h, len) + 1)``, computed JVM-side
+    with no Python."""
+    bucket = F.pmod(h, F.lit(len(_FLAT_KINDS)))
+    return F.element_at(
+        F.array(*[F.lit(k) for k in _FLAT_KINDS]), (bucket + 1).cast("int")
+    )
 
 
-def _span_fields(i: Column) -> list[Column]:
-    """The four span field expressions for span index *i* of the
-    current row (needs columns doc_id, w, chunk in scope). Shared
-    between the array and row derivations so both produce bit-
-    identical spans. All plain (non-higher-order) expressions —
+def _span_fields(i: Column, h: Column, kind: Column, ref_hash=F.sha1) -> list[Column]:
+    """The four span field expressions for span index *i* with span
+    hash *h* and kind *kind* (needs columns doc_id, w, chunk in scope);
+    media spans get ``"m-" + ref_hash(doc_id:offset)[:12]`` and NULL
+    text. Shared by the array and row derivations so both produce
+    bit-identical spans. All plain (non-higher-order) expressions —
     whole-stage-codegen friendly."""
-    kind = _kind_expr(F.col("doc_id"), i)
-    offset = (i * 7 + F.pmod(F.xxhash64(F.col("doc_id"), i), F.lit(5))).cast("int")
+    offset = (i * 7 + F.pmod(h, F.lit(5))).cast("int")
     is_media = kind.isin("image", "video", "audio")
     span_text = F.concat_ws(
         " ", F.slice(F.col("w"), (i * F.col("chunk") + 1).cast("int"), F.col("chunk"))
     )
-    media_ref = F.concat(
-        F.lit("m-"),
-        F.substring(F.sha1(F.concat_ws(":", F.col("doc_id"), offset.cast("string"))), 1, 12),
-    )
+    ref_key = F.concat_ws(":", F.col("doc_id"), offset.cast("string"))
+    media_ref = F.concat(F.lit("m-"), F.substring(ref_hash(ref_key), 1, 12))
     return [
         kind.alias("kind"),
         F.when(is_media, F.lit(None).cast("string")).otherwise(span_text).alias("text"),
@@ -321,11 +319,13 @@ def spans_from_flat(documents: DataFrame, spans_per_doc: int = 8) -> DataFrame:
     lambda under GenerateExec (benched ~100x slower than exploding a
     materialized array).
     """
+    def span(i: Column) -> Column:
+        h = F.xxhash64(F.col("doc_id"), i)
+        return F.struct(*_span_fields(i, h, _kind_of(h)))
+
     return _flat_base(documents, spans_per_doc).select(
         "doc_id",
-        F.transform(
-            F.sequence(F.lit(0), F.col("n") - 1), lambda i: F.struct(*_span_fields(i))
-        ).alias("spans"),
+        F.transform(F.sequence(F.lit(0), F.col("n") - 1), span).alias("spans"),
     )
 
 
@@ -376,29 +376,8 @@ def span_rows_from_flat(documents: DataFrame, spans_per_doc: int = 8,
             16,
             10,
         ).cast("long")
-    # hoist kind into its own projection as an array-literal lookup:
-    # element_at(kinds, bucket+1) === the when-chain (default bucket 0
-    # -> _FLAT_KINDS[0]), evaluated ONCE per span instead of the CASE
-    # tree re-inlined into each of the three kind-dependent fields
-    bucket = F.pmod(h, F.lit(len(_FLAT_KINDS)))
-    kind = F.element_at(
-        F.array(*[F.lit(k) for k in _FLAT_KINDS]), (bucket + 1).cast("int")
-    )
-    staged = idx.select("doc_id", "w", "chunk", "_i", kind.alias("_kind"))
-    offset = (i * 7 + F.pmod(h, F.lit(5))).cast("int")
-    is_media = F.col("_kind").isin("image", "video", "audio")
-    span_text = F.concat_ws(
-        " ", F.slice(F.col("w"), (i * F.col("chunk") + 1).cast("int"), F.col("chunk"))
-    )
-    ref_key = F.concat_ws(":", F.col("doc_id"), offset.cast("string"))
-    media_ref = F.concat(
-        F.lit("m-"),
-        F.substring(F.sha1(ref_key) if kind_hash == "xxhash64" else F.md5(ref_key), 1, 12),
-    )
-    return staged.select(
-        "doc_id",
-        F.col("_kind").alias("kind"),
-        F.when(is_media, F.lit(None).cast("string")).otherwise(span_text).alias("text"),
-        F.when(is_media, media_ref).otherwise(F.lit(None).cast("string")).alias("media_ref"),
-        offset.alias("offset"),
-    )
+    # hoist kind into its own projection, evaluated ONCE per span
+    # instead of re-inlined into each of the three kind-dependent fields
+    staged = idx.select("doc_id", "w", "chunk", "_i", _kind_of(h).alias("_kind"))
+    ref_hash = F.sha1 if kind_hash == "xxhash64" else F.md5
+    return staged.select("doc_id", *_span_fields(i, h, F.col("_kind"), ref_hash))

@@ -79,8 +79,8 @@ def bm25_topk(
     never reuses branch subtrees. They stay cached until the caller
     unpersists — after materializing the result, call
     ``spark.catalog.clearCache()`` (or unpersist selectively) in
-    long-lived sessions that invoke this repeatedly, as ``bench.py``
-    does between suite entries.
+    long-lived sessions that invoke this repeatedly, as perfbench's
+    ``contract_suite`` does between queries.
     """
     if idf not in ("rational", "log"):
         raise ValueError(f"idf must be 'rational' or 'log', got {idf!r}")

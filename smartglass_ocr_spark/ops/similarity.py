@@ -671,7 +671,8 @@ def semantic_dedup(
     assignment frame stays persisted until the caller unpersists —
     after materializing the result, ``spark.catalog.clearCache()``
     (or unpersist selectively) in long-lived sessions that invoke
-    this repeatedly, as ``bench.py`` does between suite entries.
+    this repeatedly, as perfbench's ``contract_suite`` does between
+    queries.
     """
     if keep not in ("peripheral", "central", "min_id"):
         raise ValueError(f"unknown keep policy {keep!r}")

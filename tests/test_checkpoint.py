@@ -109,6 +109,36 @@ def test_resume_processes_only_incomplete(spark, paths):
     assert out == want
 
 
+def test_job_leaves_session_overwrite_mode_unchanged(spark, paths, tmp_path):
+    """The job replaces only its own output partitions through a
+    per-write option: the session's overwrite mode is the same after
+    the job, so a later overwrite of a partitioned table in the same
+    session (an LSH index rebuilt from fewer vectors) still replaces
+    the whole table."""
+    import random
+
+    from smartglass_ocr_spark.ops.similarity import write_lsh_index
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    docs = docs_to_df(spark, generate_docs(n_docs=10, seed=3))
+    run_extraction_job(
+        spark, docs, paths["out"], paths["ckpt"], paths["metrics"], "run-1", n_partitions=4
+    )
+    assert spark.conf.get(key) == before
+
+    rng = random.Random(7)
+
+    def vectors(n):
+        rows = [(i, [rng.gauss(0, 1) for _ in range(16)]) for i in range(n)]
+        return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+    index = str(tmp_path / "lsh_idx")
+    write_lsh_index(vectors(200), index, bits=4)
+    write_lsh_index(vectors(3), index, bits=4)
+    assert spark.read.parquet(index).count() == 3
+
+
 def test_checkpoint_and_metrics_schema(spark, paths):
     docs = docs_to_df(spark, generate_docs(n_docs=10, seed=3))
     run_extraction_job(

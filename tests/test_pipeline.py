@@ -143,6 +143,26 @@ def test_fused_pipeline_matches_golden(spark):
         assert got[g["doc_id"]]["status"] == g["status"]
 
 
+@pytest.mark.parametrize("spans_per_doc", [8, 12])
+def test_span_array_and_row_derivations_agree(spark, spans_per_doc):
+    """The array table (``spans_from_flat``) and the flagship's span
+    rows (``span_rows_from_flat``) derive their fields through one
+    helper: inlining the array gives exactly the rows."""
+    from pyspark.sql import functions as F
+
+    from smartglass_ocr_spark.corpus import span_rows_from_flat, spans_from_flat
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    inlined = spans_from_flat(docs, spans_per_doc=spans_per_doc).select(
+        "doc_id", F.inline("spans")
+    )
+    rows = span_rows_from_flat(docs, spans_per_doc=spans_per_doc)
+    assert inlined.columns == rows.columns
+    assert inlined.count() == rows.count() > 0
+    assert inlined.exceptAll(rows).count() == 0
+    assert rows.exceptAll(inlined).count() == 0
+
+
 def test_fused_stage_runs_one_task_per_core(spark):
     """A reassembly shuffle of more than cores but at most 2×cores
     partitions runs the doc stage as one Python task per core (each
@@ -153,10 +173,10 @@ def test_fused_stage_runs_one_task_per_core(spark):
     dp = spark.sparkContext.defaultParallelism
     docs = generate_docs(n_docs=40, seed=37, scramble=True)
     rows = explode_spans(docs_to_df(spark, docs))
-    out = run_pipeline_fused(rows, partitions=2 * dp)
+    out = run_pipeline_fused(rows.repartition(2 * dp, "doc_id"))
     assert out.rdd.getNumPartitions() == dp
-    assert run_pipeline_fused(rows, partitions=2).rdd.getNumPartitions() == 2
-    wide = run_pipeline_fused(rows, partitions=2 * dp + 1)
+    assert run_pipeline_fused(rows.repartition(2, "doc_id")).rdd.getNumPartitions() == 2
+    wide = run_pipeline_fused(rows.repartition(2 * dp + 1, "doc_id"))
     assert wide.rdd.getNumPartitions() == 2 * dp + 1
     want = {g["doc_id"]: g for g in golden_outputs(docs)}
     for df in (out, wide):

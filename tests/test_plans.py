@@ -29,9 +29,18 @@ def test_flagship_single_data_exchange(spark):
     """The fused flagship moves data through exactly ONE hash
     exchange (the compact flat rows); the reassembly groupBy reuses
     that partitioning and the pandas stage runs after it."""
-    import bench
+    from pyspark.sql import functions as F
 
-    df = bench.flagship(spark, SF, factor=2)
+    from smartglass_ocr_spark.corpus import span_rows_from_flat
+    from smartglass_ocr_spark.pipeline import run_pipeline_fused
+
+    dp = spark.sparkContext.defaultParallelism
+    replicated = spark.read.parquet(f"{SF}/documents.parquet").crossJoin(
+        spark.range(2).select(F.col("id").alias("r"))
+    ).select((F.col("doc_id") * 2 + F.col("r")).alias("doc_id"), "text")
+    df = run_pipeline_fused(
+        span_rows_from_flat(replicated, spans_per_doc=12, partitions=2 * dp)
+    )
     plan = _plan(df)
     hash_exchanges = re.findall(r"Exchange hashpartitioning", plan)
     assert len(hash_exchanges) == 1, plan

@@ -1,8 +1,9 @@
-"""End-to-end launch via ``tools/submit.sh`` — the north rule's
-"run via spark-submit --py-files" mode: the package is zipped, shipped
-with --py-files, and the extraction job runs in a fresh spark-submit
-JVM (no shared test session). Output is read back with DuckDB so this
-test never touches the suite's SparkSession.
+"""Launch entry points. End-to-end launch via ``tools/submit.sh`` —
+the north rule's "run via spark-submit --py-files" mode: the package is
+zipped, shipped with --py-files, and the extraction job runs in a fresh
+spark-submit JVM (no shared test session). Output is read back with
+DuckDB so this test never touches the suite's SparkSession. Plus
+``bench.py``'s default mode, which forwards to perfbench.
 """
 
 from __future__ import annotations
@@ -10,6 +11,7 @@ from __future__ import annotations
 import json
 import os
 import subprocess
+import sys
 
 import duckdb
 
@@ -51,3 +53,21 @@ def test_spark_submit_py_files_launch(tmp_path):
         "WHERE docs_per_sec > 0 AND run_seq = 1"
     ).fetchone()[0]
     assert m == len(result["processed"])
+
+
+def test_bench_default_runs_perfbench_contract_suite(monkeypatch):
+    """``python bench.py`` with no flags is ``perfbench/run.py
+    --workload contract_suite``: the same arguments and its exit code."""
+    import bench
+    import perfbench.run
+
+    calls = []
+
+    def fake_main(argv=None):
+        calls.append(argv)
+        return 7
+
+    monkeypatch.setattr(perfbench.run, "main", fake_main)
+    monkeypatch.setattr(sys, "argv", ["bench.py"])
+    assert bench.main() == 7
+    assert calls == [["--workload", "contract_suite"]]

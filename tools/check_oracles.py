@@ -112,10 +112,11 @@ def main() -> None:
         for name, fn in qs.items():
             if wanted and name not in wanted:
                 continue
-            # same hygiene bench.py applies between entries: operators
-            # with caller-owned persists otherwise accumulate cached
-            # blocks across the sweep. At the top of the iteration so
-            # every branch below, `continue`s included, starts clean.
+            # same hygiene perfbench's contract_suite applies between
+            # queries: operators with caller-owned persists otherwise
+            # accumulate cached blocks across the sweep. At the top of
+            # the iteration so every branch below, `continue`s
+            # included, starts clean.
             spark.catalog.clearCache()
             try:
                 if name not in oracles:
