@@ -142,16 +142,13 @@ def run_extraction_job(
     so the job runs ``pipeline.fused_doc_stage`` on it directly with
     ZERO reassembly shuffle — the only exchange is the output
     clustering by partition_id. Row-shaped sources go through
-    ``pipeline.reassemble_raw`` first (its ``two_phase`` form for
-    mega-docs).
+    ``pipeline.reassemble_raw`` first.
 
     ``max_doc_spans``/``max_doc_bytes``: the mega-doc clamp levers.
-    When set, each output row carries ``n_truncated_spans`` and the
-    metrics log's ``n_truncated`` column records per partition how
-    many spans the clamp dropped (r3 VERDICT #6 — at 100 TB the
-    clamp's cost must be auditable, not silent).
-    Keep cap settings consistent per output path: the truncation
-    column exists only in capped runs' files.
+    Each output row carries ``n_truncated_spans`` (0 when uncapped)
+    and the metrics log's ``n_truncated`` column records per
+    partition how many spans the clamp dropped (r3 VERDICT #6 — at
+    100 TB the clamp's cost must be auditable, not silent).
     """
     from smartglass_ocr_spark.pipeline import fused_doc_stage
 
@@ -226,20 +223,19 @@ def run_extraction_job(
 
     # per-partition lineage: second pass prunes to the partitions this
     # run wrote (directory-key filter) and reads ONLY the int stat
-    # column — ~0 bytes of payload, no rescan of prior runs' output
-    stats_src = spark.read.parquet(output_path)
+    # columns — ~0 bytes of payload, no rescan of prior runs' output.
+    # The schema is pinned, not taken from whichever file comes first,
+    # so files of a run that predates a column read it as null.
+    stats_src = spark.read.schema(
+        "n_spans int, n_truncated_spans int, partition_id int"
+    ).parquet(output_path)
     if done:
         stats_src = stats_src.filter(~F.col("partition_id").isin(list(done)))
-    has_trunc = "n_truncated_spans" in stats_src.columns
-    aggs = [
+    stats = stats_src.groupBy("partition_id").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_spans").alias("n_spans"),
-    ]
-    if has_trunc:
-        aggs.append(
-            F.sum(F.coalesce(F.col("n_truncated_spans"), F.lit(0))).alias("n_trunc")
-        )
-    stats = stats_src.groupBy("partition_id").agg(*aggs).collect()
+        F.sum("n_truncated_spans").alias("n_trunc"),
+    ).collect()
     processed = sorted(int(r["partition_id"]) for r in stats)
     secs = max(wall_ms, 1) / 1000.0
     ckpt_rows, metric_rows = [], []
@@ -254,7 +250,7 @@ def run_extraction_job(
                 round(r["n_docs"] / secs, 3),
                 round((r["n_spans"] or 0) / secs, 3),
                 "extract", wall_ms,
-                int(r["n_trunc"] or 0) if has_trunc else 0,
+                int(r["n_trunc"] or 0),
             )
         )
     if ckpt_rows:

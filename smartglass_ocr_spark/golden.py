@@ -82,7 +82,9 @@ def process_document(
     """Full golden output for one {doc_id, spans} document: cleaned
     spans in offset order + per-doc derived metadata (FIXTURES.md §2-3).
     ``max_spans``/``max_bytes`` apply :func:`truncate_doc_spans`
-    first (default off — byte-identical to the uncapped spec).
+    first (default off — byte-identical to the uncapped spec);
+    ``n_truncated_spans`` counts the spans the cap dropped, 0 when
+    uncapped, so capped and uncapped rows share one schema.
     """
     spans = truncate_doc_spans(doc["spans"], max_spans, max_bytes)
     out_spans = []
@@ -98,7 +100,9 @@ def process_document(
                 "offset": s["offset"],
             }
         )
-    return document_metadata(doc["doc_id"], out_spans, class_hist)
+    row = document_metadata(doc["doc_id"], out_spans, class_hist)
+    row["n_truncated_spans"] = len(doc["spans"]) - len(spans)
+    return row
 
 
 def dominant_class(class_hist: dict[str, int]) -> str:

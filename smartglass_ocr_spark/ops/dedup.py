@@ -318,6 +318,39 @@ def minhash_lsh_candidates(
     )
 
 
+def _simhash(docs: DataFrame, text_col: str, bits: int) -> DataFrame:
+    """The one lane builder behind :func:`simhash32` (``bits=32``) and
+    :func:`simhash64` (``bits=64``): ``bits`` signed lane sums in one
+    partial-combining agg, then a static fold into a bigint."""
+    toks = docs.select(
+        "doc_id",
+        F.explode(F.split(F.lower(F.trim(F.col(text_col))), TOKEN_SPLIT)).alias("tok"),
+    ).select("doc_id", F.md5("tok").alias("h"))
+
+    def vote(i: int) -> F.Column:
+        d = F.substring("h", (i % 32) + 1, 1)
+        # hex digit >= '8' <=> digit in {8,9,a..f}: one lexicographic
+        # compare instead of an 8-way isin (benched ~4x faster overall)
+        if i < 32:
+            bit = d >= "8"
+        else:
+            bit = ((d >= "4") & (d < "8")) | (d >= "c")
+        return F.sum(F.when(bit, 1).otherwise(-1)).alias(f"_s{i}")
+
+    lane_sums = toks.groupBy("doc_id").agg(*[vote(i) for i in range(bits)])
+    sim = F.lit(0).cast("long")
+    for i in range(bits):
+        # lane 63 is the sign bit: its value is -2^63 (two's
+        # complement) — a plain 1<<63 overflows signed 64-bit in both
+        # engines (DuckDB overflow-checks the shift); the sum stays in
+        # range because the lower 63 bits total at most 2^63 - 1
+        bit_val = -(1 << 63) if i == 63 else (1 << i)
+        sim = sim + F.when(
+            F.col(f"_s{i}") > 0, F.lit(bit_val).cast("long")
+        ).otherwise(F.lit(0).cast("long"))
+    return lane_sums.select("doc_id", sim.alias("simhash"))
+
+
 def simhash32(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """32-bit SimHash per doc, entirely JVM-side and fully NARROW.
 
@@ -338,26 +371,7 @@ def simhash32(docs: DataFrame, text_col: str = "text") -> DataFrame:
     blowup) and a higher-order-function in-row fold (interpreted
     lambdas, no codegen) — each ~15x slower than this shape.
     """
-    toks = docs.select(
-        "doc_id",
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), TOKEN_SPLIT)).alias("tok"),
-    ).select("doc_id", F.md5("tok").alias("h"))
-    # hex digit >= '8' <=> digit in {8,9,a..f}: one lexicographic
-    # compare instead of an 8-way isin (benched ~4x faster overall)
-    lane_sums = toks.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(F.substring("h", i + 1, 1) >= "8", 1).otherwise(-1)
-            ).alias(f"_s{i}")
-            for i in range(32)
-        ]
-    )
-    simhash = F.lit(0).cast("long")
-    for i in range(32):
-        simhash = simhash + F.when(
-            F.col(f"_s{i}") > 0, F.lit(1 << i).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-    return lane_sums.select("doc_id", simhash.alias("simhash"))
+    return _simhash(docs, text_col, 32)
 
 
 def simhash64(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -375,31 +389,7 @@ def simhash64(docs: DataFrame, text_col: str = "text") -> DataFrame:
     CHANCE and the candidate set grows quadratically; 16-bit band
     keys (65,536 values) suppress chance collisions entirely, so
     candidates approach the true near-pair set."""
-    toks = docs.select(
-        "doc_id",
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), TOKEN_SPLIT)).alias("tok"),
-    ).select("doc_id", F.md5("tok").alias("h"))
-
-    def vote(i: int) -> F.Column:
-        d = F.substring("h", (i % 32) + 1, 1)
-        if i < 32:
-            bit = d >= "8"
-        else:
-            bit = ((d >= "4") & (d < "8")) | (d >= "c")
-        return F.sum(F.when(bit, 1).otherwise(-1)).alias(f"_s{i}")
-
-    lane_sums = toks.groupBy("doc_id").agg(*[vote(i) for i in range(64)])
-    sim = F.lit(0).cast("long")
-    for i in range(64):
-        # lane 63 is the sign bit: its value is -2^63 (two's
-        # complement) — a plain 1<<63 overflows signed 64-bit in both
-        # engines (DuckDB overflow-checks the shift); the sum stays in
-        # range because the lower 63 bits total at most 2^63 - 1
-        bit_val = -(1 << 63) if i == 63 else (1 << i)
-        sim = sim + F.when(
-            F.col(f"_s{i}") > 0, F.lit(bit_val).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-    return lane_sums.select("doc_id", sim.alias("simhash"))
+    return _simhash(docs, text_col, 64)
 
 
 def simhash64_column(text_col: str | F.Column = "text") -> F.Column:

@@ -7,18 +7,20 @@ array<struct<kind,text,media_ref,offset>>)`` or straight from
 
 1. ``reassemble_raw``  — groupBy(doc_id) + ``collect_list`` of the raw
    spans: the W1 reassembly shuffle, the path's only exchange.
-   ``two_phase=True`` pre-collects per ``(doc_id, offset // segment)``
-   so no shuffle task buffers a mega-document's whole span list
-   (SURVEY.md §4 skew plan).
 2. ``fused_doc_stage`` — ONE ``mapInPandas`` crossing running the
    golden spec (``golden.process_document``) per doc: offset sort,
    per-span classify/clean, and every per-doc column (lang,
    structure, summary, insights, confidence, status,
-   structured_info).
+   structured_info, n_truncated_spans).
 
 :func:`run_pipeline_fused` chains the two; :func:`run_pipeline_skew_routed`
 sends heavy-tail mega docs through a distributed per-span
 ``classify_and_clean`` branch and the golden per-doc tail instead.
+Mega-doc skew (SURVEY.md §4) has two levers: that lossless router, and
+the ``max_doc_spans``/``max_doc_bytes`` cap. Every doc output — fused,
+capped or not, routed, or written by the extraction job — has the one
+schema ``_DOC_OUT_SCHEMA``, whose ``n_truncated_spans`` is 0 wherever
+no cap dropped a span.
 Per-span semantics = ``smartglass_ocr_spark.golden`` (the executable
 spec); reference citations live in the rules modules.
 """
@@ -31,11 +33,6 @@ from pyspark.sql.types import (
     ArrayType, DoubleType, IntegerType, MapType, StringType, StructField,
     StructType,
 )
-
-SEGMENT_SPANS = 65536  # two-phase reassembly segment width (offsets)
-# largest mega-doc id set the skew router broadcasts; above it the
-# routing join shuffles instead of collecting the ids on the driver
-MEGA_BROADCAST_MAX_IDS = 1_000_000
 
 _CLASSIFY_SCHEMA = StructType(
     [
@@ -148,12 +145,13 @@ _DOC_OUT_SCHEMA = StructType(
         StructField("confidence", DoubleType()),
         StructField("confidence_level", StringType()),
         StructField("status", StringType()),
+        # spans the max_doc_* cap dropped (input minus output length)
+        StructField("n_truncated_spans", IntegerType()),
     ]
 )
 
 
-def reassemble_raw(span_rows: DataFrame, two_phase: bool = False,
-                   segment_spans: int = SEGMENT_SPANS) -> DataFrame:
+def reassemble_raw(span_rows: DataFrame) -> DataFrame:
     """Collect each doc's RAW spans into one array — unsorted: the
     fused doc stage sorts by offset in Python (cheaper than a JVM
     array_sort + field-reorder round trip). This is the pipeline's
@@ -161,25 +159,14 @@ def reassemble_raw(span_rows: DataFrame, two_phase: bool = False,
     by doc_id (or derived narrowly from doc-shaped rows, which
     Generate preserves), EnsureRequirements inserts NO exchange.
 
-    ``two_phase``: mega-doc skew path — pre-collect per
-    (doc_id, offset // segment_spans) so no single shuffle-map task
-    buffers a mega-doc's full span list; the second agg merges a few
-    hundred segment arrays per doc. (The final per-doc row is still
-    whole — a doc must fit an executor either way; two-phase bounds
-    only the *shuffle* memory.)"""
-    span_struct = F.struct("kind", "text", "media_ref", "offset")
-    if not two_phase:
-        return span_rows.groupBy("doc_id").agg(
-            F.collect_list(span_struct).alias("spans")
-        )
-    seg = span_rows.withColumn(
-        "_seg", F.floor(F.col("offset") / F.lit(segment_spans)).cast("int")
-    )
-    stage1 = seg.groupBy("doc_id", "_seg").agg(
-        F.collect_list(span_struct).alias("_seg_spans")
-    )
-    return stage1.groupBy("doc_id").agg(
-        F.flatten(F.collect_list("_seg_spans")).alias("spans")
+    A mega doc's row is whole here, as it must be for the doc stage
+    anyway; its straggler cost is the per-span Python work, which
+    :func:`run_pipeline_skew_routed` distributes (BASELINE.md
+    §Mega-doc handling without forks: a segmented pre-collect added a
+    second exchange and no measurable wall-time or peak-memory
+    saving)."""
+    return span_rows.groupBy("doc_id").agg(
+        F.collect_list(F.struct("kind", "text", "media_ref", "offset")).alias("spans")
     )
 
 
@@ -201,25 +188,24 @@ def fused_doc_stage(assembled: DataFrame,
     (``golden.truncate_doc_spans`` — the reference's 16 MB ingest
     clamp re-expressed as a per-document lever). Default off: output
     stays byte-identical to the uncapped spec. This bounds the
-    straggler cost of pathological mega-docs (BASELINE.md §skew: one
-    200k-span doc = 18 s in a single Python task); for LOSSLESS
-    mega-doc handling use :func:`run_pipeline_skew_routed`.
+    straggler cost of pathological mega-docs (one 200k-tiny-span doc
+    ran 4.5–7.5 s in a single Python task, BASELINE.md §Mega-doc
+    handling without forks); for LOSSLESS mega-doc handling use
+    :func:`run_pipeline_skew_routed`.
 
-    Truncation observability (r3 VERDICT #6): when either cap is set,
-    the output gains an ``n_truncated_spans`` int column (spans the
-    clamp dropped for that doc — the cleaned spans array has exactly
-    one entry per KEPT span, so the count is input minus output
-    length) which :func:`~smartglass_ocr_spark.checkpoint.
+    Truncation observability (r3 VERDICT #6): every output row carries
+    ``n_truncated_spans`` (spans the clamp dropped for that doc, 0
+    when uncapped), which :func:`~smartglass_ocr_spark.checkpoint.
     run_extraction_job` rolls into the per-partition metrics table, so
-    a 100-TB run can audit what the clamp cost. Capless runs keep the
-    byte-identical uncapped schema.
+    a 100-TB run can audit what the clamp cost. The schema is the same
+    capped or not, so runs with different caps can share an output
+    path.
 
     One Python task runs per partition of ``assembled``, and each pays
     a fixed worker set-up (BASELINE.md §per-task set-up); the caller
     picks the count — :func:`run_pipeline_fused` trims small shuffles
     to one task per core, :func:`~smartglass_ocr_spark.checkpoint.
     run_extraction_job` keeps its scan's splits."""
-    capped = max_doc_spans is not None or max_doc_bytes is not None
 
     def run(batches):
         from smartglass_ocr_spark.golden import process_document
@@ -228,24 +214,16 @@ def fused_doc_stage(assembled: DataFrame,
             # Arrow hands each struct element as a dict with exactly
             # the span keys — feed them to the spec directly, no
             # per-span rebuild
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                row = process_document(
+            yield pd.DataFrame([
+                process_document(
                     {"doc_id": doc_id, "spans": spans},
                     max_spans=max_doc_spans,
                     max_bytes=max_doc_bytes,
                 )
-                if capped:
-                    row["n_truncated_spans"] = len(spans) - len(row["spans"])
-                rows.append(row)
-            yield pd.DataFrame(rows)
+                for doc_id, spans in zip(pdf["doc_id"], pdf["spans"])
+            ])
 
-    schema = _DOC_OUT_SCHEMA
-    if capped:
-        schema = StructType(
-            _DOC_OUT_SCHEMA.fields + [StructField("n_truncated_spans", IntegerType())]
-        )
-    return assembled.mapInPandas(run, schema)
+    return assembled.mapInPandas(run, _DOC_OUT_SCHEMA)
 
 
 def _planned_partitions(df: DataFrame) -> int:
@@ -259,15 +237,13 @@ def _planned_partitions(df: DataFrame) -> int:
 
 
 def run_pipeline_fused(span_rows: DataFrame,
-                       two_phase: bool = False,
                        max_doc_spans: int | None = None,
                        max_doc_bytes: int | None = None) -> DataFrame:
     """The end-to-end doc pipeline: ONE shuffle (raw-span
     reassembly), ONE Arrow crossing (fused classify/clean/meta).
     Output rows equal ``golden.golden_outputs`` field for field
     (asserted in tests). For per-span rows without the doc metadata
-    use :func:`extracted_span_rows`. ``two_phase`` enables the
-    mega-doc segment pre-assembly; ``max_doc_spans``/``max_doc_bytes``
+    use :func:`extracted_span_rows`. ``max_doc_spans``/``max_doc_bytes``
     cap per-doc work (see :func:`fused_doc_stage`).
 
     Few short tasks per core: when the reassembly shuffle plans more
@@ -292,7 +268,7 @@ def run_pipeline_fused(span_rows: DataFrame,
     cost side: a partition holding a mega doc shares its task with a
     neighbour; route skewed input through
     :func:`run_pipeline_skew_routed`."""
-    assembled = reassemble_raw(span_rows, two_phase=two_phase)
+    assembled = reassemble_raw(span_rows)
     cores = assembled.sparkSession.sparkContext.defaultParallelism
     if cores < _planned_partitions(assembled) <= 2 * cores:
         assembled = assembled.coalesce(cores)
@@ -308,8 +284,8 @@ def run_pipeline_skew_routed(span_rows: DataFrame,
     """Mega-doc straggler mitigation, LOSSLESS (r2 VERDICT #3): docs
     at or under ``mega_doc_spans`` spans take the fused one-exchange
     path; heavier docs take a mega branch where the dominant per-doc
-    cost — per-span classify/clean, ~0.7 ms/span, so a 200k-span doc
-    is ~2 min of Python in ONE fused task — runs distributed across
+    cost — per-span classify/clean, so a 200k-tiny-span doc is
+    4.5–7.5 s of Python in ONE fused task — runs distributed across
     the cluster (a round-robin repartition spreads the mega spans;
     the per-doc regrouping shuffle touches only the mega subset).
     Output is bit-identical to the fused path (asserted in tests):
@@ -320,14 +296,17 @@ def run_pipeline_skew_routed(span_rows: DataFrame,
     doc_ids (compact (doc_id, n) rows); the — by definition of a
     heavy TAIL — small id set is persisted (it is tiny and both
     branch plans reference it; the cache lives for the session, the
-    caller-owned-unpersist contract) and BROADCAST-joined back as a
-    routing flag (r4 VERDICT #2: the former collected-``isin`` form
-    shipped up to 100k id literals in every task closure of both
-    branches and needed a hard ``max_mega_docs`` ceiling; the join
-    form has no driver collect, no closure payload, and no ceiling),
-    so each branch shuffles only its own subset exactly once and no
-    exchange-reuse gamble is taken (r2 finding: AQE does not reuse
-    union-branch exchanges). A NULL ``doc_id`` never matches the
+    caller-owned-unpersist contract) and joined back as a routing
+    flag (r4 VERDICT #2: the former collected-``isin`` form shipped
+    up to 100k id literals in every task closure of both branches and
+    needed a hard ``max_mega_docs`` ceiling; the join form has no
+    closure payload and no ceiling), so each branch shuffles only its
+    own subset exactly once and no exchange-reuse gamble is taken (r2
+    finding: AQE does not reuse union-branch exchanges). The join
+    carries no hint: the persisted, counted id set has a real size in
+    the plan, so Spark broadcasts it under
+    ``spark.sql.autoBroadcastJoinThreshold`` and shuffles it above
+    (both pinned in tests). A NULL ``doc_id`` never matches the
     join key, so such rows fall through to the small branch exactly
     as the old ``coalesce(isin, False)`` routing sent them (pinned
     in tests). The mega branch is: round-robin spread
@@ -342,8 +321,10 @@ def run_pipeline_skew_routed(span_rows: DataFrame,
 
     The residual serial floor per mega-doc is the per-doc metadata
     pass (format/structure/summary — linear passes over the joined
-    text); the ``max_doc_*`` cap levers bound that if a tail of
-    pathological documents makes even the linear passes matter."""
+    text); the ``max_doc_*`` cap levers of :func:`run_pipeline_fused`
+    bound that if a tail of pathological documents makes even the
+    linear passes matter. Both branches emit ``_DOC_OUT_SCHEMA``; the
+    mega branch drops no span, so its ``n_truncated_spans`` is 0."""
     mega_ids = (
         span_rows.groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("_n"))
@@ -353,27 +334,18 @@ def run_pipeline_skew_routed(span_rows: DataFrame,
     )
     # the count() both answers "any megas at all?" and eagerly fills
     # the cache so the agg over span_rows runs ONCE, not once per
-    # branch plan (AQE does not reuse union-branch exchanges)
-    n_mega = mega_ids.count()
-    if n_mega == 0:
+    # branch plan (AQE does not reuse union-branch exchanges) — and
+    # gives the join planner the id set's real size
+    if mega_ids.count() == 0:
         mega_ids.unpersist()
         return run_pipeline_fused(span_rows)
-    # NULL-SAFE routing: a NULL doc_id never matches the broadcast
-    # join key, leaves _mega NULL, and coalesce(False) sends the row
-    # to the small branch, where the fused groupBy keeps such rows as
-    # one group exactly like an unrouted run would (r3 ADVICE).
-    # The broadcast hint is gated on the measured id count: a mis-set
-    # threshold that catches millions of "megas" must degrade to a
-    # shuffle join, not force an unbounded driver collect (the old
-    # ceiling's failure mode without its hard error). Above the gate
-    # the shuffle-hash hint also keeps the planner from broadcasting
-    # the ids on its own size estimate.
-    flag = mega_ids.withColumn("_mega", F.lit(True))
-    if n_mega <= MEGA_BROADCAST_MAX_IDS:
-        flag = F.broadcast(flag)
-    else:
-        flag = flag.hint("shuffle_hash")
-    routed = span_rows.join(flag, "doc_id", "left")
+    # NULL-SAFE routing: a NULL doc_id never matches the join key,
+    # leaves _mega NULL, and coalesce(False) sends the row to the
+    # small branch, where the fused groupBy keeps such rows as one
+    # group exactly like an unrouted run would (r3 ADVICE)
+    routed = span_rows.join(
+        mega_ids.withColumn("_mega", F.lit(True)), "doc_id", "left"
+    )
     is_mega = F.coalesce(F.col("_mega"), F.lit(False))
     small_out = run_pipeline_fused(
         routed.filter(~is_mega).select(*span_rows.columns)
@@ -406,7 +378,9 @@ def run_pipeline_skew_routed(span_rows: DataFrame,
         hist: dict[str, int] = {}
         for c in pdf["block_class"].tolist():
             hist[c] = hist.get(c, 0) + 1
-        return pd.DataFrame([document_metadata(key[0], out_spans, hist)])
+        row = document_metadata(key[0], out_spans, hist)
+        row["n_truncated_spans"] = 0  # routing keeps every span
+        return pd.DataFrame([row])
 
     mega_out = cleaned.groupBy("doc_id").applyInPandas(meta_tail, _DOC_OUT_SCHEMA)
     return small_out.unionByName(mega_out)

@@ -130,6 +130,18 @@ def session_window_agg(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     )
 
 
+def _doc_text() -> F.Column:
+    """A document's non-null span texts joined by newlines, in array
+    order — the text every stream dedup keys on."""
+    return F.array_join(
+        F.filter(
+            F.transform("spans", lambda s: s["text"]),
+            lambda t: t.isNotNull(),
+        ),
+        "\n",
+    )
+
+
 def stream_dedup_exact(stream_docs: DataFrame) -> DataFrame:
     """Stateful exact dedup on a document stream: the first document
     with a given text fingerprint passes, later arrivals (same batch
@@ -140,14 +152,7 @@ def stream_dedup_exact(stream_docs: DataFrame) -> DataFrame:
 
     Doc text = concat of its span texts in array order (documents
     arrive whole, so no cross-batch reassembly state is needed)."""
-    doc_text = F.array_join(
-        F.filter(
-            F.transform("spans", lambda s: s["text"]),
-            lambda t: t.isNotNull(),
-        ),
-        "\n",
-    )
-    return stream_docs.withColumn("text_md5", F.md5(doc_text)).dropDuplicates(
+    return stream_docs.withColumn("text_md5", F.md5(_doc_text())).dropDuplicates(
         ["text_md5"]
     )
 
@@ -165,15 +170,8 @@ def stream_dedup_near(stream_docs: DataFrame, n: int = 5) -> DataFrame:
     tool for thorough near-dedup."""
     from smartglass_ocr_spark.ops.dedup import min_shingle_fingerprint
 
-    doc_text = F.array_join(
-        F.filter(
-            F.transform("spans", lambda s: s["text"]),
-            lambda t: t.isNotNull(),
-        ),
-        "\n",
-    )
     return stream_docs.withColumn(
-        "fingerprint", min_shingle_fingerprint(n, doc_text)
+        "fingerprint", min_shingle_fingerprint(n, _doc_text())
     ).dropDuplicates(["fingerprint"])
 
 
@@ -201,15 +199,8 @@ def stream_dedup_simhash(stream_docs: DataFrame) -> DataFrame:
     (bag-of-words)."""
     from smartglass_ocr_spark.ops.dedup import simhash64_column
 
-    doc_text = F.array_join(
-        F.filter(
-            F.transform("spans", lambda s: s["text"]),
-            lambda t: t.isNotNull(),
-        ),
-        "\n",
-    )
     return stream_docs.withColumn(
-        "simhash", simhash64_column(doc_text)
+        "simhash", simhash64_column(_doc_text())
     ).dropDuplicates(["simhash"])
 
 

@@ -216,7 +216,7 @@ def test_truncation_counts_in_metrics(spark, paths):
     """When the mega-doc clamp fires, the metrics log must record per
     partition how many spans it dropped (r3 VERDICT #6) — summing to
     exactly (input spans - capped spans) — and a capless run records
-    0 with the uncapped output schema."""
+    0, in the same output schema."""
     from pyspark.sql import functions as F
 
     docs_raw = generate_docs(n_docs=20, seed=13, mega_doc_spans=500)
@@ -245,10 +245,40 @@ def test_truncation_counts_in_metrics(spark, paths):
     }
     assert logged == per_part
 
-    # capless run: fresh paths, schema unchanged, metric records 0
+    # capless run: fresh paths, same schema, nothing truncated
     out2, ckpt2, met2 = (p + "_nc" for p in
                          (paths["out"], paths["ckpt"], paths["metrics"]))
     run_extraction_job(spark, docs, out2, ckpt2, met2, "run-1", n_partitions=8)
-    assert "n_truncated_spans" not in spark.read.parquet(out2).columns
+    assert spark.read.parquet(out2).agg(F.sum("n_truncated_spans")).collect()[0][0] == 0
     m2 = spark.read.parquet(met2)
     assert m2.agg(F.sum("n_truncated")).collect()[0][0] == 0
+
+
+def test_capped_resume_onto_uncapped_output_logs_truncation(spark, paths):
+    """A capped run that resumes onto an output path an uncapped run
+    started must log the spans its cap dropped in the partitions it
+    wrote, whatever file the output directory lists first."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    df = docs_to_df(spark, generate_docs(n_docs=40, seed=1, mega_doc_spans=400))
+    bucketed = with_partition_id(df, 8)
+    run_extraction_job(
+        spark, bucketed.filter("partition_id < 4").drop("partition_id"),
+        paths["out"], paths["ckpt"], paths["metrics"], "run-1", n_partitions=8,
+    )
+    cap = 5
+    r2 = run_extraction_job(
+        spark, df, paths["out"], paths["ckpt"], paths["metrics"], "run-2",
+        n_partitions=8, max_doc_spans=cap,
+    )
+    assert set(r2["processed"]) == {4, 5, 6, 7}
+
+    want = Counter()
+    for r in bucketed.filter("partition_id >= 4").collect():
+        want[r["partition_id"]] += max(0, len(r["spans"]) - cap)
+    assert sum(want.values()) > 0
+    m = spark.read.parquet(paths["metrics"]).filter(F.col("run_id") == "run-2")
+    logged = {r["partition_id"]: r["n_truncated"] for r in m.collect()}
+    assert logged == dict(want)

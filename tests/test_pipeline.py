@@ -4,8 +4,8 @@ The Spark pipeline's output must match the pure-Python golden
 generator per document: span-sequence equality
 (kind, text, media_ref, order) — BASELINE.json north_rule — plus the
 invariants: span-count conservation, media byte-identity, offset
-monotonicity, input-order permutation invariance, and single-phase ==
-two-phase (skew path) equivalence.
+monotonicity, input-order permutation invariance, and fused == routed
+(skew path) equivalence.
 """
 
 from __future__ import annotations
@@ -103,19 +103,16 @@ def test_permutation_invariance(spark, docs, spark_result):
         assert _span_seq(r["spans"]) == _span_seq(spark_result[r["doc_id"]]["spans"])
 
 
-def test_two_phase_reassembly_equivalence(spark):
-    """The segmented skew path produces the golden rows, including for
-    pinned mega-docs (segment width forced tiny so their spans cross
-    several segment boundaries)."""
+def test_mega_doc_reassembly_equivalence(spark):
+    """The single reassembly shuffle followed by the doc stage
+    produces the golden rows for pinned mega-docs too."""
     from smartglass_ocr_spark.pipeline import fused_doc_stage, reassemble_raw
 
     mega = generate_docs(n_docs=10, seed=99, scramble=True, mega_doc_spans=500)
-    assembled = reassemble_raw(
-        explode_spans(docs_to_df(spark, mega)), two_phase=True, segment_spans=64
-    )
+    assembled = reassemble_raw(explode_spans(docs_to_df(spark, mega)))
     got = {r["doc_id"]: r.asDict(recursive=True) for r in fused_doc_stage(assembled).collect()}
     assert got == {g["doc_id"]: g for g in golden_outputs(mega)}
-    assert max(len(d["spans"]) for d in mega) > 64
+    assert max(len(d["spans"]) for d in mega) == 500
 
 
 def test_empty_and_single_span_docs(spark):
@@ -204,21 +201,6 @@ def test_markdown_rendering(spark):
     assert again == {r["doc_id"]: r["markdown"] for r in rows}
 
 
-def test_fused_two_phase_mega_doc(spark):
-    from smartglass_ocr_spark.pipeline import explode_spans, run_pipeline_fused
-
-    mega = generate_docs(n_docs=8, seed=41, scramble=True, mega_doc_spans=400)
-    df = docs_to_df(spark, mega)
-    single = {r["doc_id"]: r for r in run_pipeline_fused(explode_spans(df)).collect()}
-    two = {
-        r["doc_id"]: r
-        for r in run_pipeline_fused(explode_spans(df), two_phase=True).collect()
-    }
-    assert single.keys() == two.keys()
-    for k in single:
-        assert single[k].asDict(recursive=True) == two[k].asDict(recursive=True)
-
-
 def test_with_organized_text_stage(spark):
     """Opt-in organize stage: one column appended, values equal the
     per-doc Python machine keyed by the dominant special class."""
@@ -259,23 +241,35 @@ def test_skew_routed_bit_identical(spark):
     assert fused == routed
 
 
-def test_skew_routed_shuffle_join_above_broadcast_gate(spark, monkeypatch):
-    """Above MEGA_BROADCAST_MAX_IDS the routing join must not broadcast
-    the mega ids (neither by hint nor by the planner's own size
-    estimate), and the output must still equal the fused path."""
-    from smartglass_ocr_spark import pipeline
+def test_skew_routed_shuffle_join_above_broadcast_gate(spark):
+    """The routing join carries no hint: Spark sizes the persisted mega
+    id set itself, broadcasting it under the default
+    ``autoBroadcastJoinThreshold`` and shuffling it when the set is
+    above the threshold (here -1, which disables broadcasts); either
+    way the output must equal the fused path."""
     from smartglass_ocr_spark.pipeline import (
         explode_spans, run_pipeline_fused, run_pipeline_skew_routed,
     )
 
-    monkeypatch.setattr(pipeline, "MEGA_BROADCAST_MAX_IDS", 0)
     df = docs_to_df(
         spark, generate_docs(n_docs=10, seed=13, scramble=True, mega_doc_spans=3000)
     )
     rows = explode_spans(df)
+
+    def executed_plan(out):
+        return out._jdf.queryExecution().executedPlan().toString()
+
     routed = run_pipeline_skew_routed(rows, mega_doc_spans=1000)
-    got = {r["doc_id"]: r.asDict(recursive=True) for r in routed.collect()}
-    plan = routed._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in executed_plan(routed)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        routed = run_pipeline_skew_routed(rows, mega_doc_spans=1000)
+        got = {r["doc_id"]: r.asDict(recursive=True) for r in routed.collect()}
+        plan = executed_plan(routed)
+    finally:
+        spark.conf.set(key, before)
     assert "Join" in plan and "BroadcastHashJoin" not in plan, plan
     fused = {
         r["doc_id"]: r.asDict(recursive=True)
@@ -459,10 +453,10 @@ def test_doc_span_cap_equals_pretruncated(spark):
             max_doc_spans=300, max_doc_bytes=20_000,
         ).collect()
     }
-    # capped runs additionally report what the clamp dropped (r3
-    # VERDICT #6); that observability column must equal the direct
-    # clamp arithmetic, and the payload must equal the pre-truncated
-    # capless run exactly
+    # every run reports what the clamp dropped (r3 VERDICT #6); that
+    # observability column must equal the direct clamp arithmetic (0
+    # on the capless run), and the payload must equal the
+    # pre-truncated capless run exactly
     want_trunc = {
         d["doc_id"]: len(d["spans"]) - len(c["spans"])
         for d, c in zip(docs, capped_corpus)
@@ -475,6 +469,7 @@ def test_doc_span_cap_equals_pretruncated(spark):
             explode_spans(docs_to_df(spark, capped_corpus))
         ).collect()
     }
+    assert {v.pop("n_truncated_spans") for v in b.values()} == {0}
     assert a == b
     mega_id = docs[-1]["doc_id"]
     assert len(a[mega_id]["spans"]) <= 300
@@ -524,3 +519,86 @@ def test_structured_typed_column(spark):
         t = r["structured_typed"]["table"]
         flat = dict(r["structured_info"] or {})
         assert "|".join(t["headers"]) == flat.get("headers")
+
+
+def _hostile_corpus() -> list[dict]:
+    """Spans that have broken text pipelines before: NULL and empty
+    text, Unicode whitespace (U+00A0, U+2028, U+3000), astral-plane
+    characters, a span over 1 MB, a NULL doc_id, and a mega doc that
+    carries all of them, beside ordinary scrambled docs."""
+    hostile = [
+        ("para", None),
+        ("para", ""),
+        ("heading", "Total Due: $12.50"),
+        ("list", "- first item - second item"),
+        ("para", "Meeting　at　10:30　in room B."),
+        ("para", "Astral 𝔘𝔫𝔦𝔠𝔬𝔡𝔢 😀 and 𠜎 ideographs, 𝟙𝟚𝟛 digits."),
+        ("html", "<p>Chapter one 🚀</p>"),
+        ("image", None),
+    ]
+
+    def span(i, kind, text):
+        media = f"m-{i}" if kind == "image" else None
+        return {"kind": kind, "text": text, "media_ref": media, "offset": i}
+
+    sentence = "Invoice No. 4471 lists 12 items at $3.50 each, paid　in full 😀. "
+    big = sentence * ((1 << 20) // len(sentence.encode()) + 1)
+    mega = [span(i, *hostile[i % len(hostile)]) for i in range(120)]
+    mega.append(span(120, "para", big))
+    docs = generate_docs(n_docs=8, seed=17, scramble=True)
+    return docs + [
+        {"doc_id": "hostile-small", "spans": [span(i, *h) for i, h in enumerate(hostile)]},
+        {"doc_id": None, "spans": [span(i, *h) for i, h in enumerate(hostile[2:6])]},
+        {"doc_id": "hostile-mega", "spans": mega},
+    ]
+
+
+def test_hostile_spans_lockstep(spark):
+    """fused == golden == routed, row for row, on one corpus of hostile
+    spans; the mega doc takes the routed branch (``mega_doc_spans``
+    below its span count) and the NULL doc_id the fused one."""
+    from smartglass_ocr_spark.pipeline import run_pipeline_skew_routed
+
+    docs = _hostile_corpus()
+    assert max(len((s["text"] or "").encode()) for d in docs for s in d["spans"]) >= 1 << 20
+    rows = explode_spans(docs_to_df(spark, docs)).cache()
+    try:
+        fused = {r["doc_id"]: r.asDict(recursive=True) for r in run_pipeline_fused(rows).collect()}
+        routed = {
+            r["doc_id"]: r.asDict(recursive=True)
+            for r in run_pipeline_skew_routed(rows, mega_doc_spans=50).collect()
+        }
+    finally:
+        rows.unpersist()
+    want = {g["doc_id"]: g for g in golden_outputs(docs)}
+    assert len(want) == len(docs) and None in want
+    assert fused == want
+    assert routed == want
+
+
+def test_doc_outputs_share_one_schema(spark, tmp_path):
+    """Capped and uncapped fused runs, a routed run that takes the mega
+    branch, and the extraction job's parquet all carry one schema
+    (the job adds only its lineage columns)."""
+    from smartglass_ocr_spark.checkpoint import run_extraction_job
+    from smartglass_ocr_spark.pipeline import run_pipeline_skew_routed
+
+    docs = generate_docs(n_docs=10, seed=21, scramble=True, mega_doc_spans=400)
+    df = docs_to_df(spark, docs)
+    rows = explode_spans(df)
+    out = str(tmp_path / "out")
+    run_extraction_job(
+        spark, df, out, str(tmp_path / "ckpt"), str(tmp_path / "metrics"),
+        "run-1", n_partitions=4,
+    )
+    routed = run_pipeline_skew_routed(rows, mega_doc_spans=100)
+    # the mega branch really ran: its doc-stage is a grouped pandas UDF
+    assert "FlatMapGroupsInPandas" in routed._jdf.queryExecution().executedPlan().toString()
+    schemas = [
+        run_pipeline_fused(rows, max_doc_spans=50).schema,
+        run_pipeline_fused(rows).schema,
+        routed.schema,
+        spark.read.parquet(out).drop("n_spans", "partition_id").schema,
+    ]
+    assert all(s == schemas[0] for s in schemas), [s.simpleString() for s in schemas]
+    assert schemas[0].fieldNames()[-1] == "n_truncated_spans"
