@@ -20,7 +20,7 @@ Layout:
 - ``rules/``    pure-Python rule modules — the executable spec shared
                 by the golden generator and the pandas UDFs.
 - ``pipeline``  the Spark doc path (reassemble raw spans, then the
-                fused golden doc stage; skew routing for mega docs).
+                fused golden doc stage; a per-doc span/byte cap for mega docs).
 - ``corpus``    deterministic synthetic spans-corpus generators.
 - ``golden``    pure-Python golden generator (reference semantics).
 - ``ops/``      training-data-scale operators: dedup (exact/minhash/

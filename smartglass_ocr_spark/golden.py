@@ -100,33 +100,6 @@ def process_document(
                 "offset": s["offset"],
             }
         )
-    row = document_metadata(doc["doc_id"], out_spans, class_hist)
-    row["n_truncated_spans"] = len(doc["spans"]) - len(spans)
-    return row
-
-
-def dominant_class(class_hist: dict[str, int]) -> str:
-    """The class that drives a doc's structured extraction: the most
-    frequent special block class, ties broken by the fixed order
-    id_card > receipt > form > table; "content" when the doc has none
-    (our doc analogue of the reference dispatcher keyed by ImageType,
-    lib/information_extraction.py:28-53)."""
-    dominant = max(
-        _SPECIAL_CLASSES,
-        key=lambda c: (class_hist.get(c, 0), -_SPECIAL_CLASSES.index(c)),
-    )
-    return dominant if class_hist.get(dominant, 0) > 0 else "content"
-
-
-def document_metadata(
-    doc_id: str, out_spans: list[dict], class_hist: dict[str, int]
-) -> dict:
-    """The post-classification half of :func:`process_document`: the
-    full golden output row for ALREADY cleaned+classified spans in
-    offset order. Split out so the skew-routed pipeline can classify a
-    mega-document's spans distributed across the cluster and run only
-    this per-doc tail serially — equality with the fused path is then
-    by construction (per-span classification is context-free)."""
     # document text = non-empty cleaned text spans joined in order
     # (the analogue of the text the reference hands to format_text)
     doc_text = "\n\n".join(
@@ -166,7 +139,7 @@ def document_metadata(
             key_insights = extract_key_insights(formatted_text)
 
     return {
-        "doc_id": doc_id,
+        "doc_id": doc["doc_id"],
         "spans": out_spans,
         "formatted_text": formatted_text,
         "lang": detect_language(formatted_text),
@@ -184,7 +157,21 @@ def document_metadata(
         "confidence": confidence,
         "confidence_level": confidence_level(confidence),
         "status": status,
+        "n_truncated_spans": len(doc["spans"]) - len(spans),
     }
+
+
+def dominant_class(class_hist: dict[str, int]) -> str:
+    """The class that drives a doc's structured extraction: the most
+    frequent special block class, ties broken by the fixed order
+    id_card > receipt > form > table; "content" when the doc has none
+    (our doc analogue of the reference dispatcher keyed by ImageType,
+    lib/information_extraction.py:28-53)."""
+    dominant = max(
+        _SPECIAL_CLASSES,
+        key=lambda c: (class_hist.get(c, 0), -_SPECIAL_CLASSES.index(c)),
+    )
+    return dominant if class_hist.get(dominant, 0) > 0 else "content"
 
 
 def golden_outputs(docs: list[dict]) -> list[dict]:

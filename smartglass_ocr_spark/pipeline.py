@@ -13,14 +13,11 @@ array<struct<kind,text,media_ref,offset>>)`` or straight from
    structure, summary, insights, confidence, status,
    structured_info, n_truncated_spans).
 
-:func:`run_pipeline_fused` chains the two; :func:`run_pipeline_skew_routed`
-sends heavy-tail mega docs through a distributed per-span
-``classify_and_clean`` branch and the golden per-doc tail instead.
-Mega-doc skew (SURVEY.md §4) has two levers: that lossless router, and
-the ``max_doc_spans``/``max_doc_bytes`` cap. Every doc output — fused,
-capped or not, routed, or written by the extraction job — has the one
-schema ``_DOC_OUT_SCHEMA``, whose ``n_truncated_spans`` is 0 wherever
-no cap dropped a span.
+:func:`run_pipeline_fused` chains the two. Mega-doc skew (SURVEY.md
+§4) has one lever, the ``max_doc_spans``/``max_doc_bytes`` cap. Every
+doc output — capped or not, or written by the extraction job — has the
+one schema ``_DOC_OUT_SCHEMA``, whose ``n_truncated_spans`` is 0
+wherever no cap dropped a span.
 Per-span semantics = ``smartglass_ocr_spark.golden`` (the executable
 spec); reference citations live in the rules modules.
 """
@@ -160,11 +157,10 @@ def reassemble_raw(span_rows: DataFrame) -> DataFrame:
     Generate preserves), EnsureRequirements inserts NO exchange.
 
     A mega doc's row is whole here, as it must be for the doc stage
-    anyway; its straggler cost is the per-span Python work, which
-    :func:`run_pipeline_skew_routed` distributes (BASELINE.md
-    §Mega-doc handling without forks: a segmented pre-collect added a
-    second exchange and no measurable wall-time or peak-memory
-    saving)."""
+    anyway; its straggler cost is the per-span Python work, which the
+    doc stage's ``max_doc_*`` cap bounds (BASELINE.md §Mega-doc
+    handling without forks: a segmented pre-collect added a second
+    exchange and no measurable wall-time or peak-memory saving)."""
     return span_rows.groupBy("doc_id").agg(
         F.collect_list(F.struct("kind", "text", "media_ref", "offset")).alias("spans")
     )
@@ -190,8 +186,8 @@ def fused_doc_stage(assembled: DataFrame,
     stays byte-identical to the uncapped spec. This bounds the
     straggler cost of pathological mega-docs (one 200k-tiny-span doc
     ran 4.5–7.5 s in a single Python task, BASELINE.md §Mega-doc
-    handling without forks); for LOSSLESS mega-doc handling use
-    :func:`run_pipeline_skew_routed`.
+    handling without forks). It is the only mega-doc lever (BASELINE.md
+    §One doc path).
 
     Truncation observability (r3 VERDICT #6): every output row carries
     ``n_truncated_spans`` (spans the clamp dropped for that doc, 0
@@ -266,8 +262,8 @@ def run_pipeline_fused(span_rows: DataFrame,
     shuffles keep every partition as its own task, so retries,
     speculation and dynamic allocation keep their granularity. The
     cost side: a partition holding a mega doc shares its task with a
-    neighbour; route skewed input through
-    :func:`run_pipeline_skew_routed`."""
+    neighbour; bound skewed input with the
+    ``max_doc_spans``/``max_doc_bytes`` cap."""
     assembled = reassemble_raw(span_rows)
     cores = assembled.sparkSession.sparkContext.defaultParallelism
     if cores < _planned_partitions(assembled) <= 2 * cores:
@@ -277,113 +273,6 @@ def run_pipeline_fused(span_rows: DataFrame,
         max_doc_spans=max_doc_spans,
         max_doc_bytes=max_doc_bytes,
     )
-
-
-def run_pipeline_skew_routed(span_rows: DataFrame,
-                             mega_doc_spans: int = 32768) -> DataFrame:
-    """Mega-doc straggler mitigation, LOSSLESS (r2 VERDICT #3): docs
-    at or under ``mega_doc_spans`` spans take the fused one-exchange
-    path; heavier docs take a mega branch where the dominant per-doc
-    cost — per-span classify/clean, so a 200k-tiny-span doc is
-    4.5–7.5 s of Python in ONE fused task — runs distributed across
-    the cluster (a round-robin repartition spreads the mega spans;
-    the per-doc regrouping shuffle touches only the mega subset).
-    Output is bit-identical to the fused path (asserted in tests):
-    per-span classification is context-free and the per-doc tail is
-    the golden spec's own ``golden.document_metadata``.
-
-    Routing: one cheap partial-combining count agg finds the mega
-    doc_ids (compact (doc_id, n) rows); the — by definition of a
-    heavy TAIL — small id set is persisted (it is tiny and both
-    branch plans reference it; the cache lives for the session, the
-    caller-owned-unpersist contract) and joined back as a routing
-    flag (r4 VERDICT #2: the former collected-``isin`` form shipped
-    up to 100k id literals in every task closure of both branches and
-    needed a hard ``max_mega_docs`` ceiling; the join form has no
-    closure payload and no ceiling), so each branch shuffles only its
-    own subset exactly once and no exchange-reuse gamble is taken (r2
-    finding: AQE does not reuse union-branch exchanges). The join
-    carries no hint: the persisted, counted id set has a real size in
-    the plan, so Spark broadcasts it under
-    ``spark.sql.autoBroadcastJoinThreshold`` and shuffles it above
-    (both pinned in tests). A NULL ``doc_id`` never matches the
-    join key, so such rows fall through to the small branch exactly
-    as the old ``coalesce(isin, False)`` routing sent them (pinned
-    in tests). The mega branch is: round-robin spread
-    -> Arrow classify/clean -> ``applyInPandas`` per doc running only
-    the per-doc metadata tail (``golden.document_metadata``) —
-    deliberately not a JVM ``array_sort``/``collect_list`` (an
-    interpreted HOF hist-fold + field-reorder lambdas cost more per
-    mega span than the classification they save, and flat columnar
-    Arrow transfer into the grouped pandas stage benched ~15% faster
-    than building the span structs JVM-side and converting the nested
-    array).
-
-    The residual serial floor per mega-doc is the per-doc metadata
-    pass (format/structure/summary — linear passes over the joined
-    text); the ``max_doc_*`` cap levers of :func:`run_pipeline_fused`
-    bound that if a tail of pathological documents makes even the
-    linear passes matter. Both branches emit ``_DOC_OUT_SCHEMA``; the
-    mega branch drops no span, so its ``n_truncated_spans`` is 0."""
-    mega_ids = (
-        span_rows.groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") > mega_doc_spans)
-        .select("doc_id")
-        .persist()
-    )
-    # the count() both answers "any megas at all?" and eagerly fills
-    # the cache so the agg over span_rows runs ONCE, not once per
-    # branch plan (AQE does not reuse union-branch exchanges) — and
-    # gives the join planner the id set's real size
-    if mega_ids.count() == 0:
-        mega_ids.unpersist()
-        return run_pipeline_fused(span_rows)
-    # NULL-SAFE routing: a NULL doc_id never matches the join key,
-    # leaves _mega NULL, and coalesce(False) sends the row to the
-    # small branch, where the fused groupBy keeps such rows as one
-    # group exactly like an unrouted run would (r3 ADVICE)
-    routed = span_rows.join(
-        mega_ids.withColumn("_mega", F.lit(True)), "doc_id", "left"
-    )
-    is_mega = F.coalesce(F.col("_mega"), F.lit(False))
-    small_out = run_pipeline_fused(
-        routed.filter(~is_mega).select(*span_rows.columns)
-    )
-    n_parts = span_rows.sparkSession.sparkContext.defaultParallelism
-    cleaned = classify_and_clean(
-        routed.filter(is_mega).select(*span_rows.columns).repartition(n_parts)
-    )
-
-    def meta_tail(key, pdf):
-        # per-doc metadata tail over ALREADY classified flat span rows:
-        # sort by offset, fold the class histogram, and run the exact
-        # post-classification half of the golden spec — output equals
-        # the fused path bit-for-bit (asserted in tests)
-        from smartglass_ocr_spark.golden import document_metadata
-
-        pdf = pdf.sort_values("offset")
-        out_spans = [
-            {"kind": k, "text": t, "media_ref": m, "offset": int(o)}
-            for k, t, m, o in zip(
-                pdf["kind"].tolist(), pdf["text"].tolist(),
-                pdf["media_ref"].tolist(), pdf["offset"].tolist(),
-            )
-        ]
-        # histogram in span-offset iteration order (NOT value_counts's
-        # count-descending order): golden.process_document inserts keys
-        # at first occurrence in span order, and the routed output is
-        # meant to be byte-identical even under a serialization that
-        # preserves dict order (r3 ADVICE)
-        hist: dict[str, int] = {}
-        for c in pdf["block_class"].tolist():
-            hist[c] = hist.get(c, 0) + 1
-        row = document_metadata(key[0], out_spans, hist)
-        row["n_truncated_spans"] = 0  # routing keeps every span
-        return pd.DataFrame([row])
-
-    mega_out = cleaned.groupBy("doc_id").applyInPandas(meta_tail, _DOC_OUT_SCHEMA)
-    return small_out.unionByName(mega_out)
 
 
 def with_organized_text(pipeline_out: DataFrame) -> DataFrame:

@@ -4,8 +4,8 @@ The Spark pipeline's output must match the pure-Python golden
 generator per document: span-sequence equality
 (kind, text, media_ref, order) — BASELINE.json north_rule — plus the
 invariants: span-count conservation, media byte-identity, offset
-monotonicity, input-order permutation invariance, and fused == routed
-(skew path) equivalence.
+monotonicity, input-order permutation invariance, and the mega-doc
+cap's equivalence with a pre-truncated corpus.
 """
 
 from __future__ import annotations
@@ -218,75 +218,13 @@ def test_with_organized_text_stage(spark):
         assert r["organized_text"] == organize_text(r["formatted_text"] or "", cls)
 
 
-def test_skew_routed_bit_identical(spark):
-    """run_pipeline_skew_routed must be bit-identical to the fused
-    path — per-span classification is context-free and the staged
-    branch is in golden lockstep — including the mega doc's own row."""
-    from smartglass_ocr_spark.pipeline import (
-        explode_spans, run_pipeline_fused, run_pipeline_skew_routed,
-    )
-
-    df = docs_to_df(
-        spark, generate_docs(n_docs=24, seed=7, scramble=True, mega_doc_spans=6_000)
-    )
-    rows = explode_spans(df)
-    fused = {
-        r["doc_id"]: r.asDict(recursive=True)
-        for r in run_pipeline_fused(rows).collect()
-    }
-    routed = {
-        r["doc_id"]: r.asDict(recursive=True)
-        for r in run_pipeline_skew_routed(rows, mega_doc_spans=2000).collect()
-    }
-    assert fused == routed
-
-
-def test_skew_routed_shuffle_join_above_broadcast_gate(spark):
-    """The routing join carries no hint: Spark sizes the persisted mega
-    id set itself, broadcasting it under the default
-    ``autoBroadcastJoinThreshold`` and shuffling it when the set is
-    above the threshold (here -1, which disables broadcasts); either
-    way the output must equal the fused path."""
-    from smartglass_ocr_spark.pipeline import (
-        explode_spans, run_pipeline_fused, run_pipeline_skew_routed,
-    )
-
-    df = docs_to_df(
-        spark, generate_docs(n_docs=10, seed=13, scramble=True, mega_doc_spans=3000)
-    )
-    rows = explode_spans(df)
-
-    def executed_plan(out):
-        return out._jdf.queryExecution().executedPlan().toString()
-
-    routed = run_pipeline_skew_routed(rows, mega_doc_spans=1000)
-    assert "BroadcastHashJoin" in executed_plan(routed)
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    before = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try:
-        routed = run_pipeline_skew_routed(rows, mega_doc_spans=1000)
-        got = {r["doc_id"]: r.asDict(recursive=True) for r in routed.collect()}
-        plan = executed_plan(routed)
-    finally:
-        spark.conf.set(key, before)
-    assert "Join" in plan and "BroadcastHashJoin" not in plan, plan
-    fused = {
-        r["doc_id"]: r.asDict(recursive=True)
-        for r in run_pipeline_fused(rows).collect()
-    }
-    assert got == fused
-
-
 def _short_span_mega_corpus(n_small: int, mega_spans: int) -> list[dict]:
-    """Corpus whose mega doc is many TINY spans — the shape skew
-    routing exists for: the straggler cost is per-span classify/clean
-    (~20 us/span of fixed regex-machinery cost, distributable), while
-    the per-doc linear metadata pass stays small because the joined
-    text is small. The opposite shape — few spans, megabytes of text —
-    is bounded by the max_doc_* cap levers instead (the reference's
-    16 MB clamp analogue), since format/structure/summary are
-    inherently sequential per doc."""
+    """Corpus whose mega doc is many TINY spans: its straggler cost is
+    per-span classify/clean (~20 us/span of fixed regex-machinery
+    cost), while the per-doc linear metadata pass stays small because
+    the joined text is small. The max_doc_* cap bounds this shape and
+    the opposite one — few spans, megabytes of text — alike (the
+    reference's 16 MB clamp analogue)."""
     docs = generate_docs(n_docs=n_small, seed=31, scramble=True)
     spans = [
         {
@@ -298,43 +236,6 @@ def _short_span_mega_corpus(n_small: int, mega_spans: int) -> list[dict]:
         for i in range(mega_spans)
     ]
     return docs + [{"doc_id": "doc-mega-short", "spans": spans}]
-
-
-def test_skew_routed_relieves_mega_task(spark):
-    """The straggler relief itself: one 200k-tiny-span doc owns a
-    multi-second classify/clean task under the fused path; routing
-    distributes those spans over local[4], so routed wall (noop sink,
-    no driver collect in the timing) must come in clearly under fused
-    wall. On 4 cores the distributable share (classification) shrinks
-    ~4x while the per-doc metadata tail (~0.9 s/MB, inherently
-    sequential — bounded by the cap levers, see the cap test) stays;
-    measured steady-state ratio is 0.74-0.87, asserted < 0.9 on the
-    median of 3 alternating trials to ride out shared-host noise."""
-    import statistics
-    import time
-
-    from smartglass_ocr_spark.pipeline import (
-        explode_spans, run_pipeline_fused, run_pipeline_skew_routed,
-    )
-
-    df = docs_to_df(spark, _short_span_mega_corpus(12, 200_000)).cache()
-    df.count()
-    rows = explode_spans(df)
-
-    def noop_wall(out):
-        t0 = time.perf_counter()
-        out.write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
-
-    noop_wall(run_pipeline_fused(rows))  # warm-up (codegen + workers)
-    noop_wall(run_pipeline_skew_routed(rows, mega_doc_spans=4000))
-    ratios = []
-    for _ in range(3):
-        fused_wall = noop_wall(run_pipeline_fused(rows))
-        routed_wall = noop_wall(run_pipeline_skew_routed(rows, mega_doc_spans=4000))
-        ratios.append(routed_wall / fused_wall)
-    df.unpersist()
-    assert statistics.median(ratios) < 0.9, ratios
 
 
 def test_doc_cap_bounds_mega_task(spark):
@@ -361,75 +262,6 @@ def test_doc_cap_bounds_mega_task(spark):
     df.unpersist()
     # 100x less per-doc work; assert a loose 2.5x to absorb overheads
     assert capped < 0.4 * uncapped, (capped, uncapped)
-
-
-def test_skew_routed_no_mega_docs_is_fused(spark):
-    from smartglass_ocr_spark.pipeline import (
-        explode_spans, run_pipeline_fused, run_pipeline_skew_routed,
-    )
-
-    df = docs_to_df(spark, generate_docs(n_docs=20, seed=9))
-    rows = explode_spans(df)
-    a = {r["doc_id"]: r.asDict(recursive=True) for r in run_pipeline_fused(rows).collect()}
-    b = {
-        r["doc_id"]: r.asDict(recursive=True)
-        for r in run_pipeline_skew_routed(rows, mega_doc_spans=10_000).collect()
-    }
-    assert a == b
-
-
-def test_skew_routed_null_doc_id_not_dropped(spark):
-    """NULL-doc_id rows must survive routing (r3 ADVICE: non-null-safe
-    isin/~isin dropped them from BOTH branches): the routed output
-    keeps the NULL-keyed group exactly as the fused path does."""
-    from smartglass_ocr_spark.corpus import SPAN_STRUCT
-    from smartglass_ocr_spark.pipeline import (
-        explode_spans, run_pipeline_fused, run_pipeline_skew_routed,
-    )
-
-    df = docs_to_df(spark, generate_docs(n_docs=6, seed=3, mega_doc_spans=3000))
-    null_doc = spark.createDataFrame(
-        [(None, [("para", "Null keyed doc survives routing.", None, 0)])],
-        f"doc_id string, spans array<{SPAN_STRUCT}>",
-    )
-    rows = explode_spans(df.unionByName(null_doc))
-    fused = {
-        r["doc_id"]: r.asDict(recursive=True)
-        for r in run_pipeline_fused(rows).collect()
-    }
-    routed = {
-        r["doc_id"]: r.asDict(recursive=True)
-        for r in run_pipeline_skew_routed(rows, mega_doc_spans=1000).collect()
-    }
-    assert None in fused and None in routed
-    assert fused == routed
-
-
-def test_skew_routed_hist_key_order_matches_fused(spark):
-    """The mega branch's block_class_hist must match the fused path in
-    key ORDER (first-occurrence span order), not just dict equality —
-    a bytewise row comparison after serialization depends on it (r3
-    ADVICE: value_counts built it count-descending)."""
-    from smartglass_ocr_spark.pipeline import (
-        explode_spans, run_pipeline_fused, run_pipeline_skew_routed,
-    )
-
-    df = docs_to_df(
-        spark, generate_docs(n_docs=8, seed=5, scramble=True, mega_doc_spans=3000)
-    )
-    rows = explode_spans(df)
-    fused = {
-        r["doc_id"]: list((r["block_class_hist"] or {}).keys())
-        for r in run_pipeline_fused(rows).collect()
-    }
-    routed = {
-        r["doc_id"]: list((r["block_class_hist"] or {}).keys())
-        for r in run_pipeline_skew_routed(rows, mega_doc_spans=1000).collect()
-    }
-    assert fused == routed
-    # the mega doc actually took the routed branch and has >1 class
-    mega = next(d for d in fused if "mega" in d)
-    assert len(fused[mega]) > 1
 
 
 def test_doc_span_cap_equals_pretruncated(spark):
@@ -554,34 +386,21 @@ def _hostile_corpus() -> list[dict]:
 
 
 def test_hostile_spans_lockstep(spark):
-    """fused == golden == routed, row for row, on one corpus of hostile
-    spans; the mega doc takes the routed branch (``mega_doc_spans``
-    below its span count) and the NULL doc_id the fused one."""
-    from smartglass_ocr_spark.pipeline import run_pipeline_skew_routed
-
+    """fused == golden, row for row, on one corpus of hostile spans,
+    including the NULL doc_id, the 1 MiB span and the mega doc."""
     docs = _hostile_corpus()
     assert max(len((s["text"] or "").encode()) for d in docs for s in d["spans"]) >= 1 << 20
-    rows = explode_spans(docs_to_df(spark, docs)).cache()
-    try:
-        fused = {r["doc_id"]: r.asDict(recursive=True) for r in run_pipeline_fused(rows).collect()}
-        routed = {
-            r["doc_id"]: r.asDict(recursive=True)
-            for r in run_pipeline_skew_routed(rows, mega_doc_spans=50).collect()
-        }
-    finally:
-        rows.unpersist()
+    rows = explode_spans(docs_to_df(spark, docs))
+    fused = {r["doc_id"]: r.asDict(recursive=True) for r in run_pipeline_fused(rows).collect()}
     want = {g["doc_id"]: g for g in golden_outputs(docs)}
     assert len(want) == len(docs) and None in want
     assert fused == want
-    assert routed == want
 
 
 def test_doc_outputs_share_one_schema(spark, tmp_path):
-    """Capped and uncapped fused runs, a routed run that takes the mega
-    branch, and the extraction job's parquet all carry one schema
-    (the job adds only its lineage columns)."""
+    """Capped and uncapped fused runs and the extraction job's parquet
+    all carry one schema (the job adds only its lineage columns)."""
     from smartglass_ocr_spark.checkpoint import run_extraction_job
-    from smartglass_ocr_spark.pipeline import run_pipeline_skew_routed
 
     docs = generate_docs(n_docs=10, seed=21, scramble=True, mega_doc_spans=400)
     df = docs_to_df(spark, docs)
@@ -591,14 +410,34 @@ def test_doc_outputs_share_one_schema(spark, tmp_path):
         spark, df, out, str(tmp_path / "ckpt"), str(tmp_path / "metrics"),
         "run-1", n_partitions=4,
     )
-    routed = run_pipeline_skew_routed(rows, mega_doc_spans=100)
-    # the mega branch really ran: its doc-stage is a grouped pandas UDF
-    assert "FlatMapGroupsInPandas" in routed._jdf.queryExecution().executedPlan().toString()
     schemas = [
         run_pipeline_fused(rows, max_doc_spans=50).schema,
         run_pipeline_fused(rows).schema,
-        routed.schema,
         spark.read.parquet(out).drop("n_spans", "partition_id").schema,
     ]
     assert all(s == schemas[0] for s in schemas), [s.simpleString() for s in schemas]
     assert schemas[0].fieldNames()[-1] == "n_truncated_spans"
+
+
+def test_doc_paths_leave_no_persisted_rdds(spark, tmp_path):
+    """No doc path leaves a cached RDD behind in the session: the
+    persistent-RDD count is the same before and after a capped and an
+    uncapped fused run and an extraction job over a mega-doc corpus."""
+    from smartglass_ocr_spark.checkpoint import run_extraction_job
+
+    docs = generate_docs(n_docs=10, seed=21, scramble=True, mega_doc_spans=400)
+    df = docs_to_df(spark, docs)
+    rows = explode_spans(df)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    paths = {
+        "fused capped": lambda: run_pipeline_fused(rows, max_doc_spans=50).collect(),
+        "fused uncapped": lambda: run_pipeline_fused(rows).collect(),
+        "extraction job": lambda: run_extraction_job(
+            spark, df, str(tmp_path / "out"), str(tmp_path / "ckpt"),
+            str(tmp_path / "metrics"), "run-1", n_partitions=4,
+        ),
+    }
+    for name, run in paths.items():
+        before = persisted().size()
+        run()
+        assert persisted().size() == before, name

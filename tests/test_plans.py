@@ -208,28 +208,6 @@ def test_lm_score_cached_diamond_and_broadcasts(spark, queries):
     assert "SortMergeJoin" not in plan
 
 
-def test_skew_routed_broadcast_join_not_isin(spark):
-    """Mega-doc routing must flag rows via a BROADCAST join against
-    the mega-id frame, never a collected ``isin`` literal list (r4
-    VERDICT #2: 100k id literals rode every task closure of both
-    branches and forced a hard ``max_mega_docs`` ceiling). Pinned:
-    the routed plan contains broadcast joins and NO literal IN/INSET
-    predicate on doc_id anywhere."""
-    from smartglass_ocr_spark.corpus import docs_to_df, generate_docs
-    from smartglass_ocr_spark.pipeline import (
-        explode_spans, run_pipeline_skew_routed,
-    )
-
-    df = docs_to_df(
-        spark, generate_docs(n_docs=8, seed=7, scramble=True, mega_doc_spans=3_000)
-    )
-    routed = run_pipeline_skew_routed(explode_spans(df), mega_doc_spans=1000)
-    plan = _plan(routed)
-    assert "BroadcastHashJoin" in plan, plan
-    assert "INSET" not in plan, plan
-    assert not re.search(r"doc_id#\d+L? IN \(", plan), plan
-
-
 def test_curation_end_to_end_plan_budget(spark, queries):
     """Budget pin for the composed curation pipeline (r4 VERDICT #4):
     composition must not quietly multiply corpus scans or exchanges.
