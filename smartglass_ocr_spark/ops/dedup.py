@@ -15,8 +15,7 @@ functions only (JVM-side, codegen-friendly, shuffle-minimal):
 - fingerprint: single-permutation min-md5-shingle (same explode +
   min-agg shape; the narrow HOF twin exists for streaming only)
 - clustering: candidate pairs -> connected components (hop
-  propagation for shallow dup cliques; large-star/small-star for
-  deep chains) -> keep-list
+  propagation; near-dup components are shallow cliques) -> keep-list
 
 Determinism note: every hash is md5-hex (identical in Spark and
 DuckDB), never xxhash/murmur (engine-specific), so each operator has
@@ -591,10 +590,8 @@ def duplicate_components(
     (one edge join + one partial-combining min agg per round),
     stopping at the fixpoint (an anti-join equality check per round).
     Rounds needed = graph diameter; near-dup components are tiny
-    dense cliques (diameter 1-2) so this converges in 2-3 rounds —
-    the classic pathological chain is served by
-    :func:`duplicate_components_star` (large-star/small-star,
-    O(log n) rounds), labeling-equal by pytest.
+    dense cliques (diameter 1-2) so this converges in 2-3 rounds. A
+    chain deeper than ``max_iters`` hops raises (see below).
 
     Durability (r3 VERDICT #2): by default each round truncates
     lineage with ``localCheckpoint`` — executor-LOCAL blocks with no
@@ -673,141 +670,6 @@ def duplicate_components(
         f"duplicate_components did not converge in {max_iters} rounds — "
         "component diameter exceeds the bound; raise max_iters or use a "
         "path-doubling formulation"
-    )
-
-
-def duplicate_components_star(
-    pairs: DataFrame,
-    max_iters: int = 20,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    checkpoint_dir: str | None = None,
-    resume: bool = False,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — the O(log n)-round path for graphs with LONG chains,
-    where :func:`duplicate_components`' hop propagation needs
-    O(diameter) rounds. Near-dup graphs are usually shallow cliques
-    (hop propagation converges in 2-3 cheap rounds), so this variant
-    exists for the adversarial shape: a chain of pairwise-similar
-    documents thousands of hops deep.
-
-    Each round: large-star — every node connects its strictly larger
-    neighbors to its smallest neighbor-or-self; small-star — every
-    node connects its smaller-or-equal neighbors to the same min.
-    Both preserve connectivity and monotonically pull edges toward
-    each component's minimum until the edge set is a star forest
-    rooted at the component minima. Convergence is detected exactly
-    (``exceptAll`` emptiness — set equality, not a checksum); output
-    matches :func:`duplicate_components` row-for-row (pytest-pinned
-    on random graphs and deep chains).
-
-    ``checkpoint_dir``/``resume``: same durable parquet-per-round
-    protocol as :func:`duplicate_components` (state here is the
-    evolving EDGE set — ``all_nodes`` once, ``edges_r{i}`` per round,
-    append-only ``rounds`` log committed after each round's files);
-    use a separate directory per invocation."""
-    spark = pairs.sparkSession
-    fwd = pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-    edges = None
-    start_round = 0
-    if checkpoint_dir is not None and resume:
-        last = _last_completed_round(spark, checkpoint_dir)
-        if last is not None:
-            all_nodes = spark.read.parquet(f"{checkpoint_dir}/all_nodes")
-            edges = spark.read.parquet(f"{checkpoint_dir}/edges_r{last:04d}")
-            start_round = last + 1
-    if edges is None:
-        # node universe BEFORE the self-loop filter: a doc appearing
-        # only in a self-pair must still label itself (row-for-row
-        # parity with duplicate_components, whose edge union keeps
-        # such nodes)
-        all_nodes = (
-            fwd.select(F.col("u").alias("node"))
-            .union(fwd.select(F.col("v").alias("node")))
-            .distinct()
-        )
-        edges = (
-            fwd.union(fwd.select(F.col("v").alias("u"), F.col("u").alias("v")))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        if checkpoint_dir is None:
-            all_nodes = all_nodes.localCheckpoint(eager=True)
-            edges = edges.localCheckpoint(eager=True)
-        else:
-            all_nodes = _durable(all_nodes, f"{checkpoint_dir}/all_nodes")
-            edges = _durable(edges, f"{checkpoint_dir}/edges_init")
-
-    def star(e: DataFrame, large: bool) -> DataFrame:
-        # m(u) = min(Γ(u) ∪ {u}); adjacency carried as directed rows
-        m = e.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
-        sel = F.col("v") > F.col("u") if large else F.col("v") <= F.col("u")
-        out = (
-            e.join(m, "u")
-            .filter(sel)
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-        )
-        if not large:
-            # the (u, m(u)) self-star edge: once per NODE from m —
-            # emitting it per edge row would inflate the pre-distinct
-            # volume by each node's degree (2|E| extra rows)
-            out = out.union(m.select(F.col("u").alias("a"), F.col("m").alias("b")))
-        und = out.filter(F.col("a") != F.col("b"))
-        return (
-            und.select(F.col("a").alias("u"), F.col("b").alias("v"))
-            .union(und.select(F.col("b").alias("u"), F.col("a").alias("v")))
-            .distinct()
-        )
-
-    def finish(labels_df: DataFrame) -> DataFrame:
-        out = labels_df.localCheckpoint(eager=True)
-        edges.unpersist()
-        all_nodes.unpersist()
-        return out
-
-    for i in range(start_round, max_iters):
-        # checkpoint between the two passes: the outer star references
-        # its input multiple times and Catalyst does NOT reuse the
-        # duplicated subtrees (measured on the pair self-joins), so an
-        # un-materialized large-star would re-execute ~4x per round.
-        # The half-round stays localCheckpoint even in durable mode:
-        # losing its blocks fails the round, and the resume protocol
-        # replays exactly that round from the durable round-start
-        # edges — round granularity, half the write traffic.
-        half = star(edges, large=True).localCheckpoint(eager=True)
-        new_edges = star(half, large=False)
-        if checkpoint_dir is None:
-            new_edges = new_edges.localCheckpoint(eager=True)
-        else:
-            new_edges = _durable(new_edges, f"{checkpoint_dir}/edges_r{i:04d}")
-            _mark_round(spark, checkpoint_dir, i)
-        half.unpersist()
-        changed = (
-            new_edges.exceptAll(edges).limit(1).count()
-            + edges.exceptAll(new_edges).limit(1).count()
-        )
-        edges.unpersist()
-        edges = new_edges
-        if changed == 0:
-            # star forest: every remaining edge is (member, root);
-            # roots and isolated nodes map to their own id
-            roots = edges.groupBy("u").agg(F.min("v").alias("_m"))
-            labels = (
-                all_nodes.join(roots, all_nodes.node == roots.u, "left")
-                .select(
-                    F.col("node").alias("doc_id"),
-                    F.least(F.col("node"), F.coalesce("_m", F.col("node"))).alias(
-                        "component_id"
-                    ),
-                )
-            )
-            return finish(labels)
-    edges.unpersist()
-    all_nodes.unpersist()
-    raise RuntimeError(
-        f"duplicate_components_star did not converge in {max_iters} rounds"
     )
 
 

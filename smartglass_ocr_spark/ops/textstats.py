@@ -603,7 +603,6 @@ def quality_filter(
     dup_trigram_thresh: float = 0.3,
     max_pii: int | None = None,
     passthrough: tuple[str, ...] = (),
-    in_row_repetition: bool = False,
 ) -> DataFrame:
     """End-to-end document quality verdict — the composition a
     pretraining pipeline actually runs (the Gopher rules, Rae et al.
@@ -634,6 +633,10 @@ def quality_filter(
     (inherently aggregating); its doc_id partitioning feeds the
     final equi-join. Ratio comparisons happen on the same rounded
     grids the single ops publish, so the verdict is oracle-exact.
+
+    Streams: a verdict never crosses docs, so a stream gets the same
+    per-doc verdicts by calling this on each micro-batch inside
+    ``foreachBatch``.
     """
     text = F.col(text_col)
     toks = F.split(F.trim(text), r"\s+")
@@ -668,23 +671,10 @@ def quality_filter(
         predicted.alias("predicted_lang"),
         n_pii.alias("n_pii"),
     ]
-    if in_row_repetition:
-        # stream-legal shape: the repetition fractions ride the SAME
-        # row-local projection via the sorted-run HOF fold
-        # (:func:`repetition_signals_column`) — one scan, ZERO
-        # shuffle, no join; interpreted-lambda cost, the documented
-        # narrow-path price. Batch callers keep the default join.
-        rep_s = repetition_signals_column(text_col)
-        j = docs.select(
-            *row_cols,
-            rep_s["top_bigram_frac"].alias("top_bigram_frac"),
-            rep_s["dup_trigram_frac"].alias("dup_trigram_frac"),
-        )
-    else:
-        rep = repetition_signals(docs, text_col).select(
-            "doc_id", "top_bigram_frac", "dup_trigram_frac"
-        )
-        j = docs.select(*row_cols).join(rep, "doc_id")
+    rep = repetition_signals(docs, text_col).select(
+        "doc_id", "top_bigram_frac", "dup_trigram_frac"
+    )
+    j = docs.select(*row_cols).join(rep, "doc_id")
     rules: list[tuple[str, Column]] = [
         ("too_short", F.col("n_tokens") < min_tokens),
         ("too_long", F.col("n_tokens") > max_tokens),
@@ -892,79 +882,4 @@ def lm_contrast(
                 - F.when(F.col("_nb") > 0, F.col("_sb") / F.col("_nb"))
             ).alias("weight"),
         )
-    )
-
-
-def repetition_signals_column(text_col: str | Column = "text") -> Column:
-    """:func:`repetition_signals`'s two fractions as a bare column
-    expression — ``struct(top_bigram_frac, dup_trigram_frac)`` —
-    fully NARROW (sorted-gram run-length fold over the token array),
-    so it is legal where a shuffle is not: per-row in a STREAM (the
-    batch operator's explode + groupBy is a wide op mid-stream).
-    Values are bit-identical to the batch operator (pytest-pinned):
-    sorting each gram array groups equal grams into runs, so the max
-    run length IS the top-bigram count and the summed length of
-    runs > 1 IS the duplicated-trigram occurrence total — one linear
-    fold each, no in-row quadratic count-of-counts.
-
-    Honest cost note (the :func:`simhash64_column` precedent): HOF
-    lambdas are interpreted per element outside whole-stage codegen.
-    Measured via the full ``quality_filter`` at sf0.1 (local[8],
-    best-of-2, noop sink): in-row 7.2 s vs join-shape 4.9 s — only
-    ~1.5× (vs simhash's 8.9×) because the fold is LINEAR over two
-    sorted gram arrays while the batch shape pays a second scan plus
-    the gram exchange. Still: batch callers keep
-    :func:`repetition_signals` / the default join path; this exists
-    for streams. One behavioral edge: a NULL ``text`` yields NULL
-    fractions here but is dropped entirely by the batch operator's
-    inner join (its explode emits no rows for NULL).
-    """
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    w = F.split(F.trim(c), r"\s+")
-    n = F.size(w)
-
-    def grams(width: int) -> Column:
-        count = F.greatest(F.lit(1), n - F.lit(width - 1))
-        return F.array_sort(
-            F.transform(
-                F.sequence(F.lit(1), count),
-                lambda i: F.concat_ws(" ", F.slice(w, i, width)),
-            )
-        )
-
-    def run_stats(arr: Column) -> Column:
-        acc0 = F.struct(
-            F.lit(None).cast("string").alias("prev"),
-            F.lit(0).alias("run"),
-            F.lit(0).alias("maxrun"),
-            F.lit(0).alias("dupsum"),
-        )
-
-        def step(acc: Column, x: Column) -> Column:
-            newrun = F.when(acc["prev"].eqNullSafe(x), acc["run"] + 1).otherwise(
-                F.lit(1)
-            )
-            # a run contributes its FULL length once it exceeds 1:
-            # +2 the moment it becomes a pair, +1 per further member
-            dup_inc = (
-                F.when(newrun == 2, 2).when(newrun > 2, 1).otherwise(0)
-            )
-            return F.struct(
-                x.alias("prev"),
-                newrun.alias("run"),
-                F.greatest(acc["maxrun"], newrun).alias("maxrun"),
-                (acc["dupsum"] + dup_inc).alias("dupsum"),
-            )
-
-        return F.aggregate(arr, acc0, step)
-
-    b = run_stats(grams(2))
-    t = run_stats(grams(3))
-    return F.struct(
-        (b["maxrun"] / F.greatest(F.lit(1), n - F.lit(1))).alias(
-            "top_bigram_frac"
-        ),
-        (t["dupsum"] / F.greatest(F.lit(1), n - F.lit(2))).alias(
-            "dup_trigram_frac"
-        ),
     )

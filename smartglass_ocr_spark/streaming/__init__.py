@@ -6,11 +6,12 @@ device, not a dataflow. This module is therefore additive capability,
 built the Spark way:
 
 - :func:`stream_documents` / :func:`stream_extract` — incremental
-  ingest of span-corpus files; each micro-batch runs the SAME fused
-  batch pipeline via ``foreachBatch`` (exactly-once per batch with a
-  checkpointed source; outputs proven byte-identical to the batch
-  run in tests). This is how the 10^12-doc corpus keeps extracting
-  as new partitions land, without re-reading history.
+  ingest of span-corpus files; each doc-shaped micro-batch runs the
+  SAME fused doc stage via ``foreachBatch``, with no reassembly
+  shuffle (exactly-once per batch with a checkpointed source; every
+  output column equals the batch run's in tests). This is how the
+  10^12-doc corpus keeps extracting as new partitions land, without
+  re-reading history.
 - :func:`windowed_event_counts` — watermarked tumbling-window
   aggregation (late data bounded by the watermark).
 - :func:`session_window_agg` — built-in ``session_window`` gap

@@ -3,11 +3,13 @@
 Scale notes: the file source lists + checkpoints processed files, so
 a landing-zone directory of parquet partitions becomes an incremental
 feed with no external queue; ``maxFilesPerTrigger`` bounds micro-batch
-size. The foreachBatch extraction reuses the fused batch pipeline —
-one shuffle + one Arrow crossing per micro-batch — and writes parquet
-partitioned by batch_id with dynamic partition overwrite, so a replay
-of a failed batch replaces exactly its own partition (idempotent:
-exactly-once output even when foreachBatch re-delivers a batch).
+size. Each micro-batch is already doc-shaped (one row per whole doc),
+so the foreachBatch extraction runs the fused doc stage on it directly
+— no reassembly shuffle, one Arrow crossing per micro-batch — and
+writes parquet partitioned by batch_id with dynamic partition
+overwrite, so a replay of a failed batch replaces exactly its own
+partition (idempotent: exactly-once output even when foreachBatch
+re-delivers a batch).
 """
 
 from __future__ import annotations
@@ -56,12 +58,15 @@ def stream_extract(
     checkpoint_dir: str,
     available_now: bool = True,
 ) -> StreamingQuery:
-    """Run the fused extraction pipeline on every micro-batch and
-    write results as parquet. ``foreachBatch`` is the right tool
-    here (not a streaming agg): each document arrives whole — one row
-    — so reassembly never crosses batch boundaries and needs no
-    streaming state. available_now=True drains the backlog and stops
-    (the batch-parity mode used by tests and backfills).
+    """Run the fused doc stage on every micro-batch and write results
+    as parquet. ``foreachBatch`` is the right tool here (not a
+    streaming agg): each document arrives whole — one row — so, as in
+    :func:`~smartglass_ocr_spark.checkpoint.run_extraction_job`, the
+    doc stage runs on the batch directly with no reassembly shuffle
+    and no streaming state. A doc with no spans is skipped, as the
+    span-row pipeline (whose explode emits nothing for it) skips it.
+    available_now=True drains the backlog and stops (the batch-parity
+    mode used by tests and backfills).
 
     Exactly-once: ``foreachBatch`` is at-least-once — a batch that
     fails after a partial write is re-delivered with the SAME
@@ -69,10 +74,10 @@ def stream_extract(
     partitioned by batch_id with dynamic partition overwrite, a
     replay replaces exactly its own partition (see
     :func:`write_batch_idempotent`)."""
-    from smartglass_ocr_spark.pipeline import explode_spans, run_pipeline_fused
+    from smartglass_ocr_spark.pipeline import fused_doc_stage
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = run_pipeline_fused(explode_spans(batch_df))
+        out = fused_doc_stage(batch_df.filter(F.size("spans") > 0))
         write_batch_idempotent(out, batch_id, output_dir)
 
     writer = (
@@ -234,20 +239,3 @@ def running_user_totals(stream_events: DataFrame) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def stream_quality_verdicts(stream_docs: DataFrame, **filter_kwargs) -> DataFrame:
-    """Per-document quality verdicts on a STREAM of flat documents
-    (``doc_id``, ``text``, …): :func:`ops.textstats.quality_filter`
-    with ``in_row_repetition=True`` — every signal incl. the Gopher
-    repetition fractions computes in one narrow projection (the
-    sorted-run HOF fold of ``repetition_signals_column``), so the
-    whole verdict is stream-legal with NO state store, no watermark
-    and no shuffle: each micro-batch maps through the same codegen +
-    fold expressions the batch path pins by equality. The batch
-    twin's aggregating join shape stays the right call for backfills;
-    this is the filter a live ingest applies before anything
-    stateful (dedup, sessionization) sees the row."""
-    from smartglass_ocr_spark.ops.textstats import quality_filter
-
-    return quality_filter(stream_docs, in_row_repetition=True, **filter_kwargs)

@@ -578,17 +578,20 @@ def test_signage_classify_classes_and_descriptions(spark):
 def test_duplicate_components_chain_and_clique(spark):
     """Min-label propagation must reach the fixpoint across multi-hop
     chains (A-B, B-C, C-D => one component labeled by the min), keep
-    disjoint cliques separate, and be invariant to pair orientation."""
+    disjoint cliques separate, be invariant to pair orientation, and
+    label a node seen only in a self-pair with itself."""
     from smartglass_ocr_spark.ops.dedup import duplicate_components
 
     pairs = spark.createDataFrame(
         [(4, 3), (2, 3), (1, 2),          # chain 1-2-3-4 (mixed orientation)
          (10, 11), (11, 12), (10, 12),    # clique {10,11,12}
-         (20, 21)],                       # pair {20,21}
+         (20, 21),                        # pair {20,21}
+         (777, 777)],                     # self-pair only
         "doc_a long, doc_b long",
     )
     got = {r["doc_id"]: r["component_id"] for r in duplicate_components(pairs).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20,
+                   777: 777}
 
     import pytest as _pytest
 
@@ -605,12 +608,10 @@ def test_components_durable_checkpoint_restart(spark, tmp_path):
     job on executor loss at 100 TB). A restart from an EARLIER
     completed round — simulated crash: later rounds' state deleted,
     rounds log truncated — must converge to the identical labeling.
-    Covers both operators plus resume-with-no-state (fresh start)."""
+    Also covers resume-with-no-state (fresh start)."""
     import shutil
 
-    from smartglass_ocr_spark.ops.dedup import (
-        duplicate_components, duplicate_components_star,
-    )
+    from smartglass_ocr_spark.ops.dedup import duplicate_components
 
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(12)] + [(50, 51), (51, 52)],
@@ -647,21 +648,6 @@ def test_components_durable_checkpoint_restart(spark, tmp_path):
         ).collect()
     }
     assert resumed == want
-
-    sckpt = tmp_path / "starckpt"
-    sfull = {
-        r["doc_id"]: r["component_id"]
-        for r in duplicate_components_star(pairs, checkpoint_dir=str(sckpt)).collect()
-    }
-    assert sfull == want
-    crash_after_round_zero(sckpt, "edges_r")
-    sresumed = {
-        r["doc_id"]: r["component_id"]
-        for r in duplicate_components_star(
-            pairs, checkpoint_dir=str(sckpt), resume=True
-        ).collect()
-    }
-    assert sresumed == want
 
     fresh = {
         r["doc_id"]: r["component_id"]
@@ -748,36 +734,6 @@ def test_cosine_topk_string_ids_rank_contiguously(spark):
     rows = cosine_topk(emb, [1.0, 0.0], k=4).collect()
     assert sorted(r["rank"] for r in rows) == [1, 2, 3, 4]
     assert rows[0]["vec_id"] == "doc-1"
-
-
-def test_star_components_equal_hop_propagation(spark):
-    """large-star/small-star must produce exactly the labeling of the
-    hop-propagation operator on random graphs, and must converge in
-    O(log n) rounds on a 60-hop chain where hop propagation's default
-    budget (25) is exhausted."""
-    import random
-
-    from smartglass_ocr_spark.ops.dedup import (
-        duplicate_components, duplicate_components_star,
-    )
-
-    rng = random.Random(11)
-    rand_pairs = list({
-        tuple(sorted(rng.sample(range(300), 2))) for _ in range(260)
-    })
-    # a self-pair-only node must label itself in BOTH operators
-    rand_pairs.append((777, 777))
-    df = spark.createDataFrame(rand_pairs, "doc_a long, doc_b long")
-    hop = {tuple(r) for r in duplicate_components(df).collect()}
-    star = {tuple(r) for r in duplicate_components_star(df).collect()}
-    assert star == hop
-
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(60)], "doc_a long, doc_b long"
-    )
-    got = {r["doc_id"]: r["component_id"] for r in
-           duplicate_components_star(chain, max_iters=10).collect()}
-    assert got == {i: 0 for i in range(61)}
 
 
 def test_simhash64_column_matches_batch_operator(spark):

@@ -4,17 +4,20 @@ The Spark pipeline's output must match the pure-Python golden
 generator per document: span-sequence equality
 (kind, text, media_ref, order) — BASELINE.json north_rule — plus the
 invariants: span-count conservation, media byte-identity, offset
-monotonicity, input-order permutation invariance, and the mega-doc
-cap's equivalence with a pre-truncated corpus.
+monotonicity, input-order permutation invariance, the mega-doc
+cap's equivalence with a pre-truncated corpus, and fused == golden on
+hostile spans, in a fixed corpus and in hypothesis-generated ones.
 """
 
 from __future__ import annotations
 
 import pytest
+from hypothesis import given, settings, strategies as st
 
 from smartglass_ocr_spark.corpus import docs_to_df, generate_docs
 from smartglass_ocr_spark.golden import golden_outputs
 from smartglass_ocr_spark.pipeline import explode_spans, run_pipeline_fused
+from smartglass_ocr_spark.rules.classify import MEDIA_KINDS, TEXT_KINDS
 
 
 @pytest.fixture(scope="module")
@@ -395,6 +398,54 @@ def test_hostile_spans_lockstep(spark):
     want = {g["doc_id"]: g for g in golden_outputs(docs)}
     assert len(want) == len(docs) and None in want
     assert fused == want
+
+
+_SPAN_TEXT = st.one_of(
+    st.none(),
+    st.text(
+        alphabet=st.one_of(
+            st.characters(categories=("Zs", "Zl", "Zp")),
+            st.characters(min_codepoint=0x10000, codec="utf-8"),
+            st.characters(codec="utf-8"),
+        ),
+        max_size=60,
+    ),
+)
+_SPAN_KINDS = st.sampled_from(sorted(TEXT_KINDS) + sorted(MEDIA_KINDS))
+
+
+@st.composite
+def _small_corpus(draw) -> list[dict]:
+    """At most 8 docs with unique doc_ids, at most one of them NULL;
+    each doc has at least one span (explode drops a doc with none) and
+    unique offsets (the stable offset sort must see no ties, since
+    collect_list order is not deterministic)."""
+    ids = draw(st.lists(st.text("ab1-", min_size=1, max_size=4),
+                        min_size=1, max_size=8, unique=True))
+    null_at = draw(st.one_of(st.none(), st.integers(0, len(ids) - 1)))
+    docs = []
+    for i, doc_id in enumerate(ids):
+        offsets = draw(st.lists(st.integers(-1000, 1 << 20),
+                                min_size=1, max_size=6, unique=True))
+        spans = [
+            {"kind": draw(_SPAN_KINDS), "text": draw(_SPAN_TEXT),
+             "media_ref": draw(st.one_of(st.none(), st.text("m0-", max_size=3))),
+             "offset": o}
+            for o in offsets
+        ]
+        docs.append({"doc_id": None if i == null_at else doc_id, "spans": spans})
+    return docs
+
+
+@settings(max_examples=10, deadline=None)
+@given(docs=_small_corpus())
+def test_hostile_spans_lockstep_generated(spark, docs):
+    """The generated twin of test_hostile_spans_lockstep: fused ==
+    golden, row for row, on small corpora of Unicode-whitespace,
+    astral-plane and NULL span text over every span kind."""
+    rows = explode_spans(docs_to_df(spark, docs))
+    fused = {r["doc_id"]: r.asDict(recursive=True) for r in run_pipeline_fused(rows).collect()}
+    assert fused == {g["doc_id"]: g for g in golden_outputs(docs)}
 
 
 def test_doc_outputs_share_one_schema(spark, tmp_path):

@@ -101,31 +101,3 @@ def test_quality_report_plan_no_extra_scan(spark):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     plan = quality_report(docs)._jdf.queryExecution().executedPlan().toString()
     assert plan.count("FileScan") == 2, plan
-
-
-def test_in_row_repetition_equals_batch(spark):
-    """The sorted-run HOF fold emits fractions bit-identical to the
-    batch explode+agg operator — full quality_filter outputs equal on
-    the hand corpus AND a real corpus slice."""
-    for docs in (
-        spark.createDataFrame(DOCS, "doc_id long, text string"),
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet"),
-    ):
-        a = sorted(tuple(r) for r in quality_filter(docs).collect())
-        b = sorted(
-            tuple(r)
-            for r in quality_filter(docs, in_row_repetition=True).collect()
-        )
-        assert a == b
-
-
-def test_in_row_plan_single_scan_no_exchange(spark):
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    plan = (
-        quality_filter(docs, in_row_repetition=True)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert plan.count("FileScan") == 1, plan
-    assert "Exchange" not in plan, plan

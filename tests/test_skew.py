@@ -10,7 +10,7 @@ and pin each mechanism that bounds the blowup:
   the cap it emits the full clique — both sides pinned;
 - connected components + keep-list + split on a >= 10^4-member
   component (star edges — linear, the shape a capped candidate
-  generator actually emits): O(log n) convergence, min_id keep,
+  generator actually emits): converges in a few rounds (diameter 2), min_id keep,
   all members land in ONE split.
 
 Measured wall (local[8] dev box, AQE + skew-join enabled, see
