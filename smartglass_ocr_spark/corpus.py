@@ -239,7 +239,8 @@ def docs_to_df(spark, docs: list[dict]) -> DataFrame:
     rows = [
         (
             d["doc_id"],
-            [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in d["spans"]],
+            None if d["spans"] is None
+            else [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in d["spans"]],
         )
         for d in docs
     ]

@@ -78,14 +78,20 @@ def process_document(
     doc: dict,
     max_spans: int | None = None,
     max_bytes: int | None = None,
-) -> dict:
+) -> dict | None:
     """Full golden output for one {doc_id, spans} document: cleaned
     spans in offset order + per-doc derived metadata (FIXTURES.md §2-3).
     ``max_spans``/``max_bytes`` apply :func:`truncate_doc_spans`
     first (default off — byte-identical to the uncapped spec);
     ``n_truncated_spans`` counts the spans the cap dropped, 0 when
     uncapped, so capped and uncapped rows share one schema.
+
+    A doc with NULL or no spans has no output (``None``): every doc
+    path omits it, as the span-row path's explode emits nothing for it.
     """
+    # Arrow hands spans as an array, whose truth value is ambiguous
+    if doc["spans"] is None or len(doc["spans"]) == 0:
+        return None
     spans = truncate_doc_spans(doc["spans"], max_spans, max_bytes)
     out_spans = []
     class_hist: dict[str, int] = {}
@@ -175,4 +181,4 @@ def dominant_class(class_hist: dict[str, int]) -> str:
 
 
 def golden_outputs(docs: list[dict]) -> list[dict]:
-    return [process_document(d) for d in docs]
+    return [o for o in map(process_document, docs) if o is not None]

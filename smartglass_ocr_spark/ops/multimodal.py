@@ -8,7 +8,7 @@ rasterize).  This container has no image/audio libraries, so the
 *decode* step is a clearly-marked deterministic fake (or PIL when
 importable) — but everything Spark-side is real and tested: the
 schema, the partitioning, the mapInPandas signatures, the Arrow batch
-shapes, the frame-sampling explode, and the join back to spans.
+shapes and the frame-sampling explode.
 
 Design for 100 TB:
 
@@ -31,12 +31,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
 MEDIA_KINDS = ("image", "video", "audio")
-
-MEDIA_SCHEMA = (
-    "media_ref string, media_type string, content binary, "
-    "meta struct<width:int, height:int, duration_ms:int, "
-    "sample_rate:int, codec:string, n_bytes:int>"
-)
 
 _CODECS = {"image": "png", "video": "h264", "audio": "pcm16"}
 
@@ -183,9 +177,6 @@ def resize_plan(media: DataFrame, max_dim: int = 3000) -> DataFrame:
     )
 
 
-FRAME_SCHEMA_NOTE = "frame sampling fans out JVM-side; decode per frame is the stubbed step"
-
-
 def sample_frames(media: DataFrame, every_ms: int = 10_000) -> DataFrame:
     """Video → frame rows at a fixed stride: ``explode(sequence(0,
     duration, step))`` entirely JVM-side, so a 10-minute video becomes
@@ -224,12 +215,3 @@ def audio_chunks(media: DataFrame, chunk_ms: int = 30_000) -> DataFrame:
         "chunk_start_ms",
         F.least(F.col("chunk_start_ms") + chunk_ms, F.col("duration_ms")).alias("chunk_end_ms"),
     )
-
-
-def enrich_spans_with_media(span_rows: DataFrame, features: DataFrame) -> DataFrame:
-    """Join per-media features back onto media spans. The features
-    side is the output of an expensive decode stage, typically much
-    smaller than the span table — broadcast when it fits, else this is
-    a plain shuffled equi-join on media_ref (uniform key: sha1-derived,
-    so no skew)."""
-    return span_rows.join(features, "media_ref", "left")

@@ -210,14 +210,19 @@ def fused_doc_stage(assembled: DataFrame,
             # Arrow hands each struct element as a dict with exactly
             # the span keys — feed them to the spec directly, no
             # per-span rebuild
-            yield pd.DataFrame([
+            rows = [
                 process_document(
                     {"doc_id": doc_id, "spans": spans},
                     max_spans=max_doc_spans,
                     max_bytes=max_doc_bytes,
                 )
                 for doc_id, spans in zip(pdf["doc_id"], pdf["spans"])
-            ])
+            ]
+            # a doc without spans has no row; a batch of only such docs
+            # yields nothing rather than a frame with no columns
+            rows = [r for r in rows if r is not None]
+            if rows:
+                yield pd.DataFrame(rows)
 
     return assembled.mapInPandas(run, _DOC_OUT_SCHEMA)
 
@@ -273,34 +278,6 @@ def run_pipeline_fused(span_rows: DataFrame,
         max_doc_spans=max_doc_spans,
         max_doc_bytes=max_doc_bytes,
     )
-
-
-def with_organized_text(pipeline_out: DataFrame) -> DataFrame:
-    """Opt-in ``organize_text`` stage (the reference's dead-code
-    ``_enhance_text_organization`` family, rules/format.py): adds an
-    ``organized_text`` column keyed by each doc's dominant special
-    block class. NOT part of the golden path — the reference never
-    runs it — but exposed for users who want the per-class line
-    machines applied at scale. One Arrow crossing, off the equality
-    path (same pattern as :func:`with_markdown`)."""
-
-    def run(batches):
-        from smartglass_ocr_spark.golden import dominant_class
-        from smartglass_ocr_spark.rules.format import organize_text
-
-        for pdf in batches:
-            organized = []
-            for row in pdf.to_dict("records"):
-                cls = dominant_class(row.get("block_class_hist") or {})
-                organized.append(organize_text(row.get("formatted_text") or "", cls))
-            pdf = pdf.copy()
-            pdf["organized_text"] = organized
-            yield pdf
-
-    schema = StructType(
-        pipeline_out.schema.fields + [StructField("organized_text", StringType())]
-    )
-    return pipeline_out.mapInPandas(run, schema)
 
 
 def with_markdown(pipeline_out: DataFrame) -> DataFrame:

@@ -23,7 +23,7 @@ RAW_BASE_CONFIDENCE = 85.0  # deterministic-parser base (no engine race)
 _ALNUM_RUN_RX = re.compile(r"[^\W_]+")
 
 
-def weighted_confidence(text: str, raw_confidence: float = RAW_BASE_CONFIDENCE) -> float:
+def weighted_confidence(text: str) -> float:
     """length factor x word factor x quality factor, capped at 100
     (ref lib/ocr_engines.py:861-924; engine factor fixed at 1.0)."""
     stripped = text.strip()
@@ -62,7 +62,7 @@ def weighted_confidence(text: str, raw_confidence: float = RAW_BASE_CONFIDENCE) 
             quality_factor = 1.0
     else:
         quality_factor = 0.5
-    return min(100.0, raw_confidence * length_factor * word_factor * quality_factor)
+    return min(100.0, RAW_BASE_CONFIDENCE * length_factor * word_factor * quality_factor)
 
 
 def status_for(confidence: float, text: str) -> str:

@@ -3,7 +3,7 @@
 The canonical storage is parquet/Iceberg, but a 100 TB ingest edge
 sees more shapes: JSONL crawl dumps, CSV flat exports. Readers here
 pin the schema explicitly — streaming and 10^12-row batch scans must
-never pay (or trust) schema inference — and writers round-trip
+never pay (or trust) schema inference — and the one writer round-trips
 losslessly (verified in tests). Bucketed managed tables are written
 by ``ops.storage.write_bucketed_table``.
 """
@@ -29,16 +29,6 @@ def read_documents(spark: SparkSession, path: str, fmt: str = "parquet") -> Data
     raise ValueError(f"unsupported documents format: {fmt}")
 
 
-def write_documents(df: DataFrame, path: str, fmt: str = "parquet",
-                    mode: str = "overwrite") -> None:
-    if fmt == "parquet":
-        df.write.mode(mode).parquet(path)
-    elif fmt == "json":
-        df.write.mode(mode).json(path)
-    else:
-        raise ValueError(f"unsupported documents format: {fmt}")
-
-
 def read_flat_documents(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
     """Flat (doc_id, text) reader: parquet | csv | json. CSV uses
     explicit quoting/escaping so embedded newlines survive."""
@@ -58,19 +48,17 @@ def read_flat_documents(spark: SparkSession, path: str, fmt: str = "parquet") ->
     raise ValueError(f"unsupported flat format: {fmt}")
 
 
-def write_flat_documents(df: DataFrame, path: str, fmt: str = "parquet",
-                         mode: str = "overwrite") -> None:
+def write_documents(df: DataFrame, path: str, fmt: str = "parquet") -> None:
+    """The one S1 writer, overwriting ``path``: parquet | json for
+    either shape, csv for flat ``(doc_id, text)`` frames, quoted and
+    escaped as :func:`read_flat_documents` reads them back (Spark's
+    csv writer rejects a nested spans array)."""
+    w = df.write.mode("overwrite")
     if fmt == "parquet":
-        df.write.mode(mode).parquet(path)
+        w.parquet(path)
     elif fmt == "json":
-        df.write.mode(mode).json(path)
+        w.json(path)
     elif fmt == "csv":
-        (
-            df.write.mode(mode)
-            .option("header", "true")
-            .option("quote", '"')
-            .option("escape", '"')
-            .csv(path)
-        )
+        w.option("header", "true").option("quote", '"').option("escape", '"').csv(path)
     else:
-        raise ValueError(f"unsupported flat format: {fmt}")
+        raise ValueError(f"unsupported documents format: {fmt}")

@@ -20,9 +20,6 @@ from pyspark.sql.streaming import StreamingQuery
 from smartglass_ocr_spark.corpus import SPAN_STRUCT
 
 DOCS_STREAM_SCHEMA = f"doc_id string, spans array<{SPAN_STRUCT}>"
-EVENTS_SCHEMA = (
-    "event_id bigint, user_id bigint, event_type string, ts timestamp, value double"
-)
 
 
 def stream_documents(
@@ -63,8 +60,7 @@ def stream_extract(
     streaming agg): each document arrives whole — one row — so, as in
     :func:`~smartglass_ocr_spark.checkpoint.run_extraction_job`, the
     doc stage runs on the batch directly with no reassembly shuffle
-    and no streaming state. A doc with no spans is skipped, as the
-    span-row pipeline (whose explode emits nothing for it) skips it.
+    and no streaming state.
     available_now=True drains the backlog and stops (the batch-parity
     mode used by tests and backfills).
 
@@ -77,7 +73,7 @@ def stream_extract(
     from smartglass_ocr_spark.pipeline import fused_doc_stage
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = fused_doc_stage(batch_df.filter(F.size("spans") > 0))
+        out = fused_doc_stage(batch_df)
         write_batch_idempotent(out, batch_id, output_dir)
 
     writer = (

@@ -282,3 +282,29 @@ def test_capped_resume_onto_uncapped_output_logs_truncation(spark, paths):
     m = spark.read.parquet(paths["metrics"]).filter(F.col("run_id") == "run-2")
     logged = {r["partition_id"]: r["n_truncated"] for r in m.collect()}
     assert logged == dict(want)
+
+
+def test_job_omits_docs_without_spans(spark, paths):
+    """A doc whose spans are NULL or empty does not fail the job: the
+    job writes exactly the other docs, with the rows the span-row
+    pipeline gives."""
+    from smartglass_ocr_spark.pipeline import explode_spans, run_pipeline_fused
+
+    docs = generate_docs(n_docs=6, seed=5) + [
+        {"doc_id": "null-spans", "spans": None},
+        {"doc_id": "empty-spans", "spans": []},
+    ]
+    df = docs_to_df(spark, docs)
+    r = run_extraction_job(
+        spark, df, paths["out"], paths["ckpt"], paths["metrics"], "run-1", n_partitions=2
+    )
+    assert r["n_docs"] == 6
+    got = {
+        row["doc_id"]: row.asDict(recursive=True)
+        for row in spark.read.parquet(paths["out"]).drop("n_spans", "partition_id").collect()
+    }
+    want = {
+        row["doc_id"]: row.asDict(recursive=True)
+        for row in run_pipeline_fused(explode_spans(df)).collect()
+    }
+    assert len(want) == 6 and got == want

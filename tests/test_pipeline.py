@@ -16,7 +16,7 @@ from hypothesis import given, settings, strategies as st
 
 from smartglass_ocr_spark.corpus import docs_to_df, generate_docs
 from smartglass_ocr_spark.golden import golden_outputs
-from smartglass_ocr_spark.pipeline import explode_spans, run_pipeline_fused
+from smartglass_ocr_spark.pipeline import explode_spans, fused_doc_stage, run_pipeline_fused
 from smartglass_ocr_spark.rules.classify import MEDIA_KINDS, TEXT_KINDS
 
 
@@ -202,23 +202,6 @@ def test_markdown_rendering(spark):
     # deterministic
     again = {r["doc_id"]: r["markdown"] for r in out.collect()}
     assert again == {r["doc_id"]: r["markdown"] for r in rows}
-
-
-def test_with_organized_text_stage(spark):
-    """Opt-in organize stage: one column appended, values equal the
-    per-doc Python machine keyed by the dominant special class."""
-    from smartglass_ocr_spark.pipeline import explode_spans, run_pipeline_fused, with_organized_text
-    from smartglass_ocr_spark.rules.format import organize_text
-
-    df = docs_to_df(spark, generate_docs(n_docs=25, seed=9))
-    out = with_organized_text(run_pipeline_fused(explode_spans(df))).collect()
-    assert len(out) == 25
-    special = ("id_card", "receipt", "form", "table")
-    for r in out:
-        hist = dict(r["block_class_hist"] or {})
-        dominant = max(special, key=lambda c: (hist.get(c, 0), -special.index(c)))
-        cls = dominant if hist.get(dominant, 0) else "content"
-        assert r["organized_text"] == organize_text(r["formatted_text"] or "", cls)
 
 
 def _short_span_mega_corpus(n_small: int, mega_spans: int) -> list[dict]:
@@ -417,17 +400,17 @@ _SPAN_KINDS = st.sampled_from(sorted(TEXT_KINDS) + sorted(MEDIA_KINDS))
 @st.composite
 def _small_corpus(draw) -> list[dict]:
     """At most 8 docs with unique doc_ids, at most one of them NULL;
-    each doc has at least one span (explode drops a doc with none) and
-    unique offsets (the stable offset sort must see no ties, since
-    collect_list order is not deterministic)."""
+    a doc's spans may be NULL or empty (every path omits such a doc),
+    and its offsets are unique (the stable offset sort must see no
+    ties, since collect_list order is not deterministic)."""
     ids = draw(st.lists(st.text("ab1-", min_size=1, max_size=4),
                         min_size=1, max_size=8, unique=True))
     null_at = draw(st.one_of(st.none(), st.integers(0, len(ids) - 1)))
     docs = []
     for i, doc_id in enumerate(ids):
         offsets = draw(st.lists(st.integers(-1000, 1 << 20),
-                                min_size=1, max_size=6, unique=True))
-        spans = [
+                                max_size=6, unique=True))
+        spans = None if draw(st.integers(0, 7)) == 0 else [
             {"kind": draw(_SPAN_KINDS), "text": draw(_SPAN_TEXT),
              "media_ref": draw(st.one_of(st.none(), st.text("m0-", max_size=3))),
              "offset": o}
@@ -441,11 +424,15 @@ def _small_corpus(draw) -> list[dict]:
 @given(docs=_small_corpus())
 def test_hostile_spans_lockstep_generated(spark, docs):
     """The generated twin of test_hostile_spans_lockstep: fused ==
-    golden, row for row, on small corpora of Unicode-whitespace,
-    astral-plane and NULL span text over every span kind."""
-    rows = explode_spans(docs_to_df(spark, docs))
-    fused = {r["doc_id"]: r.asDict(recursive=True) for r in run_pipeline_fused(rows).collect()}
+    golden == the doc-shaped stage the job and the stream run, row for
+    row, on small corpora of Unicode-whitespace, astral-plane and NULL
+    span text over every span kind, with NULL and empty span arrays."""
+    df = docs_to_df(spark, docs)
+    fused = {r["doc_id"]: r.asDict(recursive=True)
+             for r in run_pipeline_fused(explode_spans(df)).collect()}
     assert fused == {g["doc_id"]: g for g in golden_outputs(docs)}
+    staged = {r["doc_id"]: r.asDict(recursive=True) for r in fused_doc_stage(df).collect()}
+    assert staged == fused
 
 
 def test_doc_outputs_share_one_schema(spark, tmp_path):

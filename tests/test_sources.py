@@ -35,7 +35,7 @@ def test_flat_roundtrip_csv_with_newlines(spark, tmp_path):
     )
     for fmt in ("parquet", "json", "csv"):
         p = str(tmp_path / f"flat_{fmt}")
-        sources.write_flat_documents(flat, p, fmt=fmt)
+        sources.write_documents(flat, p, fmt=fmt)
         got = {r["doc_id"]: r["text"] for r in sources.read_flat_documents(spark, p, fmt=fmt).collect()}
         assert got == {1: 'line one\nline "quoted" two', 2: "plain, with comma", 3: None}, fmt
 
