@@ -11,6 +11,7 @@ emitted as epoch microseconds so no timestamp normalization is needed.
 
 from __future__ import annotations
 
+import weakref
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -632,8 +633,9 @@ def _q_curation_end_to_end(spark, sf_dir):
     stages inherit their operators' bucketed/broadcast shapes; the
     two multi-consumer frames (post-exact-dedup corpus, final
     survivor set) are persisted because Catalyst never reuses branch
-    subtrees (caller-owned-unpersist contract, as documented on
-    bm25_topk)."""
+    subtrees. The returned frame owns them and the MinHash components'
+    local checkpoint: they are released when the caller drops it
+    (:func:`_owning`)."""
     from pyspark.sql import Window
 
     from smartglass_ocr_spark.ops.dedup import (
@@ -684,9 +686,31 @@ def _q_curation_end_to_end(spark, sf_dir):
     split = leakage_safe_split(kept4, comps).select("doc_id", "split")
     toks = token_counts(kept4).select("doc_id", "n_tokens")
     packed = sequence_pack(toks, window=512, group_size=64)
-    return packed.join(split, "doc_id").select(
-        "doc_id", "split", "n_tokens", "pack_id", "pack_offset", "spans_boundary"
+    return _owning(
+        packed.join(split, "doc_id").select(
+            "doc_id", "split", "n_tokens", "pack_id", "pack_offset", "spans_boundary"
+        ),
+        kept2, kept4, comps,
     )
+
+
+def _owning(out: DataFrame, *cached: DataFrame) -> DataFrame:
+    """``out``, owning the persisted or locally checkpointed frames its
+    plan reads: they are released once the caller drops the ``out``
+    object (a frame derived from it does not keep them alive), unless
+    the session has stopped by then."""
+    from pyspark import SparkContext
+
+    from smartglass_ocr_spark.ops.dedup import release_local_checkpoints
+
+    def release() -> None:
+        if SparkContext._active_spark_context is not None:
+            for df in cached:
+                df.unpersist()
+                release_local_checkpoints(df)
+
+    weakref.finalize(out, release).atexit = False
+    return out
 
 
 def _curation_oracle() -> str:

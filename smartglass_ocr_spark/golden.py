@@ -45,6 +45,18 @@ def process_span(kind: str, text: str | None) -> tuple[str, str | None]:
     return block_class, clean_for_class(block_class, text or "")
 
 
+def reading_order(span: dict) -> tuple:
+    """Sort key of a span in its document: its ``offset``. A NULL
+    offset sorts after every other one, and spans that share a NULL
+    offset order by (kind, text, media_ref), None first, so the order
+    never depends on the order the spans arrive in (``collect_list``
+    gives none). Equal non-NULL offsets keep their arrival order."""
+    offset = span["offset"]
+    if offset is not None:
+        return (0, offset)
+    return (1, *[(v is not None, v) for v in (span["kind"], span["text"], span["media_ref"])])
+
+
 def truncate_doc_spans(
     spans: list[dict],
     max_spans: int | None = None,
@@ -58,8 +70,9 @@ def truncate_doc_spans(
     stay within ``max_bytes``, in reading order. Everything past the
     cap is dropped from the document — spans output included — just
     as the reference never sees bytes past its clamp. At least one
-    span is always kept. Returns the sorted (possibly capped) list."""
-    spans = sorted(spans, key=lambda s: s["offset"])
+    span is always kept. Returns the list sorted by
+    :func:`reading_order`, possibly capped."""
+    spans = sorted(spans, key=reading_order)
     if max_spans is not None:
         spans = spans[: max(1, max_spans)]
     if max_bytes is not None:

@@ -658,19 +658,34 @@ def duplicate_components(
             new_labels = _durable(new_labels, f"{checkpoint_dir}/labels_r{i:04d}")
             _mark_round(spark, checkpoint_dir, i)
         changed = new_labels.agg(F.sum("_chg")).collect()[0][0] or 0
-        labels.unpersist()  # superseded checkpoint blocks (no-op on parquet reads)
+        release_local_checkpoints(labels)  # superseded round
         labels = new_labels
         if changed == 0:
-            edges.unpersist()
+            # the eager checkpoint above cut the labels' lineage to edges
+            release_local_checkpoints(edges)
             return labels.select(
                 F.col("node").alias("doc_id"), F.col("label").alias("component_id")
             )
-    edges.unpersist()
+    release_local_checkpoints(edges)
+    release_local_checkpoints(labels)
     raise RuntimeError(
         f"duplicate_components did not converge in {max_iters} rounds — "
         "component diameter exceeds the bound; raise max_iters or use a "
         "path-doubling formulation"
     )
+
+
+def release_local_checkpoints(df: DataFrame) -> None:
+    """Unpersist the blocks of every ``localCheckpoint`` that ``df``'s
+    plan reads. ``DataFrame.unpersist()`` releases only a ``persist()``:
+    a local checkpoint persists its RDD directly, and those blocks
+    otherwise stay until the JVM happens to collect the RDD. A plan read
+    from files has no such leaf, so this is a no-op on it."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    for i in range(leaves.length()):
+        leaf = leaves.apply(i)
+        if leaf.nodeName() == "LogicalRDD":
+            leaf.rdd().unpersist(False)
 
 
 def dedup_keep_list(

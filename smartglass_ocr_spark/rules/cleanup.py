@@ -38,20 +38,25 @@ from smartglass_ocr_spark.rules.casefold import gated_subs
 # --------------------------------------------------------------------
 
 _BULLET_RX = re.compile(r"[\*\+\-‣▪•●·](?:\s+|\n)")
-_DIGIT_CONFUSIONS = [
-    (re.compile(r"(?<=\d)l(?=\d)"), "1"),
-    (re.compile(r"(?<=\d)I(?=\d)"), "1"),
-    (re.compile(r"(?<=\d)O(?=\d)"), "0"),
-    (re.compile(r"(?<=\d)S(?=\d)"), "5"),
-    (re.compile(r"(?<=\d)Z(?=\d)"), "2"),
-    (re.compile(r"(?<=\d)B(?=\d)"), "8"),
-]
-_SPACE_LOWER_UPPER = re.compile(r"(?<=[a-z])(?=[A-Z])")
-_SPACE_ALPHA_DIGIT = re.compile(r"(?<=[a-zA-Z])(?=\d)")
-_SPACE_DIGIT_ALPHA = re.compile(r"(?<=\d)(?=[a-zA-Z])")
-_MULTI_SPACE = re.compile(r" +")
-_PUNCT_SPACING = re.compile(r"([.!?,:;])([A-Z0-9])")
-_CAMEL_SPLIT = re.compile(r"([a-z])([A-Z])")
+# a letter is replaced only when both its neighbours are digits, so no
+# replacement can enable another: one sub over the six letters gives
+# the reference's six sequential subs
+_DIGIT_CONFUSION_RX = re.compile(r"(?<=\d)[lIOSZB](?=\d)")
+_DIGIT_FOR = {"l": "1", "I": "1", "O": "0", "S": "5", "Z": "2", "B": "8"}
+# The reference inserts a space at three zero-width positions
+# (lower|upper, letter|digit, digit|letter), collapses space runs, and
+# then spaces out punctuation (punct|upper-or-digit, a ``\1 \2`` sub
+# there). The four kinds of position are mutually exclusive and a space
+# inserted at one makes or breaks no other, so the three insertions run
+# as one alternation, of which text without a digit can hold only
+# lower|upper; the punctuation spacing inserts at its position too,
+# with no group template to expand per match.
+_SPACE_INSERT_RX = re.compile(
+    r"(?<=[a-z])(?=[A-Z])|(?<=[a-zA-Z])(?=\d)|(?<=\d)(?=[a-zA-Z])"
+)
+_LOWER_UPPER_RX = re.compile(r"(?<=[a-z])(?=[A-Z])")
+_PUNCT_SPACING_RX = re.compile(r"(?<=[.!?,:;])(?=[A-Z0-9])")
+_MULTI_SPACE = re.compile(r" {2,}")
 _MULTI_NEWLINE = re.compile(r"\n{3,}")
 _HYPHEN_BREAK = re.compile(r"(\w+)-\n(\w+)")
 _HAS_DIGIT = re.compile(r"\d")
@@ -72,10 +77,11 @@ def strip_non_bmp(text: str) -> str:
 
 
 def general_cleanup(text: str) -> str:
-    """The F1 master pipeline; order matters and matches the reference
-    statement-for-statement (ref lib/text_processing.py:88-128). The
-    final per-type dispatch + strip of ``post_process_text`` lives in
-    :func:`clean_for_class`."""
+    """The F1 master pipeline (ref lib/text_processing.py:88-128), in
+    fewer scans than the reference's statement order; that order is
+    kept as the oracle of ``test_general_cleanup_equals_reference_order``
+    (tests/test_properties.py). The final per-type dispatch + strip of
+    ``post_process_text`` lives in :func:`clean_for_class`."""
     if not text:
         return ""
     text = strip_non_bmp(text)
@@ -84,18 +90,21 @@ def general_cleanup(text: str) -> str:
     text = text.replace("''", '"').replace(",,", '"')
     text = text.replace("`", "'")
     text = _BULLET_RX.sub("• ", text)
-    # the six digit-context subs can only fire on digit-bearing text;
-    # one C-speed scan skips all six otherwise (identical output)
+    # the digit-context subs and insertions can only fire on
+    # digit-bearing text
     if _HAS_DIGIT.search(text):
-        for rx, rep in _DIGIT_CONFUSIONS:
-            text = rx.sub(rep, text)
-    text = _SPACE_LOWER_UPPER.sub(" ", text)
-    text = _SPACE_ALPHA_DIGIT.sub(" ", text)
-    text = _SPACE_DIGIT_ALPHA.sub(" ", text)
-    text = _MULTI_SPACE.sub(" ", text)
-    text = _PUNCT_SPACING.sub(r"\1 \2", text)
-    text = _CAMEL_SPLIT.sub(r"\1 \2", text)
-    text = _MULTI_NEWLINE.sub("\n\n", text)
+        text = _DIGIT_CONFUSION_RX.sub(lambda m: _DIGIT_FOR[m.group()], text)
+        text = _SPACE_INSERT_RX.sub(" ", text)
+    else:
+        text = _LOWER_UPPER_RX.sub(" ", text)
+    if "  " in text:
+        text = _MULTI_SPACE.sub(" ", text)
+    text = _PUNCT_SPACING_RX.sub(" ", text)
+    # the reference's camelCase split (``([a-z])([A-Z])``) comes here:
+    # the lower|upper insertion above left no such pair, and neither
+    # the space collapse nor the punctuation spacing makes one
+    if "\n\n\n" in text:
+        text = _MULTI_NEWLINE.sub("\n\n", text)
     # the rejoin needs a literal "-\n" (which the bullet normalization
     # above already rewrites); without one, skip its backtracking scan
     if "-\n" in text:

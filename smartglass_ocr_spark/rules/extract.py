@@ -323,22 +323,20 @@ def _parse_space_aligned(lines: list[str]) -> tuple[list[str], list[list[str]]]:
     if not col_starts:
         return [], []
 
-    def cells(line: str) -> list[str]:
-        vals = []
-        for j, start in enumerate(col_starts):
-            end = col_starts[j + 1] if j < len(col_starts) - 1 else len(line)
-            vals.append(line[start:end].strip() if start < len(line) else "")
-        return vals
-
-    headers = [h for h in cells(non_empty[0]) if h]
+    # a cell runs from its column's start to the next column's (the
+    # last one to the line's end); a column past the line is empty
+    bounds = list(zip(col_starts, col_starts[1:] + [None]))
+    head = non_empty[0]
+    headers = [h for h in (head[a:b].strip() for a, b in bounds) if h]
     if not headers:
         return [], []
-    rows = []
-    for row in non_empty[1:]:
-        if _is_separator(row):
-            continue
-        rows.append(cells(row)[: len(headers)])
-    return headers, rows
+    # a body row keeps its first len(headers) cells: build only those
+    bounds = bounds[: len(headers)]
+    return headers, [
+        [row[a:b].strip() for a, b in bounds]
+        for row in non_empty[1:]
+        if not _is_separator(row)
+    ]
 
 
 def _table_headers_rows(text: str) -> tuple[list[str], list[list[str]]]:

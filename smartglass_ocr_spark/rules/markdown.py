@@ -37,10 +37,11 @@ def _content_blocks(spans: list[dict], structure: str) -> list[str]:
     forms keep their line layout in a fenced block, everything else
     renders as escaped paragraphs; media spans render as reference
     links (the reference embeds image filenames; our analogue is the
-    media_ref)."""
+    media_ref). ``spans`` come in the output row's reading order
+    (``golden.reading_order``)."""
     out: list[str] = []
     fenced = structure in ("table", "form")
-    for s in sorted(spans, key=lambda x: x["offset"]):
+    for s in spans:
         if s.get("media_ref"):
             out.append(f"![{s['kind']}]({s['media_ref']})")
         elif s.get("text"):

@@ -14,6 +14,8 @@ downloads at executor import, SURVEY.md §7.4):
 from __future__ import annotations
 
 import re
+from collections import Counter
+from itertools import chain
 
 from smartglass_ocr_spark.rules.casefold import fold, twin
 
@@ -34,6 +36,9 @@ _KEY_TERMS = (
     "summary", "conclusion", "result", "important", "significant",
     "key", "main", "primary", "critical", "essential", "crucial",
 )
+# a sentence earns the key-term bonus if any term is a substring of it:
+# one search of the alternation (plain lowercase words, no metachars)
+_KEY_TERM_RX = re.compile("|".join(_KEY_TERMS))
 # ref :2316-2347 searches each sentence with these four patterns in
 # turn and keeps it if any matches; one search of their alternation
 # gives the same answer in one scan. The patterns are case-insensitive:
@@ -63,11 +68,10 @@ def generate_summary(text: str, max_length: int = 200, style: str = "concise") -
     lowered = [s.lower() for s in sentences]
     tokens = [_WORD_RX.findall(lower) for lower in lowered]
 
-    word_counts: dict[str, int] = {}
-    for words in tokens:
-        for w in words:
-            if w not in SIMPLE_STOPWORDS:
-                word_counts[w] = word_counts.get(w, 0) + 1
+    # stopwords are deleted, so they count 0 through Counter.__missing__
+    word_counts = Counter(chain.from_iterable(tokens))
+    for w in SIMPLE_STOPWORDS.intersection(word_counts):
+        del word_counts[w]
 
     scores: dict[int, float] = {}
     for i, sentence in enumerate(sentences):
@@ -82,12 +86,8 @@ def generate_summary(text: str, max_length: int = 200, style: str = "concise") -
             score += 2
         words = tokens[i]
         if words:
-            score += (
-                sum(word_counts.get(w, 0) for w in words if w not in SIMPLE_STOPWORDS)
-                / len(words)
-            )
-        lower = lowered[i]
-        if any(term in lower for term in _KEY_TERMS):
+            score += sum(map(word_counts.__getitem__, words)) / len(words)
+        if _KEY_TERM_RX.search(lowered[i]):
             score += 3
         scores[i] = score
 

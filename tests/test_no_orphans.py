@@ -1,15 +1,21 @@
 """Keep only code a program reaches (Spark-free).
 
 Nodes are the module-level ``def``/``class`` definitions and assigned
-names of ``smartglass_ocr_spark/`` (dunders excluded). A node's edges
-are the names its statement references: a name, an attribute, an
-import alias, or a string constant (``__all__`` entries, ``getattr``
-keys). The roots are the names referenced by the programs —
-``__spark_entry__.py``, ``bench.py``, ``tools/*.py`` and the non-test
-files of ``perfbench/`` — and by the package's own module-level
-statements that run on import (anything but a def, class, import,
-docstring or assignment). Names match across modules, so the closure
-errs towards keeping code.
+names of ``smartglass_ocr_spark/`` (dunders excluded), each keyed by
+its module. A node's edges are the names its statement references,
+resolved in its own module: a bare name to that module's definition
+or, through its imports (re-exports followed), to the module it came
+from; ``mod.name`` to ``mod``'s definition when ``mod`` names a
+package module; an import inside the statement to what it imports.
+A string constant (``__all__`` entries, ``getattr`` keys) and an
+attribute of anything but a module reach every definition so spelled,
+which errs towards keeping code. Two modules that spell a name the
+same are otherwise two nodes: a use of one does not reach the other.
+The roots are what the programs reference, resolved the same way in
+each program file — ``__spark_entry__.py``, ``bench.py``,
+``tools/*.py`` and the non-test files of ``perfbench/`` — and what the
+package's own module-level statements that run on import reference
+(anything but a def, class, import, docstring or assignment).
 
 A definition no program reaches stays only if ``TEST_ONLY`` lists it,
 or a listed name reaches it, with the COVERAGE.md row it serves (the
@@ -81,6 +87,7 @@ def _py_files(*paths: Path) -> list[Path]:
 
 
 def _referenced(tree: ast.AST) -> set[str]:
+    """Every name ``tree`` spells (for the tests' side of the check)."""
     names: set[str] = set()
     for node in ast.walk(tree):
         if isinstance(node, ast.Name):
@@ -92,6 +99,96 @@ def _referenced(tree: ast.AST) -> set[str]:
         elif isinstance(node, ast.Constant) and isinstance(node.value, str):
             names.add(node.value)
     return names
+
+
+def _module_name(path: Path) -> str:
+    parts = path.relative_to(ROOT).with_suffix("").parts
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+def _imports(tree: ast.AST, module: str) -> dict[str, str]:
+    """Local name -> the dotted name it is bound to, for every import
+    anywhere in ``tree`` (``from m import x as y`` binds y to ``m.x``)."""
+    bound: dict[str, str] = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                if a.asname:
+                    bound[a.asname] = a.name
+                else:
+                    head = a.name.split(".")[0]
+                    bound[head] = head
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:
+                pkg = module.split(".")[: len(module.split(".")) - node.level + 1]
+                base = ".".join(pkg + ([base] if base else []))
+            for a in node.names:
+                bound[a.asname or a.name] = f"{base}.{a.name}"
+    return bound
+
+
+class _Resolver:
+    """Resolves the names a statement references to (module, name) nodes."""
+
+    def __init__(self):
+        self.defined: dict[str, set[str]] = {}  # module -> its definitions
+        self.bound: dict[str, dict[str, str]] = {}  # module -> its imports
+        self.by_name: dict[str, set[tuple[str, str]]] = {}
+
+    def add_module(self, module: str, tree: ast.Module, names: set[str]) -> None:
+        self.defined[module] = names
+        self.bound[module] = _imports(tree, module)
+        for name in names:
+            self.by_name.setdefault(name, set()).add((module, name))
+
+    def dotted(self, dotted: str, seen: frozenset = frozenset()) -> set[tuple[str, str]]:
+        """The node a dotted name denotes: ``pkg.mod.name`` is ``name``
+        in ``pkg.mod``, or whatever ``pkg.mod`` imported it from."""
+        module, _, name = dotted.rpartition(".")
+        if module not in self.defined or dotted in seen:
+            return set()
+        if name in self.defined[module]:
+            return {(module, name)}
+        if name in self.bound[module]:
+            return self.dotted(self.bound[module][name], seen | {dotted})
+        return set()
+
+    def is_module(self, dotted: str) -> bool:
+        return dotted in self.defined
+
+    def refs(self, tree: ast.AST, module: str, bound: dict[str, str]) -> set[tuple[str, str]]:
+        own = self.defined.get(module, set())
+        out: set[tuple[str, str]] = set()
+
+        def module_of(node: ast.expr) -> str | None:
+            if isinstance(node, ast.Name):
+                target = bound.get(node.id, node.id)
+            elif isinstance(node, ast.Attribute):
+                base = module_of(node.value)
+                target = base and f"{base}.{node.attr}"
+            else:
+                return None
+            return target if target and self.is_module(target) else None
+
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                if node.id in own:
+                    out.add((module, node.id))
+                elif node.id in bound:
+                    out |= self.dotted(bound[node.id])
+            elif isinstance(node, ast.Attribute):
+                base = module_of(node.value)
+                if base is not None:
+                    out |= self.dotted(f"{base}.{node.attr}")
+                elif not (isinstance(node.value, ast.Name) and node.value.id in bound):
+                    out |= self.by_name.get(node.attr, set())
+            elif isinstance(node, ast.ImportFrom):
+                for a in node.names:
+                    out |= self.dotted(bound[a.asname or a.name])
+            elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+                out |= self.by_name.get(node.value, set())
+        return out
 
 
 def _defined_names(stmt: ast.stmt) -> list[str] | None:
@@ -110,38 +207,49 @@ def _defined_names(stmt: ast.stmt) -> list[str] | None:
 
 
 def _graph():
-    """(definitions as (file:line, name, lines), edges by name, roots)."""
-    defs: list[tuple[str, str, int]] = []
-    edges: dict[str, set[str]] = {}
-    roots: set[str] = set()
-    for path in _py_files(PACKAGE):
-        for stmt in ast.parse(path.read_text()).body:
+    """(definitions as (file:line, (module, name), lines), edges by
+    node, roots as nodes)."""
+    trees = {_module_name(p): (p, ast.parse(p.read_text())) for p in _py_files(PACKAGE)}
+    resolve = _Resolver()
+    for module, (_, tree) in trees.items():
+        names = {n for stmt in tree.body for n in (_defined_names(stmt) or ())
+                 if not (n.startswith("__") and n.endswith("__"))}
+        resolve.add_module(module, tree, names)
+    defs: list[tuple[str, tuple[str, str], int]] = []
+    edges: dict[tuple[str, str], set[tuple[str, str]]] = {}
+    roots: set[tuple[str, str]] = set()
+    for module, (path, tree) in trees.items():
+        bound = resolve.bound[module]
+        for stmt in tree.body:
             names = _defined_names(stmt)
             if names is None:
-                roots |= _referenced(stmt)
+                roots |= resolve.refs(stmt, module, bound)
                 continue
             for name in names:
                 if name.startswith("__") and name.endswith("__"):
                     continue
                 where = f"{path.relative_to(ROOT)}:{stmt.lineno}"
-                defs.append((where, name, stmt.end_lineno - stmt.lineno + 1))
-                edges.setdefault(name, set()).update(_referenced(stmt))
+                defs.append((where, (module, name), stmt.end_lineno - stmt.lineno + 1))
+                edges.setdefault((module, name), set()).update(
+                    resolve.refs(stmt, module, bound))
     programs = _py_files(ROOT / "__spark_entry__.py", ROOT / "bench.py",
                          *sorted((ROOT / "tools").glob("*.py")))
     programs += [p for p in _py_files(ROOT / "perfbench") if not p.name.startswith("test_")]
     for path in programs:
-        roots |= _referenced(ast.parse(path.read_text()))
+        tree = ast.parse(path.read_text())
+        module = _module_name(path)
+        roots |= resolve.refs(tree, module, _imports(tree, module))
     return defs, edges, roots
 
 
-def _closure(start: set[str], edges: dict[str, set[str]]) -> set[str]:
-    seen: set[str] = set()
+def _closure(start: set[tuple[str, str]], edges) -> set[tuple[str, str]]:
+    seen: set[tuple[str, str]] = set()
     todo = [n for n in start if n in edges]
     while todo:
-        name = todo.pop()
-        if name not in seen:
-            seen.add(name)
-            todo.extend(n for n in edges[name] if n in edges and n not in seen)
+        node = todo.pop()
+        if node not in seen:
+            seen.add(node)
+            todo.extend(n for n in edges[node] if n in edges and n not in seen)
     return seen
 
 
@@ -168,19 +276,21 @@ def test_every_definition_is_reached():
     defs, edges, roots = _graph()
     assert len(defs) > 300  # the scan really saw the package
     reached = _closure(roots, edges)
-    kept = reached | _closure(set(TEST_ONLY), edges)
+    listed = {node for node in edges if node[1] in TEST_ONLY}
+    kept = reached | _closure(listed, edges)
     tested: set[str] = set()
     for path in _py_files(ROOT / "tests"):
         tested |= _referenced(ast.parse(path.read_text()))
     rows = _coverage_rows()
 
-    problems = [f"{where} {name} {lines}: no program reaches it and TEST_ONLY does not list it"
-                for where, name, lines in defs if name not in kept]
+    problems = [f"{where} {node[1]} {lines}: no program reaches it and TEST_ONLY does not list it"
+                for where, node, lines in defs if node not in kept]
     for name, reason in sorted(TEST_ONLY.items()):
-        if name not in edges:
+        nodes = {node for node in listed if node[1] == name}
+        if not nodes:
             problems.append(f"TEST_ONLY {name}: not defined in the package")
             continue
-        if name in reached:
+        if nodes <= reached:
             problems.append(f"TEST_ONLY {name}: a program reaches it, drop the entry")
         if name not in tested:
             problems.append(f"TEST_ONLY {name}: no test references it")

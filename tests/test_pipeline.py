@@ -400,16 +400,20 @@ _SPAN_KINDS = st.sampled_from(sorted(TEXT_KINDS) + sorted(MEDIA_KINDS))
 @st.composite
 def _small_corpus(draw) -> list[dict]:
     """At most 8 docs with unique doc_ids, at most one of them NULL;
-    a doc's spans may be NULL or empty (every path omits such a doc),
-    and its offsets are unique (the stable offset sort must see no
-    ties, since collect_list order is not deterministic)."""
+    a doc's spans may be NULL or empty (every path omits such a doc).
+    Its non-NULL offsets are unique (the stable offset sort must see no
+    ties, since collect_list order is not deterministic), and up to
+    three of its spans have a NULL offset, which sort last in a
+    defined order (golden.reading_order)."""
     ids = draw(st.lists(st.text("ab1-", min_size=1, max_size=4),
                         min_size=1, max_size=8, unique=True))
     null_at = draw(st.one_of(st.none(), st.integers(0, len(ids) - 1)))
     docs = []
     for i, doc_id in enumerate(ids):
-        offsets = draw(st.lists(st.integers(-1000, 1 << 20),
-                                max_size=6, unique=True))
+        offsets = draw(st.permutations(
+            draw(st.lists(st.integers(-1000, 1 << 20), max_size=6, unique=True))
+            + [None] * draw(st.integers(0, 3))
+        ))
         spans = None if draw(st.integers(0, 7)) == 0 else [
             {"kind": draw(_SPAN_KINDS), "text": draw(_SPAN_TEXT),
              "media_ref": draw(st.one_of(st.none(), st.text("m0-", max_size=3))),

@@ -227,6 +227,20 @@ def test_curation_end_to_end_plan_budget(spark, queries):
     assert len(re.findall(r"Exchange hashpartitioning", plan)) <= 68
 
 
+def test_curation_end_to_end_owns_its_persists(spark, queries):
+    """A one-query session ends with as many persistent RDDs as it
+    began with: the curation query's persisted frames and local
+    checkpoints live until the caller drops its result, and no
+    longer."""
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+    out = queries["curation_end_to_end"](spark, SF)
+    out.collect()
+    assert persisted().size() > before  # the query did read its caches
+    del out
+    assert persisted().size() == before
+
+
 def test_curation_oracle_rejects_drifted_cte_body(monkeypatch):
     """The curation oracle's string-surgery guards raise (not assert,
     which ``python -O`` strips) when a shared CTE body declares a CTE

@@ -77,10 +77,12 @@ def test_doc_rules_total(text):
 @settings(max_examples=100, deadline=None)
 @given(
     spans=st.lists(
-        st.tuples(kinds, st.one_of(st.none(), st.text(max_size=120)), st.integers(0, 10**6)),
+        st.tuples(kinds, st.one_of(st.none(), st.text(max_size=120)),
+                  st.one_of(st.none(), st.integers(0, 10**6))),
         min_size=1,
         max_size=20,
-        unique_by=lambda t: t[2],
+        # non-NULL offsets are unique: equal ones keep arrival order
+        unique_by=lambda t: t if t[2] is None else t[2],
     )
 )
 def test_process_document_invariants(spans):
@@ -99,16 +101,18 @@ def test_process_document_invariants(spans):
     out = process_document(doc)
     # span-count conservation + offset monotonicity + media identity
     assert len(out["spans"]) == len(doc["spans"])
+    # NULL offsets last
     offs = [s["offset"] for s in out["spans"]]
-    assert offs == sorted(offs)
-    in_media = {s["offset"]: s for s in doc["spans"] if s["media_ref"]}
+    n_set = sum(o is not None for o in offs)
+    assert offs[:n_set] == sorted(o for o in offs if o is not None)
+    in_media = [s for s in doc["spans"] if s["media_ref"]]
     for s in out["spans"]:
         if s["media_ref"]:
-            assert s == in_media[s["offset"]]
+            assert s in in_media
     # markdown renders for any output row
     md = render_markdown(out)
     assert md.startswith("# d") and md.endswith("\n")
-    # permutation invariance of the input span order
+    # permutation invariance of the input span order, NULL offsets too
     doc2 = {"doc_id": "d", "spans": list(reversed(doc["spans"]))}
     assert process_document(doc2) == out
 
@@ -253,6 +257,88 @@ def _general_cleanup_reference_order(text: str) -> str:
 @settings(max_examples=500, deadline=None)
 def test_general_cleanup_equals_reference_order(text):
     assert _cleanup.general_cleanup(text) == _general_cleanup_reference_order(text)
+
+
+def _generate_summary_reference_order(text: str, max_length: int = 200,
+                                      style: str = "concise") -> str:
+    """The summary as the reference scores it: a dict of non-stopword
+    counts, each sentence's count sum with the stopwords skipped, and
+    ``any()`` over the key terms."""
+    if not text:
+        return ""
+    if len(text) < 100:
+        return text[:max_length]
+    sentences = re.split(r"(?<=[.!?])\s+", text)
+    word_counts: dict[str, int] = {}
+    for sentence in sentences:
+        for w in re.findall(r"\b[a-zA-Z]+\b", sentence.lower()):
+            if w not in _summarize.SIMPLE_STOPWORDS:
+                word_counts[w] = word_counts.get(w, 0) + 1
+    scores: dict[int, float] = {}
+    for i, sentence in enumerate(sentences):
+        if len(sentence.strip()) < 10:
+            continue
+        score = 0.0
+        if i == 0:
+            score += 5
+        elif i == len(sentences) - 1:
+            score += 3
+        elif i < len(sentences) * 0.1:
+            score += 2
+        lower = sentence.lower()
+        words = re.findall(r"\b[a-zA-Z]+\b", lower)
+        if words:
+            score += (
+                sum(word_counts.get(w, 0) for w in words if w not in _summarize.SIMPLE_STOPWORDS)
+                / len(words)
+            )
+        if any(term in lower for term in _summarize._KEY_TERMS):
+            score += 3
+        scores[i] = score
+    avg_len = sum(len(s) for s in sentences) / len(sentences)
+    target = max(1, int(max_length / avg_len))
+    if style == "detailed":
+        target = min(int(target * 1.5), len(sentences))
+    elif style == "concise":
+        target = max(1, int(target * 0.7))
+    top = sorted(scores.items(), key=lambda kv: kv[1], reverse=True)[:target]
+    summary = " ".join(sentences[i] for i in sorted(idx for idx, _ in top))
+    if style == "bullets":
+        return _summarize.format_as_bullet_points(summary)
+    if style == "structured":
+        return _summarize.format_as_structured_summary(summary)
+    if len(summary) > max_length:
+        summary = summary[: max_length - 3] + "..."
+    return summary
+
+
+# stopwords, key terms alone and inside longer words, sentences under
+# 10 chars, and the code points whose lower() is not one ASCII letter
+_SUMMARY_PIECES = st.one_of(
+    st.sampled_from(sorted(_summarize.SIMPLE_STOPWORDS)),
+    st.sampled_from(_summarize._KEY_TERMS),
+    st.sampled_from([
+        "keynote", "mainland", "resultant", "unimportant", "Summary", "KEY",
+        "CRUCIAL", "pr\u0130mary", "\u212aey", "\u0130", "\u212a", "Hi.", "Ok!",
+        "No?", "x.", "A1.", "well", "data", "data.", "word!", "\u03a3.",
+    ]),
+    st.text(alphabet="abcdekmy1\u0130\u212a", min_size=1, max_size=8),
+)
+# sentences of a few pieces, so that a summary keeps only some of them
+# and the scores decide which
+_SUMMARY_TEXT = st.lists(
+    st.tuples(_SUMMARY_PIECES, st.sampled_from([" "] * 12 + [". ", ".\n", "! ", "? ", "\n\n"])),
+    min_size=25, max_size=60,
+).map(lambda parts: "".join(w + sep for w, sep in parts))
+
+
+@given(text=_SUMMARY_TEXT, max_length=st.integers(0, 250),
+       style=st.sampled_from(["concise", "detailed", "bullets", "structured"]))
+@settings(max_examples=500, deadline=None)
+def test_generate_summary_equals_reference_order(text, max_length, style):
+    assert generate_summary(text, max_length, style) == _generate_summary_reference_order(
+        text, max_length, style
+    )
 
 
 def _detect_structure_eager(text: str) -> str:
@@ -487,6 +573,42 @@ _ALIGNED_ROW = st.lists(
 @settings(max_examples=500, deadline=None)
 def test_column_starts_bisect_equals_min_scan(rows):
     assert _extract._column_starts(list(rows)) == _column_starts_min_scan(list(rows))
+
+
+def _parse_space_aligned_every_column(lines: list[str]) -> tuple[list[str], list[list[str]]]:
+    """The space-aligned table parse with every line sliced into every
+    column, each body row then cut to the header count."""
+    non_empty = [ln for ln in lines if ln.strip()]
+    if not non_empty:
+        return [], []
+    col_starts = _extract._column_starts(non_empty)
+    if not col_starts:
+        return [], []
+
+    def cells(line: str) -> list[str]:
+        vals = []
+        for j, start in enumerate(col_starts):
+            end = col_starts[j + 1] if j < len(col_starts) - 1 else len(line)
+            vals.append(line[start:end].strip() if start < len(line) else "")
+        return vals
+
+    headers = [h for h in cells(non_empty[0]) if h]
+    if not headers:
+        return [], []
+    rows = []
+    for row in non_empty[1:]:
+        if _extract._is_separator(row):
+            continue
+        rows.append(cells(row)[: len(headers)])
+    return headers, rows
+
+
+@given(lines=st.lists(st.one_of(_ALIGNED_ROW, st.sampled_from(["", "   ", "--  --", " == ="])),
+                      max_size=8))
+@example(["  a   b", "x", "aaaa bb cc dd"])
+@settings(max_examples=500, deadline=None)
+def test_space_aligned_cells_equal_every_column_form(lines):
+    assert _extract._parse_space_aligned(lines) == _parse_space_aligned_every_column(lines)
 
 
 def _weighted_confidence_counter(text: str) -> float:
