@@ -11,7 +11,6 @@ emitted as epoch microseconds so no timestamp normalization is needed.
 
 from __future__ import annotations
 
-import weakref
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -435,13 +434,12 @@ def _q_bm25_topk(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from smartglass_ocr_spark.ops.retrieval import bm25_topk
+    from smartglass_ocr_spark.ops.dedup import _tokens
 
     docs = _t(spark, sf_dir, "documents")
     queries = docs.filter(F.col("doc_id") % 50 == 0).select(
         F.col("doc_id").alias("query_id"),
-        F.concat_ws(
-            " ", F.slice(F.split(F.trim("text"), r"\s+"), 1, 5)
-        ).alias("query_text"),
+        F.concat_ws(" ", F.slice(_tokens("text"), 1, 5)).alias("query_text"),
     )
     return bm25_topk(docs, queries, k=5)
 
@@ -635,10 +633,11 @@ def _q_curation_end_to_end(spark, sf_dir):
     survivor set) are persisted because Catalyst never reuses branch
     subtrees. The returned frame owns them and the MinHash components'
     local checkpoint: they are released when the caller drops it
-    (:func:`_owning`)."""
+    (``ops.dedup._owning``)."""
     from pyspark.sql import Window
 
     from smartglass_ocr_spark.ops.dedup import (
+        _owning,
         decontaminate,
         dedup_keep_list,
         duplicate_components,
@@ -692,25 +691,6 @@ def _q_curation_end_to_end(spark, sf_dir):
         ),
         kept2, kept4, comps,
     )
-
-
-def _owning(out: DataFrame, *cached: DataFrame) -> DataFrame:
-    """``out``, owning the persisted or locally checkpointed frames its
-    plan reads: they are released once the caller drops the ``out``
-    object (a frame derived from it does not keep them alive), unless
-    the session has stopped by then."""
-    from pyspark import SparkContext
-
-    from smartglass_ocr_spark.ops.dedup import release_local_checkpoints
-
-    def release() -> None:
-        if SparkContext._active_spark_context is not None:
-            for df in cached:
-                df.unpersist()
-                release_local_checkpoints(df)
-
-    weakref.finalize(out, release).atexit = False
-    return out
 
 
 def _curation_oracle() -> str:
@@ -865,13 +845,14 @@ def _q_rag_end_to_end(spark, sf_dir):
     top-k merged on the driver: k rows, not a global sort). Pinned:
     1 hash exchange, TakeOrderedAndProject, no interpreted lambdas."""
     from smartglass_ocr_spark.ops.sampling import chunk_documents
+    from smartglass_ocr_spark.ops.dedup import _tokens
 
     docs = _t(spark, sf_dir, "documents")
     chunks = chunk_documents(docs, chunk_tokens=32, overlap=8)
     tok = chunks.select(
         "doc_id",
         "chunk_id",
-        F.explode(F.split(F.trim(F.col("chunk_text")), r"\s+")).alias("tok"),
+        F.explode(_tokens("chunk_text")).alias("tok"),
     )
     lanes = tok.select(
         "doc_id",

@@ -34,6 +34,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import ArrayType, StringType
 
+from .dedup import _tokens
+
 
 # Java's ASCII \s, which the JVM-side word split and alphabet use:
 # str.split() would also split on Unicode whitespace (U+00A0, U+0085,
@@ -89,7 +91,7 @@ def bpe_train(
     """
     spark = docs.sparkSession
     words = (
-        docs.select(F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("w"))
+        docs.select(F.explode(_tokens(text_col)).alias("w"))
         .filter(F.length("w") > 0)
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("cnt"))

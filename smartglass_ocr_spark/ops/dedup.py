@@ -32,6 +32,8 @@ mass-duplicate buckets (run exact dedup first and neither fires).
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import DataFrame, functions as F
 
 TOKEN_SPLIT = r"\s+"
@@ -323,7 +325,7 @@ def _simhash(docs: DataFrame, text_col: str, bits: int) -> DataFrame:
     partial-combining agg, then a static fold into a bigint."""
     toks = docs.select(
         "doc_id",
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), TOKEN_SPLIT)).alias("tok"),
+        F.explode(_tokens(F.lower(text_col))).alias("tok"),
     ).select("doc_id", F.md5("tok").alias("h"))
 
     def vote(i: int) -> F.Column:
@@ -406,8 +408,7 @@ def simhash64_column(text_col: str | F.Column = "text") -> F.Column:
     64-slot vote array plus a 64-wide zip_with merge, all
     interpreted. That price buys stream legality only: batch callers
     must use :func:`simhash64`."""
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    toks = F.split(F.lower(F.trim(c)), TOKEN_SPLIT)
+    toks = _tokens(F.lower(text_col))
 
     def votes(tok: F.Column) -> F.Column:
         h = F.md5(tok)
@@ -688,6 +689,26 @@ def release_local_checkpoints(df: DataFrame) -> None:
             leaf.rdd().unpersist(False)
 
 
+def _owning(out: DataFrame, *cached: DataFrame) -> DataFrame:
+    """``out``, owning the persisted or locally checkpointed frames its
+    plan reads: they are released once the caller drops the ``out``
+    object, unless the session has stopped by then. A frame derived
+    from ``out`` does not keep them alive: it recomputes a released
+    ``persist()``, but fails on a released local checkpoint. Spark
+    keys a cache by plan, so releasing a ``persist()`` also drops an
+    identical one made elsewhere, which then recomputes too."""
+    from pyspark import SparkContext
+
+    def release() -> None:
+        if SparkContext._active_spark_context is not None:
+            for df in cached:
+                df.unpersist()
+                release_local_checkpoints(df)
+
+    weakref.finalize(out, release).atexit = False
+    return out
+
+
 def dedup_keep_list(
     docs: DataFrame,
     components: DataFrame,
@@ -923,19 +944,11 @@ def write_minhash_index(
     signature index, partitioned by band — ~tens of bytes per doc per
     band, an order below the text it summarizes. This is the state
     continuous ingestion dedups against (see
-    :func:`minhash_lsh_candidates_incremental`)."""
+    :func:`minhash_lsh_candidates_incremental`). ``mode="append"``
+    adds ONLY an increment's signatures — O(increment), the store is
+    never read or rewritten."""
     minhash_band_signatures(docs, bands=bands, n=n, text_col=text_col)\
         .write.partitionBy("band").mode(mode).parquet(path)
-
-
-def append_minhash_index(
-    new_docs: DataFrame, path: str, bands: int = 8, n: int = 5,
-    text_col: str = "text",
-) -> None:
-    """Append ONLY the increment's signatures into the index —
-    O(increment), the store is never read or rewritten."""
-    minhash_band_signatures(new_docs, bands=bands, n=n, text_col=text_col)\
-        .write.partitionBy("band").mode("append").parquet(path)
 
 
 def minhash_lsh_candidates_incremental(

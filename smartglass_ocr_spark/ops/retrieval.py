@@ -41,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dedup import _owning, _tokens
+
 __all__ = ["bm25_topk"]
 
 
@@ -73,18 +75,15 @@ def bm25_topk(
     ``ln(1 + ·)`` — monotone per-term, so single-term rankings agree;
     multi-term sums legitimately differ (documented deviation).
 
-    Cache contract (same as ``collocations``): three internal frames
-    (doc lengths, query terms, pruned postings) are ``persist()``-ed
-    because each has two consumers in the returned plan and Catalyst
-    never reuses branch subtrees. They stay cached until the caller
-    unpersists — after materializing the result, call
-    ``spark.catalog.clearCache()`` (or unpersist selectively) in
-    long-lived sessions that invoke this repeatedly, as perfbench's
-    ``contract_suite`` does between queries.
+    Three internal frames (doc lengths, query terms, pruned postings)
+    are ``persist()``-ed because each has two consumers in the
+    returned plan and Catalyst never reuses branch subtrees. The
+    returned frame owns them: they are released when the caller drops
+    it (:func:`dedup._owning`).
     """
     if idf not in ("rational", "log"):
         raise ValueError(f"idf must be 'rational' or 'log', got {idf!r}")
-    arr = F.split(F.trim(F.col(text_col)), r"\s+")
+    arr = _tokens(text_col)
 
     # corpus scan 1: slim (doc_id, dl) — persisted, two consumers
     dl = docs.select(F.col(id_col).alias("doc_id"), F.size(arr).alias("dl")).persist()
@@ -95,9 +94,7 @@ def bm25_topk(
     qt = (
         queries.select(
             F.col(query_id_col).alias("query_id"),
-            F.explode(
-                F.split(F.trim(F.col(query_text_col)), r"\s+")
-            ).alias("tok"),
+            F.explode(_tokens(query_text_col)).alias("tok"),
         )
         .distinct()
         .persist()  # tiny by contract; consumers: term prune + score join
@@ -146,7 +143,7 @@ def bm25_topk(
     w = Window.partitionBy("query_id").orderBy(
         F.col("score_ppm").desc(), F.col("doc_id").asc()
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    out = scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
     )
+    return _owning(out, dl, qt, tf)

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from .dedup import _tokens
+
 # md5-bucket resolution: rates are exact multiples of 1/10000
 _BUCKETS = 10_000
 
@@ -113,7 +115,7 @@ def length_buckets(
     count (whitespace tokens), top bucket open-ended. One partial-
     combining hash-agg over |edges|+1 groups — aggregate state is a
     handful of rows regardless of corpus size."""
-    n_tokens = F.size(F.split(F.trim(F.col(text_col)), r"\s+"))
+    n_tokens = F.size(_tokens(text_col))
     bucket: Column = F.lit(f">{edges[-1]}")
     for e in reversed(edges):
         bucket = F.when(n_tokens <= e, F.lit(f"<={e}")).otherwise(bucket)
@@ -357,7 +359,7 @@ def chunk_documents(
     # (r4 ADVICE). Scan-stage isnotnull, free.
     docs = docs.filter(F.col(text_col).isNotNull())
     stride = chunk_tokens - overlap
-    w = F.split(F.trim(F.col(text_col)), r"\s+")
+    w = _tokens(text_col)
     n = F.size(w)
     n_chunks = F.lit(1) + F.floor(
         (F.greatest(F.lit(0), n - F.lit(chunk_tokens)) + F.lit(stride - 1))

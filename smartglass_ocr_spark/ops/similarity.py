@@ -127,6 +127,36 @@ def _bucket_udf(bits: int):
     return bucket.asNondeterministic()
 
 
+def _bucketed(
+    embeddings: DataFrame, bits: int, vec_col: str, id_col: str
+) -> DataFrame:
+    """The LSH index row: (vec_id, v, bucket)."""
+    return embeddings.select(
+        F.col(id_col).alias("vec_id"),
+        F.col(vec_col).alias("v"),
+        _bucket_udf(bits)(F.col(vec_col)).alias("bucket"),
+    )
+
+
+def _rerank_topk(
+    index: DataFrame, cell: str, probes: list[int], query: list[float], k: int
+) -> DataFrame:
+    """Probe then exact re-rank: the (vec_id, v) rows of ``index``
+    whose ``cell`` is probed, top-``k`` by cosine to ``query`` on the
+    round-6 grid, ties to the smaller vec_id. Over a cell-partitioned
+    parquet index the probe is a PartitionFilter."""
+    scored = index.filter(F.col(cell).isin(probes)).select(
+        "vec_id", F.round(_cosine_vs_query(query)(F.col("v")), 6).alias("cos")
+    )
+    return scored.orderBy(F.desc("cos"), F.asc("vec_id")).limit(k)
+
+
+def _write_cells(rows: DataFrame, path: str, cell: str, mode: str) -> None:
+    """Write index rows clustered and partitioned by their ``cell``
+    (LSH bucket or IVF cid), one directory per cell."""
+    rows.repartition(cell).write.mode(mode).partitionBy(cell).parquet(path)
+
+
 # ------------------------------------------------------------ queries --
 
 def cosine_topk(
@@ -209,21 +239,10 @@ def lsh_bucketed_topk(
     bucket as a partition column) and this becomes partition pruning
     over ``nprobe`` partitions. Query-side buckets are computed
     driver-side (same md5 planes)."""
-    probes = probe_buckets(query, bits, nprobe)
-    with_bucket = embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("v"),
-        _bucket_udf(bits)(F.col(vec_col)).alias("bucket"),
+    return _rerank_topk(
+        _bucketed(embeddings, bits, vec_col, id_col),
+        "bucket", probe_buckets(query, bits, nprobe), query, k,
     )
-    cond = (
-        F.col("bucket") == probes[0]
-        if len(probes) == 1
-        else F.col("bucket").isin(probes)
-    )
-    scored = with_bucket.filter(cond).select(
-        "vec_id", F.round(_cosine_vs_query(query)(F.col("v")), 6).alias("cos")
-    )
-    return scored.orderBy(F.desc("cos"), F.asc("vec_id")).limit(k)
 
 
 def write_lsh_index(
@@ -239,16 +258,8 @@ def write_lsh_index(
     ~nprobe/2^bits of the data via partition PRUNING, no scan-and-
     filter. One bucket-clustered shuffle at build time; amortized
     across every subsequent query."""
-    (
-        embeddings.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).alias("v"),
-            _bucket_udf(bits)(F.col(vec_col)).alias("bucket"),
-        )
-        .repartition("bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(path)
+    _write_cells(
+        _bucketed(embeddings, bits, vec_col, id_col), path, "bucket", "overwrite"
     )
 
 
@@ -268,16 +279,8 @@ def append_lsh_index(
     would put them in (pytest-pinned: append ≡ rebuild for every
     probe). Caller owns id uniqueness across increments (re-appending
     a vec_id duplicates it, like any append-only table)."""
-    (
-        new_embeddings.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).alias("v"),
-            _bucket_udf(bits)(F.col(vec_col)).alias("bucket"),
-        )
-        .repartition("bucket")
-        .write.mode("append")
-        .partitionBy("bucket")
-        .parquet(path)
+    _write_cells(
+        _bucketed(new_embeddings, bits, vec_col, id_col), path, "bucket", "append"
     )
 
 
@@ -293,12 +296,10 @@ def lsh_index_topk(
     bucket predicate is a PartitionFilter — Spark lists only the
     probed directories (pinned in tests), so the scan cost is the
     probed buckets' rows, independent of table size."""
-    probes = probe_buckets(query, bits, nprobe)
-    idx = spark.read.parquet(path).filter(F.col("bucket").isin(probes))
-    scored = idx.select(
-        "vec_id", F.round(_cosine_vs_query(query)(F.col("v")), 6).alias("cos")
+    return _rerank_topk(
+        spark.read.parquet(path), "bucket", probe_buckets(query, bits, nprobe),
+        query, k,
     )
-    return scored.orderBy(F.desc("cos"), F.asc("vec_id")).limit(k)
 
 
 def fixed_random_centroids(k: int, dim: int) -> list[list[float]]:
@@ -323,29 +324,59 @@ def fixed_random_centroids(k: int, dim: int) -> list[list[float]]:
 
 
 def _assign_udf(centroids: list[list[float]], round_dp: int | None = None):
-    """pandas UDF: nearest-centroid id per row (cosine argmax, ties to
-    the lowest cid — np.argmax keeps the first maximum). ``round_dp``
-    rounds the similarities before the argmax so a cross-engine oracle
-    compares on a shared grid (BLAS pairwise summation vs a sequential
-    SQL sum differ in final ulps; after round-6 they agree unless the
-    true value sits within ~1e-15 of a 0.5e-6 boundary)."""
+    """pandas UDF: ``struct(cid, csim)`` per row — the nearest centroid
+    by cosine (argmax, ties to the lowest cid: np.argmax keeps the
+    first maximum) and that cosine, so a keep-policy downstream can
+    rank members by centroid proximity without a second Arrow pass.
+    ``round_dp`` rounds the similarities before the argmax so a
+    cross-engine oracle compares on a shared grid (BLAS pairwise
+    summation vs a sequential SQL sum differ in final ulps; after
+    round-6 they agree unless the true value sits within ~1e-15 of a
+    0.5e-6 boundary)."""
     c = np.asarray(centroids, dtype=np.float64)  # (k, dim)
     cn = np.sqrt(np.einsum("ij,ij->i", c, c))
     cn[cn == 0.0] = 1.0
     cu = c / cn[:, None]
 
-    @F.pandas_udf(IntegerType())
-    def assign(v: pd.Series) -> pd.Series:
+    @F.pandas_udf("cid int, csim double")
+    def assign(v: pd.Series) -> pd.DataFrame:
         m = _to_matrix(v)
         if m.shape[0] == 0:
-            return pd.Series([], dtype="int32")
+            return pd.DataFrame(
+                {
+                    "cid": pd.Series([], dtype="int32"),
+                    "csim": pd.Series([], dtype="float64"),
+                }
+            )
         sims = (m / _row_norms(m)[:, None]) @ cu.T  # (batch, k)
         if round_dp is not None:
             sims = np.round(sims, round_dp)
-        return pd.Series(np.argmax(sims, axis=1).astype("int32"))
+        idx = np.argmax(sims, axis=1)
+        return pd.DataFrame(
+            {
+                "cid": idx.astype("int32"),
+                "csim": sims[np.arange(len(idx)), idx],
+            }
+        )
 
     # pure; marker suppresses duplicate evaluation (see _pair_cosine)
     return assign.asNondeterministic()
+
+
+def _assigned(
+    embeddings: DataFrame,
+    centroids: list[list[float]],
+    vec_col: str,
+    id_col: str,
+    round_dp: int | None,
+) -> DataFrame:
+    """(vec_id, v, cid, csim): every vector with its IVF cell and its
+    cosine to that cell's centroid, in one narrow Arrow pass."""
+    return embeddings.select(
+        F.col(id_col).alias("vec_id"),
+        F.col(vec_col).cast("array<double>").alias("v"),
+        _assign_udf(centroids, round_dp)(F.col(vec_col)).alias("_a"),
+    ).select("vec_id", "v", "_a.cid", "_a.csim")
 
 
 def ivf_build_centroids(
@@ -400,11 +431,7 @@ def ivf_assign(
     inside the Arrow batch). At scale this is written ONCE with cid as
     a partition column; probes then prune partitions instead of
     scanning."""
-    return embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-        _assign_udf(centroids, round_dp)(F.col(vec_col)).alias("cid"),
-    )
+    return _assigned(embeddings, centroids, vec_col, id_col, round_dp).drop("csim")
 
 
 def ivf_topk(
@@ -436,10 +463,7 @@ def ivf_topk(
         )
 
     probe_cids = nearest_centroids(query, centroids, nprobe, round_dp=round_dp)
-    scored = assigned.filter(F.col("cid").isin(probe_cids)).select(
-        "vec_id", F.round(_cosine_vs_query(query)(F.col("v")), 6).alias("cos")
-    )
-    return scored.orderBy(F.desc("cos"), F.asc("vec_id")).limit(k)
+    return _rerank_topk(assigned, "cid", probe_cids, query, k)
 
 
 def nearest_centroids(
@@ -482,16 +506,18 @@ def write_ivf_index(
         embeddings, k=n_centroids, vec_col=vec_col, id_col=id_col
     )
     assigned = ivf_assign(embeddings, centroids, vec_col=vec_col, id_col=id_col)
-    (
-        assigned.repartition("cid")
-        .write.mode("overwrite")
-        .partitionBy("cid")
-        .parquet(f"{path}/vectors")
-    )
+    _write_cells(assigned, f"{path}/vectors", "cid", "overwrite")
     spark = embeddings.sparkSession
     spark.createDataFrame(
         [(i, c) for i, c in enumerate(centroids)], "cid int, c array<double>"
     ).write.mode("overwrite").parquet(f"{path}/centroids")
+
+
+def _stored_centroids(spark, path: str) -> list[list[float]]:
+    """The quantizer :func:`write_ivf_index` stored, in cid order —
+    k tiny rows, the only part of the index that reaches the driver."""
+    rows = spark.read.parquet(f"{path}/centroids").orderBy("cid").collect()
+    return [list(r["c"]) for r in rows]
 
 
 def append_ivf_index(
@@ -506,16 +532,9 @@ def append_ivf_index(
     when drift matters) and append their files into the matching cid
     partitions. O(increment) refresh; probes prune exactly as before.
     Caller owns id uniqueness across increments."""
-    spark = new_embeddings.sparkSession
-    cent_rows = spark.read.parquet(f"{path}/centroids").orderBy("cid").collect()
-    centroids = [list(r["c"]) for r in cent_rows]
+    centroids = _stored_centroids(new_embeddings.sparkSession, path)
     assigned = ivf_assign(new_embeddings, centroids, vec_col=vec_col, id_col=id_col)
-    (
-        assigned.repartition("cid")
-        .write.mode("append")
-        .partitionBy("cid")
-        .parquet(f"{path}/vectors")
-    )
+    _write_cells(assigned, f"{path}/vectors", "cid", "append")
 
 
 def ivf_index_topk(
@@ -528,16 +547,10 @@ def ivf_index_topk(
     """Query a materialized IVF index (:func:`write_ivf_index`): only
     the centroid table (k tiny rows) reaches the driver; the cid
     predicate prunes the vector partitions."""
-    cent_rows = spark.read.parquet(f"{path}/centroids").orderBy("cid").collect()
-    centroids = [list(r["c"]) for r in cent_rows]
-    probe_cids = nearest_centroids(query, centroids, nprobe)
-    idx = spark.read.parquet(f"{path}/vectors").filter(
-        F.col("cid").isin(probe_cids)
+    probe_cids = nearest_centroids(query, _stored_centroids(spark, path), nprobe)
+    return _rerank_topk(
+        spark.read.parquet(f"{path}/vectors"), "cid", probe_cids, query, k
     )
-    scored = idx.select(
-        "vec_id", F.round(_cosine_vs_query(query)(F.col("v")), 6).alias("cos")
-    )
-    return scored.orderBy(F.desc("cos"), F.asc("vec_id")).limit(k)
 
 
 def cosine_self_near_dup(
@@ -562,10 +575,8 @@ def cosine_self_near_dup(
     bucket-collect trick used by the lexical dedup ops does NOT
     transfer here: collecting raw embedding vectors into per-bucket
     arrays concentrates ~N/2^bits * dim floats into single rows."""
-    v = bucketed if bucketed is not None else embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("v"),
-        _bucket_udf(bits)(F.col(vec_col)).alias("bucket"),
+    v = bucketed if bucketed is not None else _bucketed(
+        embeddings, bits, vec_col, id_col
     )
     a, b = v.alias("a"), v.alias("b")
     return (
@@ -578,51 +589,6 @@ def cosine_self_near_dup(
         )
         .filter(F.col("cos") >= threshold)
     )
-
-
-def _assign_sim_udf(centroids: list[list[float]], round_dp: int | None = None):
-    """Like :func:`_assign_udf` but returns ``struct(cid, csim)`` —
-    the assigned centroid AND its (optionally rounded) cosine, so a
-    keep-policy downstream can rank members by centroid proximity
-    without a second Arrow pass. Same tie rule (first maximum =
-    lowest cid) and the same round-before-argmax oracle grid."""
-    from pyspark.sql.types import StructField, StructType
-
-    c = np.asarray(centroids, dtype=np.float64)  # (k, dim)
-    cn = np.sqrt(np.einsum("ij,ij->i", c, c))
-    cn[cn == 0.0] = 1.0
-    cu = c / cn[:, None]
-
-    @F.pandas_udf(
-        StructType(
-            [
-                StructField("cid", IntegerType()),
-                StructField("csim", DoubleType()),
-            ]
-        )
-    )
-    def assign(v: pd.Series) -> pd.DataFrame:
-        m = _to_matrix(v)
-        if m.shape[0] == 0:
-            return pd.DataFrame(
-                {
-                    "cid": pd.Series([], dtype="int32"),
-                    "csim": pd.Series([], dtype="float64"),
-                }
-            )
-        sims = (m / _row_norms(m)[:, None]) @ cu.T  # (batch, k)
-        if round_dp is not None:
-            sims = np.round(sims, round_dp)
-        idx = np.argmax(sims, axis=1)
-        return pd.DataFrame(
-            {
-                "cid": idx.astype("int32"),
-                "csim": sims[np.arange(len(idx)), idx],
-            }
-        )
-
-    # pure; marker suppresses duplicate evaluation (see _pair_cosine)
-    return assign.asNondeterministic()
 
 
 def semantic_dedup(
@@ -667,31 +633,15 @@ def semantic_dedup(
     pair similarities live on a shared decimal grid, so the full
     pipeline has a DuckDB twin (the ``knn_ivf`` oracle argument).
 
-    Cache contract (same as ``collocations``/``bm25_topk``): the
-    assignment frame stays persisted until the caller unpersists —
-    after materializing the result, ``spark.catalog.clearCache()``
-    (or unpersist selectively) in long-lived sessions that invoke
-    this repeatedly, as perfbench's ``contract_suite`` does between
-    queries.
+    The returned frame owns the persisted assignment: it is released
+    when the caller drops the frame (:func:`dedup._owning`). The
+    components' final local checkpoint has no owner yet.
     """
     if keep not in ("peripheral", "central", "min_id"):
         raise ValueError(f"unknown keep policy {keep!r}")
-    from .dedup import duplicate_components
+    from .dedup import _owning, duplicate_components
 
-    assigned = (
-        embeddings.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).cast("array<double>").alias("v"),
-            _assign_sim_udf(centroids, round_dp)(F.col(vec_col)).alias("_a"),
-        )
-        .select(
-            "vec_id",
-            "v",
-            F.col("_a.cid").alias("cid"),
-            F.col("_a.csim").alias("csim"),
-        )
-        .persist()
-    )
+    assigned = _assigned(embeddings, centroids, vec_col, id_col, round_dp).persist()
     pairs = cosine_self_near_dup(
         embeddings,
         threshold=threshold,
@@ -720,8 +670,9 @@ def semantic_dedup(
             .drop("_rk")
         )
         kept = members.filter(F.col("component_id").isNull()).unionByName(dups)
-    return kept.select(
+    out = kept.select(
         "vec_id",
         F.coalesce("component_id", "vec_id").alias("component_id"),
         "csim",
     )
+    return _owning(out, assigned)

@@ -13,6 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .dedup import _owning, _tokens
+
 # compact keyword panels for the JVM-side language heuristic — a
 # subset of rules/langdetect.py chosen for SQL expressibility
 _EN_PANEL = ("the", "and", "is", "with", "that", "for", "this", "have")
@@ -35,15 +37,16 @@ def lang_id(
     consumer comparing the prediction against a label column doesn't
     join back to the source (a join is a second corpus scan —
     Catalyst doesn't reuse the branch subtrees)."""
-    en = _hits(F.col(text_col), _EN_PANEL)
-    ind = _hits(F.col(text_col), _ID_PANEL)
-    return docs.select(
-        "doc_id",
-        *keep,
+    return docs.select("doc_id", *keep, _lang(F.col(text_col)).alias("predicted"))
+
+
+def _lang(text: Column) -> Column:
+    en = _hits(text, _EN_PANEL)
+    ind = _hits(text, _ID_PANEL)
+    return (
         F.when((ind >= 2) & (ind > en), F.lit("id"))
         .when(en >= 2, F.lit("en"))
         .otherwise(F.lit("other"))
-        .alias("predicted"),
     )
 
 
@@ -51,7 +54,7 @@ def token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, n_tokens, n_chars, n_alpha_tokens) — whitespace tokens
     plus a BPE-ish alpha-run count (letter runs = rough subword
     lower bound)."""
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = _tokens(text_col)
     alpha_runs = F.size(
         F.filter(
             F.split(F.col(text_col), r"[^A-Za-z]+"), lambda t: F.length(t) > 0
@@ -68,20 +71,26 @@ def token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
 _STOP_PANEL = ("the", "and", "of", "to", "in", "a", "is", "that")
 
 
-def quality_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-doc quality features + bucket: token count, mean word
-    length, punctuation ratio, stopword ratio — the classic
-    pretraining-filter features (C4/Gopher-style)."""
-    text = F.col(text_col)
-    toks = F.split(F.trim(text), r"\s+")
-    n_tokens = F.size(toks)
+def _quality_features(text: Column) -> tuple[Column, Column, Column, Column]:
+    """(n_tokens, mean_word_len, punct_ratio, stop_hits), the ratios on
+    the rounded grids the oracles compare."""
+    n_tokens = F.size(_tokens(text))
     n_chars = F.length(text)
     punct = n_chars - F.length(F.regexp_replace(text, r"[.!?,;:]", ""))
-    stop_hits = _hits(text, _STOP_PANEL)
     mean_word_len = F.round(
         (F.length(F.regexp_replace(text, r"\s+", "")) / n_tokens).cast("double"), 4
     )
     punct_ratio = F.round((punct / n_chars).cast("double"), 6)
+    return n_tokens, mean_word_len, punct_ratio, _hits(text, _STOP_PANEL)
+
+
+def quality_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """Per-doc quality features + bucket: token count, mean word
+    length, punctuation ratio, stopword ratio — the classic
+    pretraining-filter features (C4/Gopher-style)."""
+    n_tokens, mean_word_len, punct_ratio, stop_hits = _quality_features(
+        F.col(text_col)
+    )
     return docs.select(
         "doc_id",
         n_tokens.alias("n_tokens"),
@@ -212,11 +221,9 @@ def corpus_cardinality(
     tolerance-pins the sketch against (sketches legitimately differ
     across engines, so there is deliberately no DuckDB value-hash
     oracle for the approx form)."""
-    from smartglass_ocr_spark.ops.dedup import TOKEN_SPLIT
-
     rows = docs.select(
         F.md5(F.col(text_col)).alias("_h"),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), TOKEN_SPLIT)).alias("tok"),
+        F.explode(_tokens(F.lower(text_col))).alias("tok"),
     )
     if exact:
         nd_text = F.count_distinct(F.col("_h"))
@@ -260,7 +267,7 @@ def repetition_signals(
     rounding grid.
     """
     text = F.col(text_col)
-    toks = F.split(F.trim(text), r"\s+")
+    toks = _tokens(text)
     n = F.size(toks)
     bigram_n = F.greatest(F.lit(1), n - F.lit(1))
     trigram_n = F.greatest(F.lit(1), n - F.lit(2))
@@ -364,7 +371,7 @@ def vocab_topk(
     k-row heaps merged on the driver, never a full sort of the
     vocabulary. Ties break to the lexicographically smaller token so
     the result is deterministic and oracle-hashable."""
-    tok = F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("token")
+    tok = F.explode(_tokens(text_col)).alias("token")
     return (
         docs.select("doc_id", tok)
         .groupBy("token")
@@ -375,6 +382,41 @@ def vocab_topk(
         .orderBy(F.desc("n_occ"), F.asc("token"))
         .limit(k)
     )
+
+
+def _pair_counts(train: DataFrame, text_col: str) -> tuple[DataFrame, DataFrame]:
+    """The train side of every bigram statistic here, from ONE scan:
+    ``(P, uni)``. Catalyst never reuses identical branch subtrees, so
+    separate unigram, bigram and token-total aggs would be three
+    corpus passes. Instead one index explode emits sentinel-padded
+    adjacent pairs — ``(NULL, first)``, every ``(w_i, w_{i+1})``,
+    ``(last, NULL)`` — into ONE (tok_a, tok_b) count agg ``P``: the
+    unigram count ``uni.c1`` of ``t`` sums the pair counts with
+    ``tok_a = t`` (the trailing sentinel makes each occurrence a left
+    position exactly once), the token total sums ``c1``, and the
+    bigram counts are the non-sentinel rows. ``P`` is vocab²-bounded
+    and persisted; the caller's result owns it (:func:`dedup._owning`).
+    NULL-text docs are dropped up front, config-proof: with
+    spark.sql.legacy.sizeOfNull, size(NULL) is -1 and the explode
+    would emit phantom rows."""
+    arr = _tokens(text_col)
+    P = (
+        train.filter(F.col(text_col).isNotNull())
+        .select(arr.alias("_w"), F.explode(F.sequence(F.lit(0), F.size(arr))).alias("_i"))
+        .select(
+            F.get(F.col("_w"), F.col("_i") - 1).alias("tok_a"),
+            F.get(F.col("_w"), F.col("_i")).alias("tok_b"),
+        )
+        .groupBy("tok_a", "tok_b")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .persist()
+    )
+    uni = (
+        P.filter(F.col("tok_a").isNotNull())
+        .groupBy("tok_a")
+        .agg(F.sum("c").alias("c1"))
+    )
+    return P, uni
 
 
 def collocations(
@@ -391,39 +433,13 @@ def collocations(
     a libm last-ulp hazard; callers wanting true PMI take the log of
     ``lift_e6 / 1e6`` downstream, which is order-preserving.
 
-    Shape — the corpus is scanned ONCE. A naive build needs three
-    corpus passes (unigram agg, bigram agg, token total) because
-    Catalyst never reuses identical branch subtrees (the repo's
-    pinned trap class). Instead one index explode emits sentinel-
-    padded adjacent pairs — ``(NULL, first)``, every ``(w_i,
-    w_{i+1})``, ``(last, NULL)`` — and ONE (tok_a, tok_b) count agg
-    produces a pairs frame from which everything else derives by
-    plain arithmetic: unigram count of ``t`` = sum of pair counts
-    with ``tok_a = t`` (each occurrence is left-position exactly
-    once, thanks to the trailing sentinel), token total = sum over
-    non-null ``tok_a``, bigram counts = the non-sentinel rows. That
-    diamond intermediate is vocab²-bounded (orders of magnitude below
-    corpus size) and is ``persist()``-ed so the three consumers reuse
-    one scan — caching is Spark's mechanism for cross-branch reuse;
-    callers owning the session can ``.unpersist()`` the input of the
-    returned plan when done. The uni-count joins shuffle on word keys
-    (AQE handles skew); ``min_count`` prunes the bigram tail BEFORE
-    the joins. ``lift_e6`` is computed in explicitly-double IEEE
-    arithmetic mirrored by the oracle."""
-    arr = F.split(F.trim(F.col(text_col)), r"\s+")
-    pairs = docs.select(
-        arr.alias("_w"),
-        F.explode(F.sequence(F.lit(0), F.size(arr))).alias("_i"),
-    ).select(
-        F.get(F.col("_w"), F.col("_i") - 1).alias("tok_a"),
-        F.get(F.col("_w"), F.col("_i")).alias("tok_b"),
-    )
-    P = pairs.groupBy("tok_a", "tok_b").agg(F.count(F.lit(1)).alias("c")).persist()
-    uni = (
-        P.filter(F.col("tok_a").isNotNull())
-        .groupBy("tok_a")
-        .agg(F.sum("c").alias("c1"))
-    )
+    Shape — the corpus is scanned ONCE, into the persisted pair-count
+    diamond of :func:`_pair_counts`; the returned frame owns it. The
+    uni-count joins shuffle on word keys (AQE handles skew);
+    ``min_count`` prunes the bigram tail BEFORE the joins. ``lift_e6``
+    is computed in explicitly-double IEEE arithmetic mirrored by the
+    oracle."""
+    P, uni = _pair_counts(docs, text_col)
     total = uni.agg(F.sum("c1").alias("n_tok"))
     big = P.filter(
         F.col("tok_a").isNotNull()
@@ -432,7 +448,7 @@ def collocations(
     ).select("tok_a", "tok_b", F.col("c").alias("c_ab"))
     ua = uni.select("tok_a", F.col("c1").alias("c_a"))
     ub = uni.select(F.col("tok_a").alias("tok_b"), F.col("c1").alias("c_b"))
-    return (
+    out = (
         big.join(ua, "tok_a")
         .join(ub, "tok_b")
         .crossJoin(F.broadcast(total))
@@ -452,6 +468,74 @@ def collocations(
         .orderBy(F.desc("lift_e6"), F.asc("tok_a"), F.asc("tok_b"))
         .limit(k)
     )
+    return _owning(out, P)
+
+
+def _doc_bigrams(docs: DataFrame, text_col: str) -> DataFrame:
+    """The corpus side of the LMs: one (doc_id, w1, w2) row per token,
+    ``w2`` NULL on the last one, so a doc's row count is its token
+    count and its non-NULL ``w2`` rows are its bigrams. NULL-text docs
+    are dropped for the reason :func:`_pair_counts` gives."""
+    arr = _tokens(text_col)
+    return docs.filter(F.col(text_col).isNotNull()).select(
+        "doc_id",
+        arr.alias("_w"),
+        F.explode(F.sequence(F.lit(1), F.size(arr))).alias("pos"),
+    ).select(
+        "doc_id",
+        F.get(F.col("_w"), F.col("pos") - 1).alias("w1"),
+        F.get(F.col("_w"), F.col("pos")).alias("w2"),
+    )
+
+
+def _lm_side(
+    rows: DataFrame, train: DataFrame, text_col: str, sfx: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """``rows`` (from :func:`_doc_bigrams`) joined with one bigram
+    model trained on ``train`` — ``c_w1{sfx}``, ``c_w2{sfx}`` (unigram
+    counts, NULL when out of vocabulary) and ``c_ab{sfx}`` (bigram
+    count) — with the model's one-row ``n_tok{sfx}`` token total for
+    the caller to cross join after all its model joins, and the
+    persisted pair counts the caller's result must own. Both unigram
+    joins broadcast — a vocabulary is orders below corpus size — and
+    the bigram join is an equi-key join Catalyst/AQE sizes."""
+    P, uni = _pair_counts(train, text_col)
+    total = uni.agg(F.sum("c1").alias(f"n_tok{sfx}"))
+    big = P.filter(
+        F.col("tok_a").isNotNull() & F.col("tok_b").isNotNull()
+    ).select(
+        F.col("tok_a").alias("w1"),
+        F.col("tok_b").alias("w2"),
+        F.col("c").alias(f"c_ab{sfx}"),
+    )
+    u1 = uni.select(F.col("tok_a").alias("w1"), F.col("c1").alias(f"c_w1{sfx}"))
+    u2 = uni.select(F.col("tok_a").alias("w2"), F.col("c1").alias(f"c_w2{sfx}"))
+    joined = (
+        rows.join(F.broadcast(u1), "w1", "left")
+        .join(F.broadcast(u2), "w2", "left")
+        .join(big, ["w1", "w2"], "left")
+    )
+    return joined, F.broadcast(total), P
+
+
+def _score_ppm(alpha: float, sfx: str) -> Column:
+    """Stupid-backoff score of a bigram row on the integer millionths
+    grid: ``c(w1,w2)/c(w1)`` when the bigram was seen, else ``alpha *
+    c(w2)/T``; NULL on a doc's last token (no bigram)."""
+    return F.when(
+        F.col("w2").isNotNull(),
+        F.floor(
+            F.when(
+                F.col(f"c_ab{sfx}").isNotNull(),
+                F.col(f"c_ab{sfx}") / F.col(f"c_w1{sfx}"),
+            ).otherwise(
+                F.lit(alpha)
+                * F.coalesce(F.col(f"c_w2{sfx}"), F.lit(0))
+                / F.col(f"n_tok{sfx}")
+            )
+            * F.lit(1_000_000.0)
+        ).cast("bigint"),
+    )
 
 
 def lm_score(
@@ -459,7 +543,6 @@ def lm_score(
     train: DataFrame | None = None,
     alpha: float = 0.4,
     text_col: str = "text",
-    broadcast_vocab: bool = True,
 ) -> DataFrame:
     """N-gram language-model quality scoring — the CCNet-style
     "perplexity filter" a pretraining pipeline runs to rank documents
@@ -481,93 +564,29 @@ def lm_score(
     the operator because ``ln`` is a cross-engine libm last-ulp
     hazard (the repo's pinned trap from ``collocations``).
 
-    Shape (100 TB): the train side is scanned ONCE via the sentinel-
-    padded adjacent-pair frame (``collocations``' trick — unigram
-    counts, token total and bigram counts all derive from one
-    vocab²-bounded persisted agg, because Catalyst never reuses
-    branch subtrees). The corpus side explodes token rows once; the
-    two unigram joins broadcast when ``broadcast_vocab`` (a vocabulary
-    is orders below corpus size; pass False on a 100M+-type vocab and
-    AQE plans shuffle joins), the bigram join is an equi-key join
-    Catalyst/AQE sizes, and the final per-doc agg is the single
-    guaranteed corpus exchange.
+    Shape (100 TB): the train side is scanned ONCE into the persisted
+    pair-count diamond (:func:`_pair_counts`), which the returned
+    frame owns. The corpus side explodes token rows once
+    (:func:`_doc_bigrams`), :func:`_lm_side` broadcasts the two
+    vocabulary joins onto them, and the final per-doc agg is the
+    single guaranteed corpus exchange.
 
     ``train`` defaults to ``docs`` (self-scoring); the production use
     is a held-out clean corpus, which also exercises the backoff path
     (self-scoring never can — every doc bigram is in its own train
-    set by construction).
+    set by construction). NULL-text docs are excluded from scoring on
+    both sides (pinned by a NULL-text edge test).
     """
     train = docs if train is None else train
-    # NULL-text docs contribute no rows here today only by accident of
-    # config: size(NULL) is NULL (so the sequence explode emits
-    # nothing) unless spark.sql.legacy.sizeOfNull flips it to -1, in
-    # which case sequence(1,-1) is a DESCENDING [1,0,-1] emitting
-    # phantom bigrams (r4 ADVICE). Declare the drop: a scan-stage
-    # isnotnull is free and config-proof; NULL-text docs are excluded
-    # from scoring on both sides (pinned by a NULL-text edge test).
-    train = train.filter(F.col(text_col).isNotNull())
-    docs = docs.filter(F.col(text_col).isNotNull())
-    arr = F.split(F.trim(F.col(text_col)), r"\s+")
-    pairs = train.select(
-        arr.alias("_w"),
-        F.explode(F.sequence(F.lit(0), F.size(arr))).alias("_i"),
-    ).select(
-        F.get(F.col("_w"), F.col("_i") - 1).alias("tok_a"),
-        F.get(F.col("_w"), F.col("_i")).alias("tok_b"),
-    )
-    P = pairs.groupBy("tok_a", "tok_b").agg(F.count(F.lit(1)).alias("c")).persist()
-    uni = (
-        P.filter(F.col("tok_a").isNotNull())
-        .groupBy("tok_a")
-        .agg(F.sum("c").alias("c1"))
-    )
-    total = uni.agg(F.sum("c1").alias("n_tok"))
-    big = P.filter(
-        F.col("tok_a").isNotNull() & F.col("tok_b").isNotNull()
-    ).select(
-        F.col("tok_a").alias("w1"),
-        F.col("tok_b").alias("w2"),
-        F.col("c").alias("c_ab"),
-    )
-    u1 = uni.select(F.col("tok_a").alias("w1"), F.col("c1").alias("c_w1"))
-    u2 = uni.select(F.col("tok_a").alias("w2"), F.col("c1").alias("c_w2"))
-    if broadcast_vocab:
-        u1, u2 = F.broadcast(u1), F.broadcast(u2)
-    rows = docs.select(
-        "doc_id",
-        arr.alias("_w"),
-        F.explode(F.sequence(F.lit(1), F.size(arr))).alias("pos"),
-    ).select(
-        "doc_id",
-        F.get(F.col("_w"), F.col("pos") - 1).alias("w1"),
-        F.get(F.col("_w"), F.col("pos")).alias("w2"),
-    )
-    scored = (
-        rows.join(u1, "w1", "left")
-        .join(u2, "w2", "left")
-        .join(big, ["w1", "w2"], "left")
-        .crossJoin(F.broadcast(total))
+    scored, total, P = _lm_side(_doc_bigrams(docs, text_col), train, text_col, "")
+    out = (
+        scored.crossJoin(total)
         .select(
             "doc_id",
             F.col("c_w1").isNull().cast("int").alias("oov"),
-            F.when(
-                F.col("w2").isNotNull(),
-                F.floor(
-                    F.when(
-                        F.col("c_ab").isNotNull(),
-                        F.col("c_ab") / F.col("c_w1"),
-                    ).otherwise(
-                        F.lit(alpha)
-                        * F.coalesce(F.col("c_w2"), F.lit(0))
-                        / F.col("n_tok")
-                    )
-                    * F.lit(1_000_000.0)
-                ).cast("bigint"),
-            ).alias("score_ppm"),
+            _score_ppm(alpha, "").alias("score_ppm"),
         )
-    )
-    return (
-        scored.groupBy("doc_id")
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_tokens"),
             F.sum("oov").alias("n_oov"),
@@ -587,6 +606,7 @@ def lm_score(
             ).alias("avg_score_ppm"),
         )
     )
+    return _owning(out, P)
 
 
 def quality_filter(
@@ -639,22 +659,7 @@ def quality_filter(
     ``foreachBatch``.
     """
     text = F.col(text_col)
-    toks = F.split(F.trim(text), r"\s+")
-    n_tokens = F.size(toks)
-    n_chars = F.length(text)
-    punct = n_chars - F.length(F.regexp_replace(text, r"[.!?,;:]", ""))
-    stop_hits = _hits(text, _STOP_PANEL)
-    mean_word_len = F.round(
-        (F.length(F.regexp_replace(text, r"\s+", "")) / n_tokens).cast("double"), 4
-    )
-    punct_ratio = F.round((punct / n_chars).cast("double"), 6)
-    en = _hits(text, _EN_PANEL)
-    ind = _hits(text, _ID_PANEL)
-    predicted = (
-        F.when((ind >= 2) & (ind > en), F.lit("id"))
-        .when(en >= 2, F.lit("en"))
-        .otherwise(F.lit("other"))
-    )
+    n_tokens, mean_word_len, punct_ratio, stop_hits = _quality_features(text)
     n_pii = None
     for name, pat, _ in _PII_PATTERNS:
         c = F.size(F.regexp_extract_all(text, F.lit(pat), 0))
@@ -668,7 +673,7 @@ def quality_filter(
         mean_word_len.alias("mean_word_len"),
         punct_ratio.alias("punct_ratio"),
         stop_hits.alias("stop_hits"),
-        predicted.alias("predicted_lang"),
+        _lang(text).alias("predicted_lang"),
         n_pii.alias("n_pii"),
     ]
     rep = repetition_signals(docs, text_col).select(
@@ -754,7 +759,6 @@ def lm_contrast(
     background: DataFrame | None = None,
     alpha: float = 0.4,
     text_col: str = "text",
-    broadcast_vocab: bool = True,
 ) -> DataFrame:
     """DSIR-style importance weight (Xie et al. 2023,
     arXiv:2302.03169): per document, the contrast between a
@@ -771,96 +775,25 @@ def lm_contrast(
 
     Deliberately FUSED rather than composed from two
     :func:`lm_score` calls: the corpus-side token explode — the only
-    corpus-scale stage — runs ONCE, with both models' vocab/bigram
-    joins applied to the same rows (composition would explode the
+    corpus-scale stage — runs ONCE, with both models joined onto the
+    same rows by :func:`_lm_side` (composition would explode the
     corpus twice; Catalyst never reuses branch subtrees). The two
-    train-side sentinel-pair diamonds stay separate and vocab²-
-    bounded. ``background=None`` scores against ``docs`` itself
-    (the DSIR default: raw-corpus background).
+    train-side pair-count diamonds stay separate and vocab²-bounded;
+    the returned frame owns both. ``background=None`` scores against
+    ``docs`` itself (the DSIR default: raw-corpus background).
     """
     background = docs if background is None else background
-    # explicit NULL-text exclusion on every side — same config-proof
-    # guard as lm_score (sequence over size(NULL) must never emit)
-    docs = docs.filter(F.col(text_col).isNotNull())
-    target = target.filter(F.col(text_col).isNotNull())
-    background = background.filter(F.col(text_col).isNotNull())
-
-    def _side(train: DataFrame, sfx: str):
-        arr_t = F.split(F.trim(F.col(text_col)), r"\s+")
-        pairs = train.select(
-            arr_t.alias("_w"),
-            F.explode(F.sequence(F.lit(0), F.size(arr_t))).alias("_i"),
-        ).select(
-            F.get(F.col("_w"), F.col("_i") - 1).alias("tok_a"),
-            F.get(F.col("_w"), F.col("_i")).alias("tok_b"),
-        )
-        P = pairs.groupBy("tok_a", "tok_b").agg(F.count(F.lit(1)).alias("c")).persist()
-        uni = (
-            P.filter(F.col("tok_a").isNotNull())
-            .groupBy("tok_a")
-            .agg(F.sum("c").alias("c1"))
-        )
-        total = uni.agg(F.sum("c1").alias(f"n_tok{sfx}"))
-        big = P.filter(
-            F.col("tok_a").isNotNull() & F.col("tok_b").isNotNull()
-        ).select(
-            F.col("tok_a").alias("w1"),
-            F.col("tok_b").alias("w2"),
-            F.col("c").alias(f"c_ab{sfx}"),
-        )
-        u1 = uni.select(F.col("tok_a").alias("w1"), F.col("c1").alias(f"c_w1{sfx}"))
-        u2 = uni.select(F.col("tok_a").alias("w2"), F.col("c1").alias(f"c_w2{sfx}"))
-        if broadcast_vocab:
-            u1, u2 = F.broadcast(u1), F.broadcast(u2)
-        return u1, u2, big, total
-
-    u1t, u2t, bigt, tott = _side(target, "_t")
-    u1b, u2b, bigb, totb = _side(background, "_b")
-
-    arr = F.split(F.trim(F.col(text_col)), r"\s+")
-    rows = docs.select(
-        "doc_id",
-        arr.alias("_w"),
-        F.explode(F.sequence(F.lit(1), F.size(arr))).alias("pos"),
-    ).select(
-        "doc_id",
-        F.get(F.col("_w"), F.col("pos") - 1).alias("w1"),
-        F.get(F.col("_w"), F.col("pos")).alias("w2"),
-    )
-
-    def _score(sfx: str):
-        return F.when(
-            F.col("w2").isNotNull(),
-            F.floor(
-                F.when(
-                    F.col(f"c_ab{sfx}").isNotNull(),
-                    F.col(f"c_ab{sfx}") / F.col(f"c_w1{sfx}"),
-                ).otherwise(
-                    F.lit(alpha)
-                    * F.coalesce(F.col(f"c_w2{sfx}"), F.lit(0))
-                    / F.col(f"n_tok{sfx}")
-                )
-                * F.lit(1_000_000.0)
-            ).cast("bigint"),
-        )
-
-    scored = (
-        rows.join(u1t, "w1", "left")
-        .join(u2t, "w2", "left")
-        .join(bigt, ["w1", "w2"], "left")
-        .join(u1b, "w1", "left")
-        .join(u2b, "w2", "left")
-        .join(bigb, ["w1", "w2"], "left")
-        .crossJoin(F.broadcast(tott))
-        .crossJoin(F.broadcast(totb))
+    rows, tot_t, Pt = _lm_side(_doc_bigrams(docs, text_col), target, text_col, "_t")
+    rows, tot_b, Pb = _lm_side(rows, background, text_col, "_b")
+    out = (
+        rows.crossJoin(tot_t)
+        .crossJoin(tot_b)
         .select(
             "doc_id",
-            _score("_t").alias("s_t"),
-            _score("_b").alias("s_b"),
+            _score_ppm(alpha, "_t").alias("s_t"),
+            _score_ppm(alpha, "_b").alias("s_b"),
         )
-    )
-    return (
-        scored.groupBy("doc_id")
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_tokens"),
             F.sum("s_t").alias("_st"),
@@ -883,3 +816,4 @@ def lm_contrast(
             ).alias("weight"),
         )
     )
+    return _owning(out, Pt, Pb)

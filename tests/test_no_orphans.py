@@ -66,7 +66,6 @@ TEST_ONLY = {
     "compact_parquet": "storage-layout maintenance",
     "zorder_write": "storage-layout maintenance",
     "write_minhash_index": "incremental MinHash dedup",
-    "append_minhash_index": "incremental MinHash dedup",
     "duplicate_components_incremental": "incremental connected components",
     "write_bucketed_table": "bucketed managed tables",
     "stream_documents": "incremental ingest",

@@ -1172,12 +1172,11 @@ def test_incremental_minhash_composes_with_batch(spark):
 
 
 def test_incremental_minhash_file_backed_index(spark, tmp_path):
-    """write_minhash_index + append_minhash_index round-trip: dedup
-    against the on-disk store matches dedup against in-memory
-    signatures, and appending the increment leaves the store equal to
+    """write_minhash_index round-trip, then append: dedup against the
+    on-disk store matches dedup against in-memory signatures, and
+    appending the increment leaves the store equal to
     signatures(old ∪ new)."""
     from smartglass_ocr_spark.ops.dedup import (
-        append_minhash_index,
         minhash_band_signatures,
         minhash_lsh_candidates_incremental,
         write_minhash_index,
@@ -1203,7 +1202,7 @@ def test_incremental_minhash_file_backed_index(spark, tmp_path):
     }
     assert from_disk == in_mem
 
-    append_minhash_index(new, path)
+    write_minhash_index(new, path, mode="append")
     stored = {
         (r["doc_id"], r["band"], r["sig"])
         for r in spark.read.parquet(path).collect()

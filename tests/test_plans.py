@@ -201,11 +201,15 @@ def test_lm_score_cached_diamond_and_broadcasts(spark, queries):
     table) all hit the InMemoryRelation instead of re-deriving the
     corpus subtree; every vocabulary join is a BROADCAST (no
     SortMergeJoin anywhere, so corpus token rows cross exactly one
-    guaranteed exchange — the per-doc agg)."""
-    plan = _plan(queries["lm_score"](spark, SF))
-    assert plan.count("InMemoryTableScan") >= 3, plan
-    assert plan.count("BroadcastHashJoin") >= 3
-    assert "SortMergeJoin" not in plan
+    guaranteed exchange — the per-doc agg). ``lm_contrast`` joins two
+    such models onto one corpus explode; its floors are the counts
+    its plan had when both models' vocabulary joins were first made
+    unconditional broadcasts (8 scans, 6 broadcast joins)."""
+    for name, scans, broadcasts in (("lm_score", 3, 3), ("lm_contrast", 8, 6)):
+        plan = _plan(queries[name](spark, SF))
+        assert plan.count("InMemoryTableScan") >= scans, (name, plan)
+        assert plan.count("BroadcastHashJoin") >= broadcasts, (name, plan)
+        assert "SortMergeJoin" not in plan, name
 
 
 def test_curation_end_to_end_plan_budget(spark, queries):
@@ -227,14 +231,18 @@ def test_curation_end_to_end_plan_budget(spark, queries):
     assert len(re.findall(r"Exchange hashpartitioning", plan)) <= 68
 
 
-def test_curation_end_to_end_owns_its_persists(spark, queries):
+@pytest.mark.parametrize(
+    "name",
+    ["curation_end_to_end", "collocations", "lm_score", "lm_contrast", "bm25_topk"],
+)
+def test_query_owns_its_persists(spark, queries, name):
     """A one-query session ends with as many persistent RDDs as it
-    began with: the curation query's persisted frames and local
-    checkpoints live until the caller drops its result, and no
-    longer."""
+    began with: the query's persisted frames (and, for the curation
+    query, its local checkpoints) live until the caller drops its
+    result, and no longer."""
     persisted = spark.sparkContext._jsc.getPersistentRDDs
     before = persisted().size()
-    out = queries["curation_end_to_end"](spark, SF)
+    out = queries[name](spark, SF)
     out.collect()
     assert persisted().size() > before  # the query did read its caches
     del out
