@@ -11,6 +11,7 @@ emitted as epoch microseconds so no timestamp normalization is needed.
 
 from __future__ import annotations
 
+import weakref
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -307,7 +308,7 @@ def _q_vocab_topk(spark, sf_dir):
 def _q_collocations(spark, sf_dir):
     from smartglass_ocr_spark.ops.textstats import collocations
 
-    return collocations(_t(spark, sf_dir, "documents"), min_count=5, k=50)
+    return _owned(collocations, _t(spark, sf_dir, "documents"), min_count=5, k=50)
 
 
 def _q_pii_scrub(spark, sf_dir):
@@ -401,7 +402,7 @@ def _q_lm_score(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     train = docs.filter(F.col("source").isin("src0", "src1"))
-    return lm_score(docs, train=train)
+    return _owned(lm_score, docs, train=train)
 
 
 def _q_leakage_safe_split(spark, sf_dir):
@@ -441,7 +442,7 @@ def _q_bm25_topk(spark, sf_dir):
         F.col("doc_id").alias("query_id"),
         F.concat_ws(" ", F.slice(_tokens("text"), 1, 5)).alias("query_text"),
     )
-    return bm25_topk(docs, queries, k=5)
+    return _owned(bm25_topk, docs, queries, k=5)
 
 
 def _q_lm_contrast(spark, sf_dir):
@@ -453,7 +454,7 @@ def _q_lm_contrast(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     target = docs.filter(F.col("source").isin("src0", "src1"))
-    return lm_contrast(docs, target)
+    return _owned(lm_contrast, docs, target)
 
 
 def _q_shuffle_shard(spark, sf_dir):
@@ -633,11 +634,10 @@ def _q_curation_end_to_end(spark, sf_dir):
     survivor set) are persisted because Catalyst never reuses branch
     subtrees. The returned frame owns them and the MinHash components'
     local checkpoint: they are released when the caller drops it
-    (``ops.dedup._owning``)."""
+    (:func:`_owning`)."""
     from pyspark.sql import Window
 
     from smartglass_ocr_spark.ops.dedup import (
-        _owning,
         decontaminate,
         dedup_keep_list,
         duplicate_components,
@@ -689,8 +689,46 @@ def _q_curation_end_to_end(spark, sf_dir):
         packed.join(split, "doc_id").select(
             "doc_id", "split", "n_tokens", "pack_id", "pack_offset", "spans_boundary"
         ),
-        kept2, kept4, comps,
+        kept2, kept4, checkpoints=(comps,),
     )
+
+
+def _owning(
+    out: DataFrame, *cached: DataFrame, checkpoints: tuple[DataFrame, ...] = ()
+) -> DataFrame:
+    """``out``, owning the ``persist()``ed frames ``cached`` and the
+    local checkpoints the ``checkpoints`` frames read: they are
+    released once the caller drops the ``out`` object, unless the
+    session has stopped by then. A frame derived from ``out`` does not
+    keep them alive: it recomputes a released ``persist()``, but fails
+    on a released local checkpoint."""
+    from pyspark import SparkContext
+
+    from smartglass_ocr_spark.ops.dedup import release_local_checkpoints
+
+    def release() -> None:
+        if SparkContext._active_spark_context is not None:
+            for df in cached:
+                df.unpersist()
+            for df in checkpoints:
+                release_local_checkpoints(df)
+
+    weakref.finalize(out, release).atexit = False
+    return out
+
+
+def _owned(query: Callable[..., DataFrame], *args, **kwargs) -> DataFrame:
+    """``query(*args, **kwargs)``, owning (:func:`_owning`) every frame
+    the operators it calls cache through ``ops.dedup._persist``. Spark
+    keys a cache by plan, so releasing one also drops an identical
+    cache made elsewhere, which then recomputes."""
+    from smartglass_ocr_spark.ops.dedup import _HELD
+
+    token = _HELD.set([])
+    try:
+        return _owning(query(*args, **kwargs), *_HELD.get())
+    finally:
+        _HELD.reset(token)
 
 
 def _curation_oracle() -> str:
@@ -1038,8 +1076,8 @@ def _q_semantic_dedup(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
     dim = len(emb.select("embedding").first()[0])
     cents = fixed_random_centroids(8, dim)
-    return semantic_dedup(
-        emb, cents, threshold=0.3, keep="peripheral", round_dp=6
+    return _owned(
+        semantic_dedup, emb, cents, threshold=0.3, keep="peripheral", round_dp=6
     )
 
 

@@ -32,7 +32,7 @@ mass-duplicate buckets (run exact dedup first and neither fires).
 
 from __future__ import annotations
 
-import weakref
+from contextvars import ContextVar
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -689,24 +689,18 @@ def release_local_checkpoints(df: DataFrame) -> None:
             leaf.rdd().unpersist(False)
 
 
-def _owning(out: DataFrame, *cached: DataFrame) -> DataFrame:
-    """``out``, owning the persisted or locally checkpointed frames its
-    plan reads: they are released once the caller drops the ``out``
-    object, unless the session has stopped by then. A frame derived
-    from ``out`` does not keep them alive: it recomputes a released
-    ``persist()``, but fails on a released local checkpoint. Spark
-    keys a cache by plan, so releasing a ``persist()`` also drops an
-    identical one made elsewhere, which then recomputes too."""
-    from pyspark import SparkContext
+_HELD: ContextVar[list[DataFrame] | None] = ContextVar("_HELD", default=None)
 
-    def release() -> None:
-        if SparkContext._active_spark_context is not None:
-            for df in cached:
-                df.unpersist()
-                release_local_checkpoints(df)
 
-    weakref.finalize(out, release).atexit = False
-    return out
+def _persist(df: DataFrame) -> DataFrame:
+    """``df.persist()``. The operator's caller owns the cache
+    (``unpersist`` or ``clearCache`` releases it); a caller that sets
+    ``_HELD`` to a list first collects the persisted frames in it, to
+    release them itself (``__spark_entry__._owned``)."""
+    held = _HELD.get()
+    if held is not None:
+        held.append(df)
+    return df.persist()
 
 
 def dedup_keep_list(

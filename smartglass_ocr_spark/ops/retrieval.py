@@ -41,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import _owning, _tokens
+from .dedup import _persist, _tokens
 
 __all__ = ["bm25_topk"]
 
@@ -76,28 +76,26 @@ def bm25_topk(
     multi-term sums legitimately differ (documented deviation).
 
     Three internal frames (doc lengths, query terms, pruned postings)
-    are ``persist()``-ed because each has two consumers in the
-    returned plan and Catalyst never reuses branch subtrees. The
-    returned frame owns them: they are released when the caller drops
-    it (:func:`dedup._owning`).
+    are persisted because each has two consumers in the returned plan
+    and Catalyst never reuses branch subtrees; the caller owns the
+    caches (:func:`dedup._persist`).
     """
     if idf not in ("rational", "log"):
         raise ValueError(f"idf must be 'rational' or 'log', got {idf!r}")
     arr = _tokens(text_col)
 
     # corpus scan 1: slim (doc_id, dl) — persisted, two consumers
-    dl = docs.select(F.col(id_col).alias("doc_id"), F.size(arr).alias("dl")).persist()
+    dl = _persist(docs.select(F.col(id_col).alias("doc_id"), F.size(arr).alias("dl")))
     stats = dl.agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("n_tok")
     )
 
-    qt = (
+    # tiny by contract; consumers: term prune + score join
+    qt = _persist(
         queries.select(
             F.col(query_id_col).alias("query_id"),
             F.explode(_tokens(query_text_col)).alias("tok"),
-        )
-        .distinct()
-        .persist()  # tiny by contract; consumers: term prune + score join
+        ).distinct()
     )
     qterms = qt.select("tok").distinct()
 
@@ -105,11 +103,8 @@ def bm25_topk(
     # stage by the broadcast semi join — postings only past this point
     toks = docs.select(F.col(id_col).alias("doc_id"), F.explode(arr).alias("tok"))
     hits = toks.join(F.broadcast(qterms), "tok", "left_semi")
-    tf = (
-        hits.groupBy("doc_id", "tok")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .persist()  # consumers: df derivation + score join
-    )
+    # consumers: df derivation + score join
+    tf = _persist(hits.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf")))
     # one row per (doc, term) ⇒ count per term IS the document
     # frequency; |query terms| rows — broadcast back, never a
     # vocabulary-wide agg
@@ -143,7 +138,6 @@ def bm25_topk(
     w = Window.partitionBy("query_id").orderBy(
         F.col("score_ppm").desc(), F.col("doc_id").asc()
     )
-    out = scored.withColumn("rank", F.row_number().over(w)).filter(
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
         F.col("rank") <= k
     )
-    return _owning(out, dl, qt, tf)

@@ -633,15 +633,14 @@ def semantic_dedup(
     pair similarities live on a shared decimal grid, so the full
     pipeline has a DuckDB twin (the ``knn_ivf`` oracle argument).
 
-    The returned frame owns the persisted assignment: it is released
-    when the caller drops the frame (:func:`dedup._owning`). The
-    components' final local checkpoint has no owner yet.
+    The caller owns the assignment's cache (:func:`dedup._persist`).
+    The components' final local checkpoint has no owner yet.
     """
     if keep not in ("peripheral", "central", "min_id"):
         raise ValueError(f"unknown keep policy {keep!r}")
-    from .dedup import _owning, duplicate_components
+    from .dedup import _persist, duplicate_components
 
-    assigned = _assigned(embeddings, centroids, vec_col, id_col, round_dp).persist()
+    assigned = _persist(_assigned(embeddings, centroids, vec_col, id_col, round_dp))
     pairs = cosine_self_near_dup(
         embeddings,
         threshold=threshold,
@@ -670,9 +669,8 @@ def semantic_dedup(
             .drop("_rk")
         )
         kept = members.filter(F.col("component_id").isNull()).unionByName(dups)
-    out = kept.select(
+    return kept.select(
         "vec_id",
         F.coalesce("component_id", "vec_id").alias("component_id"),
         "csim",
     )
-    return _owning(out, assigned)

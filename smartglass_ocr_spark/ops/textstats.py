@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from .dedup import _owning, _tokens
+from .dedup import _persist, _tokens
 
 # compact keyword panels for the JVM-side language heuristic — a
 # subset of rules/langdetect.py chosen for SQL expressibility
@@ -395,12 +395,12 @@ def _pair_counts(train: DataFrame, text_col: str) -> tuple[DataFrame, DataFrame]
     ``tok_a = t`` (the trailing sentinel makes each occurrence a left
     position exactly once), the token total sums ``c1``, and the
     bigram counts are the non-sentinel rows. ``P`` is vocab²-bounded
-    and persisted; the caller's result owns it (:func:`dedup._owning`).
+    and persisted; the caller owns the cache (:func:`dedup._persist`).
     NULL-text docs are dropped up front, config-proof: with
     spark.sql.legacy.sizeOfNull, size(NULL) is -1 and the explode
     would emit phantom rows."""
     arr = _tokens(text_col)
-    P = (
+    P = _persist(
         train.filter(F.col(text_col).isNotNull())
         .select(arr.alias("_w"), F.explode(F.sequence(F.lit(0), F.size(arr))).alias("_i"))
         .select(
@@ -409,7 +409,6 @@ def _pair_counts(train: DataFrame, text_col: str) -> tuple[DataFrame, DataFrame]
         )
         .groupBy("tok_a", "tok_b")
         .agg(F.count(F.lit(1)).alias("c"))
-        .persist()
     )
     uni = (
         P.filter(F.col("tok_a").isNotNull())
@@ -434,7 +433,7 @@ def collocations(
     ``lift_e6 / 1e6`` downstream, which is order-preserving.
 
     Shape — the corpus is scanned ONCE, into the persisted pair-count
-    diamond of :func:`_pair_counts`; the returned frame owns it. The
+    diamond of :func:`_pair_counts`. The
     uni-count joins shuffle on word keys (AQE handles skew);
     ``min_count`` prunes the bigram tail BEFORE the joins. ``lift_e6``
     is computed in explicitly-double IEEE arithmetic mirrored by the
@@ -448,7 +447,7 @@ def collocations(
     ).select("tok_a", "tok_b", F.col("c").alias("c_ab"))
     ua = uni.select("tok_a", F.col("c1").alias("c_a"))
     ub = uni.select(F.col("tok_a").alias("tok_b"), F.col("c1").alias("c_b"))
-    out = (
+    return (
         big.join(ua, "tok_a")
         .join(ub, "tok_b")
         .crossJoin(F.broadcast(total))
@@ -468,7 +467,6 @@ def collocations(
         .orderBy(F.desc("lift_e6"), F.asc("tok_a"), F.asc("tok_b"))
         .limit(k)
     )
-    return _owning(out, P)
 
 
 def _doc_bigrams(docs: DataFrame, text_col: str) -> DataFrame:
@@ -490,13 +488,12 @@ def _doc_bigrams(docs: DataFrame, text_col: str) -> DataFrame:
 
 def _lm_side(
     rows: DataFrame, train: DataFrame, text_col: str, sfx: str
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame]:
     """``rows`` (from :func:`_doc_bigrams`) joined with one bigram
     model trained on ``train`` — ``c_w1{sfx}``, ``c_w2{sfx}`` (unigram
     counts, NULL when out of vocabulary) and ``c_ab{sfx}`` (bigram
     count) — with the model's one-row ``n_tok{sfx}`` token total for
-    the caller to cross join after all its model joins, and the
-    persisted pair counts the caller's result must own. Both unigram
+    the caller to cross join after all its model joins. Both unigram
     joins broadcast — a vocabulary is orders below corpus size — and
     the bigram join is an equi-key join Catalyst/AQE sizes."""
     P, uni = _pair_counts(train, text_col)
@@ -515,7 +512,7 @@ def _lm_side(
         .join(F.broadcast(u2), "w2", "left")
         .join(big, ["w1", "w2"], "left")
     )
-    return joined, F.broadcast(total), P
+    return joined, F.broadcast(total)
 
 
 def _score_ppm(alpha: float, sfx: str) -> Column:
@@ -565,8 +562,7 @@ def lm_score(
     hazard (the repo's pinned trap from ``collocations``).
 
     Shape (100 TB): the train side is scanned ONCE into the persisted
-    pair-count diamond (:func:`_pair_counts`), which the returned
-    frame owns. The corpus side explodes token rows once
+    pair-count diamond (:func:`_pair_counts`). The corpus side explodes token rows once
     (:func:`_doc_bigrams`), :func:`_lm_side` broadcasts the two
     vocabulary joins onto them, and the final per-doc agg is the
     single guaranteed corpus exchange.
@@ -578,8 +574,8 @@ def lm_score(
     both sides (pinned by a NULL-text edge test).
     """
     train = docs if train is None else train
-    scored, total, P = _lm_side(_doc_bigrams(docs, text_col), train, text_col, "")
-    out = (
+    scored, total = _lm_side(_doc_bigrams(docs, text_col), train, text_col, "")
+    return (
         scored.crossJoin(total)
         .select(
             "doc_id",
@@ -606,7 +602,6 @@ def lm_score(
             ).alias("avg_score_ppm"),
         )
     )
-    return _owning(out, P)
 
 
 def quality_filter(
@@ -778,14 +773,14 @@ def lm_contrast(
     corpus-scale stage — runs ONCE, with both models joined onto the
     same rows by :func:`_lm_side` (composition would explode the
     corpus twice; Catalyst never reuses branch subtrees). The two
-    train-side pair-count diamonds stay separate and vocab²-bounded;
-    the returned frame owns both. ``background=None`` scores against
+    train-side pair-count diamonds stay separate and vocab²-bounded.
+    ``background=None`` scores against
     ``docs`` itself (the DSIR default: raw-corpus background).
     """
     background = docs if background is None else background
-    rows, tot_t, Pt = _lm_side(_doc_bigrams(docs, text_col), target, text_col, "_t")
-    rows, tot_b, Pb = _lm_side(rows, background, text_col, "_b")
-    out = (
+    rows, tot_t = _lm_side(_doc_bigrams(docs, text_col), target, text_col, "_t")
+    rows, tot_b = _lm_side(rows, background, text_col, "_b")
+    return (
         rows.crossJoin(tot_t)
         .crossJoin(tot_b)
         .select(
@@ -816,4 +811,3 @@ def lm_contrast(
             ).alias("weight"),
         )
     )
-    return _owning(out, Pt, Pb)

@@ -105,9 +105,11 @@ def _module_name(path: Path) -> str:
     return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
 
 
-def _imports(tree: ast.AST, module: str) -> dict[str, str]:
+def _imports(tree: ast.AST, module: str, package: bool = False) -> dict[str, str]:
     """Local name -> the dotted name it is bound to, for every import
-    anywhere in ``tree`` (``from m import x as y`` binds y to ``m.x``)."""
+    anywhere in ``tree`` (``from m import x as y`` binds y to ``m.x``).
+    A relative import resolves against the module's package: ``module``
+    itself when ``package`` (an ``__init__``), else its parent."""
     bound: dict[str, str] = {}
     for node in ast.walk(tree):
         if isinstance(node, ast.Import):
@@ -120,7 +122,8 @@ def _imports(tree: ast.AST, module: str) -> dict[str, str]:
         elif isinstance(node, ast.ImportFrom):
             base = node.module or ""
             if node.level:
-                pkg = module.split(".")[: len(module.split(".")) - node.level + 1]
+                pkg = module.split(".") if package else module.split(".")[:-1]
+                pkg = pkg[: len(pkg) - node.level + 1]
                 base = ".".join(pkg + ([base] if base else []))
             for a in node.names:
                 bound[a.asname or a.name] = f"{base}.{a.name}"
@@ -135,9 +138,9 @@ class _Resolver:
         self.bound: dict[str, dict[str, str]] = {}  # module -> its imports
         self.by_name: dict[str, set[tuple[str, str]]] = {}
 
-    def add_module(self, module: str, tree: ast.Module, names: set[str]) -> None:
+    def add_module(self, module: str, tree: ast.Module, names: set[str], package: bool) -> None:
         self.defined[module] = names
-        self.bound[module] = _imports(tree, module)
+        self.bound[module] = _imports(tree, module, package)
         for name in names:
             self.by_name.setdefault(name, set()).add((module, name))
 
@@ -210,10 +213,10 @@ def _graph():
     node, roots as nodes)."""
     trees = {_module_name(p): (p, ast.parse(p.read_text())) for p in _py_files(PACKAGE)}
     resolve = _Resolver()
-    for module, (_, tree) in trees.items():
+    for module, (path, tree) in trees.items():
         names = {n for stmt in tree.body for n in (_defined_names(stmt) or ())
                  if not (n.startswith("__") and n.endswith("__"))}
-        resolve.add_module(module, tree, names)
+        resolve.add_module(module, tree, names, path.name == "__init__.py")
     defs: list[tuple[str, tuple[str, str], int]] = []
     edges: dict[tuple[str, str], set[tuple[str, str]]] = {}
     roots: set[tuple[str, str]] = set()

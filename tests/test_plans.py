@@ -249,6 +249,62 @@ def test_query_owns_its_persists(spark, queries, name):
     assert persisted().size() == before
 
 
+def test_semantic_dedup_query_owns_its_assignment(spark, queries):
+    """Dropping the ``semantic_dedup`` query's result releases exactly
+    one persistent RDD, the persisted assignment. The components'
+    final local checkpoint is not owned, so it stays."""
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    out = queries["semantic_dedup"](spark, SF)
+    out.collect()
+    held = persisted().size()
+    del out
+    assert persisted().size() == held - 1
+
+
+def test_owned_result_spares_a_checkpointed_input(spark):
+    """An owning result releases only the frames its operator
+    persisted: a local checkpoint in the caller's input lineage
+    survives it, so the input stays readable."""
+    from pyspark.sql import functions as F
+
+    from __spark_entry__ import _owned
+    from smartglass_ocr_spark.ops.retrieval import bm25_topk
+    from smartglass_ocr_spark.ops.textstats import lm_score
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").localCheckpoint()
+    n = docs.count()
+    queries = docs.filter(F.col("doc_id") % 50 == 0).select(
+        F.col("doc_id").alias("query_id"), F.col("text").alias("query_text")
+    )
+    for query, args in ((lm_score, ()), (bm25_topk, (queries, 2))):
+        out = _owned(query, docs, *args)
+        out.collect()
+        del out
+        assert docs.count() == n
+
+
+def test_derived_frame_reads_the_operator_caches(spark):
+    """A frame derived from an operator's result, the result itself
+    dropped, still reads the operator's persisted pair counts: the
+    caller owns them, not the result object."""
+    import gc
+
+    from pyspark.sql import functions as F
+
+    from smartglass_ocr_spark.ops.textstats import collocations, lm_contrast
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    target = docs.filter(F.col("source").isin("src0", "src1"))
+    derived = (
+        (lm_contrast(docs, target).join(docs.select("doc_id", "source"), "doc_id"), 8),
+        (collocations(docs, min_count=5, k=50).filter(F.col("c_ab") > 0), 4),
+    )
+    gc.collect()
+    for df, scans in derived:
+        assert _plan(df).count("InMemoryTableScan") >= scans
+    spark.catalog.clearCache()
+
+
 def test_curation_oracle_rejects_drifted_cte_body(monkeypatch):
     """The curation oracle's string-surgery guards raise (not assert,
     which ``python -O`` strips) when a shared CTE body declares a CTE
