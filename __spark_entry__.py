@@ -1402,8 +1402,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # verified instead by (a) golden-equality pytest against the seeded
 # corpus, (b) tests/test_reference_parity.py, which EXECUTES the
 # reference implementation (OCR deps stubbed) and asserts byte
-# equality per rule family, and (c) pipeline_fused asserted
-# bit-identical to the staged path. Everything else — including
+# equality per rule family, and (c) the fused path's rows asserted
+# equal to golden.golden_outputs field for field (the golden-equality
+# tests in tests/test_pipeline.py). Everything else — including
 # knn_ivf (fixed md5 quantizer + rounded-sim grid, r3) and
 # media_catalog / frame_sample (hash-parameterized md5 derivation,
 # r3) — has a value-hash DuckDB oracle below.

@@ -76,9 +76,7 @@ def _read_metrics(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(METRICS_SCHEMA).parquet(path)
 
 
-def ewma_metrics(
-    spark: SparkSession, metrics_path: str, alpha: float = 0.7
-) -> DataFrame:
+def ewma_metrics(spark: SparkSession, metrics_path: str) -> DataFrame:
     """A8 rolling-stat analogue (ref lib/smartglass_ocr.py:1022-1075:
     EWMA 0.7/0.3 success-rate accumulator): per partition, the
     exponentially weighted docs/sec across runs in run_id order —
@@ -96,6 +94,7 @@ def ewma_metrics(
     seqs still fold in a stated, deterministic order because run_id
     is the tie-break in the sort struct."""
     m = _read_metrics(spark, metrics_path)
+    alpha = 0.7
     runs = F.array_sort(
         F.collect_list(
             F.struct(

@@ -46,15 +46,13 @@ def process_span(kind: str, text: str | None) -> tuple[str, str | None]:
 
 
 def reading_order(span: dict) -> tuple:
-    """Sort key of a span in its document: its ``offset``. A NULL
-    offset sorts after every other one, and spans that share a NULL
-    offset order by (kind, text, media_ref), None first, so the order
-    never depends on the order the spans arrive in (``collect_list``
-    gives none). Equal non-NULL offsets keep their arrival order."""
-    offset = span["offset"]
-    if offset is not None:
-        return (0, offset)
-    return (1, *[(v is not None, v) for v in (span["kind"], span["text"], span["media_ref"])])
+    """Sort key of a span in its document: its ``offset``, a NULL one
+    after every other, then (kind, text, media_ref), None first. Spans
+    equal under the key are equal, so the order never depends on the
+    order the spans arrive in (``collect_list`` gives none)."""
+    offset, kind, text, ref = span["offset"], span["kind"], span["text"], span["media_ref"]
+    return (offset is None, offset, kind is not None, kind,
+            text is not None, text, ref is not None, ref)
 
 
 def truncate_doc_spans(

@@ -42,6 +42,9 @@ from .dedup import _tokens
 # ...) that the alphabet keeps as symbols
 _WORD_SEP_RX = re.compile(r"[ \t\n\x0b\f\r]+")
 
+# a merge needs its pair to occur at least this often
+_MIN_PAIR_COUNT = 2
+
 
 def _words(text: str) -> list[str]:
     """``text``'s words as the JVM side splits them, empties dropped."""
@@ -67,15 +70,13 @@ def _merge_word(syms: list[str], a: str, b: str) -> list[str]:
 def bpe_train(
     docs: DataFrame,
     n_merges: int = 50,
-    min_pair_count: int = 2,
-    text_col: str = "text",
     driver_vocab_threshold: int = 1_000_000,
 ) -> list[tuple[int, str, str, int]]:
     """Learn ``n_merges`` BPE merges from the corpus; returns
     ``[(rank, left, right, pair_count), ...]`` in merge order (the
-    artifact a tokenizer ships). Stops early when no pair reaches
-    ``min_pair_count``. The returned list is driver-side by design:
-    a merge table is ~10k-100k rows — model artifact, not data.
+    artifact a tokenizer ships). Stops early when no pair occurs
+    ``_MIN_PAIR_COUNT`` times. The returned list is driver-side by
+    design: a merge table is ~10k-100k rows — model artifact, not data.
 
     Hybrid execution, same result bit-for-bit (pytest-pinned): the
     corpus-scale work is ONLY the word-frequency agg. When the
@@ -91,7 +92,7 @@ def bpe_train(
     """
     spark = docs.sparkSession
     words = (
-        docs.select(F.explode(_tokens(text_col)).alias("w"))
+        docs.select(F.explode(_tokens()).alias("w"))
         .filter(F.length("w") > 0)
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -103,9 +104,7 @@ def bpe_train(
         rows = words.collect()
         words.unpersist()
         return _bpe_loop_local(
-            [(list(r["syms"]), int(r["cnt"])) for r in rows],
-            n_merges,
-            min_pair_count,
+            [(list(r["syms"]), int(r["cnt"])) for r in rows], n_merges
         )
     merge_pd = _make_merge_udf()
     merges: list[tuple[int, str, str, int]] = []
@@ -136,7 +135,7 @@ def bpe_train(
                 .limit(1)
                 .collect()
             )
-            if not top or top[0]["c"] < min_pair_count:
+            if not top or top[0]["c"] < _MIN_PAIR_COUNT:
                 break
             a, b, c = top[0]["a"], top[0]["b"], int(top[0]["c"])
             merges.append((rank, a, b, c))
@@ -154,9 +153,7 @@ def bpe_train(
 
 
 def _bpe_loop_local(
-    vocab: list[tuple[list[str], int]],
-    n_merges: int,
-    min_pair_count: int,
+    vocab: list[tuple[list[str], int]], n_merges: int
 ) -> list[tuple[int, str, str, int]]:
     """The merge loop over a collected word table — identical
     semantics to the distributed loop (same count-desc/lexicographic
@@ -172,7 +169,7 @@ def _bpe_loop_local(
         if not pairs:
             break
         (a, b), c = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))
-        if c < min_pair_count:
+        if c < _MIN_PAIR_COUNT:
             break
         merges.append((rank, a, b, int(c)))
         vocab = [(_merge_word(syms, a, b), cnt) for syms, cnt in vocab]
@@ -198,7 +195,7 @@ def bpe_merges_table(
     )
 
 
-def bpe_alphabet(docs: DataFrame, text_col: str = "text") -> list[str]:
+def bpe_alphabet(docs: DataFrame) -> list[str]:
     """The base-symbol vocabulary: every distinct non-whitespace
     character in the corpus, sorted by code point. One corpus scan
     into a distinct agg whose result is alphabet-sized (bounded by
@@ -210,7 +207,7 @@ def bpe_alphabet(docs: DataFrame, text_col: str = "text") -> list[str]:
             F.explode(
                 F.split(
                     F.regexp_replace(
-                        F.coalesce(F.col(text_col), F.lit("")), r"\s+", ""
+                        F.coalesce(F.col("text"), F.lit("")), r"\s+", ""
                     ),
                     "",
                 )
@@ -225,8 +222,6 @@ def bpe_alphabet(docs: DataFrame, text_col: str = "text") -> list[str]:
 def bpe_encode(
     docs: DataFrame,
     merges: list[tuple[int, str, str, int]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
     alphabet: list[str] | None = None,
 ) -> DataFrame:
     """Apply learned merges and emit the token-ID sequence a training
@@ -262,7 +257,7 @@ def bpe_encode(
 
     spark = docs.sparkSession
     if alphabet is None:
-        alphabet = bpe_alphabet(docs, text_col)
+        alphabet = bpe_alphabet(docs)
     vocab: dict[str, int] = {ch: i for i, ch in enumerate(alphabet)}
     n_alpha = len(vocab)
     for i, (_, a, b, _) in enumerate(merges):
@@ -289,6 +284,4 @@ def bpe_encode(
             lambda t: [i for w in _words(t) for i in seg(w)] if t else []
         )
 
-    return docs.select(
-        F.col(id_col).alias("doc_id"), enc(F.col(text_col)).alias("ids")
-    )
+    return docs.select("doc_id", enc(F.col("text")).alias("ids"))

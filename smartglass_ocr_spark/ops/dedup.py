@@ -44,16 +44,14 @@ def _tokens(col: str | F.Column = "text") -> F.Column:
     return F.split(F.trim(c), TOKEN_SPLIT)
 
 
-def exact_duplicate_clusters(
-    docs: DataFrame, text_col: str = "text", min_size: int = 2
-) -> DataFrame:
+def exact_duplicate_clusters(docs: DataFrame, min_size: int = 2) -> DataFrame:
     """md5-exact duplicate clusters of size >= min_size.
 
     Single hash-agg shuffle on the digest; partial aggregation
     (map-side combine) makes the shuffle carry one row per distinct
     digest per mapper."""
     return (
-        docs.groupBy(F.md5(F.col(text_col)).alias("text_md5"))
+        docs.groupBy(F.md5(F.col("text")).alias("text_md5"))
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.min("doc_id").alias("keep_doc_id"),
@@ -62,11 +60,11 @@ def exact_duplicate_clusters(
     )
 
 
-def normalized_dedupe(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def normalized_dedupe(docs: DataFrame) -> DataFrame:
     """O3 dedupe-by-normalized-form (ref lib/ocr_engines.py:817-847
     dedupes OCR lines by lower+despace; here per document): keep the
     smallest doc_id per canonical text."""
-    norm = F.lower(F.regexp_replace(F.col(text_col), r"\s+", " "))
+    norm = F.lower(F.regexp_replace(F.col("text"), r"\s+", " "))
     return (
         docs.groupBy(norm.alias("norm_text"))
         .agg(F.min("doc_id").alias("doc_id"), F.count(F.lit(1)).alias("n_dupes"))
@@ -84,14 +82,14 @@ def _gram_array(n: int, text_col: str | F.Column = "text") -> F.Column:
     )
 
 
-def _shingle_rows_raw(docs: DataFrame, n: int, text_col: str | F.Column) -> DataFrame:
-    """(doc_id, shingle) rows WITH duplicates — explode an index
-    sequence then project ``concat_ws(slice(tokens, i, n))`` with plain
-    codegen'd expressions. Deliberately NOT ``explode(_gram_array(...))``:
+def _shingle_rows_raw(docs: DataFrame, n: int) -> DataFrame:
+    """(doc_id, shingle) rows of ``text`` WITH duplicates — explode
+    an index sequence then project ``concat_ws(slice(tokens, i, n))``
+    with plain codegen'd expressions. Deliberately NOT ``explode(_gram_array(...))``:
     exploding a ``transform``-derived array re-evaluates the interpreted
     lambda under GenerateExec (the repo's measured ~100x trap class),
     while this shape stays inside WholeStageCodegen end to end."""
-    toks = _tokens(text_col)
+    toks = _tokens()
     count = F.greatest(F.lit(1), F.size(toks) - F.lit(n - 1))
     idx = docs.select(
         "doc_id",
@@ -108,7 +106,6 @@ def jaccard_pairs(
     docs: DataFrame,
     n: int = 5,
     threshold: float = 0.8,
-    text_col: str = "text",
     max_shingle_docs: int | None = 1000,
     max_bucket_docs: int | None = 1000,
 ) -> DataFrame:
@@ -153,7 +150,7 @@ def jaccard_pairs(
     pipeline's cap levers."""
     from pyspark.sql.window import Window
 
-    sh = _shingle_rows_raw(docs, n, text_col).repartition("doc_id").distinct()
+    sh = _shingle_rows_raw(docs, n).repartition("doc_id").distinct()
     if max_shingle_docs is not None:
         # document frequency per shingle, window over the same rows
         # (no second derivation of the corpus)
@@ -216,7 +213,7 @@ def jaccard_pairs(
 
 
 def minhash_band_signatures(
-    docs: DataFrame, bands: int = 8, n: int = 5, text_col: str = "text"
+    docs: DataFrame, bands: int = 8, n: int = 5
 ) -> DataFrame:
     """(doc_id, band, sig): per-band MinHash signature = lexical min of
     md5(band || ':' || shingle).
@@ -236,7 +233,7 @@ def minhash_band_signatures(
         # that rot(b) == rot(b-8) and band signatures silently repeat,
         # inflating LSH candidate recall
         raise ValueError(f"bands must be in 1..8, got {bands}")
-    sh = _shingle_rows_raw(docs, n, text_col)
+    sh = _shingle_rows_raw(docs, n)
     h = F.md5("shingle")
 
     def rot(b: int) -> F.Column:
@@ -262,7 +259,6 @@ def minhash_lsh_candidates(
     docs: DataFrame,
     bands: int = 8,
     n: int = 5,
-    text_col: str = "text",
     max_bucket_docs: int | None = 1000,
 ) -> DataFrame:
     """Candidate near-dup pairs: docs sharing any band signature
@@ -292,7 +288,7 @@ def minhash_lsh_candidates(
     standard pipeline order); the default 1000 keeps the widest
     surviving row at ~500k structs (~10 MB) and never fires on a
     corpus whose exact dups were already folded."""
-    sigs = minhash_band_signatures(docs, bands=bands, n=n, text_col=text_col)
+    sigs = minhash_band_signatures(docs, bands=bands, n=n)
     width_ok = (
         (F.size("_ds") <= max_bucket_docs)
         if max_bucket_docs is not None
@@ -319,13 +315,13 @@ def minhash_lsh_candidates(
     )
 
 
-def _simhash(docs: DataFrame, text_col: str, bits: int) -> DataFrame:
+def _simhash(docs: DataFrame, bits: int) -> DataFrame:
     """The one lane builder behind :func:`simhash32` (``bits=32``) and
     :func:`simhash64` (``bits=64``): ``bits`` signed lane sums in one
     partial-combining agg, then a static fold into a bigint."""
     toks = docs.select(
         "doc_id",
-        F.explode(_tokens(F.lower(text_col))).alias("tok"),
+        F.explode(_tokens(F.lower("text"))).alias("tok"),
     ).select("doc_id", F.md5("tok").alias("h"))
 
     def vote(i: int) -> F.Column:
@@ -352,7 +348,7 @@ def _simhash(docs: DataFrame, text_col: str, bits: int) -> DataFrame:
     return lane_sums.select("doc_id", sim.alias("simhash"))
 
 
-def simhash32(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def simhash32(docs: DataFrame) -> DataFrame:
     """32-bit SimHash per doc, entirely JVM-side and fully NARROW.
 
     Spec (shared with the SQL oracle): tokens = lowercase
@@ -372,10 +368,10 @@ def simhash32(docs: DataFrame, text_col: str = "text") -> DataFrame:
     blowup) and a higher-order-function in-row fold (interpreted
     lambdas, no codegen) — each ~15x slower than this shape.
     """
-    return _simhash(docs, text_col, 32)
+    return _simhash(docs, 32)
 
 
-def simhash64(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def simhash64(docs: DataFrame) -> DataFrame:
     """64-bit SimHash per doc — the width a banded Hamming search
     actually needs at scale. Same spec family as :func:`simhash32`
     (tf-weighted md5-derived lane votes, plain sum over occurrences),
@@ -390,7 +386,7 @@ def simhash64(docs: DataFrame, text_col: str = "text") -> DataFrame:
     CHANCE and the candidate set grows quadratically; 16-bit band
     keys (65,536 values) suppress chance collisions entirely, so
     candidates approach the true near-pair set."""
-    return _simhash(docs, text_col, 64)
+    return _simhash(docs, 64)
 
 
 def simhash64_column(text_col: str | F.Column = "text") -> F.Column:
@@ -458,9 +454,7 @@ def simhash_near_pairs(
     docs: DataFrame,
     max_hamming: int = 3,
     bands: int = 4,
-    text_col: str = "text",
     bits: int = 64,
-    max_bucket_docs: int | None = 1000,
 ) -> DataFrame:
     """SimHash near-duplicate pairs: docs whose simhash differs in at
     most ``max_hamming`` bits. (:func:`simhash64` / :func:`simhash32`
@@ -479,7 +473,8 @@ def simhash_near_pairs(
     32-bit variant's 8-bit band keys collide by chance at corpus
     scale (see :func:`simhash64`), measured 7.0 s vs 3.9 s at sf0.1
     on this box purely from chance-candidate blowup.
-    ``max_bucket_docs`` bounds the per-row pair fan-out exactly as in
+    Buckets wider than 1000 docs are dropped, bounding the per-row
+    pair fan-out exactly as ``max_bucket_docs`` does in
     :func:`minhash_lsh_candidates` (identical docs share the full
     fingerprint and land together in every band): run exact dedup
     first, then the cap never fires."""
@@ -494,7 +489,7 @@ def simhash_near_pairs(
         raise ValueError(f"bands must divide {bits}, got {bands}")
     width = bits // bands
     mask = (1 << width) - 1
-    sims = (simhash64 if bits == 64 else simhash32)(docs, text_col=text_col)
+    sims = (simhash64 if bits == 64 else simhash32)(docs)
     band_pairs = F.array(
         *[
             F.struct(
@@ -507,15 +502,10 @@ def simhash_near_pairs(
     banded = sims.select(
         "doc_id", "simhash", F.explode(band_pairs).alias("bp")
     ).select("doc_id", "simhash", "bp.band", "bp.bits")
-    width_ok = (
-        (F.size("_ms") <= max_bucket_docs)
-        if max_bucket_docs is not None
-        else F.lit(True)
-    )
     buckets = (
         banded.groupBy("band", "bits")
         .agg(F.array_sort(F.collect_list(F.struct("doc_id", "simhash"))).alias("_ms"))
-        .filter((F.size("_ms") > 1) & width_ok)
+        .filter((F.size("_ms") > 1) & (F.size("_ms") <= 1000))
     )
     pair_structs = F.flatten(
         F.transform(
@@ -707,7 +697,6 @@ def dedup_keep_list(
     docs: DataFrame,
     components: DataFrame,
     keep: str = "min_id",
-    text_col: str = "text",
     quality_col: str | None = None,
 ) -> DataFrame:
     """Surviving ``doc_id`` list after keeping exactly ONE document
@@ -718,7 +707,7 @@ def dedup_keep_list(
 
     - ``"min_id"``  — keep the component's minimum doc_id. Free: the
       component label IS that id, so the drop set needs no doc join.
-    - ``"longest"`` — keep the doc with the longest ``text_col``
+    - ``"longest"`` — keep the doc with the longest ``text``
       (training-data default: the longest copy usually carries the
       least truncation); ties break to the smaller doc_id.
     - ``"max_quality"`` — keep the doc with the highest
@@ -736,7 +725,7 @@ def dedup_keep_list(
         ).select("doc_id")
     elif keep in ("longest", "max_quality"):
         if keep == "longest":
-            metric = F.length(F.col(text_col))
+            metric = F.length(F.col("text"))
         else:
             if quality_col is None:
                 raise ValueError("keep='max_quality' requires quality_col")
@@ -761,9 +750,7 @@ def dedup_keep_list(
     return docs.join(drops, "doc_id", "left_anti").select("doc_id")
 
 
-def min_shingle_fingerprint(
-    n: int = 5, text_col: str | F.Column = "text"
-) -> F.Column:
+def min_shingle_fingerprint(text_col: str | F.Column = "text") -> F.Column:
     """The fingerprint as a bare column expression (name or derived
     Column) — fully narrow (in-row HOF fold). STREAMING-ONLY shape:
     a stream can't insert the groupBy shuffle the batch path uses, so
@@ -772,12 +759,12 @@ def min_shingle_fingerprint(
     :func:`fingerprint_min_shingle` instead (explode + codegen
     ``min(md5)`` agg — the HOF fold is interpreted per element and
     benched ~10x slower in this repo's minhash shape comparison)."""
-    return F.array_min(F.transform(_gram_array(n, text_col), lambda g: F.md5(g)))
+    return F.array_min(F.transform(_gram_array(5, text_col), lambda g: F.md5(g)))
 
 
-def fingerprint_min_shingle(docs: DataFrame, n: int = 5, text_col: str = "text") -> DataFrame:
+def fingerprint_min_shingle(docs: DataFrame) -> DataFrame:
     """Single-permutation document fingerprint: min md5 over word
-    n-gram shingles (winnowing-lite).
+    5-gram shingles (winnowing-lite).
 
     Batch shape (r2 VERDICT fix): explode the shingle indices (plain
     codegen generator, no lambdas) -> md5 once per shingle -> ONE
@@ -786,7 +773,7 @@ def fingerprint_min_shingle(docs: DataFrame, n: int = 5, text_col: str = "text")
     signature agg, and every md5 runs inside WholeStageCodegen
     instead of an interpreted ``transform`` lambda (duplicates can't
     change a min, so no distinct is needed)."""
-    sh = _shingle_rows_raw(docs, n, text_col)
+    sh = _shingle_rows_raw(docs, 5)
     return sh.groupBy("doc_id").agg(F.min(F.md5("shingle")).alias("fingerprint"))
 
 
@@ -794,7 +781,6 @@ def decontaminate(
     docs: DataFrame,
     benchmark: DataFrame,
     n: int = 8,
-    text_col: str = "text",
 ) -> DataFrame:
     """Benchmark decontamination (the GPT-3/PaLM-style n-gram overlap
     scrub a training-data pipeline runs before every release): flag
@@ -816,9 +802,9 @@ def decontaminate(
     ``sum``) so the DuckDB oracle stays BIGINT, not HUGEINT.
     """
     bench_grams = (
-        _shingle_rows_raw(benchmark, n, text_col).select("shingle").distinct()
+        _shingle_rows_raw(benchmark, n).select("shingle").distinct()
     )
-    grams = _shingle_rows_raw(docs.repartition("doc_id"), n, text_col).distinct()
+    grams = _shingle_rows_raw(docs.repartition("doc_id"), n).distinct()
     joined = grams.join(
         F.broadcast(bench_grams.withColumn("_hit", F.lit(1))), "shingle", "left"
     )
@@ -841,7 +827,6 @@ def passage_dedup(
     docs: DataFrame,
     n: int = 8,
     max_df: int = 2,
-    text_col: str = "text",
 ) -> DataFrame:
     """Cross-document duplicated-passage removal (the n-gram-granular
     form of Lee et al. 2022's exact-substring dedup, the pass C4/
@@ -877,11 +862,9 @@ def passage_dedup(
     """
     from pyspark.sql.window import Window
 
-    toks = _tokens(text_col)
+    toks = _tokens()
     hot = (
-        _shingle_rows_raw(
-            docs.filter(F.size(toks) >= n), n, text_col
-        )
+        _shingle_rows_raw(docs.filter(F.size(toks) >= n), n)
         .groupBy("shingle")
         .agg(F.count_distinct("doc_id").alias("_df"))
         .filter(F.col("_df") > max_df)
@@ -930,10 +913,7 @@ def passage_dedup(
     )
 
 
-def write_minhash_index(
-    docs: DataFrame, path: str, bands: int = 8, n: int = 5,
-    text_col: str = "text", mode: str = "error",
-) -> None:
+def write_minhash_index(docs: DataFrame, path: str, mode: str = "error") -> None:
     """Materialize the corpus's MinHash band signatures as a parquet
     signature index, partitioned by band — ~tens of bytes per doc per
     band, an order below the text it summarizes. This is the state
@@ -941,8 +921,7 @@ def write_minhash_index(
     :func:`minhash_lsh_candidates_incremental`). ``mode="append"``
     adds ONLY an increment's signatures — O(increment), the store is
     never read or rewritten."""
-    minhash_band_signatures(docs, bands=bands, n=n, text_col=text_col)\
-        .write.partitionBy("band").mode(mode).parquet(path)
+    minhash_band_signatures(docs).write.partitionBy("band").mode(mode).parquet(path)
 
 
 def minhash_lsh_candidates_incremental(
@@ -950,8 +929,6 @@ def minhash_lsh_candidates_incremental(
     store_sigs: DataFrame,
     bands: int = 8,
     n: int = 5,
-    text_col: str = "text",
-    max_bucket_docs: int | None = 1000,
 ) -> DataFrame:
     """Continuous-ingestion near-dup detection: candidate pairs that
     involve AT LEAST ONE new document, against a standing signature
@@ -968,14 +945,14 @@ def minhash_lsh_candidates_incremental(
     STREAMS with no shuffle and only matching rows (actual bucket
     colliders) continue. The union then bucket-collects exactly like
     the batch operator, and in-row pair generation keeps a pair only
-    if either side is new. ``max_bucket_docs`` measures the COMBINED
-    bucket width — identical semantics to running the batch operator
+    if either side is new. The 1000-doc bucket cap measures the
+    COMBINED bucket width — identical semantics to running the batch operator
     on store ∪ increment (pinned by pytest), so incremental results
     compose: batch(old ∪ new) == batch(old) ∪ incremental(new).
     """
-    new_sigs = minhash_band_signatures(
-        new_docs, bands=bands, n=n, text_col=text_col
-    ).withColumn("_new", F.lit(1))
+    new_sigs = minhash_band_signatures(new_docs, bands=bands, n=n).withColumn(
+        "_new", F.lit(1)
+    )
     matched = (
         store_sigs.join(
             F.broadcast(new_sigs.select("band", "sig").distinct()),
@@ -988,17 +965,12 @@ def minhash_lsh_candidates_incremental(
     all_sigs = new_sigs.select("doc_id", "band", "sig", "_new").unionByName(
         matched
     )
-    width_ok = (
-        (F.size("_ms") <= max_bucket_docs)
-        if max_bucket_docs is not None
-        else F.lit(True)
-    )
     buckets = (
         all_sigs.groupBy("band", "sig")
         .agg(
             F.array_sort(F.collect_list(F.struct("doc_id", "_new"))).alias("_ms")
         )
-        .filter((F.size("_ms") > 1) & width_ok)
+        .filter((F.size("_ms") > 1) & (F.size("_ms") <= 1000))
     )
     pairs = F.filter(
         F.flatten(
@@ -1026,11 +998,7 @@ def minhash_lsh_candidates_incremental(
 
 
 def duplicate_components_incremental(
-    new_pairs: DataFrame,
-    labeling: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    **component_kwargs,
+    new_pairs: DataFrame, labeling: DataFrame
 ) -> DataFrame:
     """Fold an increment's candidate pairs into an EXISTING
     (doc_id, component_id) labeling without re-clustering the corpus:
@@ -1053,8 +1021,8 @@ def duplicate_components_incremental(
     semi/anti joins, both pushed-down equi-joins.
     """
     nodes = (
-        new_pairs.select(F.col(a_col).alias("doc_id"))
-        .union(new_pairs.select(F.col(b_col).alias("doc_id")))
+        new_pairs.select(F.col("doc_a").alias("doc_id"))
+        .union(new_pairs.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
     touched = (
@@ -1064,13 +1032,8 @@ def duplicate_components_incremental(
     )
     affected = labeling.join(F.broadcast(touched), "component_id", "leftsemi")
     star = affected.select(
-        F.col("doc_id").alias(a_col), F.col("component_id").alias(b_col)
+        F.col("doc_id").alias("doc_a"), F.col("component_id").alias("doc_b")
     )
-    sub = duplicate_components(
-        star.unionByName(new_pairs.select(a_col, b_col)),
-        a_col=a_col,
-        b_col=b_col,
-        **component_kwargs,
-    )
+    sub = duplicate_components(star.unionByName(new_pairs.select("doc_a", "doc_b")))
     untouched = labeling.join(F.broadcast(touched), "component_id", "left_anti")
     return untouched.unionByName(sub)

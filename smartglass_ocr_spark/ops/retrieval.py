@@ -50,16 +50,11 @@ def bm25_topk(
     docs: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
     idf: str = "rational",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    query_id_col: str = "query_id",
-    query_text_col: str = "query_text",
 ) -> DataFrame:
     """Top-``k`` documents per query under BM25 (Robertson/Walker,
-    TREC-3), scored on the integer ppm grid.
+    TREC-3) with ``k1 = 1.2`` and ``b = 0.75``, scored on the integer
+    ppm grid.
 
     Per query term ``t`` in document ``d``::
 
@@ -82,10 +77,10 @@ def bm25_topk(
     """
     if idf not in ("rational", "log"):
         raise ValueError(f"idf must be 'rational' or 'log', got {idf!r}")
-    arr = _tokens(text_col)
+    arr = _tokens()
 
     # corpus scan 1: slim (doc_id, dl) — persisted, two consumers
-    dl = _persist(docs.select(F.col(id_col).alias("doc_id"), F.size(arr).alias("dl")))
+    dl = _persist(docs.select("doc_id", F.size(arr).alias("dl")))
     stats = dl.agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("n_tok")
     )
@@ -93,15 +88,15 @@ def bm25_topk(
     # tiny by contract; consumers: term prune + score join
     qt = _persist(
         queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.explode(_tokens(query_text_col)).alias("tok"),
+            "query_id",
+            F.explode(_tokens("query_text")).alias("tok"),
         ).distinct()
     )
     qterms = qt.select("tok").distinct()
 
     # corpus scan 2: token explode, pruned to query terms IN the scan
     # stage by the broadcast semi join — postings only past this point
-    toks = docs.select(F.col(id_col).alias("doc_id"), F.explode(arr).alias("tok"))
+    toks = docs.select("doc_id", F.explode(arr).alias("tok"))
     hits = toks.join(F.broadcast(qterms), "tok", "left_semi")
     # consumers: df derivation + score join
     tf = _persist(hits.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf")))
@@ -116,6 +111,7 @@ def bm25_topk(
     )
     if idf == "log":
         idf_c = F.log(idf_c + F.lit(1.0))
+    k1, b = 1.2, 0.75
     den = F.col("tf") + F.lit(k1) * (
         F.lit(1.0) - F.lit(b) + F.lit(b) * (F.col("dl") / avgdl)
     )

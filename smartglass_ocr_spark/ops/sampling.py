@@ -44,18 +44,17 @@ def hash_split(
     df: DataFrame,
     weights: dict[str, float] | None = None,
     key_col: str = "doc_id",
-    salt: str = "split",
 ) -> DataFrame:
     """Adds a deterministic ``split`` column ('train'/'val'/... per
     ``weights``, default 90/5/5). A document's split depends only on
-    (key, salt): stable under reshuffles, appends, and engine — the
-    property a 10^12-doc corpus needs so later ingests can't leak
-    val docs into train. Pure projection, zero shuffle."""
+    its key (salted ``"split"``): stable under reshuffles, appends,
+    and engine — the property a 10^12-doc corpus needs so later
+    ingests can't leak val docs into train. Pure projection, zero shuffle."""
     weights = weights or {"train": 0.90, "val": 0.05, "test": 0.05}
     total = sum(weights.values())
     if total <= 0:
         raise ValueError(f"weights must sum to > 0, got {weights}")
-    bucket = _hash_bucket(F.col(key_col), salt)
+    bucket = _hash_bucket(F.col(key_col), "split")
     expr: Column | None = None
     acc = 0.0
     *head, (last_name, _) = list(weights.items())
@@ -71,7 +70,6 @@ def hash_split(
 def hash_sample(
     df: DataFrame,
     rate: float,
-    key_col: str = "doc_id",
     salt: str = "sample",
 ) -> DataFrame:
     """Deterministic Bernoulli(rate) sample: keep rows whose md5
@@ -79,15 +77,13 @@ def hash_sample(
     no state); two samples with different salts are independent."""
     if not 0.0 <= rate <= 1.0:
         raise ValueError(f"rate must be in [0, 1], got {rate}")
-    return df.filter(_hash_bucket(F.col(key_col), salt) < int(round(rate * _BUCKETS)))
+    return df.filter(_hash_bucket(F.col("doc_id"), salt) < int(round(rate * _BUCKETS)))
 
 
 def stratified_sample(
     df: DataFrame,
     strata_col: str,
     n_per_stratum: int,
-    key_col: str = "doc_id",
-    salt: str = "strata",
 ) -> DataFrame:
     """Exactly ``n_per_stratum`` rows per stratum (fewer if the
     stratum is smaller), chosen by md5 rank — deterministic and
@@ -95,9 +91,9 @@ def stratified_sample(
     WindowGroupLimit pushes the per-partition rank cutoff below the
     shuffle, so only ~n rows per (stratum, input partition) move."""
     rank_key = F.md5(
-        F.concat_ws(":", F.col(key_col).cast("string"), F.lit(salt))
+        F.concat_ws(":", F.col("doc_id").cast("string"), F.lit("strata"))
     )
-    w = Window.partitionBy(strata_col).orderBy(rank_key, F.col(key_col).cast("string"))
+    w = Window.partitionBy(strata_col).orderBy(rank_key, F.col("doc_id").cast("string"))
     return (
         df.withColumn("_rk", F.row_number().over(w))
         .filter(F.col("_rk") <= n_per_stratum)
@@ -105,17 +101,14 @@ def stratified_sample(
     )
 
 
-def length_buckets(
-    docs: DataFrame,
-    text_col: str = "text",
-    edges: tuple[int, ...] = (64, 128, 256, 512, 1024),
-) -> DataFrame:
+def length_buckets(docs: DataFrame) -> DataFrame:
     """Token-length histogram for sequence packing / batch shaping:
     (bucket, n_docs, total_tokens), bucket = smallest edge >= token
     count (whitespace tokens), top bucket open-ended. One partial-
     combining hash-agg over |edges|+1 groups — aggregate state is a
     handful of rows regardless of corpus size."""
-    n_tokens = F.size(_tokens(text_col))
+    edges = (64, 128, 256, 512, 1024)
+    n_tokens = F.size(_tokens())
     bucket: Column = F.lit(f">{edges[-1]}")
     for e in reversed(edges):
         bucket = F.when(n_tokens <= e, F.lit(f"<={e}")).otherwise(bucket)
@@ -132,19 +125,15 @@ def length_buckets(
 def mixture_sample(
     docs: DataFrame,
     weights: dict[str, float],
-    source_col: str = "source",
-    key_col: str = "doc_id",
-    default_weight: float = 1.0,
-    salt: str = "mixture",
 ) -> DataFrame:
     """Domain-mixture resampling — the data-mixing step of a
     pretraining pipeline: downsample each source so the surviving
-    corpus approaches the target mixture ``weights`` (relative
-    proportions; unlisted sources get ``default_weight``, weight 0
-    drops the source). Deterministic Bernoulli per source: no source
-    is ever upsampled, so the achievable mixture is capped by the
-    scarcest source relative to its weight — that source keeps 100%
-    (rate 1.0) and every other source keeps ``w_s * C / n_s`` where
+    corpus approaches the target mixture ``weights`` over the
+    ``source`` column (relative proportions; unlisted sources get
+    weight 1.0, weight 0 drops the source). Deterministic Bernoulli per
+    source: no source is ever upsampled, so the achievable mixture is
+    capped by the scarcest source relative to its weight — that source
+    keeps 100% (rate 1.0) and every other source keeps ``w_s * C / n_s`` where
     ``C = min_t(n_t / w_t)``.
 
     Scale shape: per-source counts are ONE partial-combining hash agg
@@ -158,7 +147,7 @@ def mixture_sample(
     """
     if not weights:
         raise ValueError("weights must name at least one source")
-    if default_weight < 0 or any(w < 0 for w in weights.values()):
+    if any(w < 0 for w in weights.values()):
         raise ValueError("weights must be >= 0")
 
     def _w_of(col: Column) -> Column:
@@ -170,18 +159,18 @@ def mixture_sample(
                 if expr is None
                 else expr.when(cond, F.lit(float(w)))
             )
-        return expr.otherwise(F.lit(float(default_weight)))
+        return expr.otherwise(F.lit(1.0))
 
     counts = (
-        docs.groupBy(source_col)
+        docs.groupBy("source")
         .agg(F.count(F.lit(1)).alias("_n"))
-        .withColumn("_w", _w_of(F.col(source_col)))
+        .withColumn("_w", _w_of(F.col("source")))
     )
     cap = counts.filter(F.col("_w") > 0).agg(
         F.min(F.col("_n") / F.col("_w")).alias("_cap")
     )
     rates = counts.crossJoin(F.broadcast(cap)).select(
-        source_col,
+        "source",
         F.when(
             F.col("_w") > 0,
             F.least(F.lit(1.0), F.col("_w") * F.col("_cap") / F.col("_n")),
@@ -190,14 +179,14 @@ def mixture_sample(
         .alias("_rate"),
     )
     kept = (
-        docs.join(F.broadcast(rates), source_col)
+        docs.join(F.broadcast(rates), "source")
         .filter(
-            _hash_bucket(F.col(key_col), salt)
+            _hash_bucket(F.col("doc_id"), "mixture")
             < F.round(F.col("_rate") * _BUCKETS)
         )
         .drop("_rate")
     )
-    # restore the caller's column order (join moved source_col first)
+    # restore the caller's column order (join moved source first)
     return kept.select(*docs.columns)
 
 
@@ -205,17 +194,16 @@ def sequence_pack(
     doc_tokens: DataFrame,
     window: int = 2048,
     group_size: int = 100_000,
-    id_col: str = "doc_id",
     tokens_col: str = "n_tokens",
 ) -> DataFrame:
     """Sequence packing for pretraining (the GPT-style
     concat-then-chunk layout): lay every document's tokens end to end
-    in ``id_col`` order and cut a context window every ``window``
+    in ``doc_id`` order and cut a context window every ``window``
     tokens. Each doc gets the pack where it STARTS plus its offset in
     that pack, and a flag for docs straddling a window boundary
     (the ones an attention-masked packer would split or re-pad).
 
-    Input is a narrow ``(id, n_tokens)`` frame — in a real pipeline
+    Input is a narrow ``(doc_id, n_tokens)`` frame — in a real pipeline
     the already-materialized ``token_counts`` output — NOT the text
     table: packing needs only the counts, and the layout below scans
     its input twice, which is cheap on two BIGINT columns and ruinous
@@ -234,8 +222,8 @@ def sequence_pack(
     cumsum (the oracle computes exactly that), with no corpus-wide
     ordering anywhere.
     """
-    grp = F.floor(F.col(id_col) / F.lit(group_size))
-    flat = doc_tokens.select(F.col(id_col), F.col(tokens_col), grp.alias("grp"))
+    grp = F.floor(F.col("doc_id") / F.lit(group_size))
+    flat = doc_tokens.select(F.col("doc_id"), F.col(tokens_col), grp.alias("grp"))
     totals = flat.groupBy("grp").agg(F.sum(tokens_col).alias("_tot"))
     run = Window.orderBy("grp").rowsBetween(Window.unboundedPreceding, 0)
     prefixes = totals.select(
@@ -243,7 +231,7 @@ def sequence_pack(
     )
     within = (
         Window.partitionBy("grp")
-        .orderBy(id_col)
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     start = (
@@ -252,7 +240,7 @@ def sequence_pack(
     packed = flat.join(F.broadcast(prefixes), "grp").withColumn("_start", start)
     off = F.col("_start") % window
     return packed.select(
-        id_col,
+        "doc_id",
         tokens_col,
         F.floor(F.col("_start") / window).alias("pack_id"),
         off.alias("pack_offset"),
@@ -263,7 +251,6 @@ def sequence_pack(
 def shuffle_shard(
     df: DataFrame,
     n_shards: int,
-    key_col: str = "doc_id",
     seed: str = "epoch0",
     pre_partition: bool = False,
 ) -> DataFrame:
@@ -288,7 +275,7 @@ def shuffle_shard(
     """
     if n_shards < 1:
         raise ValueError(f"n_shards must be >= 1, got {n_shards}")
-    k = F.md5(F.concat_ws(":", F.col(key_col).cast("string"), F.lit(seed)))
+    k = F.md5(F.concat_ws(":", F.col("doc_id").cast("string"), F.lit(seed)))
     out = df.withColumn("_sk", k).withColumn(
         "shard",
         (F.conv(F.substring(F.col("_sk"), 1, 8), 16, 10).cast("bigint")
@@ -296,7 +283,7 @@ def shuffle_shard(
     )
     if pre_partition:
         out = out.repartition(n_shards, "shard")
-    w = Window.partitionBy("shard").orderBy("_sk", F.col(key_col).cast("string"))
+    w = Window.partitionBy("shard").orderBy("_sk", F.col("doc_id").cast("string"))
     return out.withColumn("pos", F.row_number().over(w)).drop("_sk")
 
 
@@ -304,11 +291,9 @@ def write_shuffle_shards(
     df: DataFrame,
     path: str,
     n_shards: int,
-    key_col: str = "doc_id",
-    seed: str = "epoch0",
-    mode: str = "error",
 ) -> None:
-    """Materialize one epoch of :func:`shuffle_shard` as a
+    """Materialize one epoch of :func:`shuffle_shard` (its default
+    key and seed) as a
     ``shard=K/`` partitioned parquet table with exactly one file per
     shard, rows inside each file already in ``pos`` order (the window
     sort doubles as the write order — training readers stream the
@@ -317,9 +302,8 @@ def write_shuffle_shards(
     AND lands each shard wholly in one task, so every ``shard=K/``
     directory holds exactly one file."""
     (
-        shuffle_shard(df, n_shards, key_col, seed, pre_partition=True)
+        shuffle_shard(df, n_shards, pre_partition=True)
         .write.partitionBy("shard")
-        .mode(mode)
         .parquet(path)
     )
 
@@ -328,8 +312,6 @@ def chunk_documents(
     docs: DataFrame,
     chunk_tokens: int = 128,
     overlap: int = 16,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Sliding-window document chunking — the pre-embedding step of a
     RAG / retrieval pipeline and the long-doc splitter of an
@@ -357,9 +339,9 @@ def chunk_documents(
     # operands, so without this filter a NULL-text doc emitted one
     # bogus chunk with empty text and n_chunk_tokens = chunk_tokens
     # (r4 ADVICE). Scan-stage isnotnull, free.
-    docs = docs.filter(F.col(text_col).isNotNull())
+    docs = docs.filter(F.col("text").isNotNull())
     stride = chunk_tokens - overlap
-    w = _tokens(text_col)
+    w = _tokens()
     n = F.size(w)
     n_chunks = F.lit(1) + F.floor(
         (F.greatest(F.lit(0), n - F.lit(chunk_tokens)) + F.lit(stride - 1))
@@ -368,7 +350,7 @@ def chunk_documents(
     start = F.lit(1) + F.col("chunk_id") * F.lit(stride)
     return (
         docs.select(
-            F.col(id_col).alias("doc_id"),
+            "doc_id",
             w.alias("_w"),
             n.alias("_n"),
             F.explode(F.sequence(F.lit(0), n_chunks - F.lit(1))).alias("chunk_id"),
@@ -386,17 +368,11 @@ def chunk_documents(
     )
 
 
-def leakage_safe_split(
-    docs: DataFrame,
-    components: DataFrame,
-    weights: dict[str, float] | None = None,
-    key_col: str = "doc_id",
-    salt: str = "split",
-) -> DataFrame:
-    """:func:`hash_split` with the near-duplicate leak closed: every
-    member of a duplicate component hashes on its COMPONENT label,
-    not its own id, so near-identical documents can never straddle
-    train and eval (the contamination mode whole-corpus dedup papers
+def leakage_safe_split(docs: DataFrame, components: DataFrame) -> DataFrame:
+    """:func:`hash_split` (default weights) with the near-duplicate
+    leak closed: every member of a duplicate component hashes on its
+    COMPONENT label, not its own id, so near-identical documents can
+    never straddle train and eval (the contamination mode whole-corpus dedup papers
     flag — splitting before/without dedup leaks eval text into train
     verbatim-ish). ``components`` is any (doc_id, component_id)
     labeling — :func:`ops.dedup.duplicate_components` over
@@ -415,16 +391,11 @@ def leakage_safe_split(
     duplicate of a train doc lands in train by construction).
     """
     comp = F.broadcast(
-        components.select(
-            F.col("doc_id").alias(key_col), F.col("component_id").alias("_cid")
-        )
+        components.select("doc_id", F.col("component_id").alias("_cid"))
     )
-    joined = docs.join(comp, key_col, "left")
-    effective = F.coalesce(F.col("_cid"), F.col(key_col))
+    joined = docs.join(comp, "doc_id", "left")
+    effective = F.coalesce(F.col("_cid"), F.col("doc_id"))
     out = hash_split(
-        joined.withColumn("_split_key", effective),
-        weights=weights,
-        key_col="_split_key",
-        salt=salt,
+        joined.withColumn("_split_key", effective), key_col="_split_key"
     )
     return out.drop("_cid", "_split_key")

@@ -127,14 +127,12 @@ def _bucket_udf(bits: int):
     return bucket.asNondeterministic()
 
 
-def _bucketed(
-    embeddings: DataFrame, bits: int, vec_col: str, id_col: str
-) -> DataFrame:
+def _bucketed(embeddings: DataFrame, bits: int) -> DataFrame:
     """The LSH index row: (vec_id, v, bucket)."""
     return embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("v"),
-        _bucket_udf(bits)(F.col(vec_col)).alias("bucket"),
+        "vec_id",
+        F.col("embedding").alias("v"),
+        _bucket_udf(bits)(F.col("embedding")).alias("bucket"),
     )
 
 
@@ -163,14 +161,12 @@ def cosine_topk(
     embeddings: DataFrame,
     query: list[float],
     k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Exact top-k by cosine vs a query vector; deterministic tie-break
     on id. Returns (vec_id, rank, cos)."""
     scored = embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        F.round(_cosine_vs_query(query)(F.col(vec_col)), 6).alias("cos"),
+        "vec_id",
+        F.round(_cosine_vs_query(query)(F.col("embedding")), 6).alias("cos"),
     )
     # limit-k first (per-partition TakeOrdered + merge, no full sort),
     # then rank the k survivors. The partition key must be NON-FOLDABLE
@@ -229,8 +225,6 @@ def lsh_bucketed_topk(
     k: int = 10,
     bits: int = 8,
     nprobe: int = 1,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Approximate top-k: probe the query's LSH bucket (plus the
     ``nprobe - 1`` nearest flipped buckets — multi-probe LSH), exact
@@ -240,7 +234,7 @@ def lsh_bucketed_topk(
     over ``nprobe`` partitions. Query-side buckets are computed
     driver-side (same md5 planes)."""
     return _rerank_topk(
-        _bucketed(embeddings, bits, vec_col, id_col),
+        _bucketed(embeddings, bits),
         "bucket", probe_buckets(query, bits, nprobe), query, k,
     )
 
@@ -249,8 +243,6 @@ def write_lsh_index(
     embeddings: DataFrame,
     path: str,
     bits: int = 8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> None:
     """Materialize the LSH index: the table rewritten ONCE with the
     bucket as a parquet partition column. Probes then read only the
@@ -258,17 +250,13 @@ def write_lsh_index(
     ~nprobe/2^bits of the data via partition PRUNING, no scan-and-
     filter. One bucket-clustered shuffle at build time; amortized
     across every subsequent query."""
-    _write_cells(
-        _bucketed(embeddings, bits, vec_col, id_col), path, "bucket", "overwrite"
-    )
+    _write_cells(_bucketed(embeddings, bits), path, "bucket", "overwrite")
 
 
 def append_lsh_index(
     new_embeddings: DataFrame,
     path: str,
     bits: int = 8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> None:
     """Incremental index maintenance (continuous-ingestion twin of
     the rollup refresh): bucket ONLY the new vectors and APPEND their
@@ -279,9 +267,7 @@ def append_lsh_index(
     would put them in (pytest-pinned: append ≡ rebuild for every
     probe). Caller owns id uniqueness across increments (re-appending
     a vec_id duplicates it, like any append-only table)."""
-    _write_cells(
-        _bucketed(new_embeddings, bits, vec_col, id_col), path, "bucket", "append"
-    )
+    _write_cells(_bucketed(new_embeddings, bits), path, "bucket", "append")
 
 
 def lsh_index_topk(
@@ -366,16 +352,14 @@ def _assign_udf(centroids: list[list[float]], round_dp: int | None = None):
 def _assigned(
     embeddings: DataFrame,
     centroids: list[list[float]],
-    vec_col: str,
-    id_col: str,
     round_dp: int | None,
 ) -> DataFrame:
     """(vec_id, v, cid, csim): every vector with its IVF cell and its
     cosine to that cell's centroid, in one narrow Arrow pass."""
     return embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-        _assign_udf(centroids, round_dp)(F.col(vec_col)).alias("_a"),
+        "vec_id",
+        F.col("embedding").cast("array<double>").alias("v"),
+        _assign_udf(centroids, round_dp)(F.col("embedding")).alias("_a"),
     ).select("vec_id", "v", "_a.cid", "_a.csim")
 
 
@@ -383,8 +367,6 @@ def ivf_build_centroids(
     embeddings: DataFrame,
     k: int = 16,
     iters: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> list[list[float]]:
     """Deterministic IVF coarse quantizer: k seed vectors chosen by
     hash (pmod(xxhash64(id), ...) — stable under row order), refined
@@ -395,15 +377,15 @@ def ivf_build_centroids(
     n = embeddings.count()
     stride = max(1, n // k)
     seeds = (
-        embeddings.filter(F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(stride)) == 0)
-        .orderBy(id_col)
+        embeddings.filter(F.pmod(F.xxhash64(F.col("vec_id").cast("string")), F.lit(stride)) == 0)
+        .orderBy("vec_id")
         .limit(k)
-        .select(F.col(vec_col).cast("array<double>").alias("c"))
+        .select(F.col("embedding").cast("array<double>").alias("c"))
         .collect()
     )
     centroids = [list(r["c"]) for r in seeds]
     for _ in range(iters):
-        assigned = ivf_assign(embeddings, centroids, vec_col=vec_col, id_col=id_col)
+        assigned = ivf_assign(embeddings, centroids)
         means = (
             assigned.select("cid", F.posexplode("v").alias("d", "x"))
             .groupBy("cid", "d")
@@ -421,8 +403,6 @@ def ivf_build_centroids(
 def ivf_assign(
     embeddings: DataFrame,
     centroids: list[list[float]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     round_dp: int | None = None,
 ) -> DataFrame:
     """(vec_id, v, cid): nearest-centroid bucket per vector — ONE
@@ -431,17 +411,14 @@ def ivf_assign(
     inside the Arrow batch). At scale this is written ONCE with cid as
     a partition column; probes then prune partitions instead of
     scanning."""
-    return _assigned(embeddings, centroids, vec_col, id_col, round_dp).drop("csim")
+    return _assigned(embeddings, centroids, round_dp).drop("csim")
 
 
 def ivf_topk(
     embeddings: DataFrame,
     query: list[float],
     k: int = 10,
-    n_centroids: int = 16,
     nprobe: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     centroids: list[list[float]] | None = None,
     assigned: DataFrame | None = None,
     round_dp: int | None = None,
@@ -454,13 +431,9 @@ def ivf_topk(
     probe similarities on a fixed decimal grid (oracle mode — see
     :func:`fixed_random_centroids`)."""
     if centroids is None:
-        centroids = ivf_build_centroids(
-            embeddings, k=n_centroids, vec_col=vec_col, id_col=id_col
-        )
+        centroids = ivf_build_centroids(embeddings)
     if assigned is None:
-        assigned = ivf_assign(
-            embeddings, centroids, vec_col=vec_col, id_col=id_col, round_dp=round_dp
-        )
+        assigned = ivf_assign(embeddings, centroids, round_dp=round_dp)
 
     probe_cids = nearest_centroids(query, centroids, nprobe, round_dp=round_dp)
     return _rerank_topk(assigned, "cid", probe_cids, query, k)
@@ -494,18 +467,14 @@ def write_ivf_index(
     embeddings: DataFrame,
     path: str,
     n_centroids: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> None:
     """Materialize the IVF index: vectors rewritten ONCE partitioned
     by their coarse-quantizer cell, centroids stored beside them.
     Probes then read only the ``nprobe`` nearest cells via partition
     pruning (pinned in tests) — the build shuffle is amortized across
     every query."""
-    centroids = ivf_build_centroids(
-        embeddings, k=n_centroids, vec_col=vec_col, id_col=id_col
-    )
-    assigned = ivf_assign(embeddings, centroids, vec_col=vec_col, id_col=id_col)
+    centroids = ivf_build_centroids(embeddings, k=n_centroids)
+    assigned = ivf_assign(embeddings, centroids)
     _write_cells(assigned, f"{path}/vectors", "cid", "overwrite")
     spark = embeddings.sparkSession
     spark.createDataFrame(
@@ -520,12 +489,7 @@ def _stored_centroids(spark, path: str) -> list[list[float]]:
     return [list(r["c"]) for r in rows]
 
 
-def append_ivf_index(
-    new_embeddings: DataFrame,
-    path: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> None:
+def append_ivf_index(new_embeddings: DataFrame, path: str) -> None:
     """Incremental IVF maintenance: assign ONLY the new vectors
     against the index's STORED centroids (quantizer frozen at build
     time — the standard IVF ingestion contract; retrain by rebuilding
@@ -533,7 +497,7 @@ def append_ivf_index(
     partitions. O(increment) refresh; probes prune exactly as before.
     Caller owns id uniqueness across increments."""
     centroids = _stored_centroids(new_embeddings.sparkSession, path)
-    assigned = ivf_assign(new_embeddings, centroids, vec_col=vec_col, id_col=id_col)
+    assigned = ivf_assign(new_embeddings, centroids)
     _write_cells(assigned, f"{path}/vectors", "cid", "append")
 
 
@@ -557,8 +521,6 @@ def cosine_self_near_dup(
     embeddings: DataFrame,
     threshold: float = 0.95,
     bits: int = 8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     bucketed: DataFrame | None = None,
 ) -> DataFrame:
     """Embedding near-duplicate pairs: LSH bucket self-join + exact
@@ -575,9 +537,7 @@ def cosine_self_near_dup(
     bucket-collect trick used by the lexical dedup ops does NOT
     transfer here: collecting raw embedding vectors into per-bucket
     arrays concentrates ~N/2^bits * dim floats into single rows."""
-    v = bucketed if bucketed is not None else _bucketed(
-        embeddings, bits, vec_col, id_col
-    )
+    v = bucketed if bucketed is not None else _bucketed(embeddings, bits)
     a, b = v.alias("a"), v.alias("b")
     return (
         a.join(b, "bucket")
@@ -597,9 +557,6 @@ def semantic_dedup(
     threshold: float = 0.95,
     keep: str = "peripheral",
     round_dp: int | None = None,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    max_iters: int = 25,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     near-duplicate removal over an embedding column — cluster with a
@@ -640,14 +597,14 @@ def semantic_dedup(
         raise ValueError(f"unknown keep policy {keep!r}")
     from .dedup import _persist, duplicate_components
 
-    assigned = _persist(_assigned(embeddings, centroids, vec_col, id_col, round_dp))
+    assigned = _persist(_assigned(embeddings, centroids, round_dp))
     pairs = cosine_self_near_dup(
         embeddings,
         threshold=threshold,
         bucketed=assigned.select("vec_id", "v", F.col("cid").alias("bucket")),
     )
     comps = duplicate_components(
-        pairs, a_col="vec_a", b_col="vec_b", max_iters=max_iters
+        pairs, a_col="vec_a", b_col="vec_b"
     ).withColumnRenamed("doc_id", "vec_id")
     members = assigned.select("vec_id", "csim").join(comps, "vec_id", "left")
     if keep == "min_id":

@@ -111,12 +111,12 @@ def zorder_write(
     path: str,
     bits: int = 4,
     n_files: int = 16,
-    rel_err: float = 0.01,
 ) -> None:
     """Write ``df`` to ``path`` clustered by the z-order (Morton
     curve) of ``cols``: each column is quantile-bucketed into
-    ``2**bits`` ranks (boundaries from ``approxQuantile`` — a
-    Greenwald-Khanna pass per column, O(2^bits) rows to the driver),
+    ``2**bits`` ranks (boundaries from ``approxQuantile`` at relative
+    error 0.01 — a Greenwald-Khanna pass per column, O(2^bits) rows to
+    the driver),
     rank bits are interleaved into one z-value, and the frame is
     range-partitioned + sorted on it. A range predicate on any single
     clustered column then touches ~``n_files / 2**(bits/len(cols))``
@@ -132,7 +132,7 @@ def zorder_write(
     nb = 2**bits
     zval = F.lit(0).cast("long")
     for ci, c in enumerate(cols):
-        bounds = df.approxQuantile(c, [i / nb for i in range(1, nb)], rel_err)
+        bounds = df.approxQuantile(c, [i / nb for i in range(1, nb)], 0.01)
         bucket = F.lit(0)
         for b in bounds:
             bucket = bucket + F.when(F.col(c) > F.lit(b), 1).otherwise(0)
@@ -156,7 +156,6 @@ def write_bucketed_table(
     table: str,
     buckets: int = 32,
     key: str = "doc_id",
-    mode: str = "overwrite",
 ) -> None:
     """Materialize a frame as a Hive-bucketed managed table:
     ``bucketBy(buckets, key)`` + ``sortBy(key)``, so every future
@@ -175,24 +174,23 @@ def write_bucketed_table(
     count should divide evenly into the cluster's parallelism at the
     target scale.
 
-    ``mode="overwrite"`` replaces the table outright: a session-scoped
-    in-memory catalog cannot see tables written by earlier sessions,
-    but their managed location under a local warehouse survives and
-    blocks ``saveAsTable``, so it is cleared first (an HMS/Iceberg
-    catalog tracks this itself)."""
-    if mode == "overwrite":
-        spark = df.sparkSession
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        warehouse = spark.conf.get("spark.sql.warehouse.dir", "")
-        if warehouse.startswith("file:"):
-            warehouse = warehouse[len("file:"):]
-        loc = os.path.join(warehouse, table.split(".")[-1].lower())
-        if warehouse and os.path.isdir(loc):
-            shutil.rmtree(loc)
+    The write replaces the table outright: a session-scoped in-memory
+    catalog cannot see tables written by earlier sessions, but their
+    managed location under a local warehouse survives and blocks
+    ``saveAsTable``, so it is cleared first (an HMS/Iceberg catalog
+    tracks this itself)."""
+    spark = df.sparkSession
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    warehouse = spark.conf.get("spark.sql.warehouse.dir", "")
+    if warehouse.startswith("file:"):
+        warehouse = warehouse[len("file:"):]
+    loc = os.path.join(warehouse, table.split(".")[-1].lower())
+    if warehouse and os.path.isdir(loc):
+        shutil.rmtree(loc)
     (
         df.write.bucketBy(buckets, key)
         .sortBy(key)
-        .mode(mode)
+        .mode("overwrite")
         .format("parquet")
         .saveAsTable(table)
     )

@@ -29,15 +29,13 @@ def _hits(col: Column, words: tuple[str, ...]) -> Column:
     return out
 
 
-def lang_id(
-    docs: DataFrame, text_col: str = "text", keep: tuple[str, ...] = ()
-) -> DataFrame:
+def lang_id(docs: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
     """(doc_id, *keep, predicted) — keyword-panel vote, en/id/other.
     ``keep`` carries extra source columns through the projection so a
     consumer comparing the prediction against a label column doesn't
     join back to the source (a join is a second corpus scan —
     Catalyst doesn't reuse the branch subtrees)."""
-    return docs.select("doc_id", *keep, _lang(F.col(text_col)).alias("predicted"))
+    return docs.select("doc_id", *keep, _lang(F.col("text")).alias("predicted"))
 
 
 def _lang(text: Column) -> Column:
@@ -50,20 +48,18 @@ def _lang(text: Column) -> Column:
     )
 
 
-def token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def token_counts(docs: DataFrame) -> DataFrame:
     """(doc_id, n_tokens, n_chars, n_alpha_tokens) — whitespace tokens
     plus a BPE-ish alpha-run count (letter runs = rough subword
     lower bound)."""
-    toks = _tokens(text_col)
+    toks = _tokens()
     alpha_runs = F.size(
-        F.filter(
-            F.split(F.col(text_col), r"[^A-Za-z]+"), lambda t: F.length(t) > 0
-        )
+        F.filter(F.split(F.col("text"), r"[^A-Za-z]+"), lambda t: F.length(t) > 0)
     )
     return docs.select(
         "doc_id",
         F.size(toks).alias("n_tokens"),
-        F.length(text_col).alias("n_chars"),
+        F.length("text").alias("n_chars"),
         alpha_runs.alias("n_alpha_tokens"),
     )
 
@@ -84,12 +80,12 @@ def _quality_features(text: Column) -> tuple[Column, Column, Column, Column]:
     return n_tokens, mean_word_len, punct_ratio, _hits(text, _STOP_PANEL)
 
 
-def quality_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_scores(docs: DataFrame) -> DataFrame:
     """Per-doc quality features + bucket: token count, mean word
     length, punctuation ratio, stopword ratio — the classic
     pretraining-filter features (C4/Gopher-style)."""
     n_tokens, mean_word_len, punct_ratio, stop_hits = _quality_features(
-        F.col(text_col)
+        F.col("text")
     )
     return docs.select(
         "doc_id",
@@ -104,14 +100,14 @@ def quality_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def entity_harvest(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def entity_harvest(docs: DataFrame) -> DataFrame:
     """A12 entity harvest (ref lib/text_processing.py:2184-2222:
     names/dates regexes, distinct, truncation): top-3 Title-Case
     name pairs and top-2 date literals per doc. Distinct + sort +
     slice keeps the output deterministic and oracle-comparable.
     Pure codegen expressions; both regexes are Java/RE2-compatible
     so the DuckDB oracle uses the identical patterns."""
-    text = F.col(text_col)
+    text = F.col("text")
     names = F.slice(
         F.array_sort(
             F.array_distinct(
@@ -167,13 +163,13 @@ _SIGNAGE_DESCRIPTIONS = {
 }
 
 
-def signage_classify(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def signage_classify(docs: DataFrame) -> DataFrame:
     """F15 signage content classifier as a when-ladder over lowered
     text; 'general' fallback, 'unknown' for empty text (ref
     ``if not text``). Emits the reference's canned ``description``
     alongside the class — for 'general' the multi-line form embeds
     the first line (ref :338-343). One narrow projection."""
-    text = F.col(text_col)
+    text = F.col("text")
     lowered = F.lower(text)
     expr = F.lit("general")
     for cls, words in reversed(_SIGNAGE_LADDER):
@@ -204,7 +200,7 @@ def signage_classify(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def corpus_cardinality(
-    docs: DataFrame, text_col: str = "text", rsd: float = 0.05, exact: bool = False
+    docs: DataFrame, rsd: float = 0.05, exact: bool = False
 ) -> DataFrame:
     """One-row corpus cardinality stats: distinct texts (by md5),
     distinct whitespace tokens, and total token occurrences, in ONE
@@ -222,8 +218,8 @@ def corpus_cardinality(
     across engines, so there is deliberately no DuckDB value-hash
     oracle for the approx form)."""
     rows = docs.select(
-        F.md5(F.col(text_col)).alias("_h"),
-        F.explode(_tokens(F.lower(text_col))).alias("tok"),
+        F.md5(F.col("text")).alias("_h"),
+        F.explode(_tokens(F.lower("text"))).alias("tok"),
     )
     if exact:
         nd_text = F.count_distinct(F.col("_h"))
@@ -240,7 +236,6 @@ def corpus_cardinality(
 
 def repetition_signals(
     docs: DataFrame,
-    text_col: str = "text",
     top_bigram_thresh: float = 0.2,
     dup_trigram_thresh: float = 0.3,
 ) -> DataFrame:
@@ -266,8 +261,7 @@ def repetition_signals(
     (IEEE-identical in any engine), so the SQL oracle needs no
     rounding grid.
     """
-    text = F.col(text_col)
-    toks = _tokens(text)
+    toks = _tokens()
     n = F.size(toks)
     bigram_n = F.greatest(F.lit(1), n - F.lit(1))
     trigram_n = F.greatest(F.lit(1), n - F.lit(2))
@@ -335,7 +329,7 @@ _PII_PATTERNS = (
 )
 
 
-def pii_scrub(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def pii_scrub(docs: DataFrame) -> DataFrame:
     """PII redaction — the compliance pass of a training-data
     pipeline: masks emails, IPv4 addresses and phone-shaped digit
     runs with typed placeholder tokens and emits per-doc match counts
@@ -348,7 +342,7 @@ def pii_scrub(docs: DataFrame, text_col: str = "text") -> DataFrame:
     pruning keeps it to (id, text). Patterns are RE2-compatible by
     construction so the oracle twin executes the identical regex.
     """
-    text = F.col(text_col)
+    text = F.col("text")
     counts = [
         F.size(F.regexp_extract_all(text, F.lit(pat), 0)).alias(f"n_{name}")
         for name, pat, _ in _PII_PATTERNS
@@ -359,9 +353,7 @@ def pii_scrub(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return docs.select("doc_id", clean.alias("clean_text"), *counts)
 
 
-def vocab_topk(
-    docs: DataFrame, k: int = 100, text_col: str = "text"
-) -> DataFrame:
+def vocab_topk(docs: DataFrame, k: int = 100) -> DataFrame:
     """Corpus vocabulary heavy-hitters: top-``k`` whitespace tokens by
     occurrence count with document frequency — the stopword-discovery /
     tokenizer-vocab-seeding pass. One explode + ONE partial-combining
@@ -371,7 +363,7 @@ def vocab_topk(
     k-row heaps merged on the driver, never a full sort of the
     vocabulary. Ties break to the lexicographically smaller token so
     the result is deterministic and oracle-hashable."""
-    tok = F.explode(_tokens(text_col)).alias("token")
+    tok = F.explode(_tokens()).alias("token")
     return (
         docs.select("doc_id", tok)
         .groupBy("token")
@@ -384,7 +376,7 @@ def vocab_topk(
     )
 
 
-def _pair_counts(train: DataFrame, text_col: str) -> tuple[DataFrame, DataFrame]:
+def _pair_counts(train: DataFrame) -> tuple[DataFrame, DataFrame]:
     """The train side of every bigram statistic here, from ONE scan:
     ``(P, uni)``. Catalyst never reuses identical branch subtrees, so
     separate unigram, bigram and token-total aggs would be three
@@ -399,9 +391,9 @@ def _pair_counts(train: DataFrame, text_col: str) -> tuple[DataFrame, DataFrame]
     NULL-text docs are dropped up front, config-proof: with
     spark.sql.legacy.sizeOfNull, size(NULL) is -1 and the explode
     would emit phantom rows."""
-    arr = _tokens(text_col)
+    arr = _tokens()
     P = _persist(
-        train.filter(F.col(text_col).isNotNull())
+        train.filter(F.col("text").isNotNull())
         .select(arr.alias("_w"), F.explode(F.sequence(F.lit(0), F.size(arr))).alias("_i"))
         .select(
             F.get(F.col("_w"), F.col("_i") - 1).alias("tok_a"),
@@ -422,7 +414,6 @@ def collocations(
     docs: DataFrame,
     min_count: int = 5,
     k: int = 100,
-    text_col: str = "text",
 ) -> DataFrame:
     """Bigram collocation mining (phrase discovery): adjacent token
     pairs scored by association lift ``count(ab) * n_tokens /
@@ -438,7 +429,7 @@ def collocations(
     ``min_count`` prunes the bigram tail BEFORE the joins. ``lift_e6``
     is computed in explicitly-double IEEE arithmetic mirrored by the
     oracle."""
-    P, uni = _pair_counts(docs, text_col)
+    P, uni = _pair_counts(docs)
     total = uni.agg(F.sum("c1").alias("n_tok"))
     big = P.filter(
         F.col("tok_a").isNotNull()
@@ -469,13 +460,13 @@ def collocations(
     )
 
 
-def _doc_bigrams(docs: DataFrame, text_col: str) -> DataFrame:
+def _doc_bigrams(docs: DataFrame) -> DataFrame:
     """The corpus side of the LMs: one (doc_id, w1, w2) row per token,
     ``w2`` NULL on the last one, so a doc's row count is its token
     count and its non-NULL ``w2`` rows are its bigrams. NULL-text docs
     are dropped for the reason :func:`_pair_counts` gives."""
-    arr = _tokens(text_col)
-    return docs.filter(F.col(text_col).isNotNull()).select(
+    arr = _tokens()
+    return docs.filter(F.col("text").isNotNull()).select(
         "doc_id",
         arr.alias("_w"),
         F.explode(F.sequence(F.lit(1), F.size(arr))).alias("pos"),
@@ -487,7 +478,7 @@ def _doc_bigrams(docs: DataFrame, text_col: str) -> DataFrame:
 
 
 def _lm_side(
-    rows: DataFrame, train: DataFrame, text_col: str, sfx: str
+    rows: DataFrame, train: DataFrame, sfx: str
 ) -> tuple[DataFrame, DataFrame]:
     """``rows`` (from :func:`_doc_bigrams`) joined with one bigram
     model trained on ``train`` — ``c_w1{sfx}``, ``c_w2{sfx}`` (unigram
@@ -496,7 +487,7 @@ def _lm_side(
     the caller to cross join after all its model joins. Both unigram
     joins broadcast — a vocabulary is orders below corpus size — and
     the bigram join is an equi-key join Catalyst/AQE sizes."""
-    P, uni = _pair_counts(train, text_col)
+    P, uni = _pair_counts(train)
     total = uni.agg(F.sum("c1").alias(f"n_tok{sfx}"))
     big = P.filter(
         F.col("tok_a").isNotNull() & F.col("tok_b").isNotNull()
@@ -515,9 +506,9 @@ def _lm_side(
     return joined, F.broadcast(total)
 
 
-def _score_ppm(alpha: float, sfx: str) -> Column:
+def _score_ppm(sfx: str) -> Column:
     """Stupid-backoff score of a bigram row on the integer millionths
-    grid: ``c(w1,w2)/c(w1)`` when the bigram was seen, else ``alpha *
+    grid: ``c(w1,w2)/c(w1)`` when the bigram was seen, else ``0.4 *
     c(w2)/T``; NULL on a doc's last token (no bigram)."""
     return F.when(
         F.col("w2").isNotNull(),
@@ -526,7 +517,7 @@ def _score_ppm(alpha: float, sfx: str) -> Column:
                 F.col(f"c_ab{sfx}").isNotNull(),
                 F.col(f"c_ab{sfx}") / F.col(f"c_w1{sfx}"),
             ).otherwise(
-                F.lit(alpha)
+                F.lit(0.4)
                 * F.coalesce(F.col(f"c_w2{sfx}"), F.lit(0))
                 / F.col(f"n_tok{sfx}")
             )
@@ -538,19 +529,17 @@ def _score_ppm(alpha: float, sfx: str) -> Column:
 def lm_score(
     docs: DataFrame,
     train: DataFrame | None = None,
-    alpha: float = 0.4,
-    text_col: str = "text",
 ) -> DataFrame:
     """N-gram language-model quality scoring — the CCNet-style
     "perplexity filter" a pretraining pipeline runs to rank documents
     against a clean reference corpus, as a bigram stupid-backoff model
     (Brants et al. 2007: at web scale backoff weights are a fixed
-    ``alpha``, not trained discounts). Per document:
+    0.4, not trained discounts). Per document:
 
     - ``oov_rate``: fraction of tokens absent from the train unigrams
     - ``avg_score_ppm``: mean per-bigram score on the integer
       millionths grid, where a seen bigram scores ``c(w1,w2)/c(w1)``
-      and an unseen one backs off to ``alpha * c(w2)/T``
+      and an unseen one backs off to ``0.4 * c(w2)/T``
 
     Scores are floored onto the ppm grid BEFORE the per-doc sum so
     the sum is exact integer arithmetic — a float sum's value depends
@@ -574,13 +563,13 @@ def lm_score(
     both sides (pinned by a NULL-text edge test).
     """
     train = docs if train is None else train
-    scored, total = _lm_side(_doc_bigrams(docs, text_col), train, text_col, "")
+    scored, total = _lm_side(_doc_bigrams(docs), train, "")
     return (
         scored.crossJoin(total)
         .select(
             "doc_id",
             F.col("c_w1").isNull().cast("int").alias("oov"),
-            _score_ppm(alpha, "").alias("score_ppm"),
+            _score_ppm("").alias("score_ppm"),
         )
         .groupBy("doc_id")
         .agg(
@@ -606,16 +595,7 @@ def lm_score(
 
 def quality_filter(
     docs: DataFrame,
-    text_col: str = "text",
-    min_tokens: int = 10,
-    max_tokens: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 12.0,
-    max_punct_ratio: float = 0.2,
-    min_stop_hits: int = 2,
     langs: tuple[str, ...] = ("en",),
-    top_bigram_thresh: float = 0.2,
-    dup_trigram_thresh: float = 0.3,
     max_pii: int | None = None,
     passthrough: tuple[str, ...] = (),
 ) -> DataFrame:
@@ -630,13 +610,13 @@ def quality_filter(
     fine-grained API; this is the ``dedup_keep_list`` analogue for
     the quality family.
 
-    Rules (in ``reasons`` order): ``too_short``/``too_long`` (token
-    count bounds), ``word_length`` (mean word length outside
-    [min, max]), ``punctuation`` (punct ratio above max),
-    ``stopwords`` (panel hits below min), ``language`` (predicted
+    Rules (in ``reasons`` order): ``too_short``/``too_long`` (fewer
+    than 10 / more than 100,000 tokens), ``word_length`` (mean word
+    length outside [3, 12]), ``punctuation`` (punct ratio above 0.2),
+    ``stopwords`` (fewer than 2 panel hits), ``language`` (predicted
     language not in ``langs``; pass ``()`` to disable),
     ``rep_bigram``/``rep_trigram`` (Gopher repetition fractions
-    above threshold), ``pii`` (total PII matches above ``max_pii``;
+    above 0.2 / 0.3), ``pii`` (total PII matches above ``max_pii``;
     ``None`` counts but never drops).
 
     Shape (100 TB): every row-local signal (token/char counts,
@@ -653,7 +633,7 @@ def quality_filter(
     per-doc verdicts by calling this on each micro-batch inside
     ``foreachBatch``.
     """
-    text = F.col(text_col)
+    text = F.col("text")
     n_tokens, mean_word_len, punct_ratio, stop_hits = _quality_features(text)
     n_pii = None
     for name, pat, _ in _PII_PATTERNS:
@@ -671,25 +651,24 @@ def quality_filter(
         _lang(text).alias("predicted_lang"),
         n_pii.alias("n_pii"),
     ]
-    rep = repetition_signals(docs, text_col).select(
+    rep = repetition_signals(docs).select(
         "doc_id", "top_bigram_frac", "dup_trigram_frac"
     )
     j = docs.select(*row_cols).join(rep, "doc_id")
     rules: list[tuple[str, Column]] = [
-        ("too_short", F.col("n_tokens") < min_tokens),
-        ("too_long", F.col("n_tokens") > max_tokens),
+        ("too_short", F.col("n_tokens") < 10),
+        ("too_long", F.col("n_tokens") > 100_000),
         (
             "word_length",
-            (F.col("mean_word_len") < min_mean_word_len)
-            | (F.col("mean_word_len") > max_mean_word_len),
+            (F.col("mean_word_len") < 3.0) | (F.col("mean_word_len") > 12.0),
         ),
-        ("punctuation", F.col("punct_ratio") > max_punct_ratio),
-        ("stopwords", F.col("stop_hits") < min_stop_hits),
+        ("punctuation", F.col("punct_ratio") > 0.2),
+        ("stopwords", F.col("stop_hits") < 2),
     ]
     if langs:
         rules.append(("language", ~F.col("predicted_lang").isin(*langs)))
-    rules.append(("rep_bigram", F.col("top_bigram_frac") > top_bigram_thresh))
-    rules.append(("rep_trigram", F.col("dup_trigram_frac") > dup_trigram_thresh))
+    rules.append(("rep_bigram", F.col("top_bigram_frac") > 0.2))
+    rules.append(("rep_trigram", F.col("dup_trigram_frac") > 0.3))
     if max_pii is not None:
         rules.append(("pii", F.col("n_pii") > max_pii))
     reasons = F.concat_ws(
@@ -752,8 +731,6 @@ def lm_contrast(
     docs: DataFrame,
     target: DataFrame,
     background: DataFrame | None = None,
-    alpha: float = 0.4,
-    text_col: str = "text",
 ) -> DataFrame:
     """DSIR-style importance weight (Xie et al. 2023,
     arXiv:2302.03169): per document, the contrast between a
@@ -778,15 +755,15 @@ def lm_contrast(
     ``docs`` itself (the DSIR default: raw-corpus background).
     """
     background = docs if background is None else background
-    rows, tot_t = _lm_side(_doc_bigrams(docs, text_col), target, text_col, "_t")
-    rows, tot_b = _lm_side(rows, background, text_col, "_b")
+    rows, tot_t = _lm_side(_doc_bigrams(docs), target, "_t")
+    rows, tot_b = _lm_side(rows, background, "_b")
     return (
         rows.crossJoin(tot_t)
         .crossJoin(tot_b)
         .select(
             "doc_id",
-            _score_ppm(alpha, "_t").alias("s_t"),
-            _score_ppm(alpha, "_b").alias("s_b"),
+            _score_ppm("_t").alias("s_t"),
+            _score_ppm("_b").alias("s_b"),
         )
         .groupBy("doc_id")
         .agg(

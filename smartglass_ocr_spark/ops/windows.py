@@ -45,15 +45,15 @@ def ordered_reassembly(events: DataFrame) -> DataFrame:
     )
 
 
-def gap_sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
+def gap_sessionize(events: DataFrame) -> DataFrame:
     """W2 twin (ref lib/ocr_engines.py:534-551 vertical-gap paragraph
     break): new session when the gap to the previous event exceeds
-    ``gap_minutes``. lag -> flag -> running sum = session id; then
+    30 minutes. lag -> flag -> running sum = session id; then
     per-session aggregates. One shuffle on user_id reused by both
     windows and the final groupBy (same partitioning key)."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     us = _micros("ts")
-    gap_us = gap_minutes * 60 * 1_000_000
+    gap_us = 30 * 60 * 1_000_000
     flagged = events.select(
         "user_id",
         "event_id",
@@ -73,14 +73,14 @@ def gap_sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     )
 
 
-def topk_per_group(events: DataFrame, k: int = 3) -> DataFrame:
-    """A3 twin: top-k events by value per event_type, deterministic
+def topk_per_group(events: DataFrame) -> DataFrame:
+    """A3 twin: top-3 events by value per event_type, deterministic
     tie-break on event_id. row_number window -> filter; Spark pushes
     a per-partition rank limit before the shuffle (WindowGroupLimit)."""
     w = Window.partitionBy("event_type").orderBy(F.desc("value"), F.asc("event_id"))
     return (
         events.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 3)
         .select("event_type", "rank", "event_id", "value")
     )
 
@@ -106,10 +106,10 @@ def ordered_group_concat(lineitem: DataFrame) -> DataFrame:
     )
 
 
-def doc_lines(documents: DataFrame, words_per_line: int = 6) -> DataFrame:
+def doc_lines(documents: DataFrame) -> DataFrame:
     """Deterministic line corpus for the W3/W5/W6 line-machine twins:
     the flat ``documents.text`` has no newlines, so lines are derived
-    in-query — wrap every ``words_per_line`` words, then md5-class each
+    in-query — wrap every 6 words, then md5-class each
     line into bullet / heading / empty / regular (mirrored verbatim in
     the DuckDB oracles; md5 is identical in both engines).
 
@@ -117,7 +117,7 @@ def doc_lines(documents: DataFrame, words_per_line: int = 6) -> DataFrame:
     shuffle; at 100 TB this is a per-row projection that splits inside
     the scan task."""
     wrapped = F.regexp_replace(
-        "text", r"((?:\S+\s+){%d}\S+)\s+" % (words_per_line - 1), "$1\n"
+        "text", r"((?:\S+\s+){5}\S+)\s+", "$1\n"
     )
     lines = documents.select(
         "doc_id", F.posexplode(F.split(wrapped, "\n")).alias("ln", "raw")
@@ -284,14 +284,10 @@ def bullet_fold(documents: DataFrame) -> DataFrame:
     )
 
 
-def asof_join(
-    events: DataFrame,
-    left_type: str = "purchase",
-    right_type: str = "click",
-) -> DataFrame:
+def asof_join(events: DataFrame) -> DataFrame:
     """As-of join — the classic operator Spark lacks natively (driver
-    brief's custom-operator family): for every ``left_type`` event,
-    the most recent ``right_type`` event of the same user with
+    brief's custom-operator family): for every ``purchase`` event,
+    the most recent ``click`` event of the same user with
     ``ts <= left.ts`` (ties on ts resolved to the highest event_id).
 
     Shape: NOT a range join (no inequality-join row blowup) — both
@@ -301,10 +297,10 @@ def asof_join(
     one shuffle + one in-partition sort regardless of time-gap skew;
     the DuckDB twin is a native ASOF LEFT JOIN. Missing matches emit
     -1 sentinels (hash-stable)."""
-    a = events.filter(F.col("event_type") == left_type).select(
+    a = events.filter(F.col("event_type") == "purchase").select(
         "user_id", F.lit(1).alias("is_left"), "event_id", "ts"
     )
-    b = events.filter(F.col("event_type") == right_type).select(
+    b = events.filter(F.col("event_type") == "click").select(
         "user_id", F.lit(0).alias("is_left"), "event_id", "ts"
     )
     # right rows sort before left rows at equal ts (so <= matches),
@@ -340,14 +336,14 @@ _US_PER_HOUR = 3_600 * 1_000_000
 _CAMPAIGN_BASE_US = 1_704_067_200_000_000  # 2024-01-01T00:00:00Z
 
 
-def campaign_windows(spark, n: int = 24):
+def campaign_windows(spark):
     """Deterministic overlapping time intervals for the range join:
-    campaign i starts at base + i*30h and lasts (i%3 + 1)*12h —
-    variable lengths, adjacent overlaps (mirrored in the DuckDB
+    24 campaigns; campaign i starts at base + i*30h and lasts
+    (i%3 + 1)*12h — variable lengths, adjacent overlaps (mirrored in the DuckDB
     oracle as a generate_series CTE)."""
     i = F.col("id")
     start = F.lit(_CAMPAIGN_BASE_US) + i * 30 * _US_PER_HOUR
-    return spark.range(n).select(
+    return spark.range(24).select(
         i.cast("int").alias("campaign_id"),
         start.alias("start_us"),
         (start + ((i % 3) + 1) * 12 * _US_PER_HOUR).alias("end_us"),
@@ -357,8 +353,6 @@ def campaign_windows(spark, n: int = 24):
 def range_join_buckets(
     events: DataFrame,
     intervals: DataFrame | None = None,
-    n_campaigns: int = 24,
-    bucket_hours: int = 12,
 ) -> DataFrame:
     """Range (interval containment) join — the second operator family
     Spark lacks natively (driver brief): every (event, campaign) pair
@@ -369,8 +363,8 @@ def range_join_buckets(
     scale shape here is BUCKETED CANDIDATES: each interval explodes to
     the coarse time buckets it overlaps, each event maps to its single
     bucket, and an ordinary EQUI-join on the bucket bounds candidates
-    to same-bucket pairs before the exact filter. Each pair arises in
-    exactly one bucket (the event's), so no dedup is needed. Works
+    to same-bucket pairs (12-hour buckets) before the exact filter.
+    Each pair arises in exactly one bucket (the event's), so no dedup is needed. Works
     identically at 10^6 intervals (sort-merge on bucket) — the plan is
     pinned to contain no nested-loop/cartesian node.
 
@@ -380,9 +374,9 @@ def range_join_buckets(
     camp = (
         intervals
         if intervals is not None
-        else campaign_windows(events.sparkSession, n_campaigns)
+        else campaign_windows(events.sparkSession)
     )
-    width = bucket_hours * _US_PER_HOUR
+    width = 12 * _US_PER_HOUR
     # end is exclusive: the last contained instant is end-1. The
     # greatest() clamps degenerate intervals (end_us <= start_us):
     # without it F.sequence sees stop < start and silently generates a
@@ -609,7 +603,7 @@ def value_percentiles(events: DataFrame) -> DataFrame:
     )
 
 
-def value_percentiles_approx(events: DataFrame, accuracy: int = 10000) -> DataFrame:
+def value_percentiles_approx(events: DataFrame) -> DataFrame:
     """Sketch twin of :func:`value_percentiles` (r3 VERDICT #4 — the
     swap the exact form's docstring promised, now callable): same
     output schema, ``approx_percentile`` (Greenwald-Khanna style
@@ -618,15 +612,15 @@ def value_percentiles_approx(events: DataFrame, accuracy: int = 10000) -> DataFr
     Why this is the 100-TB form: exact percentile buffers the
     ENTIRE per-group value multiset in one aggregation buffer — a
     group with 10^10 events is a straight executor OOM — while the
-    sketch is a fixed-size mergeable summary (error <= 1/accuracy of
-    the rank, ~accuracy * log(n) entries), so memory is flat in n and
-    the partial-merge shuffle carries KBs per group. Crossover: below
+    sketch is a fixed-size mergeable summary (accuracy 10000: error
+    <= 1/10000 of the rank, ~10000 * log(n) entries), so memory is
+    flat in n and the partial-merge shuffle carries KBs per group. Crossover: below
     ~10^6 rows/group the exact form is both cheap and exact, above it
     the sketch is the only shape that finishes. No DuckDB value-hash
     oracle by design (two engines' sketches differ legitimately); the
     pytest pins it against the exact operator within rank tolerance."""
     ps = F.percentile_approx(
-        "value", F.array(F.lit(0.5), F.lit(0.9), F.lit(0.99)), F.lit(accuracy)
+        "value", F.array(F.lit(0.5), F.lit(0.9), F.lit(0.99)), F.lit(10000)
     )
     return (
         events.groupBy("event_type")
@@ -641,11 +635,11 @@ def value_percentiles_approx(events: DataFrame, accuracy: int = 10000) -> DataFr
     )
 
 
-def tumbling_counts(events: DataFrame, minutes: int = 60) -> DataFrame:
-    """Tumbling-window counts per event_type (batch form of the
+def tumbling_counts(events: DataFrame) -> DataFrame:
+    """Hourly tumbling-window counts per event_type (batch form of the
     streaming rollup; window start emitted as epoch seconds so the
     oracle compares integers, not timestamps)."""
-    bucket_s = F.floor(_micros("ts") / (minutes * 60 * 1_000_000)) * (minutes * 60)
+    bucket_s = F.floor(_micros("ts") / (60 * 60 * 1_000_000)) * (60 * 60)
     return (
         events.groupBy(bucket_s.alias("window_start_s"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("total_value"))

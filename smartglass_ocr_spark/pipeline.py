@@ -105,19 +105,6 @@ def explode_spans(documents: DataFrame) -> DataFrame:
     return documents.select("doc_id", F.inline("spans"))
 
 
-def classify_and_clean(span_rows: DataFrame) -> DataFrame:
-    """Adds block_class + clean_text in one Arrow round trip."""
-    result = _classify_clean_udf(F.col("kind"), F.col("text"))
-    return span_rows.withColumn("_cc", result).select(
-        "doc_id",
-        "kind",
-        "media_ref",
-        "offset",
-        F.col("_cc.block_class").alias("block_class"),
-        F.col("_cc.clean_text").alias("text"),
-    )
-
-
 _SPAN_STRUCT_TYPE = StructType(
     [
         StructField("kind", StringType()),
@@ -303,12 +290,29 @@ def with_markdown(pipeline_out: DataFrame) -> DataFrame:
 
 def extracted_span_rows(span_rows: DataFrame) -> DataFrame:
     """Flat per-span output (doc_id, order, kind, text, media_ref,
-    block_class) — the exploded view of the pipeline for relational
-    consumers; order = rank of offset within doc (dense 0..n-1)."""
+    block_class, offset) — the exploded view of the pipeline for
+    relational consumers, each span classified and cleaned in one Arrow
+    round trip. ``order`` (0..n-1 in a doc) is the doc output's span
+    order, ``golden.reading_order`` on the raw span: offset ascending,
+    NULL last, then kind, text and media_ref ascending, NULL first
+    (Spark's binary UTF-8 string order is Python's code-point order)."""
     from pyspark.sql.window import Window
 
-    cleaned = classify_and_clean(span_rows)
-    w = Window.partitionBy("doc_id").orderBy("offset")
-    return cleaned.withColumn("order", F.row_number().over(w) - 1).select(
-        "doc_id", "order", "kind", "text", "media_ref", "block_class", "offset"
+    w = Window.partitionBy("doc_id").orderBy(
+        F.col("offset").asc_nulls_last(),
+        *[F.col(c).asc_nulls_first() for c in ("kind", "text", "media_ref")],
+    )
+    result = _classify_clean_udf(F.col("kind"), F.col("text"))
+    return (
+        span_rows.withColumn("order", F.row_number().over(w) - 1)
+        .withColumn("_cc", result)
+        .select(
+            "doc_id",
+            "order",
+            "kind",
+            F.col("_cc.clean_text").alias("text"),
+            "media_ref",
+            F.col("_cc.block_class").alias("block_class"),
+            "offset",
+        )
     )

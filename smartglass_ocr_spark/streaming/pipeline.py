@@ -86,16 +86,14 @@ def stream_extract(
     return writer.start()
 
 
-def windowed_event_counts(
-    events: DataFrame, window: str = "1 hour", watermark: str = "1 hour"
-) -> DataFrame:
-    """Tumbling-window counts per event_type. On a stream the
-    watermark bounds how late an event may arrive and still update
-    its window (state for closed windows is dropped); on a batch
-    frame the same expression degenerates to a plain groupBy."""
-    src = events.withWatermark("ts", watermark) if events.isStreaming else events
+def windowed_event_counts(events: DataFrame) -> DataFrame:
+    """Hourly tumbling-window counts per event_type. On a stream the
+    one-hour watermark bounds how late an event may arrive and still
+    update its window (state for closed windows is dropped); on a
+    batch frame the same expression degenerates to a plain groupBy."""
+    src = events.withWatermark("ts", "1 hour") if events.isStreaming else events
     return (
-        src.groupBy(F.window("ts", window).alias("win"), "event_type")
+        src.groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
         .select(
             F.col("win.start").alias("window_start"),
@@ -107,13 +105,15 @@ def windowed_event_counts(
     )
 
 
-def session_window_agg(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
+def session_window_agg(events: DataFrame) -> DataFrame:
     """Gap sessionization with the built-in ``session_window`` (the
     declarative twin of ops.windows.gap_sessionize): consecutive
-    events of a user belong to one session while each is < gap after
-    the previous; the session closes gap after the last event.
+    events of a user belong to one session while each is < 30 minutes
+    after the previous; the session closes 30 minutes after the last
+    event.
     Works on batch frames (DuckDB-oracled) and on streams (with a
     watermark, state per open session only)."""
+    gap = "30 minutes"
     src = events.withWatermark("ts", gap) if events.isStreaming else events
     return (
         src.groupBy(F.session_window("ts", gap).alias("win"), "user_id")
@@ -158,7 +158,7 @@ def stream_dedup_exact(stream_docs: DataFrame) -> DataFrame:
     )
 
 
-def stream_dedup_near(stream_docs: DataFrame, n: int = 5) -> DataFrame:
+def stream_dedup_near(stream_docs: DataFrame) -> DataFrame:
     """Stateful NEAR-dup suppression on a document stream: the first
     document with a given min-shingle fingerprint (winnowing-lite —
     the batch twin is ops.dedup.fingerprint_min_shingle) passes;
@@ -172,7 +172,7 @@ def stream_dedup_near(stream_docs: DataFrame, n: int = 5) -> DataFrame:
     from smartglass_ocr_spark.ops.dedup import min_shingle_fingerprint
 
     return stream_docs.withColumn(
-        "fingerprint", min_shingle_fingerprint(n, _doc_text())
+        "fingerprint", min_shingle_fingerprint(_doc_text())
     ).dropDuplicates(["fingerprint"])
 
 

@@ -23,6 +23,18 @@ row names it) or ``"oracle"`` when tests compare against it. Every
 listed name must be defined, unreached by the programs and referenced
 by a test. The list may only shrink: a new definition that only tests
 call is a twin or a wrapper to delete, not an entry to add.
+
+Options get the same treatment: every parameter with a default, on any
+function of the package, must be passed at some call site — in the
+programs, the package, ``tests/`` or ``perfbench/test_perfbench.py`` —
+by keyword or by position. A call is matched to a function by name, so
+two functions spelled alike share their call sites, and forwarding
+counts as setting: a ``*args`` call sets every position, and a
+``**kwargs`` call sets what the enclosing function's own callers pass
+it (every option when the mapping is anything else). An option no call
+sets is one value that always runs: make it a constant, unless
+``UNSET_OPTIONS`` lists it as a deployment setting or safety bound with
+its reason. That list may only shrink.
 """
 
 from __future__ import annotations
@@ -75,6 +87,11 @@ TEST_ONLY = {
     "stream_dedup_near": "stateful stream dedup",
     "stream_dedup_simhash": "stateful stream dedup",
     "running_user_totals": "custom stateful operator",
+}
+
+UNSET_OPTIONS = {
+    "stream_extract.available_now": "deployment: False runs continuous "
+    "ingest, the streaming module's promise; True drains the backlog and stops",
 }
 
 
@@ -208,6 +225,13 @@ def _defined_names(stmt: ast.stmt) -> list[str] | None:
     return None
 
 
+def _programs() -> list[Path]:
+    programs = _py_files(ROOT / "__spark_entry__.py", ROOT / "bench.py",
+                         *sorted((ROOT / "tools").glob("*.py")))
+    return programs + [p for p in _py_files(ROOT / "perfbench")
+                       if not p.name.startswith("test_")]
+
+
 def _graph():
     """(definitions as (file:line, (module, name), lines), edges by
     node, roots as nodes)."""
@@ -234,10 +258,7 @@ def _graph():
                 defs.append((where, (module, name), stmt.end_lineno - stmt.lineno + 1))
                 edges.setdefault((module, name), set()).update(
                     resolve.refs(stmt, module, bound))
-    programs = _py_files(ROOT / "__spark_entry__.py", ROOT / "bench.py",
-                         *sorted((ROOT / "tools").glob("*.py")))
-    programs += [p for p in _py_files(ROOT / "perfbench") if not p.name.startswith("test_")]
-    for path in programs:
+    for path in _programs():
         tree = ast.parse(path.read_text())
         module = _module_name(path)
         roots |= resolve.refs(tree, module, _imports(tree, module))
@@ -302,4 +323,129 @@ def test_every_definition_is_reached():
                 problems.append(f"TEST_ONLY {name}: {len(hit)} COVERAGE.md rows keyed {reason!r}")
             elif not re.search(rf"(?<!\w){re.escape(name)}(?!\w)", hit[0]):
                 problems.append(f"TEST_ONLY {name}: COVERAGE.md row {reason!r} does not name it")
+    assert not problems, "\n".join(problems)
+
+
+ANY = "*"  # a ``**`` mapping that may hold any keyword
+
+
+def _name(node: ast.expr) -> str | None:
+    if isinstance(node, ast.Name):
+        return node.id
+    return node.attr if isinstance(node, ast.Attribute) else None
+
+
+def _options() -> list[tuple[str, str, str, int | None]]:
+    """(file:line, function, parameter, position or None for
+    keyword-only) of every parameter with a default in the package; a
+    method's position skips ``self``, and ``Class.__init__`` is called
+    as ``Class``."""
+    out: list[tuple[str, str, str, int | None]] = []
+
+    def visit(node: ast.AST, where: str, cls: str | None) -> None:
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.ClassDef):
+                visit(child, where, child.name)
+                continue
+            if not isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, where, cls)
+                continue
+            a = child.args
+            static = any(_name(d) == "staticmethod" for d in child.decorator_list)
+            skip = 1 if cls and not static else 0
+            name = cls if cls and child.name == "__init__" else child.name
+            pos = a.posonlyargs + a.args
+            first = len(pos) - len(a.defaults)
+            for i, p in enumerate(pos[first:], first):
+                out.append((f"{where}:{child.lineno}", name, p.arg, i - skip))
+            for p, d in zip(a.kwonlyargs, a.kw_defaults):
+                if d is not None:
+                    out.append((f"{where}:{child.lineno}", name, p.arg, None))
+            visit(child, where, None)
+
+    for path in _py_files(PACKAGE):
+        visit(ast.parse(path.read_text()), str(path.relative_to(ROOT)), None)
+    return out
+
+
+def _call_sites(tree: ast.AST) -> list[tuple[str, float, set[str], str | None]]:
+    """(callee, positional count, keywords, forwarded) per call in
+    ``tree``. ``f(..)`` and ``x.f(..)`` call ``f``; a function passed as
+    an argument, ``g(f, *rest, **kw)``, is called with what follows it
+    (``_owned(query, *args, **kwargs)``). ``forwarded`` is None with no
+    ``**`` argument, the enclosing function's name when the call passes
+    on that function's own ``**`` parameter, and ANY otherwise."""
+    out: list[tuple[str, float, set[str], str | None]] = []
+
+    def visit(node: ast.AST, fn: ast.FunctionDef | None) -> None:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node
+        if isinstance(node, ast.Call):
+            own = fn.args.kwarg.arg if fn is not None and fn.args.kwarg else None
+            forwarded = None
+            for k in node.keywords:
+                if k.arg is None:
+                    mine = isinstance(k.value, ast.Name) and k.value.id == own
+                    forwarded = fn.name if mine else ANY
+            keywords = {k.arg for k in node.keywords if k.arg}
+            targets = [(_name(node.func), node.args)]
+            targets += [(_name(a), node.args[i + 1:]) for i, a in enumerate(node.args)]
+            for name, args in targets:
+                if name:
+                    n = (float("inf") if any(isinstance(a, ast.Starred) for a in args)
+                         else len(args))
+                    out.append((name, n, keywords, forwarded))
+        for child in ast.iter_child_nodes(node):
+            visit(child, fn)
+
+    visit(tree, None)
+    return out
+
+
+def _unset_options() -> list[tuple[str, str, str]]:
+    """(file:line, function, parameter) of every option no call sets."""
+    sites: dict[str, list[tuple[float, set[str], str | None]]] = {}
+    callers = [*_py_files(PACKAGE), *_programs(), *_py_files(ROOT / "tests"),
+               ROOT / "perfbench" / "test_perfbench.py"]
+    for path in callers:
+        for name, *site in _call_sites(ast.parse(path.read_text())):
+            sites.setdefault(name, []).append(tuple(site))
+
+    def passed(forwarded: str | None, seen: frozenset = frozenset()) -> set[str] | str:
+        """The keywords a ``**`` argument may hold: none, ANY, or what
+        the forwarding function's own callers pass it."""
+        if forwarded is None or forwarded in seen:
+            return set()
+        if forwarded == ANY:
+            return ANY
+        got: set[str] = set()
+        for _, keywords, further in sites.get(forwarded, []):
+            more = passed(further, seen | {forwarded})
+            if more == ANY:
+                return ANY
+            got |= keywords | more
+        return got
+
+    def sets(param: str, pos: int | None, n: float, keywords: set[str], forwarded) -> bool:
+        more = passed(forwarded)
+        return (param in keywords or (pos is not None and n > pos)
+                or more == ANY or param in more)
+
+    return [(where, fn, param) for where, fn, param, pos in _options()
+            if not any(sets(param, pos, *site) for site in sites.get(fn, []))]
+
+
+def test_every_option_is_set():
+    unset = _unset_options()
+    problems = [f"{where} {fn}({param}=...): no call sets it and UNSET_OPTIONS "
+                "does not list it; make it a constant"
+                for where, fn, param in unset if f"{fn}.{param}" not in UNSET_OPTIONS]
+    listed = {f"{fn}.{param}" for _, fn, param in unset}
+    options = {f"{fn}.{param}" for _, fn, param, _ in _options()}
+    assert len(options) > 100  # the scan really saw the package
+    for key in sorted(UNSET_OPTIONS):
+        if key not in options:
+            problems.append(f"UNSET_OPTIONS {key}: no such option, drop the entry")
+        elif key not in listed:
+            problems.append(f"UNSET_OPTIONS {key}: a call sets it, drop the entry")
     assert not problems, "\n".join(problems)

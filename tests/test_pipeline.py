@@ -225,29 +225,27 @@ def _short_span_mega_corpus(n_small: int, mega_spans: int) -> list[dict]:
 
 
 def test_doc_cap_bounds_mega_task(spark):
-    """The cap lever is the hard straggler bound (the judge criterion:
-    a 200k-span doc must no longer own a multi-second task): capped at
-    2000 spans, the mega doc's task does bounded work, so the capped
-    run must finish in a small fraction of the uncapped wall."""
-    import time
+    """The cap lever is the hard straggler bound (a 200k-span doc must
+    not own a multi-second task): capped at 2000 spans, the mega doc
+    runs the per-span rules on exactly 2000 spans, and the Spark path
+    reports the other 198,000 as truncated. BASELINE.md §Keep only
+    options something sets has the capped and uncapped walls."""
+    from unittest import mock
 
-    from smartglass_ocr_spark.pipeline import explode_spans, run_pipeline_fused
+    from smartglass_ocr_spark import golden
 
-    df = docs_to_df(spark, _short_span_mega_corpus(4, 200_000)).cache()
-    df.count()
-    rows = explode_spans(df)
+    docs = _short_span_mega_corpus(4, 200_000)
+    mega = docs[-1]
+    with mock.patch.object(golden, "process_span", wraps=golden.process_span) as spy:
+        out = golden.process_document(mega, max_spans=2000)
+    assert spy.call_count == 2000
+    assert out["n_truncated_spans"] == 198_000
 
-    def noop_wall(out):
-        t0 = time.perf_counter()
-        out.write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
-
-    noop_wall(run_pipeline_fused(rows, max_doc_spans=2000))  # warm-up
-    capped = noop_wall(run_pipeline_fused(rows, max_doc_spans=2000))
-    uncapped = noop_wall(run_pipeline_fused(rows))
-    df.unpersist()
-    # 100x less per-doc work; assert a loose 2.5x to absorb overheads
-    assert capped < 0.4 * uncapped, (capped, uncapped)
+    rows = explode_spans(docs_to_df(spark, docs))
+    got = {r["doc_id"]: r["n_truncated_spans"] for r in
+           run_pipeline_fused(rows, max_doc_spans=2000).select(
+               "doc_id", "n_truncated_spans").collect()}
+    assert got == {d["doc_id"]: 198_000 if d is mega else 0 for d in docs}
 
 
 def test_doc_span_cap_equals_pretruncated(spark):
@@ -371,6 +369,33 @@ def _hostile_corpus() -> list[dict]:
     ]
 
 
+def test_extracted_span_rows_follow_the_doc_order(spark):
+    """extracted_span_rows numbers a doc's spans in the fused output's
+    order, NULL and tied offsets included, and classifies each span as
+    golden.process_span does."""
+    from smartglass_ocr_spark.golden import process_span, reading_order
+    from smartglass_ocr_spark.pipeline import extracted_span_rows
+
+    tied = [("para", "b", None, 3), ("para", "a", None, 3), ("heading", "a", None, 3),
+            ("para", None, None, 3), ("image", None, "m-2", 3), ("image", None, "m-1", 3),
+            ("para", "c", None, None), ("list", "c", None, None), ("para", "z", None, 1)]
+    docs = _hostile_corpus() + [{"doc_id": "tied", "spans": [
+        {"kind": k, "text": t, "media_ref": m, "offset": o} for k, t, m, o in tied]}]
+    rows = explode_spans(docs_to_df(spark, docs))
+    fused = {r["doc_id"]: _span_seq(r["spans"]) for r in run_pipeline_fused(rows).collect()}
+    flat: dict = {}
+    for r in extracted_span_rows(rows).collect():
+        flat.setdefault(r["doc_id"], []).append(r)
+    assert flat.keys() == fused.keys()
+    for doc in docs:
+        got = sorted(flat[doc["doc_id"]], key=lambda r: r["order"])
+        assert [r["order"] for r in got] == list(range(len(got)))
+        assert _span_seq(got) == fused[doc["doc_id"]], doc["doc_id"]
+        raw = sorted(doc["spans"], key=reading_order)
+        assert [r["block_class"] for r in got] == [
+            process_span(s["kind"], s["text"])[0] for s in raw]
+
+
 def test_hostile_spans_lockstep(spark):
     """fused == golden, row for row, on one corpus of hostile spans,
     including the NULL doc_id, the 1 MiB span and the mega doc."""
@@ -401,17 +426,16 @@ _SPAN_KINDS = st.sampled_from(sorted(TEXT_KINDS) + sorted(MEDIA_KINDS))
 def _small_corpus(draw) -> list[dict]:
     """At most 8 docs with unique doc_ids, at most one of them NULL;
     a doc's spans may be NULL or empty (every path omits such a doc).
-    Its non-NULL offsets are unique (the stable offset sort must see no
-    ties, since collect_list order is not deterministic), and up to
-    three of its spans have a NULL offset, which sort last in a
-    defined order (golden.reading_order)."""
+    Its offsets may tie, and up to three of its spans have a NULL
+    offset; golden.reading_order puts them in one order whatever order
+    collect_list delivers them in."""
     ids = draw(st.lists(st.text("ab1-", min_size=1, max_size=4),
                         min_size=1, max_size=8, unique=True))
     null_at = draw(st.one_of(st.none(), st.integers(0, len(ids) - 1)))
     docs = []
     for i, doc_id in enumerate(ids):
         offsets = draw(st.permutations(
-            draw(st.lists(st.integers(-1000, 1 << 20), max_size=6, unique=True))
+            draw(st.lists(st.integers(-1000, 1 << 20), max_size=6))
             + [None] * draw(st.integers(0, 3))
         ))
         spans = None if draw(st.integers(0, 7)) == 0 else [
